@@ -63,7 +63,13 @@ object Harness {
       "jvm_start_ms" -> ManagementFactory.getRuntimeMXBean.getStartTime,
       "session_ready_ms" -> System.currentTimeMillis(), "cores" -> a.cores,
       "spark_version" -> spark.version))
-    try { run(spark, a, emit); calibrate("end") } finally { spark.stop(); log.close() }
+    try {
+      try run(spark, a, emit) finally spark.stop()
+      // Calibrate again once the session and its blocks are gone, so the
+      // library's heap cannot leak into the scale of the gated times.
+      System.gc()
+      calibrate("end")
+    } finally log.close()
   }
 
   private def run(spark: SparkSession, a: Args, emit: String => Unit): Unit = {

@@ -4,7 +4,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import org.apache.spark.scheduler._
 
 /** Records one span per Spark job while registered, with the job's
-  * tags, call site and the summed metrics of the tasks that ran for
+  * tags, call stack and the summed metrics of the tasks that ran for
   * it. Spans stay in memory until `drainTo`; the benchmark's report
   * turns them into per-layer figures.
   *
@@ -15,7 +15,7 @@ import org.apache.spark.scheduler._
 final class Trace extends SparkListener {
   import Trace._
   private final class Job(val id: Int, val start: Long, val tags: Map[String, String],
-      val callSite: String) {
+      val callStack: String) {
     // tasks, task ms, shuffle write, shuffle read, disk spill, input bytes, stages
     val acc = new Array[Long](7)
   }
@@ -26,10 +26,11 @@ final class Trace extends SparkListener {
   override def onJobStart(e: SparkListenerJobStart): Unit = {
     val p = Option(e.properties)
     def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).getOrElse("")
-    // The final stage of a job is named after the job's short call site.
-    val callSite = e.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("")
+    // The details of a job's final stage are the call stack of the
+    // thread that submitted it.
+    val callStack = e.stageInfos.sortBy(_.stageId).lastOption.map(_.details).getOrElse("")
     val j = new Job(e.jobId, e.time,
-      Seq(QueryKey, PhaseKey).map(k => k -> prop(k)).toMap, callSite)
+      Seq(QueryKey, PhaseKey).map(k => k -> prop(k)).toMap, callStack)
     open.put(e.jobId, j)
     e.stageIds.foreach(s => stageJob.put(s, j))
   }
@@ -58,7 +59,7 @@ final class Trace extends SparkListener {
       done.add(Json.obj(
         "type" -> "job", "job" -> j.id, "start_ms" -> j.start, "end_ms" -> e.time,
         "query" -> j.tags(QueryKey), "phase" -> j.tags(PhaseKey),
-        "call_site" -> j.callSite, "tasks" -> a(0), "task_ms" -> a(1),
+        "call_stack" -> j.callStack, "tasks" -> a(0), "task_ms" -> a(1),
         "shuffle_write_b" -> a(2), "shuffle_read_b" -> a(3), "spill_b" -> a(4),
         "input_b" -> a(5), "stages" -> a(6)))
     }

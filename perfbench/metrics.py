@@ -11,9 +11,13 @@ import statistics
 
 MB = 1048576.0
 
-# Call-site files of the layers that submit jobs while a query is built.
+# Source files of the layers that submit jobs while a query is built.
 TABLES_FILES = ("Tables.scala", "Sources.scala")
 OPMODULE_FILES = ("OpModule.scala", "GraftBridge.scala")
+# Classes of the library; the benchmark's own frames (graft.perfbench)
+# are not part of it.
+LIBRARY_CLASSES = ("graft.", "org.apache.spark.sql.GraftBridge")
+HARNESS_CLASSES = "graft.perfbench."
 
 
 def tail_percentile(values, q, beyond=10):
@@ -78,11 +82,20 @@ class Windows:
         return self.at(t), False
 
 
-def call_site_layer(call_site):
-    if any(f in call_site for f in TABLES_FILES):
-        return "tables"
-    if any(f in call_site for f in OPMODULE_FILES):
-        return "opmodule"
+def call_site_layer(call_stack):
+    """Layer of a job from the innermost library frame of its call stack
+    (a stage's `details`: one `Class.method(File.scala:line)` frame per
+    line, innermost first). The short call site does not do: Spark names
+    a job after the first frame outside its own packages, and GraftBridge
+    lives in one of them, so its jobs are named after their caller."""
+    for frame in call_stack.splitlines():
+        head, _, where = frame.strip().partition("(")
+        cls = head.rsplit("/", 1)[-1]           # drop a module/loader prefix
+        if cls.startswith(LIBRARY_CLASSES) and not cls.startswith(HARNESS_CLASSES):
+            source = where.split(":")[0].rstrip(")")
+            if source in TABLES_FILES:
+                return "tables"
+            return "opmodule" if source in OPMODULE_FILES else "other"
     return "other"
 
 
@@ -178,11 +191,11 @@ def trace_rows(events, cores):
                     a, b, [(j["start_ms"], j["end_ms"]) for j in js]) / 1000.0
                 row[phase + "_jobs"] = len(js)
             allj = per[(q["name"], "build")] + per[(q["name"], "action")]
-            layer = [call_site_layer(j["call_site"]) for j in per[(q["name"], "build")]]
+            layer = [call_site_layer(j["call_stack"]) for j in per[(q["name"], "build")]]
             row["cut_jobs"] = layer.count("opmodule")
-            row["tables_jobs"] = sum(call_site_layer(j["call_site"]) == "tables" for j in allj)
+            row["tables_jobs"] = sum(call_site_layer(j["call_stack"]) == "tables" for j in allj)
             row["tables_job_s"] = sum((j["end_ms"] - j["start_ms"]) / 1000.0 for j in allj
-                                      if call_site_layer(j["call_site"]) == "tables")
+                                      if call_site_layer(j["call_stack"]) == "tables")
             row["stages"] = sum(j["stages"] for j in allj)
             row["tasks"] = sum(j["tasks"] for j in allj)
             row["task_s"] = sum(j["task_ms"] for j in allj) / 1000.0

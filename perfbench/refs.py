@@ -1,17 +1,16 @@
 #!/usr/bin/env python3
 """Take the reference digests the benchmark checks every result against.
 
-    python3 perfbench/refs.py [--oracle-seconds 30]
+    python3 perfbench/refs.py
 
 Runs every pinned query of every workload twice, in two different
 orders, and keeps a digest only when both runs agree. Each reference
 is cross-checked against the query's DuckDB twin from
-`SparkEntry.oracleSql` where one exists and finishes within the time
-budget (columns compared by name, rows in order, as the library's
-oracle gate does). Writes refs/sf<sf>.json. Run it only when a
+`SparkEntry.oracleSql` where one exists and finishes within
+ORACLE_SECONDS (columns compared by name, rows in order, as the
+library's oracle gate does). Writes refs/sf<sf>.json. Run it only when a
 query's expected output changes on purpose, and say why in the commit.
 """
-import argparse
 import glob
 import json
 import math
@@ -22,6 +21,7 @@ import threading
 
 import run
 
+ORACLE_SECONDS = 30
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
@@ -75,9 +75,6 @@ def oracle_check(con, sql, files, seconds):
 
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--oracle-seconds", type=float, default=30.0)
-    a = ap.parse_args()
     import duckdb
 
     spec = run.load("workloads.json")
@@ -110,7 +107,7 @@ def main():
             verdicts[n] = "no twin"
             continue
         files = sorted(glob.glob(os.path.join(dump, n, "*.parquet")))
-        verdicts[n] = oracle_check(con, oracles[n], files, a.oracle_seconds)
+        verdicts[n] = oracle_check(con, oracles[n], files, ORACLE_SECONDS)
     bad = {n: v for n, v in verdicts.items() if v not in ("match", "no twin", "timeout")}
     out = {"sf": spec["sf"],
            "digests": {n: {"rows": digests[0][n][0], "digest": digests[0][n][1]}

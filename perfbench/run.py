@@ -32,7 +32,6 @@ import shutil
 import subprocess
 import sys
 import time
-import zipfile
 
 import metrics
 
@@ -41,7 +40,6 @@ ROOT = os.path.dirname(HERE)
 HARNESS = os.path.join(HERE, "harness")
 OUT = os.path.join(HERE, "out")
 BUILD = os.path.join(OUT, "build")
-CDS_ARCHIVE = os.path.join(BUILD, "classes.jsa")
 RUN_TIMEOUT_S = 170
 HEAP = "3g"
 
@@ -100,31 +98,9 @@ def run_group(cmd, timeout, **kw):
         return None
 
 
-def jar_dirs(cp):
-    """Zip every class directory of the classpath into a jar under BUILD:
-    the JVM's class-data archive accepts jars only."""
-    out = []
-    for i, entry in enumerate(cp.split(os.pathsep)):
-        if os.path.isdir(entry):
-            jar = os.path.join(BUILD, "classes-%d.jar" % i)
-            with zipfile.ZipFile(jar, "w") as z:
-                for dirpath, dirs, names in os.walk(entry):
-                    dirs.sort()
-                    for n in sorted(names):
-                        f = os.path.join(dirpath, n)
-                        z.write(f, os.path.relpath(f, entry))
-            entry = jar
-        out.append(entry)
-    return os.pathsep.join(out)
-
-
 def build():
-    """Classpath of the harness and the library, built if the sources changed.
-
-    The build compiles both with sbt, jars the class directories and
-    records a class-data archive (CDS) from a short training run over the
-    first query of every workload, which later runs map instead of
-    loading and verifying Spark's classes again."""
+    """Classpath of the harness and the library, compiled with sbt if the
+    sources changed."""
     fp = fingerprint()
     cp_file, fp_file = os.path.join(BUILD, "classpath"), os.path.join(BUILD, "fingerprint")
     if os.path.isfile(cp_file) and os.path.isfile(fp_file):
@@ -152,11 +128,6 @@ def build():
     cp = lines[-1] if lines else ""
     if rc != 0 or os.path.join("harness", "target") not in cp:
         raise SystemExit("perfbench: build failed (rc=%s), see %s" % (rc, log))
-    cp = jar_dirs(cp)
-    spec = load("workloads.json")
-    training = [w["queries"][0] for w in spec["workloads"].values()]
-    run_harness(cp, training, data_dir(spec), 0.001, 0, "build/cds-training",
-                jvm=["-XX:ArchiveClassesAtExit=" + CDS_ARCHIVE])
     with open(cp_file, "w") as f:
         f.write(cp)
     with open(fp_file, "w") as f:
@@ -172,10 +143,8 @@ def cores():
     return len(os.sched_getaffinity(0))
 
 
-def run_harness(cp, order, data, seconds, trace, tag, dump=None, jvm=None):
+def run_harness(cp, order, data, seconds, trace, tag, dump=None):
     """Run one harness JVM; returns (events, spawn epoch ms)."""
-    if jvm is None:
-        jvm = ["-XX:SharedArchiveFile=" + CDS_ARCHIVE] if os.path.isfile(CDS_ARCHIVE) else []
     tmp = os.path.join(OUT, "tmp")
     os.makedirs(tmp, exist_ok=True)
     order_file = os.path.join(OUT, tag + ".order")
@@ -183,7 +152,7 @@ def run_harness(cp, order, data, seconds, trace, tag, dump=None, jvm=None):
     with open(order_file, "w") as f:
         f.write("\n".join(order) + "\n")
     cmd = ["java"] + [x for p in ADD_OPENS for x in ("--add-opens", p + "=ALL-UNNAMED")] + [
-        "-Xms" + HEAP, "-Xmx" + HEAP, "-Duser.timezone=UTC"] + jvm + [
+        "-Xms" + HEAP, "-Xmx" + HEAP, "-Duser.timezone=UTC",
         "-Djava.io.tmpdir=" + tmp, "-Dspark.local.dir=" + tmp,
         "-Dspark.sql.warehouse.dir=" + os.path.join(tmp, "warehouse"),
         "-cp", cp, "graft.perfbench.Harness",
@@ -252,7 +221,7 @@ def main():
     layers = {}
     if layer_passes:
         layers = {k: metrics.median([p[k] for p in layer_passes]) for k in layer_passes[0]}
-        layers["trace.untraced_batch_s"] = e2e["batch_s"]
+        layers["trace.untraced_batch_s"] = e2e["batch_wall_s"]
 
     context = {"workload": a.workload, "seed": a.seed, "cores": n_cores, "sf": spec["sf"],
                "trace": a.trace, "order": order}

@@ -83,13 +83,45 @@ class Attribution(unittest.TestCase):
 
 
 class CallSites(unittest.TestCase):
-    def test_layers(self):
-        self.assertEqual(metrics.call_site_layer("parquet at Tables.scala:40"), "tables")
-        self.assertEqual(metrics.call_site_layer("localCheckpoint at OpModule.scala:76"),
-                         "opmodule")
-        self.assertEqual(metrics.call_site_layer("count at GraftBridge.scala:51"), "opmodule")
-        self.assertEqual(metrics.call_site_layer("collect at LlmSim.scala:9"), "other")
-        self.assertEqual(metrics.call_site_layer("run at CompletableFuture.java:1804"), "other")
+    # Call stacks (a job's final-stage details) as Spark records them.
+    TABLES = ("org.apache.spark.sql.classic.DataFrameReader.parquet(DataFrameReader.scala:57)\n"
+              "graft.Tables$.loose(Tables.scala:156)\n"
+              "graft.Tables$.apply(Tables.scala:150)\n"
+              "graft.Tables$.lineitem(Tables.scala:165)")
+    CUT = ("org.apache.spark.sql.classic.Dataset.localCheckpoint(Dataset.scala:231)\n"
+           "graft.operators.PersistScope.cut(OpModule.scala:76)\n"
+           "graft.operators.Events$.$anonfun$queries$13(Events.scala:387)")
+    # short form "localCheckpointWithLayout at Events.scala:57"
+    LAYOUT = ("org.apache.spark.sql.GraftBridge$.localCheckpointWithLayout(GraftBridge.scala:51)\n"
+              "graft.operators.Events$.$anonfun$evtByUser$1(Events.scala:57)\n"
+              "graft.operators.SessionMemo$.memo(OpModule.scala:109)")
+    GRAPH = ("org.apache.spark.sql.classic.Dataset.localCheckpoint(Dataset.scala:231)\n"
+             "graft.operators.Graph$.$anonfun$sharedEdges$1(Graph.scala:81)\n"
+             "graft.operators.SessionMemo$.memo(OpModule.scala:109)")
+    HARNESS = ("org.apache.spark.sql.classic.DataFrameWriter.save(DataFrameWriter.scala:126)\n"
+               "graft.perfbench.Harness$.$anonfun$run$16(Harness.scala:144)")
+    AQE = ("org.apache.spark.sql.execution.SQLExecution$.$anonfun$withThreadLocalCaptured$2"
+           "(SQLExecution.scala:329)\n"
+           "java.base/java.util.concurrent.CompletableFuture$AsyncSupply.run"
+           "(CompletableFuture.java:1768)")
+
+    def test_innermost_library_frame_decides(self):
+        self.assertEqual(metrics.call_site_layer(self.TABLES), "tables")
+        self.assertEqual(metrics.call_site_layer(self.CUT), "opmodule")
+        # an outer SessionMemo frame does not make a graph cut an OpModule job
+        self.assertEqual(metrics.call_site_layer(self.GRAPH), "other")
+
+    def test_bridge_job_is_opmodule_though_named_after_caller(self):
+        self.assertEqual(metrics.call_site_layer(self.LAYOUT), "opmodule")
+
+    def test_harness_and_spark_threads_are_other(self):
+        self.assertEqual(metrics.call_site_layer(self.HARNESS), "other")
+        self.assertEqual(metrics.call_site_layer(self.AQE), "other")
+        self.assertEqual(metrics.call_site_layer(""), "other")
+
+    def test_module_prefix_is_ignored(self):
+        self.assertEqual(metrics.call_site_layer("app//graft.Tables$.loose(Tables.scala:156)"),
+                         "tables")
 
 
 if __name__ == "__main__":
