@@ -106,22 +106,47 @@ def median(xs):
 def steady(passes):
     """The later half of a run's timed passes. Pass times still fall by a
     quarter or more over the first few passes of a fresh JVM (JIT and
-    Spark's code-generation caches); the later half is the settled part."""
+    Spark's code-generation caches); the later half is the settled part.
+    A run makes a fixed number of passes, so this is the same stretch of
+    the JVM's warm-up in every run, however fast the host is."""
     return passes[len(passes) // 2:]
 
 
-# Calibration time (Harness.scala `Calibration`) on the reference machine,
-# a 4-core x86 VM. Shared hosts slow down by up to 2x for minutes at a
-# time; batch_s and setup_s are scaled by REFERENCE_CALIB_S / calib_s,
-# the machine's speed measured in the same run, so they read as seconds
-# on the reference machine. The raw walls are kept as *_wall_s.
-REFERENCE_CALIB_S = 0.165
+def host_ticks(stat_line):
+    """(busy, steal) clock ticks from the first line of /proc/stat; the
+    same split as HostCpu in Harness.scala."""
+    f = [int(x) for x in stat_line.split()[1:]]
+    return f[0] + f[1] + f[2] + f[5] + f[6], (f[7] if len(f) > 7 else 0)
 
 
-def end_to_end(events, spawn_ms):
+def net_of_steal(wall, busy, steal):
+    """Wall time less the share the hypervisor took away: on a shared
+    host a virtual CPU with work to do waits while another tenant runs,
+    and the machine counts that wait as steal. A pass whose CPUs lost a
+    share f of their busy time to steal would have taken wall * (1 - f)."""
+    return wall * busy / (busy + steal) if busy + steal > 0 else wall
+
+
+# Lower quartile of the core-speed probe's kernel time (Harness.scala
+# `Probe`) on the reference machine, a 4-core x86 VM. A shared host runs
+# the same cores up to 2x slower for minutes at a time; batch_s and
+# setup_s are scaled by PROBE_REF_S / probe_s, the core speed measured
+# during the same pass, so they read as seconds at the reference speed.
+PROBE_REF_S = 0.0002
+
+
+def at_reference_speed(seconds, probe_s):
+    """`seconds` measured while the probe read `probe_s`, at the
+    reference core speed; unscaled when the probe took no sample."""
+    return seconds * PROBE_REF_S / probe_s if probe_s > 0 else seconds
+
+
+def end_to_end(events, spawn_ms, spawn_ticks=(0, 0)):
     """End-to-end figures of one run: the settled untraced timed passes,
     and the set-up from process spawn to the first timed query (session
-    creation and the warm-up pass)."""
+    creation and the warm-up pass). batch_s and setup_s are net of steal
+    and at the reference core speed; the *_wall_s figures are the same
+    times as measured."""
     passes = [e for e in events if e["type"] == "pass" and e["kind"] == "timed"]
     untraced = steady([p for p in passes if not p["traced"]])
     ids = {p["pass"] for p in untraced}
@@ -130,18 +155,23 @@ def end_to_end(events, spawn_ms):
     p50 = tail_percentile(walls, 0.5)
     p90 = tail_percentile(walls, 0.9)
     setup = next(e for e in events if e["type"] == "setup")
-    calib = statistics.mean(e["calib_s"] for e in events if e["type"] == "calibration")
-    batch = median([p["wall_s"] for p in untraced])
-    setup_s = (setup["first_timed_ms"] - spawn_ms) / 1000.0
+    setup_wall = (setup["first_timed_ms"] - spawn_ms) / 1000.0
+    setup_busy = setup["busy_ticks"] - spawn_ticks[0]
+    setup_steal = setup["steal_ticks"] - spawn_ticks[1]
     return {
-        "batch_s": batch * REFERENCE_CALIB_S / calib,
+        "batch_s": median([at_reference_speed(
+            net_of_steal(p["wall_s"], p["busy_ticks"], p["steal_ticks"]), p["probe_s"])
+            for p in untraced]),
+        "setup_s": at_reference_speed(net_of_steal(setup_wall, setup_busy, setup_steal),
+                                      setup["probe_s"]),
+        "batch_wall_s": median([p["wall_s"] for p in untraced]),
+        "setup_wall_s": setup_wall,
+        "steal_frac": median([p["steal_ticks"] / max(1, p["busy_ticks"] + p["steal_ticks"])
+                              for p in untraced]),
+        "probe_s": median([p["probe_s"] for p in untraced]),
         "query_p50_s": p50[0],
         "query_p90_s": p90[0],
-        "setup_s": setup_s * REFERENCE_CALIB_S / calib,
         "storage_peak_mb": max((q["storage_mb"] for q in qs), default=None),
-        "batch_wall_s": batch,
-        "setup_wall_s": setup_s,
-        "calib_s": calib,
     }, {"passes": len(untraced), "query_samples": p50[2],
         "p50_quantile": p50[1], "p90_quantile": p90[1]}
 
@@ -228,6 +258,8 @@ def trace_rows(events, cores):
             "spark.shuffle_read_mb": sum(r["shuffle_read_mb"] for r in mine),
             "spark.spill_mb": sum(r["spill_mb"] for r in mine),
             "jvm.gc_s": p["gc_ms"] / 1000.0,
+            "jvm.jit_cpu_s": p["jit_cpu_s"],
+            "jvm.classes_loaded": p["classes_loaded"],
             "jvm.heap_peak_mb": p["heap_peak_mb"],
             "trace.window_attributed_jobs": by_window,
             "trace.unattributed_jobs": unattributed,

@@ -87,7 +87,7 @@ def main():
     for seed in (1, 2):
         order = list(names)
         random.Random(seed).shuffle(order)
-        events, _ = run.run_harness(cp, order, data, 0.001, 0, "refs-%d" % seed,
+        events, _, _ = run.run_harness(cp, order, data, 1, 0, "refs-%d" % seed,
                                     dump=dump if seed == 1 else None)
         digests.append({e["name"]: (e["rows"], e["digest"]) for e in events
                         if e["type"] == "query" and e["pass"] == "warmup"

@@ -11,11 +11,14 @@ One run is one JVM with one local SparkSession on every core the
 process may use, driving one closed-loop client over the workload's
 pinned query list (workloads.json) in the order the seed gives. The
 harness warms up with one full pass that also digests every result
-(the digests must equal the references in refs/), then times passes
-while the next one is expected to end within S seconds of pass time.
-The report keeps the later half of the timed passes (the JVM is still
-warming up during the first ones) and scales the gated times to a
-reference machine speed measured in the same run (metrics.py). With --trace 0 the last stdout line
+(the digests must equal the references in refs/), then times a fixed
+number of passes: S seconds divided by the workload's pass time on the
+reference machine (`pass_s`), so a slowed host changes how long a run
+takes but not how warm the JVM is when it is measured. The report
+keeps the later half of the timed passes (the JVM is still warming up
+during the first ones) and reports the gated times net of the CPU time
+the hypervisor stole from the machine and at a reference core speed
+measured during the same pass (metrics.py). With --trace 0 the last stdout line
 carries the gated end-to-end metrics, with --trace 1 the per-layer ones
 (every second pass is traced; the others give the tracing overhead).
 All metrics, the cores, the scale factor and the seed are printed
@@ -41,11 +44,14 @@ HARNESS = os.path.join(HERE, "harness")
 OUT = os.path.join(HERE, "out")
 BUILD = os.path.join(OUT, "build")
 RUN_TIMEOUT_S = 170
+# Timed passes stop after this much pass time, so that a run on a badly
+# slowed host still ends within RUN_TIMEOUT_S.
+MAX_TIMED_S = 100
 HEAP = "3g"
 
 # Printed with every run; BENCHMARK.json names the ones the benchmark gates.
 END_TO_END_UNITS = {"batch_s": "s", "setup_s": "s", "batch_wall_s": "s", "setup_wall_s": "s",
-                    "calib_s": "s", "query_p50_s": "s", "query_p90_s": "s",
+                    "steal_frac": "fraction", "probe_s": "s", "query_p50_s": "s", "query_p90_s": "s",
                     "storage_peak_mb": "MB"}
 
 # Spark on JDK 17 outside spark-submit (org.apache.spark.launcher.JavaModuleOptions).
@@ -143,8 +149,23 @@ def cores():
     return len(os.sched_getaffinity(0))
 
 
-def run_harness(cp, order, data, seconds, trace, tag, dump=None):
-    """Run one harness JVM; returns (events, spawn epoch ms)."""
+def timed_passes(seconds, pass_s):
+    """Number of timed passes for a run of `seconds` (at least one)."""
+    return max(1, round(seconds / pass_s))
+
+
+def host_ticks():
+    """(busy, steal) CPU ticks of the machine now; (0, 0) without /proc."""
+    try:
+        with open("/proc/stat") as f:
+            return metrics.host_ticks(f.readline())
+    except OSError:
+        return 0, 0
+
+
+def run_harness(cp, order, data, passes, trace, tag, dump=None):
+    """Run one harness JVM; returns (events, spawn epoch ms, host ticks
+    at spawn)."""
     tmp = os.path.join(OUT, "tmp")
     os.makedirs(tmp, exist_ok=True)
     order_file = os.path.join(OUT, tag + ".order")
@@ -156,10 +177,12 @@ def run_harness(cp, order, data, seconds, trace, tag, dump=None):
         "-Djava.io.tmpdir=" + tmp, "-Dspark.local.dir=" + tmp,
         "-Dspark.sql.warehouse.dir=" + os.path.join(tmp, "warehouse"),
         "-cp", cp, "graft.perfbench.Harness",
-        "--data", data, "--order", order_file, "--seconds", str(seconds),
+        "--data", data, "--order", order_file, "--passes", str(passes),
+        "--max-seconds", str(MAX_TIMED_S),
         "--trace", str(trace), "--cores", str(cores()), "--events", events_file]
     if dump:
         cmd += ["--dump", dump]
+    spawn_ticks = host_ticks()
     spawn_ms = time.time() * 1000.0
     with open(os.path.join(OUT, tag + ".log"), "w") as log:
         rc = run_group(cmd, timeout=RUN_TIMEOUT_S, cwd=ROOT, stdout=log,
@@ -168,7 +191,7 @@ def run_harness(cp, order, data, seconds, trace, tag, dump=None):
         raise SystemExit("perfbench: harness %s (rc=%s), see %s" % (
             "timed out" if rc is None else "failed", rc, log.name))
     with open(events_file) as f:
-        return [json.loads(l) for l in f if l.strip()], spawn_ms
+        return [json.loads(l) for l in f if l.strip()], spawn_ms, spawn_ticks
 
 
 def failures(events, pinned, refs):
@@ -205,6 +228,7 @@ def main():
     if a.workload not in spec["workloads"]:
         raise SystemExit("perfbench: unknown workload %r" % a.workload)
     pinned = spec["workloads"][a.workload]["queries"]
+    passes = timed_passes(a.seconds, spec["workloads"][a.workload]["pass_s"])
     ref_file = os.path.join("refs", "sf%s.json" % spec["sf"])
     refs = load(ref_file)["digests"] if os.path.isfile(os.path.join(HERE, ref_file)) else {}
     data = data_dir(spec)
@@ -213,9 +237,9 @@ def main():
     order = list(pinned)
     random.Random(a.seed).shuffle(order)
     tag = "%s-seed%d-trace%d" % (a.workload, a.seed, a.trace)
-    events, spawn_ms = run_harness(cp, order, data, a.seconds, a.trace, tag)
+    events, spawn_ms, spawn_ticks = run_harness(cp, order, data, passes, a.trace, tag)
     bad = failures(events, pinned, refs)
-    e2e, info = metrics.end_to_end(events, spawn_ms)
+    e2e, info = metrics.end_to_end(events, spawn_ms, spawn_ticks)
     n_cores = next(e["cores"] for e in events if e["type"] == "start")
     rows, layer_passes = metrics.trace_rows(events, n_cores)
     layers = {}
@@ -230,10 +254,11 @@ def main():
                    "per_layer": layers, "failures": bad, "per_query": rows,
                    "queries": [e for e in events if e["type"] == "query"]}, f, indent=1)
 
-    print("perfbench %s: seed=%d cores=%d sf=%s trace=%d steady_passes=%d queries=%d" % (
-        a.workload, a.seed, n_cores, spec["sf"], a.trace, info["passes"], len(pinned)))
+    print("perfbench %s: seed=%d cores=%d sf=%s trace=%d timed_passes=%d steady_passes=%d "
+          "queries=%d" % (a.workload, a.seed, n_cores, spec["sf"], a.trace, passes,
+                          info["passes"], len(pinned)))
     for k, unit in END_TO_END_UNITS.items():
-        print("  %-16s %12s %s" % (k, "n/a" if e2e[k] is None else "%.4f" % e2e[k], unit))
+        print("  %-16s %12s %s" % (k, "n/a" if e2e[k] is None else "%.6g" % e2e[k], unit))
     if info["query_samples"]:
         print("  query_p50_s is the p%.1f and query_p90_s the p%.1f of %d samples" % (
             100 * info["p50_quantile"], 100 * info["p90_quantile"], info["query_samples"]))
@@ -242,7 +267,7 @@ def main():
         print("  FAILED %s: %s" % (name, why))
     if layers:
         over = layers["trace.traced_batch_s"] / layers["trace.untraced_batch_s"] - 1
-        print("  tracing overhead %+.1f%% of batch_s" % (100 * over))
+        print("  tracing overhead %+.1f%% of the untraced pass wall" % (100 * over))
         odd = [r["query"] for r in rows if r["build_s"] + r["action_s"] > r["wall_s"] + 1e-6
                or r["build_self_s"] < 0 or r["action_self_s"] < 0]
         print("  span check: %s" % ("build_s + action_s <= wall_s and self times >= 0 for all %d "

@@ -9,6 +9,7 @@ import unittest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import metrics  # noqa: E402
+import run  # noqa: E402
 
 
 class TailPercentile(unittest.TestCase):
@@ -41,6 +42,53 @@ class Steady(unittest.TestCase):
         self.assertEqual(metrics.steady([5]), [5])
 
 
+class EndToEnd(unittest.TestCase):
+    @staticmethod
+    def events(walls, steal=0, probe=metrics.PROBE_REF_S):
+        ev = [{"type": "setup", "first_timed_ms": 25000, "busy_ticks": 5000,
+               "steal_ticks": 1000, "probe_s": metrics.PROBE_REF_S}]
+        for i, w in enumerate(walls):
+            ev.append({"type": "pass", "pass": str(i), "kind": "timed", "traced": False,
+                       "wall_s": w, "busy_ticks": 300, "steal_ticks": steal,
+                       "probe_s": probe})
+            ev.append({"type": "query", "pass": str(i), "wall_s": w, "error": None,
+                       "storage_mb": 1.0})
+        return ev
+
+    def test_later_half_medians(self):
+        e2e, info = metrics.end_to_end(self.events([7, 6, 3, 2, 4]), 1000, (2000, 1000))
+        self.assertEqual(e2e["batch_s"], 3)         # median of 3, 2, 4
+        self.assertEqual(e2e["setup_s"], 24.0)      # no steal since spawn
+        self.assertEqual(info["passes"], 3)
+
+    def test_times_are_net_of_steal(self):
+        e2e, _ = metrics.end_to_end(self.events([7, 6, 3, 2, 4], steal=100), 1000, (4000, 0))
+        self.assertEqual(e2e["batch_wall_s"], 3)
+        self.assertAlmostEqual(e2e["batch_s"], 3 * 0.75)   # a quarter of 400 ticks stolen
+        self.assertAlmostEqual(e2e["steal_frac"], 0.25)
+        self.assertEqual(e2e["setup_wall_s"], 24.0)
+        self.assertAlmostEqual(e2e["setup_s"], 24.0 * 0.5)  # 1000 of 2000 ticks stolen
+
+
+    def test_times_at_reference_speed(self):
+        e2e, _ = metrics.end_to_end(
+            self.events([7, 6, 3, 2, 4], probe=2 * metrics.PROBE_REF_S), 1000, (2000, 1000))
+        self.assertEqual(e2e["batch_wall_s"], 3)
+        self.assertAlmostEqual(e2e["batch_s"], 1.5)         # cores ran at half speed
+
+    def test_no_probe_sample_leaves_time(self):
+        self.assertEqual(metrics.at_reference_speed(2.5, 0), 2.5)
+
+
+class Steal(unittest.TestCase):
+    def test_host_ticks_split(self):
+        line = "cpu  100 5 20 900 7 3 2 40 0 0"
+        self.assertEqual(metrics.host_ticks(line), (130, 40))
+
+    def test_no_ticks_leaves_wall(self):
+        self.assertEqual(metrics.net_of_steal(2.5, 0, 0), 2.5)
+
+
 class SelfTime(unittest.TestCase):
     def test_overlapping_children_count_once(self):
         self.assertEqual(metrics.union_length([(1, 4), (2, 6), (8, 9)], 0, 10), 6)
@@ -56,6 +104,13 @@ class SelfTime(unittest.TestCase):
 
     def test_empty_and_reversed_intervals_ignored(self):
         self.assertEqual(metrics.union_length([(4, 4), (6, 5)], 0, 10), 0)
+
+
+class TimedPasses(unittest.TestCase):
+    def test_count_follows_seconds_not_host_speed(self):
+        self.assertEqual(run.timed_passes(30, 3.6), 8)
+        self.assertEqual(run.timed_passes(30, 4.8), 6)
+        self.assertEqual(run.timed_passes(1, 4.8), 1)
 
 
 class Attribution(unittest.TestCase):
