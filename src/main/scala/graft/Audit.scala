@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Per-query stage/job decomposition (r13 verdict #1): for each named
@@ -21,14 +20,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 object Audit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val qFilter = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val benched = SparkEntry.queries.filter { case (n, _) =>
@@ -61,6 +54,10 @@ object Audit {
     benched.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
+    // Count from a cold memo, as Bench.timedPass does: the warm-up
+    // built every SessionMemo frame, and a memo consumer's row must
+    // include its own build jobs.
+    graft.operators.SessionMemo.clear()
     val out = new StringBuilder("[")
     var first = true
     benched.foreach { case (name, fn) =>
@@ -78,7 +75,7 @@ object Audit {
       org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
       val errJson = err.map(c => s""","error":"$c"""").getOrElse("")
       val line =
-        f"""{"query":"$name","wall_sec":$wallSec%.3f,"jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"task_time_sec":${taskMs.get / 1e3}%.3f,"task_over_cores_sec":${taskMs.get / 1e3 / cpus.toInt}%.3f,"in_job_sec":${jobMs.get / 1e3}%.3f,"driver_gap_sec":${math.max(0.0, wallSec - jobMs.get / 1e3)}%.3f$errJson}"""
+        f"""{"query":"$name","wall_sec":$wallSec%.3f,"jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"task_time_sec":${taskMs.get / 1e3}%.3f,"task_over_cores_sec":${taskMs.get / 1e3 / cpus}%.3f,"in_job_sec":${jobMs.get / 1e3}%.3f,"driver_gap_sec":${math.max(0.0, wallSec - jobMs.get / 1e3)}%.3f$errJson}"""
       println("[audit] " + line)
       if (!first) out.append(",\n")
       out.append(line); first = false

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up synthesizer for the local stress leg (r7 advice #3): build
@@ -34,14 +34,7 @@ object StressGen {
     val out = args.lift(1).getOrElse("/root/repo/tmp-sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val mode = args.lift(3).getOrElse("full")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
 
     val ks = spark.range(copies).toDF("k")
 

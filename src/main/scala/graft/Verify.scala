@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,14 +10,7 @@ object Verify {
     val filters = args.drop(2)
     def keep(name: String): Boolean =
       filters.isEmpty || filters.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(4)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_BUCKETED=true: materialize the hash-clustered catalog
     // layout for sfDir and run the ENTIRE matrix over it — the DuckDB

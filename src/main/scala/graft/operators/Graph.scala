@@ -81,31 +81,48 @@ object Graph extends OpModule {
       edges(s, d).coalesce(4).localCheckpoint(true))
 
   /** Session-memoized CUT of the min-label FIRST superstep over the
-    * shared co-purchase edges (r17, the r16 verdict's #5): all three
-    * connectivity kernels (graph_components / _doubling / _converged)
-    * open with the identical round — lbl₀(v) = v, ml(v) = min(v,
-    * min neighbor id) — so the edge-sized neighbor-min join computes
-    * once per session and each kernel continues from the cut (columns
-    * (node, ml)). Node-sized frame → coalesce(1) (the r14 floor
-    * discipline; the edge-sized map side stays parallel behind the
-    * rollup's shuffle). */
+    * shared co-purchase edges (r17, the r16 verdict's #5): the seed of
+    * [[componentLabels]] for all three graded connectivity names
+    * (graph_components / _doubling / _converged), which open with the
+    * identical round — lbl₀(v) = v, ml(v) = min(v, min neighbor id) —
+    * so the edge-sized neighbor-min join computes once per session
+    * (columns (node, ml)). */
   private def ccRound1Shared(s: SparkSession, d: String): DataFrame =
     SessionMemo.memo(s, d, "ccRound1") {
-      val e = sharedEdges(s, d)
-      val adj = e.select(col("u").as("a"), col("v").as("b"))
-        .union(e.select(col("v").as("a"), col("u").as("b")))
-      val nodes = degrees(e).select("node")
-      val nbrMin = adj
-        .join(nodes.select(col("node").as("b2"), col("node").as("bl")),
-          col("b") === col("b2"))
-        .groupBy(col("a")).agg(min("bl").as("nl"))
-      nodes.select(col("node"), col("node").as("lbl"))
-        .join(nbrMin.withColumnRenamed("a", "n2"),
-          col("node") === col("n2"), "left")
-        .select(col("node"),
-          least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("ml"))
-        .coalesce(1).localCheckpoint(true)
+      val (adj, nodes) = ccGraph(s, d)
+      ccStep(adj, identityLabels(nodes)).localCheckpoint(true)
     }
+
+  /** The co-purchase graph as the connectivity kernels walk it: the
+    * (a, b) adjacency holding both directions of every shared edge,
+    * and the node set. */
+  private def ccGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val e = sharedEdges(s, d) // session-memoized bounded universe
+    (e.select(col("u").as("a"), col("v").as("b"))
+      .union(e.select(col("v").as("a"), col("u").as("b"))),
+      degrees(e).select("node"))
+  }
+
+  /** lbl₀(v) = v: the starting label state (node, lbl). */
+  private def identityLabels(nodes: DataFrame): DataFrame =
+    nodes.select(col("node"), col("node").as("lbl"))
+
+  /** One min-label superstep over a label state (node, lbl): every node
+    * adopts the minimum label in its closed neighborhood, ml(v) =
+    * min(lbl(v), min over neighbors u of lbl(u)). One equi-join plus a
+    * partial-agg min; returns (node, ml) in one partition (see
+    * [[componentLabels]] for why). */
+  private def ccStep(adj: DataFrame, lbl: DataFrame): DataFrame = {
+    val nbrMin = adj
+      .join(lbl.select(col("node").as("b2"), col("lbl").as("bl")),
+        col("b") === col("b2"))
+      .groupBy(col("a")).agg(min("bl").as("nl"))
+    lbl.join(nbrMin.withColumnRenamed("a", "n2"),
+        col("node") === col("n2"), "left")
+      .select(col("node"),
+        least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("ml"))
+      .coalesce(1)
+  }
 
   /** Nation→nation trade edges (customer nation buys from supplier
     * nation, weight = lineitem count) — the directed weighted graph
@@ -572,62 +589,16 @@ object Graph extends OpModule {
     // materialized — see kcoreBody for the algorithm.
     "graph_kcore" -> ((s, d) => scopedPersist(kcoreBody(s, d))),
 
-    // Persist-scoped (r5); see componentsBody. Emits the convergence
-    // column labels_changed_last_round beside the histogram.
-    "graph_components" -> ((s, d) => scopedPersist(componentsBody(s, d))),
-
-    "graph_components_doubling" -> ((s, d) => scopedPersist { scope =>
-      // Connected components by POINTER-DOUBLING hash-to-min (r13
-      // verdict #2): each round does the plain neighbor-min superstep
-      // and then a label-indirection jump lbl(v) ← min(m(v), m(m(v)))
-      // — the label value IS a node id, so one self-join on the label
-      // column doubles the radius the min has traveled. k rounds
-      // cover diameter ~2ᵏ⁺¹−2 where the plain kernel covers k —
-      // the scale-correct form for canonical-doc assignment on graphs
-      // whose diameter outgrows a fixed round budget (proven on the
-      // GraphSpec long-path fixture where the 3-round kernel
-      // under-merges and this kernel converges). Same convergence
-      // column, same histogram shape as graph_components, so the two
-      // kernels read side by side; labels only ever decrease within a
-      // component, so every jump target is a real node (the left join
-      // is defensive, not semantic).
-      val e = sharedEdges(s, d) // session-memoized bounded universe
-      val adj = e.select(col("u").as("a"), col("v").as("b"))
-        .union(e.select(col("v").as("a"), col("u").as("b")))
-      val (lbl, changed) =
-        componentLabelsDoubling(adj, degrees(e).select("node"), 3, scope,
-          Some(ccRound1Shared(s, d))) // r17: shared round-1 superstep
-      lbl.groupBy("lbl").agg(count(lit(1)).as("csz"))
-        .groupBy(col("csz").as("component_size"))
-        .agg(count(lit(1)).as("n_components"))
-        .crossJoin(broadcast(changed))
-        .orderBy("component_size")
-    }),
-
-    "graph_components_converged" -> ((s, d) => scopedPersist { scope =>
-      // Connected components run TO CONVERGENCE (r15): the doubling
-      // kernel iterates until a driver-side residual census reads 0
-      // (or the cap of 10), instead of a
-      // fixed unroll that under-merges high-diameter graphs silently.
-      // This is the production shape of every iterative Spark kernel
-      // (MLlib-style: cheap driver-side convergence probe per
-      // superstep, bounded by a cap); the emitted rounds_used /
-      // residual make the decision auditable. Oracle: converged
-      // rounds are identity, so the cap-depth unroll + per-round
-      // change censuses reproduce both the labels and the counters.
-      val e = sharedEdges(s, d) // session-memoized bounded universe
-      val adj = e.select(col("u").as("a"), col("v").as("b"))
-        .union(e.select(col("v").as("a"), col("u").as("b")))
-      val (lbl, rounds, residual) =
-        componentLabelsConverged(adj, degrees(e).select("node"), 10, scope,
-          Some(ccRound1Shared(s, d))) // r17: shared round-1 superstep
-      lbl.groupBy("lbl").agg(count(lit(1)).as("csz"))
-        .groupBy(col("csz").as("component_size"))
-        .agg(count(lit(1)).as("n_components"))
-        .withColumn("rounds_used", lit(rounds))
-        .withColumn("residual", lit(residual))
-        .orderBy("component_size")
-    }),
+    // Persist-scoped (r5); see componentLabels. The plain 3-round
+    // unroll, its pointer-doubling twin (r13) and doubling run to a
+    // zero change census under a cap of 10 (r15): one size histogram,
+    // so the three read side by side.
+    "graph_components" -> ((s, d) =>
+      scopedPersist(componentsBody(3, jump = false, converge = false)(s, d))),
+    "graph_components_doubling" -> ((s, d) =>
+      scopedPersist(componentsBody(3, jump = true, converge = false)(s, d))),
+    "graph_components_converged" -> ((s, d) =>
+      scopedPersist(componentsBody(10, jump = true, converge = true)(s, d))),
 
     "graph_sssp" -> ((s, d) => scopedPersist { scope =>
       // Bounded-hop weighted single-source shortest paths (r13 verdict
@@ -1073,184 +1044,117 @@ object Graph extends OpModule {
       .orderBy("round")
   }
 
-  /** Connected components by `rounds` unrolled min-label supersteps
-    * over a generic (a, b) adjacency — every node adopts the minimum
-    * label in its closed neighborhood each round, so after r rounds
-    * labels agree within radius-r balls. Returns the final label table
-    * and the 1-row count of labels that CHANGED in the last round —
-    * the convergence probe (r5 verdict #6): a fixed-round kernel on a
-    * graph whose diameter exceeds the round count under-merges
-    * SILENTLY unless this delta is emitted (0 at convergence; proven
-    * nonzero on a long path graph in GraphSpec). Each superstep is one
-    * equi-join + partial-agg min; per-round labels persist via the
-    * scope (the next round references them twice, the delta a third
-    * time). */
-  /** Pointer-doubling hash-to-min component labels (r13 verdict #2):
-    * per round, ONE neighbor-min superstep (the componentLabels step)
-    * followed by ONE label-indirection jump lbl(v) ← min(m(v),
-    * m(m(v))) — radius coverage doubles per round (~2ᵏ⁺¹−2 after k
-    * rounds vs k for the plain kernel). m is referenced twice by the
-    * jump self-join → cut; label frames are node-sized at any scale
-    * → coalesce(1) (the r14 floor discipline). Returns (labels,
-    * last-round-delta) like componentLabels.
-    */
-  private[graft] def componentLabelsDoubling(adj: DataFrame, nodes: DataFrame,
-      rounds: Int, scope: PersistScope,
-      m1Seed: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    // m1Seed (r17): the session-shared round-1 neighbor-min frame
-    // (columns (node, ml)) — when present, round 1 reads the memoized
-    // cut instead of recomputing the edge-sized superstep, and the
-    // lbl₀ identity cut is skipped entirely (lbl₀ would only feed the
-    // recomputation). Callers seed only with rounds ≥ 2 so `prev` is
-    // always overwritten past the seeded round.
-    var first = m1Seed
-    var lbl =
-      if (first.isDefined) null
-      else scope.cut(nodes.select(col("node"), col("node").as("lbl")))
-    var prev = lbl
-    for (_ <- 1 to rounds) {
-      prev = lbl
-      val m = first match {
-        case Some(m1) => first = None; m1
-        case None =>
-          val nbrMin = adj
-            .join(lbl.select(col("node").as("b2"), col("lbl").as("bl")),
-              col("b") === col("b2"))
-            .groupBy(col("a")).agg(min("bl").as("nl"))
-          scope.cut(
-            lbl.join(nbrMin.withColumnRenamed("a", "n2"),
-                col("node") === col("n2"), "left")
-              .select(col("node"),
-                least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("ml"))
-              .coalesce(1))
-      }
-      lbl = scope.cut(
-        m.join(m.select(col("node").as("jn"), col("ml").as("jl")),
-            col("ml") === col("jn"), "left")
-          .select(col("node"),
-            least(col("ml"), coalesce(col("jl"), col("ml"))).as("lbl"))
-          .coalesce(1))
-    }
-    val changed = lbl
-      .join(prev.select(col("node").as("pn"), col("lbl").as("plbl")),
-        col("node") === col("pn"))
-      .filter(col("lbl") =!= col("plbl"))
-      .agg(count(lit(1)).as("labels_changed_last_round"))
-    (lbl, changed)
-  }
+  /** One connected-components run: the final labels (node, lbl), the
+    * rounds executed, the lazy 1-row census of labels that changed in
+    * the last round (labels_changed_last_round), and — under the
+    * converge stop rule only — that census as the driver read it. */
+  private[graft] final case class Components(labels: DataFrame, rounds: Int,
+      changed: DataFrame, residual: Option[Long])
 
-  /** Pointer-doubling labels iterated TO CONVERGENCE under a round
-    * cap (r15 verdict #7): rounds are decided DRIVER-SIDE on the
-    * residual census — after each doubling round, one count() of
-    * labels that changed; the loop stops at residual 0 or the cap
-    * (the subSplit branch discipline: the decision input is a tiny
-    * aggregate, never data). Because converged rounds are IDENTITY,
-    * the DuckDB oracle simply unrolls the full cap and computes
-    * rounds_used/residual from per-round change censuses — the
-    * early-stopped Spark labels and the cap-depth oracle labels
-    * agree by construction. Returns (labels, rounds executed,
-    * final residual). */
-  private[graft] def componentLabelsConverged(adj: DataFrame,
-      nodes: DataFrame, cap: Int, scope: PersistScope,
-      m1Seed: Option[DataFrame] = None)
-      : (DataFrame, Long, Long) = {
-    // m1Seed (r17): see componentLabelsDoubling. Here lbl₀ stays (the
-    // round-1 residual census compares against it) but LAZY when
-    // seeded — it is then referenced exactly once, by that census;
-    // unseeded it feeds the first m-step twice and keeps its cut.
-    var first = m1Seed
-    var lbl =
-      if (first.isDefined) nodes.select(col("node"), col("node").as("lbl"))
-      else scope.cut(nodes.select(col("node"), col("node").as("lbl")))
-    var rounds = 0L
-    var residual = -1L
-    while (residual != 0L && rounds < cap) {
-      val m = first match {
-        case Some(m1) => first = None; m1
-        case None =>
-          val nbrMin = adj
-            .join(lbl.select(col("node").as("b2"), col("lbl").as("bl")),
-              col("b") === col("b2"))
-            .groupBy(col("a")).agg(min("bl").as("nl"))
-          scope.cut(
-            lbl.join(nbrMin.withColumnRenamed("a", "n2"),
-                col("node") === col("n2"), "left")
-              .select(col("node"),
-                least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("ml"))
-              .coalesce(1))
-      }
-      val nxt = scope.cut(
-        m.join(m.select(col("node").as("jn"), col("ml").as("jl")),
-            col("ml") === col("jn"), "left")
-          .select(col("node"),
-            least(col("ml"), coalesce(col("jl"), col("ml"))).as("lbl"))
-          .coalesce(1))
-      rounds += 1
-      residual = nxt
-        .join(lbl.select(col("node").as("pn"), col("lbl").as("plbl")),
-          col("node") === col("pn"))
-        .filter(col("lbl") =!= col("plbl")).count()
-      lbl = nxt
-    }
-    (lbl, rounds, residual)
-  }
-
+  /** Connected components by min-label supersteps over a generic (a, b)
+    * adjacency. Every round is m = [[ccStep]](lbl) — each node adopts
+    * the minimum label in its closed neighborhood, so after r plain
+    * rounds labels agree within radius-r balls — and then
+    *   - plain (`jump` off): lbl = m;
+    *   - pointer-doubling hash-to-min (`jump` on, r13 verdict #2): the
+    *     label-indirection jump lbl(v) ← min(m(v), m(m(v))). The label
+    *     value IS a node id, so one self-join on the label column
+    *     doubles the radius the min has traveled: k rounds cover
+    *     diameter ~2ᵏ⁺¹−2 where the plain kernel covers k — the
+    *     scale-correct form for canonical-doc assignment on graphs
+    *     whose diameter outgrows a fixed round budget (proven on the
+    *     GraphSpec long-path fixture, where 3 plain rounds under-merge
+    *     and 3 doubling rounds converge). Labels only ever decrease
+    *     within a component, so every jump target is a real node (the
+    *     left join is defensive, not semantic).
+    *
+    * Stop rule, with the last-round change census as the convergence
+    * probe (r5 verdict #6: a fixed unroll on a graph whose diameter
+    * exceeds the round count under-merges SILENTLY unless this delta is
+    * emitted — 0 at convergence, proven nonzero on a long path in
+    * GraphSpec):
+    *   - fixed (`converge` off): exactly `rounds` rounds; the census
+    *     stays lazy and rides out in `changed`;
+    *   - converge (`converge` on, r15 verdict #7): after each round the
+    *     driver counts the census and stops at 0 or the cap `rounds` —
+    *     the production shape of every iterative Spark kernel
+    *     (MLlib-style cheap driver-side probe per superstep; the
+    *     decision input is a tiny aggregate, never data), with
+    *     rounds/residual emitted so the decision is auditable. Because
+    *     converged rounds are IDENTITY, the DuckDB oracle simply
+    *     unrolls the full cap and computes rounds_used/residual from
+    *     per-round change censuses — the early-stopped Spark labels
+    *     and the cap-depth oracle labels agree by construction.
+    *
+    * `seed` (r17) is the session-shared round-1 frame (node, ml) of
+    * [[ccRound1Shared]]: round 1 reads the memoized cut instead of
+    * recomputing the edge-sized superstep. Seeded, lbl₀ stays lazy and
+    * is never cut — it is then referenced only by the round-1 census.
+    * Unseeded, lbl₀ feeds the first step twice (self + neighbor-min)
+    * and is cut.
+    *
+    * Every step and jump output is referenced at least twice (the next
+    * step reads it twice, the jump self-joins it), and a persist-only
+    * chain doubles the logical plan per round, so each is CUT (see
+    * PersistScope.cut for the AQE plan-render cost this avoids). Label
+    * frames are node-sized (bounded by the hash-coarsened node universe
+    * at any corpus scale), so every cut is coalesce(1): a 1-partition
+    * cut prices ~65 ms vs ~100–160 for 32 partitions on the r14 audit
+    * host (the r14 floor discipline), and the edge-sized map side of
+    * the neighbor-min rollup stays parallel behind its shuffle. */
   private[graft] def componentLabels(adj: DataFrame, nodes: DataFrame,
-      rounds: Int, scope: PersistScope,
-      m1Seed: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    // lbl_r references lbl_{r-1} twice (self + neighbor-min) — a
-    // persist-only chain doubles the logical plan per round; cut it
-    // (see PersistScope.cut for the AQE plan-render cost this avoids).
-    // m1Seed (r17): in the PLAIN kernel the shared round-1 frame IS
-    // the round-1 label state (the doubling jump is what separates
-    // the kernels from round 1's output on), so a seeded run starts
-    // at lbl₁ = m1 and loops from round 2. Callers seed only with
-    // rounds ≥ 2 so `prev` is always overwritten.
-    var lbl = m1Seed.map(_.select(col("node"), col("ml").as("lbl")))
-      .getOrElse(scope.cut(nodes.select(col("node"), col("node").as("lbl"))))
+      rounds: Int, scope: PersistScope, jump: Boolean = false,
+      converge: Boolean = false,
+      seed: Option[DataFrame] = None): Components = {
+    val lbl0 = identityLabels(nodes)
+    var lbl = if (seed.isDefined) lbl0 else scope.cut(lbl0)
     var prev = lbl
-    for (_ <- (if (m1Seed.isDefined) 2 else 1) to rounds) {
-      prev = lbl
-      val nbrMin = adj
-        .join(lbl.select(col("node").as("b2"), col("lbl").as("bl")),
-          col("b") === col("b2"))
-        .groupBy(col("a")).agg(min("bl").as("nl"))
-      // coalesce(1): the label frame is node-sized (bounded by the
-      // hash-coarsened node universe at any corpus scale); a
-      // 1-partition cut prices ~65 ms vs ~100–160 for 32 partitions
-      // on this host (r14 audit), and the edge-sized map side of the
-      // neighbor-min rollup stays parallel behind its shuffle.
-      lbl = scope.cut(
-        lbl.join(nbrMin.withColumnRenamed("a", "n2"),
-            col("node") === col("n2"), "left")
-          .select(col("node"),
-            least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"))
-          .coalesce(1))
-    }
-    val changed = lbl
+    // A def over the loop state: built after the last round, and per
+    // round only when the driver reads it.
+    def changed: DataFrame = lbl
       .join(prev.select(col("node").as("pn"), col("lbl").as("plbl")),
         col("node") === col("pn"))
       .filter(col("lbl") =!= col("plbl"))
       .agg(count(lit(1)).as("labels_changed_last_round"))
-    (lbl, changed)
+    var r = 0
+    var residual = -1L
+    while (r < rounds && residual != 0L) {
+      prev = lbl
+      r += 1
+      val m = seed.filter(_ => r == 1).getOrElse(scope.cut(ccStep(adj, lbl)))
+      lbl =
+        if (jump) scope.cut(
+          m.join(m.select(col("node").as("jn"), col("ml").as("jl")),
+              col("ml") === col("jn"), "left")
+            .select(col("node"),
+              least(col("ml"), coalesce(col("jl"), col("ml"))).as("lbl"))
+            .coalesce(1))
+        else m.withColumnRenamed("ml", "lbl")
+      if (converge) residual = changed.collect().head.getLong(0)
+    }
+    Components(lbl, r, changed, if (converge) Some(residual) else None)
   }
 
   /** Component-size histogram of the co-purchase graph (fragmentation
-    * = how partitionable per-component downstream work is), with the
-    * last-round convergence delta broadcast onto every row. */
-  private[graft] def componentsBody(s: SparkSession, d: String)(
+    * = how partitionable per-component downstream work is), seeded
+    * with the session-shared first round, with the stop rule's readout
+    * on every row: the last-round census broadcast under a fixed
+    * unroll, rounds_used/residual under converge. */
+  private[graft] def componentsBody(rounds: Int, jump: Boolean,
+      converge: Boolean)(s: SparkSession, d: String)(
       scope: PersistScope): DataFrame = {
-    val e = sharedEdges(s, d) // session-memoized bounded universe
-    val adj = e.select(col("u").as("a"), col("v").as("b"))
-      .union(e.select(col("v").as("a"), col("u").as("b")))
-    val (lbl, changed) =
-      componentLabels(adj, degrees(e).select("node"), 3, scope,
-        Some(ccRound1Shared(s, d))) // r17: shared round-1 superstep
-    lbl.groupBy("lbl").agg(count(lit(1)).as("csz"))
+    val (adj, nodes) = ccGraph(s, d)
+    val cc = componentLabels(adj, nodes, rounds, scope, jump, converge,
+      Some(ccRound1Shared(s, d)))
+    val hist = cc.labels.groupBy("lbl").agg(count(lit(1)).as("csz"))
       .groupBy(col("csz").as("component_size"))
       .agg(count(lit(1)).as("n_components"))
-      .crossJoin(broadcast(changed))
-      .orderBy("component_size")
+    val out = cc.residual match {
+      case None => hist.crossJoin(broadcast(cc.changed))
+      case Some(res) => hist.withColumn("rounds_used", lit(cc.rounds.toLong))
+        .withColumn("residual", lit(res))
+    }
+    out.orderBy("component_size")
   }
 
   /** Neighbor-set Jaccard similarity — the normalized cousin of

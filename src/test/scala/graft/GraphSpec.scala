@@ -99,12 +99,26 @@ class GraphSpec extends SparkSpec {
     val nodes = (0L to 7L).toDF("node")
     val scope = new graft.operators.PersistScope
     try {
-      val (lbl, changed) =
-        graft.operators.Graph.componentLabels(adj, nodes, 3, scope)
-      assert(changed.collect().head.getLong(0) === 5L)
+      val cc = graft.operators.Graph.componentLabels(adj, nodes, 3, scope)
+      assert(cc.changed.collect().head.getLong(0) === 5L)
       // and labels are exactly the radius-3 minima
-      val labels = lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val labels = cc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert((0L to 7L).forall(v => labels(v) === math.max(0L, v - 3L)))
+      // A seeded run reads the round-1 frame (node, ml) instead of
+      // computing it; with one round it must still census against the
+      // identity labels, plain or doubling: 7 changes (nodes 1..7).
+      val seed = (0L to 7L).map(v => (v, math.max(0L, v - 1L))).toDF("node", "ml")
+      for (jump <- Seq(false, true)) {
+        def run(seeded: Option[org.apache.spark.sql.DataFrame]) = {
+          val c = graft.operators.Graph.componentLabels(adj, nodes, 1, scope,
+            jump = jump, seed = seeded)
+          (c.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+            c.changed.collect().head.getLong(0))
+        }
+        val unseeded = run(None)
+        assert(unseeded._2 === 7L, s"jump=$jump")
+        assert(run(Some(seed)) === unseeded, s"seeded 1-round run, jump=$jump")
+      }
     } finally scope.release()
   }
 
@@ -120,8 +134,8 @@ class GraphSpec extends SparkSpec {
     val nodes = (0L to 7L).toDF("node")
     val scope = new graft.operators.PersistScope
     try {
-      val (lbl, _) =
-        graft.operators.Graph.componentLabelsDoubling(adj, nodes, 3, scope)
+      val lbl = graft.operators.Graph
+        .componentLabels(adj, nodes, 3, scope, jump = true).labels
       val labels = lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert((0L to 7L).forall(v => labels(v) === 0L),
         s"doubling kernel under-merged the diameter-7 path: $labels")
@@ -131,11 +145,11 @@ class GraphSpec extends SparkSpec {
       val e2 = (0L to 14L).map(i => (i, i + 1)).toDF("a", "b")
       val adj2 = e2.union(e2.select($"b", $"a")).toDF("a", "b")
       val nodes2 = (0L to 15L).toDF("node")
-      val (lbl2, changed2) =
-        graft.operators.Graph.componentLabelsDoubling(adj2, nodes2, 3, scope)
-      val l2 = lbl2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val cc2 = graft.operators.Graph
+        .componentLabels(adj2, nodes2, 3, scope, jump = true)
+      val l2 = cc2.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(l2(14L) === 0L, s"radius-14 coverage lost: $l2")
-      assert(changed2.collect().head.getLong(0) > 0L,
+      assert(cc2.changed.collect().head.getLong(0) > 0L,
         "diameter-15 path must report a nonzero last-round delta")
     } finally scope.release()
   }
@@ -153,9 +167,10 @@ class GraphSpec extends SparkSpec {
     val nodes2 = (0L to 15L).toDF("node")
     val scope = new graft.operators.PersistScope
     try {
-      val (lbl, rounds, residual) = graft.operators.Graph
-        .componentLabelsConverged(adj2, nodes2, 10, scope)
-      val labels = lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val cc = graft.operators.Graph
+        .componentLabels(adj2, nodes2, 10, scope, jump = true, converge = true)
+      val (rounds, residual) = (cc.rounds, cc.residual.get)
+      val labels = cc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert((0L to 15L).forall(v => labels(v) === 0L),
         s"convergence loop under-merged the diameter-15 path: $labels")
       assert(residual === 0L, s"loop stopped with nonzero residual $residual")

@@ -1,12 +1,15 @@
 #!/usr/bin/env bash
-# One-shot QA: compile → tests → oracle rehearsal at all three scale
-# factors (and two thread counts at the graded sf) → bench JSON.
+# One-shot QA: compile → tests (library and benchmark) → oracle
+# rehearsal at all three scale factors (and two thread counts at the
+# graded sf) → bench JSON.
 # Usage: tools/qa.sh [--fast]   (--fast: sf0.01 only, skip bench)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 sbt -batch compile | tail -1
 sbt -batch test 2>&1 | grep -E "Tests:|FAILED" | tail -2
+python3 -m unittest discover -s perfbench/tests 2>&1 | tail -1
+(cd perfbench/harness && sbt -batch harness/test 2>&1 | grep -E "Tests:|FAILED" | tail -2)
 
 run_verify() { # sf outdir cpus
   SPARK_GRAFT_CPUS="$3" sbt -batch "runMain graft.Verify /root/testdata/$1 $2" \
