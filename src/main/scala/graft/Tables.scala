@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loader for the driver-generated testdata surface
   * (see FIXTURES.md). All graded queries read through here so that a
@@ -153,7 +154,29 @@ object Tables {
   private def loose(spark: SparkSession, dir: String, name: String): DataFrame = {
     pinSessionConf(spark) // direct callers (materializeBucketed) bypass apply()
     if (name == "events") eventsLoose(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else readParquet(spark, dir, name)
+  }
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), StructType]
+
+  /** `dir/name.parquet` read with its schema memoized per (path,
+    * [[sourceFingerprint]]): a schema-less `spark.read.parquet`
+    * launches a footer-inference job on every call, although the
+    * schema is a property of the files (inferred under the read confs
+    * `pinSessionConf` pins). The memo is process-wide, not per session
+    * like SessionMemo's derived frames; the content fingerprint makes
+    * a regenerated source miss, so its next read infers afresh. */
+  private def readParquet(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = (path, sourceFingerprint(dir, name))
+    val known = schemas.get(key)
+    if (known != null) spark.read.schema(known).parquet(path)
+    else {
+      val df = spark.read.parquet(path)
+      schemas.putIfAbsent(key, df.schema)
+      df
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
@@ -192,7 +215,7 @@ object Tables {
     // instead of silently reading under the wrong semantics.
     require(s.conf.get("spark.sql.session.timeZone") == "UTC",
       "events loader requires spark.sql.session.timeZone=UTC (Tables pins it; do not override)")
-    val raw = s.read.parquet(s"$d/events.parquet")
+    val raw = readParquet(s, d, "events")
     val ts = raw.schema("ts").dataType match {
       case LongType          => timestamp_micros(expr("ts div 1000"))
       case TimestampNTZType  => col("ts").cast(TimestampType)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -42,20 +42,24 @@ object Events extends OpModule {
     * Tables.bucketKeys layout materializes on disk — the session
     * memo makes the loose-layout path pay that cost once instead of
     * per query. */
-  private[graft] def evtByUser(s: SparkSession, d: String): DataFrame =
-    SessionMemo.memo(s, d, "evtByUser") {
-      // REPARTITION_BY_NUM (explicit n) — AQE neither coalesces nor
-      // skew-splits a user-numbered repartition, so the checkpointed
-      // RDD's layout is EXACTLY HashPartitioning(user_id, n) and the
-      // bridge may declare it (plain localCheckpoint re-enters the
-      // planner as UnknownPartitioning under AQE — measured r17).
-      val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-      org.apache.spark.sql.GraftBridge.localCheckpointWithLayout(
+  private[graft] def evtByUser(s: SparkSession, d: String): DataFrame = {
+    // REPARTITION_BY_NUM (explicit n) — AQE neither coalesces nor
+    // skew-splits a user-numbered repartition, so the checkpointed
+    // RDD's layout is EXACTLY HashPartitioning(user_id, n) and the
+    // bridge may declare it (plain localCheckpoint re-enters the
+    // planner as UnknownPartitioning under AQE — measured r17). n is
+    // in the memo key: a session whose shuffle partitions change must
+    // not read a base laid out for the old count.
+    val n = s.conf.getOption("spark.sql.shuffle.partitions")
+      .flatMap(_.trim.toIntOption).filter(_ > 0)
+      .getOrElse(s.sparkContext.defaultParallelism)
+    SessionMemo.memo(s, d, s"evtByUser/$n")(
+      GraftBridge.checkpoint(
         Tables.events(s, d)
           .repartition(n, col("user_id"))
           .sortWithinPartitions("user_id", "ts", "event_id"),
-        n, Seq("user_id"), Seq("user_id", "ts", "event_id"))
-    }
+        Some(GraftBridge.Layout(n, Seq("user_id"), Seq("user_id", "ts", "event_id")))))
+  }
 
   /** The p99 event-count cap of `sample_user_cap`, factored so the
     * streaming twin's parity replay derives the SAME broadcast cap
@@ -400,9 +404,12 @@ object Events extends OpModule {
             (nij(i, j).cast("double") / element_at(col("rs"), i + 1).cast("double"))))
       val x0 = transform(sequence(lit(0), tSz - 1),
         _ => lit(1.0) / tSz.cast("double"))
-      val i1 = scope.cut(withRs.withColumn("x1", stepX(x0)))
-      val i2 = scope.cut(i1.withColumn("x2", stepX(col("x1"))))
-      val i3 = i2.withColumn("x3", stepX(col("x2")))
+      // x3 = stepX(stepX(stepX(x0))) as ONE in-row fold: the same
+      // arithmetic in the same order (bit-identical doubles), with one
+      // copy of the step expression — so no per-step cut is needed to
+      // keep the projection from inlining the step three times deep.
+      val i3 = withRs.withColumn("x3",
+        aggregate(sequence(lit(1), lit(3)), x0, (x, _) => stepX(x)))
       i3.select(col("tp"), posexplode(col("x3")).as(Seq("i", "p")))
         .select(element_at(col("tp"), col("i") + 1).as("event_type"),
           round(col("p"), 4).as("stationary"))
@@ -925,9 +932,10 @@ object Events extends OpModule {
                   .otherwise(lit(0.0))
               })))
       val p0 = transform(sequence(lit(0), tSz - 1), _ => lit(0.0))
-      val s1 = scope.cut(withRs.withColumn("p1", stepP(p0)))
-      val s2 = scope.cut(s1.withColumn("p2", stepP(col("p1"))))
-      val s3 = s2.withColumn("p3", stepP(col("p2")))
+      // p3 = stepP(stepP(p1)) as one in-row fold over p1 (the
+      // evt_markov_steady fold: same arithmetic, one step expression).
+      val s3 = withRs.withColumn("p1", stepP(p0)).withColumn("p3",
+        aggregate(sequence(lit(1), lit(2)), col("p1"), (p, _) => stepP(p)))
       s3.select(col("tp"), col("p1"), posexplode(col("p3")).as(Seq("i", "pr3")))
         .select(element_at(col("tp"), col("i") + 1).as("event_type"),
           round(element_at(col("p1"), col("i") + 1), 4).as("p_1step"),

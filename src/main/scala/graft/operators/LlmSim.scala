@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -182,8 +182,8 @@ object LlmSim extends OpModule {
       // (r17, ADVICE r16 #2 — mirrors ivfTrainBuild): cutting the
       // update before the assignment ran the round-2 corpus
       // assignment subplan twice, once inside each checkpoint job.
-      val a2 = kmAssign(e, cents).localCheckpoint(true)
-      (kmUpdate(e, a2).localCheckpoint(true), a2)
+      val a2 = GraftBridge.checkpoint(kmAssign(e, cents))
+      (GraftBridge.checkpoint(kmUpdate(e, a2)), a2)
     }
 
   private def ivfTrainBuild(s: SparkSession, d: String,
@@ -702,8 +702,8 @@ object LlmSim extends OpModule {
     * left-joins this same frame (r16, see [[SessionMemo]]). */
   private def knnTruthShared(s: SparkSession, d: String): DataFrame =
     SessionMemo.memo(s, d, "knnTruth")(
-      queries("sim_knn")(s, d).select(col("q_id"), col("n_id"))
-        .localCheckpoint(true))
+      GraftBridge.checkpoint(
+        queries("sim_knn")(s, d).select(col("q_id"), col("n_id"))))
 
   /** Session-memoized CUT of the NSW-lite search answer — shared by
     * sim_knn_graph and its recall gate (the graph build is the

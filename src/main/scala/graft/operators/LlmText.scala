@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -2340,7 +2340,7 @@ object LlmText extends OpModule {
     * parquet inputs exactly once. */
   private[graft] def jaccardPairsShared(s: SparkSession, d: String): DataFrame =
     SessionMemo.memo(s, d, "jaccardPairs")(
-      ngramJaccardPairs(s, d).localCheckpoint(true))
+      GraftBridge.checkpoint(ngramJaccardPairs(s, d)))
 
   /** Session-memoized result of the minhash-LSH candidate generator
     * (r16) — dedup_minhash_eval, dedup_cross_lang and
@@ -2348,7 +2348,7 @@ object LlmText extends OpModule {
     * pipeline. */
   private[graft] def nearMinhashShared(s: SparkSession, d: String): DataFrame =
     SessionMemo.memo(s, d, "nearMinhash")(
-      nearMinhashBody(s, d).localCheckpoint(true))
+      GraftBridge.checkpoint(nearMinhashBody(s, d)))
 
   /** dedup_near_minhash body (factored r16 for the session memo).
     * LSH candidate pairs WITHOUT a self-join: explode the 4 band

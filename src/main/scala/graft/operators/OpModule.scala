@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Persist ledger for one query invocation (r5 verdict #3): iterative
@@ -55,25 +55,28 @@ private[graft] final class PersistScope {
     (ra.get, rb.get)
   }
   /** Materialize NOW and truncate lineage to the computed blocks
-    * (`localCheckpoint(eager = true)`). REQUIRED (not optional) for
-    * unrolled iterative kernels whose round output feeds the next
-    * round more than once — k-core peeling (e_r referenced 3×/round),
-    * min-label supersteps (lbl 2×/round), Lloyd training chains: a
-    * plain `persist` caches EXECUTION but leaves the logical plan
-    * growing ~branchingFactor^rounds, and AQE re-renders the full
-    * plan string on every stage update (`explainString` in
-    * `onUpdatePlan`) — measured 17–22 s for graph_kcore at sf0.1
-    * local[32] with persist-only rounds vs ~2 s with per-round cuts,
-    * and a driver OOM inside the plan render at 1 GiB heap. Cluster
-    * note: localCheckpoint blocks are NOT fault-tolerant (executor
-    * loss aborts the job); a 1000-executor run would periodically
-    * `checkpoint()` to reliable storage instead — the same
-    * plan-truncation effect with durable blocks (the standard
-    * iterative-Spark discipline, cf. MLlib's checkpointInterval).
-    * Blocks are freed by the ContextCleaner once the round's
-    * DataFrame becomes unreachable; no ledger entry needed.
+    * (`GraftBridge.checkpoint`). REQUIRED (not optional) for unrolled
+    * iterative kernels whose round output feeds the next round more
+    * than once — k-core peeling (e_r referenced 3×/round), min-label
+    * supersteps (lbl 2×/round), Lloyd training chains: a plain
+    * `persist` caches EXECUTION but leaves the logical plan growing
+    * ~branchingFactor^rounds, and AQE re-renders the full plan string
+    * on every stage update (`explainString` in `onUpdatePlan`) —
+    * measured 17–22 s for graph_kcore at sf0.1 local[32] with
+    * persist-only rounds vs ~2 s with per-round cuts, and a driver OOM
+    * inside the plan render at 1 GiB heap. The cut leaf carries the
+    * measured size of its blocks, so a join against a node-sized cut
+    * plans as a broadcast from the start (no shuffle-map jobs for AQE
+    * to throw away). Cluster note: localCheckpoint blocks are NOT
+    * fault-tolerant (executor loss aborts the job); a 1000-executor
+    * run would periodically `checkpoint()` to reliable storage instead
+    * — the same plan-truncation effect with durable blocks (the
+    * standard iterative-Spark discipline, cf. MLlib's
+    * checkpointInterval). Blocks are freed by the ContextCleaner once
+    * the round's DataFrame becomes unreachable; no ledger entry
+    * needed.
     */
-  def cut(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+  def cut(df: DataFrame): DataFrame = GraftBridge.checkpoint(df)
   def release(): Unit = kept.synchronized {
     closed = true
     kept.foreach(_.unpersist(blocking = false))
@@ -87,11 +90,13 @@ private[graft] final class PersistScope {
   * layers, edge rollups) per query because each query owns its
   * PersistScope; the serving reality is ONE index/graph built, many
   * queries reading it. Contract: stored values hold EAGER CUTS
-  * (localCheckpoint leaves) only — a memoized frame must reference
-  * no scope-persisted input, so later consumers read materialized
-  * blocks and no CacheManager entry outlives its query. Keyed by
-  * (session, data dir, chain name); a session touches a handful of
-  * dirs, so the memo is bounded, and blocks die with the session.
+  * (`GraftBridge.checkpoint` leaves, which carry their measured size,
+  * so a memoized frame plans as a broadcast wherever it is small
+  * enough) only — a memoized frame must reference no scope-persisted
+  * input, so later consumers read materialized blocks and no
+  * CacheManager entry outlives its query. Keyed by (session, data
+  * dir, chain name); a session touches a handful of dirs, so the memo
+  * is bounded, and blocks die with the session.
   * Lookup is get/putIfAbsent, NOT computeIfAbsent: builders recurse
   * into the memo for other keys, and holding a CHM bin lock across a
   * nested compute can deadlock. A rare concurrent first-build races
@@ -148,7 +153,7 @@ trait OpModule {
 
   /** Persist-scoped terminal wrapper (r5 verdict #3). `body` registers
     * its big intermediates via the scope's `persist`; the small
-    * terminal result is materialized EAGERLY (`localCheckpoint(true)`
+    * terminal result is materialized EAGERLY ([[PersistScope.cut]]
     * truncates the lineage to the computed blocks), after which every
     * registered intermediate is unpersisted — the CacheManager is
     * empty again by the time the query function returns, and the
@@ -156,28 +161,32 @@ trait OpModule {
     * rows without re-deriving anything. Only used where the terminal
     * result is dimension-sized (traces, histograms, top-k), so the
     * checkpoint blocks are trivially small; they are dropped by the
-    * ContextCleaner once the DataFrame is unreachable.
+    * ContextCleaner once the DataFrame is unreachable. By the same
+    * contract the body's terminal sort runs in ONE partition
+    * (`GraftBridge.onePartitionSort`): a global sort over a coalesced
+    * partition needs no range exchange, so the RangePartitioner
+    * sampling job and its shuffle-map job never run.
     */
   protected def scopedPersist(body: PersistScope => DataFrame): DataFrame = {
     val scope = new PersistScope
-    if (OpModule.planOnly.get())
-      // PlanDump: skip ONLY the terminal checkpoint; still release the
-      // scope (r17, ADVICE r16 #1) — a leaked persist would register
+    try {
+      val out = GraftBridge.onePartitionSort(body(scope))
+      // PlanDump: skip ONLY the terminal checkpoint; the scope is still
+      // released (r17, ADVICE r16 #1) — a leaked persist would register
       // in the CacheManager for the rest of the dump run and later
       // queries' "cold-session" plans could silently resolve shared
       // subtrees to InMemoryRelation, contaminating the evidence.
-      try body(scope) finally scope.release()
-    else
-      try body(scope).localCheckpoint(eager = true)
-      finally scope.release()
+      if (OpModule.planOnly.get()) out else scope.cut(out)
+    } finally scope.release()
   }
 }
 
 private[graft] object OpModule {
-  /** PlanDump-only (r16): when set, `scopedPersist` returns the raw
-    * body frame (no terminal checkpoint, no release) so its formatted
-    * plan shows the terminal assembly instead of one RDD scan. Never
-    * set on the bench/verify path — explain evidence only. */
+  /** PlanDump-only (r16): when set, `scopedPersist` returns the body
+    * frame as it would run (one-partition terminal sort, no terminal
+    * checkpoint) so its formatted plan shows the terminal assembly
+    * instead of one RDD scan. Never set on the bench/verify path —
+    * explain evidence only. */
   val planOnly = new java.lang.ThreadLocal[java.lang.Boolean] {
     override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
   }

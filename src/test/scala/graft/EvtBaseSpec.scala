@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 /** r17: the shared user-clustered events base (Events.evtByUser) and
   * the layout-declaring checkpoint behind it
-  * (GraftBridge.localCheckpointWithLayout).
+  * (GraftBridge.checkpoint with a declared Layout).
   *
   * What must hold for the optimization to be real AND safe:
   *  - contents: the base is the events table, row for row (same
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   */
 class EvtBaseSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Fixtures.testdata("0.001")
 
   private def executed(df: DataFrame): SparkPlan = {
     df.collect()

@@ -8,6 +8,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the same `(spark, sfDir)` entry points the driver grades.
   */
 object Fixtures {
+  /** Root of the generated testdata scales: `testdata` under the
+    * home directory (TESTDATA.md), or SPARK_GRAFT_TESTDATA when set. */
+  val testdataRoot: String = sys.env.getOrElse("SPARK_GRAFT_TESTDATA",
+    new java.io.File(sys.props("user.home"), "testdata").getPath)
+
+  /** The generated testdata directory of one scale factor, e.g. "0.001". */
+  def testdata(sf: String): String = s"$testdataRoot/sf$sf"
+
   def tempDir(): String =
     Files.createTempDirectory("graft-fixture").toString
 
