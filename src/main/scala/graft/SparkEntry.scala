@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Entry points of the graded suite — see SURVEY.md §7.
   *
   * The engine is a library of named, oracle-paired DataFrame pipelines
   * grouped into operator modules (graft.operators.*); this object
@@ -12,7 +12,7 @@ import graft.operators._
   */
 object SparkEntry {
 
-  private val modules: Seq[OpModule] =
+  private[graft] val modules: Seq[OpModule] =
     Seq(Scans, Joins, Aggregates, SortSet, Subqueries, Windows, Events,
       LlmText, LlmSim, EtlMerge, Graph)
 
@@ -34,9 +34,17 @@ object SparkEntry {
       .limit(10)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every graded query, by name: the one registry Bench, Verify,
+    * PlanDump, the benchmark harness and the specs read. Each result
+    * goes through `GraftBridge.onePartitionSortIfSmall`: the total-order
+    * sort every graded query ends in (the `OpModule` determinism
+    * contract) runs in one task, without a range exchange, whenever the
+    * query's inputs fit the session's broadcast threshold. Over larger
+    * inputs the sort stays a parallel range sort. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_.queries).reduce(_ ++ _)
+    modules.map(_.queries).reduce(_ ++ _).map { case (name, q) =>
+      name -> ((s: SparkSession, d: String) => GraftBridge.onePartitionSortIfSmall(q(s, d)))
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops

@@ -79,6 +79,42 @@ object Events extends OpModule {
       .agg(min("n").as("cap_n"))
   }
 
+  /** evt_session's per-session rollup, before its terminal sort. The
+    * queries built on sessions read this, not the graded frame: a
+    * total-order sort under a window, a union or a percentile is a
+    * range exchange whose order nothing downstream reads. */
+  private def sessions(s: SparkSession, d: String): DataFrame = {
+    val byTs = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+    val run = byTs.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    evtByUser(s, d) // r17: shared user-clustered base — no Exchange/Sort
+      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byTs))
+      .withColumn("is_new",
+        when(col("prev_us").isNull
+          || unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1L)
+          .otherwise(0L))
+      .withColumn("session_id", sum("is_new").over(run))
+      .groupBy("user_id", "session_id")
+      .agg(
+        count(lit(1)).as("n_events"),
+        min(unix_micros(col("ts"))).as("sess_start_us"),
+        (max(unix_micros(col("ts"))) - min(unix_micros(col("ts")))).as("sess_len_us"),
+        round(sum("value"), 4).as("val_sum"))
+  }
+
+  /** evt_funnel's per-user first-step times, before its terminal sort
+    * (see [[sessions]]). */
+  private def funnel(s: SparkSession, d: String): DataFrame =
+    evtByUser(s, d) // r17: shared user-clustered base
+      .groupBy("user_id")
+      .agg(
+        min(when(col("event_type") === "view", unix_micros(col("ts")))).as("first_view"),
+        min(when(col("event_type") === "click", unix_micros(col("ts")))).as("first_click"),
+        min(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("first_purchase"))
+      .withColumn("funnel_done",
+        col("first_view").isNotNull && col("first_click") > col("first_view")
+          && col("first_purchase") > col("first_click"))
+      .withColumn("funnel_done", coalesce(col("funnel_done"), lit(false)))
+
   val queries: Map[String, Q] = Map(
     "evt_rolling_active" -> ((s, d) => {
       // 7-day rolling distinct actives (WAU per day) on the DAY-GRAIN
@@ -117,24 +153,7 @@ object Events extends OpModule {
           col("cnt"), col("val_sum"))
         .orderBy("win_start_s")),
 
-    "evt_session" -> ((s, d) => {
-      val byTs = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val run = byTs.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      evtByUser(s, d) // r17: shared user-clustered base — no Exchange/Sort
-        .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byTs))
-        .withColumn("is_new",
-          when(col("prev_us").isNull
-            || unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1L)
-            .otherwise(0L))
-        .withColumn("session_id", sum("is_new").over(run))
-        .groupBy("user_id", "session_id")
-        .agg(
-          count(lit(1)).as("n_events"),
-          min(unix_micros(col("ts"))).as("sess_start_us"),
-          (max(unix_micros(col("ts"))) - min(unix_micros(col("ts")))).as("sess_len_us"),
-          round(sum("value"), 4).as("val_sum"))
-        .orderBy("user_id", "session_id")
-    }),
+    "evt_session" -> ((s, d) => sessions(s, d).orderBy("user_id", "session_id")),
 
     "evt_session_native" -> ((s, d) =>
       // Native `session_window` twin of the hand-rolled lag/cumsum
@@ -164,18 +183,7 @@ object Events extends OpModule {
           col("n_events"), col("val_sum"))
         .orderBy("user_id", "sess_start_us")),
 
-    "evt_funnel" -> ((s, d) =>
-      evtByUser(s, d) // r17: shared user-clustered base
-        .groupBy("user_id")
-        .agg(
-          min(when(col("event_type") === "view", unix_micros(col("ts")))).as("first_view"),
-          min(when(col("event_type") === "click", unix_micros(col("ts")))).as("first_click"),
-          min(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("first_purchase"))
-        .withColumn("funnel_done",
-          col("first_view").isNotNull && col("first_click") > col("first_view")
-            && col("first_purchase") > col("first_click"))
-        .withColumn("funnel_done", coalesce(col("funnel_done"), lit(false)))
-        .orderBy("user_id")),
+    "evt_funnel" -> ((s, d) => funnel(s, d).orderBy("user_id")),
 
     "evt_seq_boundary" -> ((s, d) => {
       // Group-sequential experiment monitoring (r10): the O'Brien-
@@ -585,7 +593,7 @@ object Events extends OpModule {
       // crossing midnight are counted in their start day — the
       // standard reporting convention). Ties order +1 before −1 so a
       // session ending exactly when another starts still overlaps.
-      val sess = queries("evt_session")(s, d)
+      val sess = sessions(s, d)
         .select(col("user_id"), col("session_id"),
           col("sess_start_us").as("s_us"),
           (col("sess_start_us") + col("sess_len_us")).as("e_us"))
@@ -677,7 +685,7 @@ object Events extends OpModule {
       // (one extra |sessions|-sized aggregate, no re-scan of events).
       // Aggregates are integer-only (counts, µs sums/maxes) with ONE
       // final double division, so bucket stats are engine-exact.
-      queries("evt_session")(s, d)
+      sessions(s, d)
         .groupBy("n_events")
         .agg(count(lit(1)).as("n_sessions"),
           round(sum("sess_len_us").cast("double") / count(lit(1)) / 1000000.0, 4)
@@ -842,7 +850,7 @@ object Events extends OpModule {
       // so the percentile sort is dimension-sized; the long (step,
       // delta) shape explodes in-row. The product answer behind it:
       // which funnel step loses time.
-      val f = queries("evt_funnel")(s, d).filter(col("funnel_done"))
+      val f = funnel(s, d).filter(col("funnel_done"))
       val steps = f.select(explode(array(
         struct(lit("1_view_to_click").as("step"),
           (col("first_click") - col("first_view")).as("d_us")),

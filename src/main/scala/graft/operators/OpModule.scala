@@ -127,7 +127,11 @@ private[graft] object SessionMemo {
   *
   * Determinism contract (every graded query):
   *   - ends in a total-order sort (unique key in the sort), so the
-  *     row-order-sensitive hash compare is stable;
+  *     row-order-sensitive hash compare is stable. Because the key is
+  *     unique, the order does not depend on how the sort is planned:
+  *     `SparkEntry.queries` runs it in one partition when the query's
+  *     inputs are small (`GraftBridge.onePartitionSortIfSmall`) and as
+  *     a range sort otherwise, with identical output;
   *   - double-valued aggregates rounded to 4 digits (float summation
   *     order differs between engines);
   *   - computed integer columns cast to Long (DuckDB scalar fns
@@ -163,9 +167,12 @@ trait OpModule {
     * checkpoint blocks are trivially small; they are dropped by the
     * ContextCleaner once the DataFrame is unreachable. By the same
     * contract the body's terminal sort runs in ONE partition
-    * (`GraftBridge.onePartitionSort`): a global sort over a coalesced
-    * partition needs no range exchange, so the RangePartitioner
-    * sampling job and its shuffle-map job never run.
+    * unconditionally (`GraftBridge.onePartitionSort`, without the
+    * input-size gate `SparkEntry.queries` applies to every other
+    * query): the checkpoint runs before the registry sees the frame,
+    * and a global sort over a coalesced partition needs no range
+    * exchange, so the RangePartitioner sampling job and its
+    * shuffle-map job never run.
     */
   protected def scopedPersist(body: PersistScope => DataFrame): DataFrame = {
     val scope = new PersistScope

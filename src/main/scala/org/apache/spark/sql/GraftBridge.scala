@@ -45,16 +45,18 @@ object GraftBridge {
     * hash-clustered + sorted frame would re-enter the planner
     * layout-less and every consumer would pay the Exchange + Sort
     * again (measured: the r17 evt base checkpointed to
-    * `UnknownPartitioning(0)`). CONTRACT (caller-verified): the input
-    * plan must END in `repartition(n, partCols)` (a REPARTITION_BY_NUM
+    * `UnknownPartitioning(0)`). Verified before anything runs: every
+    * declared column names exactly one output column, and the analyzed
+    * plan ENDS in `repartition(n, partCols)` (a REPARTITION_BY_NUM
     * shuffle — AQE never coalesces or skew-splits a user-numbered
     * repartition, so the RDD's layout IS HashPartitioning(partCols, n))
-    * followed by `sortWithinPartitions(orderCols)`. Checked here: the
-    * partition count is `n`, and every declared column names exactly
-    * one output column. */
+    * followed by `sortWithinPartitions(orderCols)`, ascending with
+    * nulls first. After the checkpoint the RDD's partition count is
+    * checked against `n`. */
   def checkpoint(df: Dataset[Row], layout: Option[Layout] = None): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val leaf = df.localCheckpoint(eager = true)
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    layout.foreach(verifyLayout(ds.logicalPlan, _))
+    val leaf = ds.localCheckpoint(eager = true)
       .asInstanceOf[classic.Dataset[Row]].logicalPlan
       .asInstanceOf[execution.LogicalRDD]
     val (part, ord) = layout.fold((leaf.outputPartitioning, leaf.outputOrdering)) {
@@ -62,12 +64,7 @@ object GraftBridge {
         require(leaf.rdd.getNumPartitions == n,
           s"checkpoint: RDD has ${leaf.rdd.getNumPartitions} partitions, " +
             s"caller declared $n — plan must end in repartition(n, cols)")
-        def attr(c: String) = leaf.output.filter(_.name == c) match {
-          case Seq(a) => a
-          case found => throw new IllegalArgumentException(
-            s"checkpoint: declared layout column '$c' matches ${found.size} " +
-              s"output columns of [${leaf.output.map(_.name).mkString(", ")}]")
-        }
+        def attr(c: String) = leaf.output.find(_.name == c).get
         (catalyst.plans.physical.HashPartitioning(partCols.map(attr), n),
           orderCols.map(c => catalyst.expressions.SortOrder(
             attr(c), catalyst.expressions.Ascending)))
@@ -76,29 +73,83 @@ object GraftBridge {
     val stored = (0 until leaf.rdd.getNumPartitions).iterator
       .flatMap(p => master.getBlockStatus(RDDBlockId(leaf.rdd.id, p)).values)
       .map(b => b.memSize + b.diskSize).sum
-    classic.Dataset.ofRows(spark,
-      leaf.copy(outputPartitioning = part, outputOrdering = ord)(spark,
+    classic.Dataset.ofRows(ds.sparkSession,
+      leaf.copy(outputPartitioning = part, outputOrdering = ord)(ds.sparkSession,
         Some(logical.Statistics(sizeInBytes = BigInt(math.max(1L, stored)))),
         Some(leaf.constraints)))
   }
 
-  /** `df` with its root global sort — under any Project/Limit above
-    * it — planned over ONE unshuffled partition
+  /** `plan` ends in `Sort(orderCols asc, global = false)` over
+    * `RepartitionByExpression(partCols, n)`, and every declared column
+    * names exactly one output column. */
+  private def verifyLayout(plan: logical.LogicalPlan, l: Layout): Unit = {
+    (l.partCols ++ l.orderCols).distinct.foreach { c =>
+      val found = plan.output.count(_.name == c)
+      require(found == 1, s"checkpoint: declared layout column '$c' matches $found " +
+        s"output columns of [${plan.output.map(_.name).mkString(", ")}]")
+    }
+    import catalyst.expressions.{Ascending, Attribute, Expression, NullsFirst, SortOrder}
+    def name(e: Expression): Option[String] = e match {
+      case a: Attribute => Some(a.name)
+      case _ => None
+    }
+    val laidOut = plan match {
+      case logical.Sort(order, false, r: logical.RepartitionByExpression, _) =>
+        r.optNumPartitions.contains(l.n) &&
+          r.partitionExpressions.map(name) == l.partCols.map(Some(_)) &&
+          order.map {
+            case SortOrder(e, Ascending, NullsFirst, _) => name(e)
+            case _ => None
+          } == l.orderCols.map(Some(_))
+      case _ => false
+    }
+    require(laidOut, s"checkpoint: declared $l, but the plan does not end in " +
+      s"repartition(${l.n}, ${l.partCols.mkString(", ")}).sortWithinPartitions(" +
+      s"${l.orderCols.mkString(", ")}):\n${plan.treeString}")
+  }
+
+  /** `df` with its root global sort — under any Project or SQL `WITH`
+    * above it — planned over ONE unshuffled partition
     * (`Repartition(1, shuffle = false)`, a CoalesceExec reporting
-    * SinglePartition). A global sort otherwise plans a range exchange:
-    * one RangePartitioner sampling job plus one shuffle-map job before
-    * the sort runs. Only for dimension-sized results (the
-    * `scopedPersist` contract); a plan without a root sort is
-    * returned as is. */
+    * SinglePartition). A global sort otherwise plans a range exchange,
+    * whose RangePartitioner runs a sampling job that computes the
+    * sort's whole input stage before the shuffle-map job computes it
+    * again. A sort under a Limit is left as it is: it plans as
+    * TakeOrderedAndProject, which never samples. A plan without a root
+    * sort is returned as is. For results known to be dimension-sized
+    * (the `scopedPersist` contract); [[onePartitionSortIfSmall]] is
+    * the gated form every graded query goes through. */
   def onePartitionSort(df: Dataset[Row]): DataFrame = {
     def pin(p: logical.LogicalPlan): Option[logical.LogicalPlan] = p match {
       case s: logical.Sort if s.global =>
         Some(s.copy(child = logical.Repartition(1, shuffle = false, s.child)))
-      case _: logical.Project | _: logical.GlobalLimit | _: logical.LocalLimit =>
-        pin(p.children.head).map(c => p.withNewChildren(Seq(c)))
+      case p: logical.Project => pin(p.child).map(c => p.copy(child = c))
+      case w: logical.WithCTE => pin(w.plan).map(c => w.copy(plan = c))
       case _ => None
     }
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     pin(ds.logicalPlan).fold(df)(classic.Dataset.ofRows(ds.sparkSession, _))
+  }
+
+  /** [[onePartitionSort]] when `df`'s inputs are small: the
+    * `stats.sizeInBytes` of the analyzed plan's leaves (subquery plans
+    * included) sum to at most the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, the bound the planner
+    * already uses for "small enough for one task". A file scan's leaf
+    * reports its file bytes, a checkpoint leaf its stored bytes; a
+    * reference to a SQL `WITH` relation is counted through the leaves
+    * of its definition. The optimizer's estimate of the sort input is
+    * not used: for a join it is the product of the children (34 GB for
+    * a 60k-row equi-join).
+    * A threshold <= 0 disables the rewrite; a streaming frame, or a
+    * plan over larger inputs, keeps its parallel range sort. */
+  def onePartitionSortIfSmall(df: Dataset[Row]): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val bound = ds.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    def inputBytes = ds.logicalPlan
+      .collectWithSubqueries {
+        case l: logical.LeafNode if !l.isInstanceOf[logical.CTERelationRef] => l.stats.sizeInBytes
+      }.sum
+    if (bound <= 0 || df.isStreaming || inputBytes > bound) df else onePartitionSort(df)
   }
 }

@@ -109,6 +109,20 @@ class CheckpointSpec extends SparkSpec {
       GraftBridge.checkpoint(laid, Some(GraftBridge.Layout(2, Seq("k"), Seq("missing")))))
   }
 
+  test("a declared layout must be the plan's last repartition and sort") {
+    val parts = spark.range(8).toDF("k").withColumn("v", -col("k")).repartition(2, col("k"))
+    def declare(df: DataFrame) =
+      GraftBridge.checkpoint(df, Some(GraftBridge.Layout(2, Seq("k"), Seq("k"))))
+    val unsorted = intercept[IllegalArgumentException](declare(parts))
+    assert(unsorted.getMessage.contains("sortWithinPartitions"))
+    intercept[IllegalArgumentException](declare(parts.sortWithinPartitions("v")))
+    intercept[IllegalArgumentException](declare(parts.sortWithinPartitions(col("k").desc)))
+    intercept[IllegalArgumentException](declare(parts.sortWithinPartitions("k").filter(col("v") < 0)))
+    intercept[IllegalArgumentException](
+      declare(spark.range(8).toDF("k").repartition(2).sortWithinPartitions("k")))
+    assert(declare(parts.sortWithinPartitions("k")).count() === 8L)
+  }
+
   test("evtByUser is laid out for the session's current shuffle partition count") {
     SessionMemo.clear()
     val key = "spark.sql.shuffle.partitions"

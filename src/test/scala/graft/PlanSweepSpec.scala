@@ -2,8 +2,8 @@ package graft
 
 /** Generic 100 TB-shape sweep over EVERY graded query (r11, r10
   * verdict #9): PlansSpec locks ~75 flagship shapes in detail; this
-  * suite closes the remaining gap with the two invariants that hold
-  * for ALL 306 graded queries, so a planner regression ANYWHERE fails
+  * suite closes the remaining gap with invariants that hold for ALL
+  * 327 graded queries, so a planner regression ANYWHERE fails
   * `sbt test` instead of a future bench:
   *
   *  1. No query may plan a shuffled CartesianProduct. (Gated
@@ -16,14 +16,20 @@ package graft
   *     provably bounded frames (dimension-sized or gate-bounded —
   *     each listed with its bound below). A new unpartitioned window
   *     anywhere else is the classic single-partition scale killer.
+  *  3. No shuffled join builds against a raw dimension table.
+  *  4. At sf0.001, where every query's inputs are far below the
+  *     broadcast threshold, no query plans a range exchange: the
+  *     terminal total-order sort runs in one partition
+  *     (`SparkEntry.queries`), so no RangePartitioner sampling job
+  *     computes the sort's input stage a second time.
   *
   * Plans are inspected WITHOUT executing (queryExecution.executedPlan
-  * before any action): cartesians and window specs are structural,
-  * not AQE-dependent. scopedPersist queries eagerly materialize at
-  * construction and return a checkpoint scan — their inner shapes are
-  * locked on factored bodies in PlansSpec; here they simply pass
-  * (their terminal plan has no window/cartesian), and their
-  * construction doubles as a smoke run.
+  * before any action): cartesians, window specs and exchanges of the
+  * initial plan are structural, not AQE-dependent. scopedPersist
+  * queries eagerly materialize at construction and return a
+  * checkpoint scan — their inner shapes are locked on factored bodies
+  * in PlansSpec; here they simply pass (their terminal plan has no
+  * window/cartesian), and their construction doubles as a smoke run.
   */
 class PlanSweepSpec extends SparkSpec {
 
@@ -186,6 +192,17 @@ class PlanSweepSpec extends SparkSpec {
     assert(offenders.isEmpty,
       "shuffled joins building a raw dimension side:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("no graded query plans a range exchange over small inputs") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val offenders = physical.collect { case (name, plan) if nodes(plan).exists {
+        case e: ShuffleExchangeLike => e.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      } => name }
+    assert(offenders.isEmpty,
+      s"range-partitioned sorts over sf0.001 inputs: ${offenders.mkString(", ")}")
   }
 
   test("the dim-shuffle detector fires on a deliberately degraded join") {
