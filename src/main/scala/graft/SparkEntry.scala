@@ -39,8 +39,11 @@ object SparkEntry {
     * goes through `GraftBridge.onePartitionSortIfSmall`: the total-order
     * sort every graded query ends in (the `OpModule` determinism
     * contract) runs in one task, without a range exchange, whenever the
-    * query's inputs fit the session's broadcast threshold. Over larger
-    * inputs the sort stays a parallel range sort. */
+    * query's inputs fit the session's broadcast threshold. That task
+    * runs the sort's whole input stage, not just the sort. Over larger
+    * inputs the sort stays a parallel range sort. Raising
+    * `spark.sql.autoBroadcastJoinThreshold` to force broadcasts also
+    * widens one-task sorting to inputs of that size. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.map(_.queries).reduce(_ ++ _).map { case (name, q) =>
       name -> ((s: SparkSession, d: String) => GraftBridge.onePartitionSortIfSmall(q(s, d)))
