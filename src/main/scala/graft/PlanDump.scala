@@ -11,10 +11,10 @@ package graft
   * Notes: SessionMemo is cleared before EACH dump so every plan is
   * the cold-session shape (memoized sub-chains appear as checkpoint
   * RDD-scan leaves only where a query's own body memoizes them —
-  * that collapse IS the optimization being documented). Queries whose
-  * terminal is a scopedPersist checkpoint show an RDD scan at the
-  * top; the formatted plan of the un-checkpointed body is appended
-  * for the bodies factored out for PlansSpec where that matters.
+  * that collapse IS the optimization being documented). Every graded
+  * result is lazy, so the dumped plan is the plan the query's action
+  * runs, terminal sort included; only the checkpoints a body takes
+  * while it is built appear as RDD-scan leaves.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -27,13 +27,9 @@ object PlanDump {
     names.foreach { name =>
       graft.operators.SessionMemo.clear()
       spark.sparkContext.setJobDescription(s"plandump: $name")
-      val txt = try {
-        graft.operators.OpModule.planOnly.set(true)
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-      } catch { case e: Throwable => s"ERROR: ${e.getClass.getName}: ${e.getMessage}" }
-      finally graft.operators.OpModule.planOnly.set(false)
+      val txt = try SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      catch { case e: Throwable => s"ERROR: ${e.getClass.getName}: ${e.getMessage}" }
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -33,10 +33,9 @@ object Aggregates extends OpModule {
     * mapPartitions discipline); at 100 TB the coreset is the ONLY
     * thing leaving the executors. Returns (q, sketch_v, n) for
     * q ∈ {0.5, 0.9, 0.99}; package-visible for the invariant spec. */
-  private[graft] def quantileSketch(s: SparkSession, d: String,
-      scope: PersistScope): DataFrame = {
+  private[graft] def quantileSketch(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val coreset = scope.cut(
+    val coreset = GraftBridge.checkpoint(
       Tables.lineitem(s, d).select(col("l_extendedprice").cast("double"))
         .as[Double].mapPartitions { it =>
           val arr = it.toArray
@@ -63,7 +62,7 @@ object Aggregates extends OpModule {
   }
 
   val queries: Map[String, Q] = Map(
-    "agg_quantile_sketch" -> ((s, d) => scopedPersist { scope =>
+    "agg_quantile_sketch" -> ((s, d) => {
       // Sketch quantiles, tolerance-graded (the agg_approx_distinct
       // discipline: each engine runs ITS OWN sketch — Spark the
       // rank-stride coreset above, DuckDB t-digest approx_quantile —
@@ -83,7 +82,7 @@ object Aggregates extends OpModule {
       // order aligns with v order; ties share a bucket, and the value
       // AT a rank is tie-order-free). The rank-k join picks identical
       // exact_v, so the graded output is unchanged.
-      val sk = quantileSketch(s, d, scope)
+      val sk = quantileSketch(s, d)
       val vals = Tables.lineitem(s, d)
         .select(col("l_extendedprice").cast("double").as("v"))
         .withColumn("bk", floor(col("v") / 1000).cast("long"))

@@ -368,7 +368,7 @@ object Events extends OpModule {
         .select("day", "dau", "wau").orderBy("day")
     }),
 
-    "evt_markov_steady" -> ((s, d) => scopedPersist { scope =>
+    "evt_markov_steady" -> ((s, d) => {
       // Stationary distribution of the event-type Markov chain (r7):
       // where user journeys spend their time in the limit — the
       // steady-state twin of evt_path's one-step transition matrix,
@@ -395,7 +395,7 @@ object Events extends OpModule {
       val tSz = size(col("tp"))
       def tpAt(i: Column) = element_at(col("tp"), i + 1)
       // kept row sums: outgoing mass into recurring targets only
-      val withRs = scope.cut(row.withColumn("rs",
+      val withRs = GraftBridge.checkpoint(row.withColumn("rs",
         transform(sequence(lit(0), tSz - 1), i =>
           aggregate(
             filter(col("cl"), s2 => s2.getField("f") === tpAt(i) &&
@@ -752,9 +752,7 @@ object Events extends OpModule {
         .orderBy("event_type")
     }),
 
-    // Persist-scoped (r5): the day-grain pair cache is released once
-    // the ~30-row result materializes; see stickinessBody.
-    "evt_stickiness" -> ((s, d) => scopedPersist(stickinessBody(s, d))),
+    "evt_stickiness" -> ((s, d) => stickinessBody(s, d)),
 
     "evt_bot_detect" -> ((s, d) => {
       // Bot/automation screen: humans' inter-event gaps spread widely,
@@ -897,7 +895,7 @@ object Events extends OpModule {
         .orderBy("event_type")
     }),
 
-    "evt_absorb_prob" -> ((s, d) => scopedPersist { scope =>
+    "evt_absorb_prob" -> ((s, d) => {
       // Conversion-absorption probability (r7): for every starting
       // event type, the probability of REACHING 'purchase' within 1
       // and within 3 transitions of the empirical event-type Markov
@@ -924,7 +922,7 @@ object Events extends OpModule {
         sort_array(collect_set(col("f"))).as("tp"))
       val tSz = size(col("tp"))
       def tpAt(i: Column) = element_at(col("tp"), i + 1)
-      val withRs = scope.cut(row.withColumn("rs",
+      val withRs = GraftBridge.checkpoint(row.withColumn("rs",
         transform(sequence(lit(0), tSz - 1), i =>
           aggregate(filter(col("cl"), s2 => s2.getField("f") === tpAt(i)),
             lit(0L), (acc, s2) => acc + s2.getField("n")))))
@@ -1023,7 +1021,7 @@ object Events extends OpModule {
         .orderBy("t_days")
     }),
 
-    "evt_markov_attrib" -> ((s, d) => scopedPersist { scope =>
+    "evt_markov_attrib" -> ((s, d) => {
       // Markov removal-effect attribution (r7): each channel's credit
       // for conversions = how much 3-step purchase-absorption mass
       // disappears when walks entering that channel DIE there (the
@@ -1053,7 +1051,7 @@ object Events extends OpModule {
             lit(0L), (acc, s2) => acc + s2.getField("n"))))
       // one row per candidate channel; 'purchase' (the absorber) is
       // not a removable channel
-      val chans = scope.cut(withRs
+      val chans = GraftBridge.checkpoint(withRs
         .select(col("cl"), col("tp"), col("rs"),
           posexplode(col("tp")).as(Seq("ci", "chan")))
         .filter(col("chan") =!= "purchase"))
@@ -1074,10 +1072,10 @@ object Events extends OpModule {
                 })))
       val p0 = transform(sequence(lit(0), tSz - 1), _ => lit(0.0))
       val noRemoval = lit(null).cast("string")
-      val s1 = scope.cut(chans
+      val s1 = GraftBridge.checkpoint(chans
         .withColumn("b1", stepP(p0, noRemoval))
         .withColumn("r1", stepP(p0, col("chan"))))
-      val s2 = scope.cut(s1
+      val s2 = GraftBridge.checkpoint(s1
         .withColumn("b2", stepP(col("b1"), noRemoval))
         .withColumn("r2", stepP(col("r1"), col("chan"))))
       val s3 = s2
@@ -1711,11 +1709,11 @@ object Events extends OpModule {
     * so the range join moves |days|·28·|daily actives| rows, never
     * |events|; the observed-day spine broadcasts. Integer distinct
     * counts + one terminal divide. The pair rollup feeds the spine,
-    * the MAU join and the DAU agg — persisted via the scope, released
-    * after the result materializes. */
-  private[graft] def stickinessBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
-    val du = scope.persist(evtByUser(s, d)
+    * the MAU join and the DAU agg; it needs no exchange of its own
+    * (the user-clustered base already satisfies its grouping), so no
+    * exchange is shared and it is cut once. */
+  private[graft] def stickinessBody(s: SparkSession, d: String): DataFrame = {
+    val du = GraftBridge.checkpoint(evtByUser(s, d)
       .select(to_date(col("ts")).as("day"), col("user_id")).distinct())
     val days = du.select("day").distinct()
     val mau = broadcast(days)

@@ -159,20 +159,19 @@ object Graph extends OpModule {
     * frontier + a partial-agged (src, node) rollup + an anti-join
     * against the visited set; frontier/visited stay ≤ 5·|nodes| rows,
     * rounds lineage-cut. Returns (e, adj, l0..l3), each layer with
-    * columns (src, node, sigma); e is the persisted edge frame so
+    * columns (src, node, sigma); e is the memoized edge checkpoint so
     * consumers needing graph-level rollups reuse it instead of
-    * persisting a second copy.
+    * deriving a second copy.
     */
-  private def sigmaChain(s: SparkSession, d: String, scope: PersistScope)
+  private def sigmaChain(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
-    SessionMemo.memo(s, d, "sigmaChain")(sigmaChainBuild(s, d, scope))
+    SessionMemo.memo(s, d, "sigmaChain")(sigmaChainBuild(s, d))
 
   /** The actual σ-chain build — memoized across its four graded
     * consumers (path_counts / stress / closeness / betweenness, r16
     * verdict #6); every returned frame is either a cut or derives
-    * only from cuts, so the memo outlives any one query's scope. */
-  private def sigmaChainBuild(s: SparkSession, d: String,
-      scope: PersistScope)
+    * only from cuts, so the memo can outlive any one query. */
+  private def sigmaChainBuild(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val e = sharedEdges(s, d)
     val deg = degrees(e)
@@ -188,7 +187,7 @@ object Graph extends OpModule {
     // parallel). The visited unions and the last layer are
     // single-cheap or single-referenced — they stay lineage, saving 3
     // eager actions per consumer vs the r13 form.
-    val l0 = scope.cut(
+    val l0 = GraftBridge.checkpoint(
       deg.orderBy(col("d").desc, col("node").desc).limit(5)
         .select(col("node").as("src"), col("node"), lit(1L).as("sigma")))
     def layer(frontier: DataFrame, visited: DataFrame): DataFrame =
@@ -199,13 +198,13 @@ object Graph extends OpModule {
         .join(visited.select(col("src").as("vs"), col("node").as("vn")),
           col("src") === col("vs") && col("node") === col("vn"), "left_anti")
     val v0 = l0.select("src", "node")
-    val l1 = scope.cut(layer(l0, v0).coalesce(1))
+    val l1 = GraftBridge.checkpoint(layer(l0, v0).coalesce(1))
     val v1 = v0.union(l1.select("src", "node"))
-    val l2 = scope.cut(layer(l1, v1).coalesce(1))
+    val l2 = GraftBridge.checkpoint(layer(l1, v1).coalesce(1))
     val v2 = v1.union(l2.select("src", "node"))
     // l3 was single-referenced per consumer and stayed lineage; the
     // memo makes it multi-referenced ACROSS consumers, so it cuts.
-    val l3 = scope.cut(layer(l2, v2).coalesce(1))
+    val l3 = GraftBridge.checkpoint(layer(l2, v2).coalesce(1))
     (e, adj, l0, l1, l2, l3)
   }
 
@@ -228,9 +227,8 @@ object Graph extends OpModule {
     * τ = 0 via the left join (their paths END there — the 1-term is
     * owed to their predecessors, not to them).
     */
-  private[graft] def stressContrib(s: SparkSession, d: String,
-      scope: PersistScope): DataFrame = {
-    val (_, adj, _, l1, l2, l3) = sigmaChain(s, d, scope)
+  private[graft] def stressContrib(s: SparkSession, d: String): DataFrame = {
+    val (_, adj, _, l1, l2, l3) = sigmaChain(s, d)
     def back(layer: DataFrame, deeper: DataFrame): DataFrame = {
       val cand = adj
         .join(deeper.select(col("src").as("ws"), col("node").as("wn"),
@@ -247,7 +245,7 @@ object Graph extends OpModule {
     // t2 feeds BOTH the next backward level and the final union — cut
     // it (coalesce(1): ≤5·|nodes| rows); t1 is union-only, so it
     // stays lineage (the r14 cut-trim discipline, see sigmaChain).
-    val t2 = scope.cut(back(l2, t3).coalesce(1))
+    val t2 = GraftBridge.checkpoint(back(l2, t3).coalesce(1))
     val t1 = back(l1, t2)
     t1.union(t2)
       .select(col("src"), col("node"), (col("sigma") * col("tau")).as("st"))
@@ -267,9 +265,8 @@ object Graph extends OpModule {
     * pagerank quantization — summation-order noise dies before it
     * compounds); every other term is an exact small integer ratio.
     * Plan shape mirrors the τ pass level for level. */
-  private[graft] def betweennessContrib(s: SparkSession, d: String,
-      scope: PersistScope): DataFrame = {
-    val (_, adj, _, l1, l2, l3) = sigmaChain(s, d, scope)
+  private[graft] def betweennessContrib(s: SparkSession, d: String): DataFrame = {
+    val (_, adj, _, l1, l2, l3) = sigmaChain(s, d)
     def back(layer: DataFrame, deeper: DataFrame): DataFrame = {
       val cand = adj
         .join(deeper.select(col("src").as("ws"), col("node").as("wn"),
@@ -288,26 +285,26 @@ object Graph extends OpModule {
     // d2 feeds BOTH the next backward level and the final union — cut
     // (coalesce(1): ≤5·|nodes| rows); d1 is union-only (the τ-pass
     // cut-trim discipline).
-    val d2 = scope.cut(back(l2, d3).coalesce(1))
+    val d2 = GraftBridge.checkpoint(back(l2, d3).coalesce(1))
     val d1 = back(l1, d2)
     d1.union(d2).select(col("src"), col("node"), col("delta"))
   }
 
   val queries: Map[String, Q] = Map(
-    "graph_betweenness" -> ((s, d) => scopedPersist { scope =>
+    "graph_betweenness" -> ((s, d) => {
       // Betweenness centrality (Brandes 2001) of the co-purchase
       // graph, emitted beside graph_stress_centrality so the two
       // centralities read together (stress = HOW MANY shortest paths
       // cross v; betweenness = WHAT FRACTION of each pair's paths
       // cross v): δ backward accumulation over the SAME shared σ-BFS
       // DAG (sigmaChain — the forward pass is computed once per
-      // scope, and a drift in either kernel breaks the shared-chain
+      // session, and a drift in either kernel breaks the shared-chain
       // invariants). Per-level round(δ, 9) (the pagerank float
       // discipline) makes both engines' summation noise quantize
       // identically; the final per-node sum is ≤5 grid values, so
       // round-6 output is engine-exact. Top-20 is a
       // TakeOrderedAndProject, never a global sort.
-      betweennessContrib(s, d, scope)
+      betweennessContrib(s, d)
         .filter(col("delta") > 0)
         .groupBy("node")
         .agg(countDistinct("src").as("n_src"),
@@ -584,23 +581,22 @@ object Graph extends OpModule {
         .limit(50)
     }),
 
-    // Persist-scoped (r5): the peeling supersteps persist per round and
-    // every intermediate is unpersisted once the 4-row trace is
-    // materialized — see kcoreBody for the algorithm.
-    "graph_kcore" -> ((s, d) => scopedPersist(kcoreBody(s, d))),
+    // The peeling supersteps are cut per round — see kcoreBody for the
+    // algorithm.
+    "graph_kcore" -> ((s, d) => kcoreBody(s, d)),
 
-    // Persist-scoped (r5); see componentLabels. The plain 3-round
+    // See componentLabels. The plain 3-round
     // unroll, its pointer-doubling twin (r13) and doubling run to a
     // zero change census under a cap of 10 (r15): one size histogram,
     // so the three read side by side.
     "graph_components" -> ((s, d) =>
-      scopedPersist(componentsBody(3, jump = false, converge = false)(s, d))),
+      componentsBody(3, jump = false, converge = false)(s, d)),
     "graph_components_doubling" -> ((s, d) =>
-      scopedPersist(componentsBody(3, jump = true, converge = false)(s, d))),
+      componentsBody(3, jump = true, converge = false)(s, d)),
     "graph_components_converged" -> ((s, d) =>
-      scopedPersist(componentsBody(10, jump = true, converge = true)(s, d))),
+      componentsBody(10, jump = true, converge = true)(s, d)),
 
-    "graph_sssp" -> ((s, d) => scopedPersist { scope =>
+    "graph_sssp" -> ((s, d) => {
       // Bounded-hop weighted single-source shortest paths (r13 verdict
       // #5): 4 unrolled Bellman-Ford relaxation rounds from the
       // top-degree hub over the WEIGHTED co-purchase graph — the
@@ -616,14 +612,16 @@ object Graph extends OpModule {
       // discipline). The improved-last-round count rides the output
       // (the fixed-round-kernel residual discipline): 0 = distances
       // converged inside 4 hops.
-      val e = scope.persist(edgesW(s, d).coalesce(4))
+      // The weighted edge rollup (a self-join + aggregate) feeds the
+      // degree seed and every round's checkpoint job: cut it once.
+      val e = GraftBridge.checkpoint(edgesW(s, d).coalesce(4))
       val deg = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("d"))
       val cost = expr("1000000 div w")
       val adjw = e.select(col("u").as("a"), col("v").as("b"), cost.as("c"))
         .union(e.select(col("v").as("a"), col("u").as("b"), cost.as("c")))
       val lmax = lit(2305843009213693951L)
-      var dist = scope.cut(
+      var dist = GraftBridge.checkpoint(
         deg.agg(max(struct(col("d"), col("node"))).as("m"))
           .select(col("m.node").as("node"), lit(0L).as("dist")))
       var prev = dist
@@ -634,7 +632,7 @@ object Graph extends OpModule {
             col("a") === col("dn"))
           .groupBy(col("b").as("node"))
           .agg(min(col("du") + col("c")).as("nd"))
-        dist = scope.cut(dist.join(relaxed, Seq("node"), "full_outer")
+        dist = GraftBridge.checkpoint(dist.join(relaxed, Seq("node"), "full_outer")
           .select(col("node"),
             least(coalesce(col("dist"), lmax), coalesce(col("nd"), lmax))
               .as("dist"))
@@ -653,10 +651,9 @@ object Graph extends OpModule {
         .orderBy("dist_cost", "node")
     }),
 
-    // Persist-scoped (r5); see jaccardBody.
-    "graph_jaccard_sim" -> ((s, d) => scopedPersist(jaccardBody(s, d))),
+    "graph_jaccard_sim" -> ((s, d) => jaccardBody(s, d)),
 
-    "graph_label_propagation" -> ((s, d) => scopedPersist { scope =>
+    "graph_label_propagation" -> ((s, d) => {
       // Community detection by label propagation (r7), 2 unrolled
       // rounds: every node adopts the most frequent label among its
       // neighbors, ties broken by MIN label — classic LPA made
@@ -670,10 +667,10 @@ object Graph extends OpModule {
       // lesson that a fixed-round kernel must emit its own residual).
       // Plan: each round is ONE |adj|-sized equi-join + two
       // partial-agged groupBys (label count, then per-node struct-max
-      // argmax — no window over the adjacency); rounds persist via
-      // cut, the iterative-kernel discipline.
+      // argmax — no window over the adjacency); each round is cut, the
+      // iterative-kernel discipline.
       val e = sharedEdges(s, d) // session-memoized bounded universe
-      val (l1, l2) = lpaLabels(s, d, scope) // r16: session-memoized
+      val (l1, l2) = lpaLabels(s, d) // r16: session-memoized
       val changed = l2.select(col("node").as("n2"), col("lbl").as("lb2"))
         .join(l1, col("n2") === col("node"))
         .filter(col("lb2") =!= col("lbl"))
@@ -685,7 +682,7 @@ object Graph extends OpModule {
         .orderBy("community_size")
     }),
 
-    "graph_bfs_layers" -> ((s, d) => scopedPersist { scope =>
+    "graph_bfs_layers" -> ((s, d) => {
       // BFS reach profile (r7): distance layers 0–3 from the
       // highest-degree hub of the co-purchase graph, plus the mass
       // left unreached — the "how far does influence travel"
@@ -702,7 +699,7 @@ object Graph extends OpModule {
       // the private 4-superstep build (4 eager cuts + 4 edge-sized
       // joins per query) with four node-sized filters; outputs are
       // bit-identical because the frontier sets are the same sets.
-      val (e, _, l0, l1, l2, l3) = sigmaChain(s, d, scope)
+      val (e, _, l0, l1, l2, l3) = sigmaChain(s, d)
       val deg = degrees(e)
       val seed = deg.agg(max(struct(col("d"), col("node"))).as("m"))
         .select(col("m.node").as("seed"))
@@ -718,7 +715,7 @@ object Graph extends OpModule {
         .orderBy("distance")
     }),
 
-    "graph_rich_club" -> ((s, d) => scopedPersist { scope =>
+    "graph_rich_club" -> ((s, d) => {
       // Rich-club coefficient spectrum (Zhou & Mondragón 2004):
       // φ(k) = 2·E_k / (N_k·(N_k−1)) over the subgraph induced by
       // nodes with degree > k — "do the hubs preferentially trade
@@ -734,7 +731,7 @@ object Graph extends OpModule {
       // counts; φ ≤ 1e6 is a theorem InvariantsSpec pins, as is
       // monotone non-increasing N_k/E_k over k).
       val e = sharedEdges(s, d) // session-memoized bounded universe
-      val deg = scope.persist(degrees(e).coalesce(1)) // node-sized
+      val deg = degrees(e).coalesce(1) // node-sized; its exchange is shared
       val spine = s.range(1).select(explode(
         array(lit(1L), lit(2L), lit(4L), lit(8L), lit(16L))).as("k"))
       val nk = deg.crossJoin(broadcast(spine)).filter(col("d") > col("k"))
@@ -755,7 +752,7 @@ object Graph extends OpModule {
         .orderBy("k")
     }),
 
-    "graph_path_counts" -> ((s, d) => scopedPersist { scope =>
+    "graph_path_counts" -> ((s, d) => {
       // Shortest-path-counting BFS — the σ census of Brandes 2001
       // (the forward pass every betweenness/stress-centrality engine
       // runs): from each of the top-5 hubs, count the NUMBER of
@@ -773,7 +770,7 @@ object Graph extends OpModule {
       // diameter 3 (σ ≤ max_deg³). Forward chain factored into
       // sigmaChain, shared with graph_stress_centrality's backward
       // pass — computation unchanged.
-      val (_, _, l0, l1, l2, l3) = sigmaChain(s, d, scope)
+      val (_, _, l0, l1, l2, l3) = sigmaChain(s, d)
       Seq(l0 -> 0L, l1 -> 1L, l2 -> 2L, l3 -> 3L)
         .map { case (df, k) =>
           df.select(col("src"), lit(k).as("distance"), col("sigma")) }
@@ -784,7 +781,7 @@ object Graph extends OpModule {
         .orderBy("src", "distance")
     }),
 
-    "graph_closeness" -> ((s, d) => scopedPersist { scope =>
+    "graph_closeness" -> ((s, d) => {
       // Truncated closeness centrality of the top-5 hubs
       // (Wasserman–Faust 1994 variant: reach-weighted so disconnected
       // components don't zero the score) over the SAME shared σ-BFS
@@ -800,7 +797,7 @@ object Graph extends OpModule {
       // equal the GRADED path-count profile's Σ n_nodes — both
       // InvariantsSpec cross-locks. Everything after the shared chain
       // is 5-row arithmetic.
-      val (e, _, l0, l1, l2, l3) = sigmaChain(s, d, scope)
+      val (e, _, l0, l1, l2, l3) = sigmaChain(s, d)
       val nTot = degrees(e).agg(count(lit(1)).as("n_graph"))
       Seq(l0 -> 0L, l1 -> 1L, l2 -> 2L, l3 -> 3L)
         .map { case (df, k) =>
@@ -821,7 +818,7 @@ object Graph extends OpModule {
         .orderBy("src")
     }),
 
-    "graph_stress_centrality" -> ((s, d) => scopedPersist { scope =>
+    "graph_stress_centrality" -> ((s, d) => {
       // Stress centrality (Shimbel 1953) of the co-purchase graph via
       // the Brandes 2001 BACKWARD pass over the same σ-BFS DAG
       // graph_path_counts counts forward (shared sigmaChain): for
@@ -838,7 +835,7 @@ object Graph extends OpModule {
       // node-sized and the top-20 is a TakeOrderedAndProject, never a
       // global sort. Long bound: σ·τ ≤ max_deg⁶ ≈ 7e14 at this
       // graph's max degree ~300 — comfortable.
-      stressContrib(s, d, scope)
+      stressContrib(s, d)
         .filter(col("st") > 0)
         .groupBy("node")
         .agg(countDistinct("src").as("n_src"), sum("st").as("stress"))
@@ -846,7 +843,7 @@ object Graph extends OpModule {
         .limit(20)
     }),
 
-    "graph_modularity" -> ((s, d) => scopedPersist { scope =>
+    "graph_modularity" -> ((s, d) => {
       // Community-quality gate (r7): Newman modularity of the LPA
       // partition — the "did label propagation find real structure"
       // check, exactly as the sim_recall_* gates grade the ANN
@@ -860,7 +857,7 @@ object Graph extends OpModule {
       // edge-sized op after the LPA supersteps; community rollups are
       // node-sized, the scalars broadcast-cross into one row.
       val e = sharedEdges(s, d) // session-memoized bounded universe
-      val (_, l2) = lpaLabels(s, d, scope) // r16: session-memoized
+      val (_, l2) = lpaLabels(s, d) // r16: session-memoized
       val lu = l2.select(col("node").as("u2"), col("lbl").as("lu"))
       val lv = l2.select(col("node").as("v2"), col("lbl").as("lv"))
       val lab = e.join(lu, col("u") === col("u2"))
@@ -920,13 +917,11 @@ object Graph extends OpModule {
     }),
 
     "graph_clustering_coeff" -> ((s, d) =>
-      // Persist-scoped; see clusteringBody.
-      scopedPersist(clusteringBody(s, d))),
+      clusteringBody(s, d)),
   )
 
   /** Body of graph_clustering_coeff, exposed for plan-shape tests. */
-  private[graft] def clusteringBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def clusteringBody(s: SparkSession, d: String): DataFrame = {
       // LOCAL clustering-coefficient distribution — the per-node twin
       // of graph_triangles' single global number: how many nodes live
       // in tightly closed neighborhoods (coeff→1) vs open hubs
@@ -968,18 +963,17 @@ object Graph extends OpModule {
     * each round is one |adj| equi-join + two partial-agged groupBys,
     * lineage-cut. Session-memoized since r16 (both consumers trained
     * the identical 2-round chain; the rounds are cuts, so the memo
-    * outlives any one query's scope). */
-  private[graft] def lpaLabels(s: SparkSession, d: String,
-      scope: PersistScope): (DataFrame, DataFrame) =
+    * can outlive any one query). */
+  private[graft] def lpaLabels(s: SparkSession, d: String): (DataFrame, DataFrame) =
     SessionMemo.memo(s, d, "lpaLabels")(
-      lpaLabelsBuild(sharedEdges(s, d), scope))
+      lpaLabelsBuild(sharedEdges(s, d)))
 
-  private def lpaLabelsBuild(e: DataFrame, scope: PersistScope)
+  private def lpaLabelsBuild(e: DataFrame)
       : (DataFrame, DataFrame) = {
     val adj = e.select(col("u").as("a"), col("v").as("b"))
       .union(e.select(col("v").as("a"), col("u").as("b")))
     val l0 = degrees(e).select(col("node"), col("node").as("lbl"))
-    def step(prev: DataFrame): DataFrame = scope.cut(
+    def step(prev: DataFrame): DataFrame = GraftBridge.checkpoint(
       adj.join(prev.select(col("node").as("bn"), col("lbl")), col("b") === col("bn"))
         .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy("a")
@@ -1000,20 +994,19 @@ object Graph extends OpModule {
     * each round is an equi-semi-join against a broadcastable per-node
     * degree table — node-sized, never edge-sized; the 1-row snapshot
     * aggs broadcast-cross into the trace. EVERY round's edge set is
-    * persisted via the scope, exactly like dedup_components'
-    * superstep plan: round r's edges are referenced three times
+    * checkpointed: round r's edges are referenced three times
     * (degrees, the next round's semi-join, the snapshot count), so an
-    * unpersisted chain re-derives round r−1 per reference — ~3^r
-    * plan/work blowup that measured minutes at sf0.1 before the
-    * persists. */
-  private[graft] def kcoreBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+    * uncut chain re-derives round r−1 per reference — ~3^r plan/work
+    * blowup that measured minutes at sf0.1 before the per-round
+    * materialization. */
+  private[graft] def kcoreBody(s: SparkSession, d: String): DataFrame = {
     val K = 3
-    // Per-round CUT, not persist (see PersistScope.cut): e_r is
-    // referenced 3× per round, so a persist-only chain grows the
-    // logical plan ~3^r and AQE's per-stage plan render made this
-    // query 17–22 s (and OOMed a 1 GiB driver); per-round lineage
-    // truncation measures ~2 s steady-state at sf0.1 local[32].
+    // Per-round CUT, not persist (see the OpModule materialization
+    // contract): e_r is referenced 3× per round, so a persist-only
+    // chain grows the logical plan ~3^r and AQE's per-stage plan
+    // render made this query 17–22 s (and ran a 1 GiB heap out of memory);
+    // per-round lineage truncation measures ~2 s steady-state at
+    // sf0.1 local[32].
     var e = sharedEdges(s, d) // r16: seed the peel from the shared cut
     // Convergence trace via ONE union-all + groupBy(round) agg (r5
     // advice): the former shape cross-joined 8 separate 1-row scalar
@@ -1032,8 +1025,8 @@ object Graph extends OpModule {
       tag(e, 0, nodes = false))
     for (r <- 1 to 3) {
       // keep is referenced 3× (both semi-join sides + its trace rows).
-      val keep = scope.cut(degrees(e).filter(col("d") >= K).select("node"))
-      e = scope.cut(
+      val keep = GraftBridge.checkpoint(degrees(e).filter(col("d") >= K).select("node"))
+      e = GraftBridge.checkpoint(
         e.join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
           .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
       parts = parts :+ tag(keep, r, nodes = true) :+ tag(e, r, nodes = false)
@@ -1095,8 +1088,9 @@ object Graph extends OpModule {
     *
     * Every step and jump output is referenced at least twice (the next
     * step reads it twice, the jump self-joins it), and a persist-only
-    * chain doubles the logical plan per round, so each is CUT (see
-    * PersistScope.cut for the AQE plan-render cost this avoids). Label
+    * chain doubles the logical plan per round, so each is CUT (see the
+    * OpModule materialization contract for the AQE plan-render cost
+    * this avoids). Label
     * frames are node-sized (bounded by the hash-coarsened node universe
     * at any corpus scale), so every cut is coalesce(1): a 1-partition
     * cut prices ~65 ms vs ~100–160 for 32 partitions on the r14 audit
@@ -1106,11 +1100,11 @@ object Graph extends OpModule {
     * CONTRACT: every endpoint of `adj` is a node of `nodes` (the
     * [[ccStep]] contract). */
   private[graft] def componentLabels(adj: DataFrame, nodes: DataFrame,
-      rounds: Int, scope: PersistScope, jump: Boolean = false,
+      rounds: Int, jump: Boolean = false,
       converge: Boolean = false,
       seed: Option[DataFrame] = None): Components = {
     val lbl0 = identityLabels(nodes)
-    var lbl = if (seed.isDefined) lbl0 else scope.cut(lbl0)
+    var lbl = if (seed.isDefined) lbl0 else GraftBridge.checkpoint(lbl0)
     var prev = lbl
     // A def over the loop state: built after the last round, and per
     // round only when the driver reads it.
@@ -1124,9 +1118,9 @@ object Graph extends OpModule {
     while (r < rounds && residual != 0L) {
       prev = lbl
       r += 1
-      val m = seed.filter(_ => r == 1).getOrElse(scope.cut(ccStep(adj, lbl)))
+      val m = seed.filter(_ => r == 1).getOrElse(GraftBridge.checkpoint(ccStep(adj, lbl)))
       lbl =
-        if (jump) scope.cut(
+        if (jump) GraftBridge.checkpoint(
           m.join(m.select(col("node").as("jn"), col("ml").as("jl")),
               col("ml") === col("jn"), "left")
             .select(col("node"),
@@ -1144,10 +1138,9 @@ object Graph extends OpModule {
     * on every row: the last-round census broadcast under a fixed
     * unroll, rounds_used/residual under converge. */
   private[graft] def componentsBody(rounds: Int, jump: Boolean,
-      converge: Boolean)(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+      converge: Boolean)(s: SparkSession, d: String): DataFrame = {
     val (adj, nodes) = ccGraph(s, d)
-    val cc = componentLabels(adj, nodes, rounds, scope, jump, converge,
+    val cc = componentLabels(adj, nodes, rounds, jump, converge,
       Some(ccRound1Shared(s, d)))
     val hist = cc.labels.groupBy("lbl").agg(count(lit(1)).as("csz"))
       .groupBy(col("csz").as("component_size"))
@@ -1176,15 +1169,13 @@ object Graph extends OpModule {
     * graph_link_predict; degrees broadcast, so the union is never
     * materialized. Integer counts everywhere; one divide + round at
     * the end. Top-30 with full tiebreak. */
-  private[graft] def jaccardBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def jaccardBody(s: SparkSession, d: String): DataFrame = {
     val hubCap = 2000
     // e feeds the adjacency twice and deg three times (hub cap + the
-    // two endpoint-degree joins) — both are dimension-bounded, so one
-    // persist each stops the shared subtree from re-deriving the
-    // incidence join per reference.
+    // two endpoint-degree joins): e is the memo's checkpoint, and the
+    // three deg references share its one aggregate exchange.
     val e = sharedEdges(s, d) // session-memoized bounded universe
-    val deg = scope.persist(degrees(e).coalesce(1)) // node-sized
+    val deg = degrees(e).coalesce(1) // node-sized
     val adj = e.select(col("u").as("node"), col("v").as("nbr"))
       .union(e.select(col("v").as("node"), col("u").as("nbr")))
     val nbrs = adj.join(broadcast(deg.filter(col("d") <= hubCap)), Seq("node"))
@@ -1218,7 +1209,7 @@ object Graph extends OpModule {
   // feeds both the SigmaCtes seed AND the graph-size scalar — and a
   // plain CTE makes DuckDB inline and recompute the full ob/e/deg
   // incidence derivation per reference, unlike the Spark side's
-  // persisted edge frame.
+  // checkpointed edge frame.
   private val EDGES =
     s"""ob AS ($INCIDENCE),
        |e AS MATERIALIZED (SELECT a.node AS u, b.node AS v

@@ -65,13 +65,12 @@ object LlmSim extends OpModule {
     * Gram row in `mcol`, with per-step lineage cuts (the top_pc
     * discipline — each step references its input 64² times). Returns
     * the frame with `xcol` = the unit eigenvector estimate. */
-  private def pcIterate(scope: PersistScope, frame: DataFrame,
-                        mcol: String, xcol: String): DataFrame = {
-    val i1 = scope.cut(frame.withColumn(s"${xcol}_1",
+  private def pcIterate(frame: DataFrame, mcol: String, xcol: String): DataFrame = {
+    val i1 = GraftBridge.checkpoint(frame.withColumn(s"${xcol}_1",
       pcNormalize(pcMatvec(col(mcol), array_repeat(lit(1.0), PcD)))))
-    val i2 = scope.cut(i1.withColumn(s"${xcol}_2",
+    val i2 = GraftBridge.checkpoint(i1.withColumn(s"${xcol}_2",
       pcNormalize(pcMatvec(col(mcol), col(s"${xcol}_1")))))
-    scope.cut(i2.withColumn(xcol,
+    GraftBridge.checkpoint(i2.withColumn(xcol,
       pcNormalize(pcMatvec(col(mcol), col(s"${xcol}_2")))))
       .drop(s"${xcol}_1", s"${xcol}_2")
   }
@@ -143,9 +142,9 @@ object LlmSim extends OpModule {
 
   /** IVF training: C=16 coarse centroids (deterministic lowest-id
     * init + 2 integer-exact Lloyd iterations via the shared
-    * kmAssign/kmUpdate machinery). Each round's centroid table AND
-    * the final full-corpus assignment persist via the scope (r5
-    * verdict #4 / PLANS.md unrolled-loop rule): every downstream
+    * kmAssign/kmUpdate machinery). The final centroid table AND the
+    * full-corpus assignment are cut (r5 verdict #4 / PLANS.md
+    * unrolled-loop rule): every downstream
     * reference — the probe's query scoring, the cell join, a stats
     * rollup — would otherwise re-derive the full embedding scan +
     * assignment lineage per reference. Returns (trained centroids,
@@ -159,19 +158,15 @@ object LlmSim extends OpModule {
     * served. Memoized chains here: `ivfTrain` (coarse quantizer),
     * `pqDists` (trained PQ distance table), `annEval` (tier universe
     * + four-path retrieved union). */
-  private def memoed[T <: AnyRef](s: SparkSession, d: String, key: String)(
-      build: => T): T = SessionMemo.memo(s, d, key)(build)
-
-  private[graft] def ivfTrain(s: SparkSession, d: String,
-      scope: PersistScope): (DataFrame, DataFrame) =
-    memoed(s, d, "ivfTrain")(ivfTrainBuild(s, d, scope))
+  private[graft] def ivfTrain(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    SessionMemo.memo(s, d, "ivfTrain")(ivfTrainBuild(s, d))
 
   /** Trained C=8 k-means chain — (centroids after 2 Lloyd rounds,
     * round-2 assignment), both eager cuts. Session-memoized (r16):
     * embed_kmeans and embed_silhouette trained bit-identical chains;
     * one build serves both (the ivfTrain discipline at C=8). */
   private def km8Shared(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    memoed(s, d, "km8") {
+    SessionMemo.memo(s, d, "km8") {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           norm(col("embedding")).as("nrm"))
@@ -186,8 +181,7 @@ object LlmSim extends OpModule {
       (GraftBridge.checkpoint(kmUpdate(e, a2)), a2)
     }
 
-  private def ivfTrainBuild(s: SparkSession, d: String,
-      scope: PersistScope): (DataFrame, DataFrame) = {
+  private def ivfTrainBuild(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val C = 16
     val e = Tables.embeddings(s, d).select(col("vec_id"),
       col("embedding"), norm(col("embedding")).as("nrm"))
@@ -196,17 +190,13 @@ object LlmSim extends OpModule {
     // via the broadcast) — a single-reference chain grows linearly,
     // so no intermediate cut (r14 cut-trim; each eager action prices
     // ~100–160 ms of scheduling floor). The FINAL tables are
-    // multi-referenced, but LAZILY persisted, not eagerly cut (r15
-    // audit: the ANN-eval band was ~85% serialization floor — each
-    // eager cut job ran its training chain SERIALLY before plan
-    // construction could continue, while a persist defers to the
-    // terminal job, where AQE schedules independent path chains'
-    // stages concurrently; the 2-round Lloyd lineage is linear, so
-    // the plan-render blowup that forces cut() on branching kernels
-    // cannot occur).
+    // multi-referenced and cut: the session memo serves them to every
+    // IVF consumer. Consumers that also train another chain build the
+    // two with `par`, so their cut jobs overlap (r15 audit: the
+    // ANN-eval band was ~85% serialization floor).
     cents = kmUpdate(e, kmAssign(e, cents))
-    cents = scope.cut(kmUpdate(e, kmAssign(e, cents)))
-    val assign = scope.cut(kmAssign(e, cents).join(e, "vec_id"))
+    cents = GraftBridge.checkpoint(kmUpdate(e, kmAssign(e, cents)))
+    val assign = GraftBridge.checkpoint(kmAssign(e, cents).join(e, "vec_id"))
     (cents, assign)
   }
 
@@ -236,9 +226,8 @@ object LlmSim extends OpModule {
       .orderBy("q_id", "rk")
   }
 
-  private[graft] def ivfBody(s: SparkSession, d: String, nprobe: Int)(
-      scope: PersistScope): DataFrame = {
-    val (cents, assign) = ivfTrain(s, d, scope)
+  private[graft] def ivfBody(s: SparkSession, d: String, nprobe: Int): DataFrame = {
+    val (cents, assign) = ivfTrain(s, d)
     ivfProbe(cents, assign, nprobe)
   }
 
@@ -332,11 +321,10 @@ object LlmSim extends OpModule {
     * ties → lower sub (the kmAssign convention), floor-mean updates
     * on the 1e6 integer grid, unique vec_id makes the residue seed
     * unique. Returns (vec_id, cell, sub). */
-  private[graft] def subSplit(assign: DataFrame, trainPred: Column,
-      scope: PersistScope): DataFrame = {
+  private[graft] def subSplit(assign: DataFrame, trainPred: Column): DataFrame = {
     val e = assign.select(col("vec_id"), col("cell"), col("embedding"))
       .withColumn("snrm", norm(col("embedding")))
-    val s1 = scope.cut(subAssign(e, subCentroids(assign, trainPred, scope)))
+    val s1 = GraftBridge.checkpoint(subAssign(e, subCentroids(assign, trainPred)))
     // One recursive level: find groups still over the cap by TRAINING
     // membership (the count K_c is defined on). trainPred is a
     // predicate over (vec_id, cell) by contract, so it evaluates on
@@ -346,7 +334,7 @@ object LlmSim extends OpModule {
     // healthy path — every graded SF, and any corpus one Lloyd round
     // balances — returns s1 UNTOUCHED, paying only the census pass,
     // never a rebuild of the |V|-row assignment.
-    val over = scope.cut(s1.filter(trainPred)
+    val over = GraftBridge.checkpoint(s1.filter(trainPred)
       .groupBy("cell", "sub").agg(count(lit(1)).as("n_tr"))
       .filter(col("n_tr") > SubCellTarget)
       .select("cell", "sub"))
@@ -360,16 +348,16 @@ object LlmSim extends OpModule {
           col("embedding"))
       val s2 = subAssign(
         assign2.withColumn("snrm", norm(col("embedding"))),
-        subCentroids(assign2, trainPred, scope))
+        subCentroids(assign2, trainPred))
       // Refined ids come back as a DELTA (only the over-cap rows) and
       // patch s1 by one left join — no hint, so AQE broadcasts the
       // delta while it's small and degrades to a shuffled join past
       // broadcast scale instead of forcing an oversized build.
-      val resplit = scope.cut(s2
+      val resplit = GraftBridge.checkpoint(s2
         .join(assign2.select("vec_id", "sub1"), "vec_id")
         .select(col("vec_id"),
           (col("sub1") * lit(SubIdBase) + col("sub")).as("sub2")))
-      scope.cut(s1.join(resplit, Seq("vec_id"), "left")
+      GraftBridge.checkpoint(s1.join(resplit, Seq("vec_id"), "left")
         .select(col("vec_id"), col("cell"),
           coalesce(col("sub2"), col("sub")).as("sub")))
     }
@@ -379,8 +367,7 @@ object LlmSim extends OpModule {
     * second-level stored index. Factored from [[subSplit]] (r12) so
     * the streaming semantic-ingest twin can consume the same stored
     * index the batch operator assigns against. */
-  private[graft] def subCentroids(assign: DataFrame, trainPred: Column,
-      scope: PersistScope): DataFrame = {
+  private[graft] def subCentroids(assign: DataFrame, trainPred: Column): DataFrame = {
     val e = assign.select(col("vec_id"), col("cell"), col("embedding"))
       .withColumn("snrm", norm(col("embedding")))
     val tr = e.filter(trainPred)
@@ -394,7 +381,7 @@ object LlmSim extends OpModule {
       .agg(min_by(col("embedding"), col("vec_id")).as("seed"))
       .select(col("cell"), col("sub"),
         transform(col("seed"), _.cast("double")).as("sc_emb"))
-    val a1 = subAssign(tr, scope.cut(init))
+    val a1 = subAssign(tr, GraftBridge.checkpoint(init))
     val upd = a1.join(e.select("vec_id", "embedding"), "vec_id")
       .select(col("cell"), col("sub"),
         posexplode(col("embedding")).as(Seq("pos0", "vf")))
@@ -404,7 +391,7 @@ object LlmSim extends OpModule {
       .groupBy("cell", "sub")
       .agg(transform(sort_array(collect_list(struct(col("pos0"), col("c")))),
         _.getField("c")).as("sc_emb"))
-    scope.cut(upd)
+    GraftBridge.checkpoint(upd)
   }
 
   /** Nearest-sub-centroid assignment within each coarse cell — the
@@ -436,9 +423,8 @@ object LlmSim extends OpModule {
     * query time. All distances are exact integer sums of FLOOR(v·1e6)
     * squares vs the TRAINED codebook (pqCodebook), so ranks are
     * engine-identical. dists feeds BOTH the database codes and the
-    * query distance table — persisted via the scope so the
-    * trained-codebook lineage executes once, not twice, and releases
-    * after the top-k materializes (r5). */
+    * query distance table — the session memo's checkpoint, so the
+    * trained-codebook lineage executes once, not twice (r5). */
   /** IVF×PQ composed (r7) — the production ANN index shape (FAISS's
     * IVFPQ): the trained IVF coarse quantizer GATES which database
     * vectors are scored, PQ ADC does the scoring on compressed codes.
@@ -449,16 +435,15 @@ object LlmSim extends OpModule {
     * at query time. Composes (does not re-derive) the graded IVF and
     * PQ training chains; recall vs the exact truth stays gated by the
     * sim_recall_* family. */
-  private[graft] def ivfpqBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def ivfpqBody(s: SparkSession, d: String): DataFrame = {
     val Q = 10
     // The coarse (IVF) and fine (PQ) quantizers train on disjoint
     // lineages — their eager cut chains build concurrently (r15) and
     // are memoized across queries (r16): the rrf/ndcg/pq consumers
     // reuse the same cut frames instead of re-training.
-    val ((cents, assign), dists) = scope.par(
-      ivfTrain(s, d, scope),
-      pqDistsShared(s, d, scope))
+    val ((cents, assign), dists) = par(
+      ivfTrain(s, d),
+      pqDistsShared(s, d))
     val qv = assign.filter(col("vec_id") < Q)
       .select(col("vec_id"), col("embedding"), col("nrm"))
     val qcells = kmAssignTopN(qv, cents, 2)
@@ -483,6 +468,7 @@ object LlmSim extends OpModule {
     adc.withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= 3)
       .select(col("q_id"), col("rnk"), col("n_id"), col("adc_dist"))
+      .coalesce(1) // ≤ 3·Q rows: the terminal sort needs no range exchange
       .orderBy("q_id", "rnk")
   }
 
@@ -504,16 +490,15 @@ object LlmSim extends OpModule {
     * expression from exact integer gains — engine-identical; nDCG
     * divides by the ideal ordering's DCG over the full gated
     * universe. Scale shape: the tier universe is the sim_knn gated
-    * 10·|V| frame, persisted ONCE and joined by all four paths (the
+    * 10·|V| frame, cut ONCE and joined by all four paths (the
     * truth-set discipline); each path contributes its own graded
     * plan; everything after is |paths|·|Q| rows. A shorter retrieved
     * list (PQ serves top-3) simply earns 0 at the missing ranks —
     * the standard @k convention. */
   /** Tiered-relevance universe over the gated Q=10 query set (the
-    * sim_knn gated 10·|V| frame), persisted once per scope and joined
-    * by every consumer — shared by [[ndcgBody]] and [[rrfBody]]. */
-  private def tierUniverse(s: SparkSession, d: String,
-      scope: PersistScope): DataFrame = {
+    * sim_knn gated 10·|V| frame), cut once and joined by every
+    * consumer — shared by [[ndcgBody]] and [[rrfBody]]. */
+  private def tierUniverse(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -524,8 +509,8 @@ object LlmSim extends OpModule {
     // ideal-DCG side and the retrieved side of the terminal job —
     // lazily persisted, those two stages raced the cold cache and
     // each materialized the 10·|V| brute scoring. The cut runs
-    // concurrently with the path-training cuts (scope.par below).
-    scope.cut(q.join(n, col("q_id") =!= col("n_id"))
+    // concurrently with the path-training cuts (`par` below).
+    GraftBridge.checkpoint(q.join(n, col("q_id") =!= col("n_id"))
       .withColumn("cos", round(
         dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 4))
       .select(col("q_id"), col("n_id"),
@@ -564,15 +549,14 @@ object LlmSim extends OpModule {
 
   /** Every ANN serving path's retrieved list — (path, q_id, n_id, rk);
     * each path contributes its own graded plan. */
-  private def annRetrieved(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private def annRetrieved(s: SparkSession, d: String): DataFrame = {
     // The IVF and PQ legs each serialize 2–3 eager training cuts;
     // the chains share nothing, so they build CONCURRENTLY (r15
-    // verdict #1 — scope.par overlaps the two trained-quantizer
+    // verdict #1 — `par` overlaps the two trained-quantizer
     // chains' cut jobs; LSH and Hamming are pure lazy plans and cost
     // nothing at build time).
-    val (ivf, pq) = scope.par(ivfBody(s, d, 4)(scope),
-      knnPqBody(s, d)(scope))
+    val (ivf, pq) = par(ivfBody(s, d, 4),
+      knnPqBody(s, d))
     queries("sim_knn_lsh")(s, d)
       .select(lit("lsh").as("path"), col("q_id"), col("n_id"), col("rk"))
       .unionAll(ivf
@@ -588,20 +572,18 @@ object LlmSim extends OpModule {
   /** The (tier universe, four-path retrieved) pair — bit-identical
     * across sim_ndcg_eval and sim_rrf_fusion by construction, built
     * once per session via the memo (r16 verdict #4); the retrieved
-    * union is cut so the memoized frame references no scope-persisted
-    * path internals. */
-  private def annEvalShared(s: SparkSession, d: String,
-      scope: PersistScope): (DataFrame, DataFrame) =
-    memoed(s, d, "annEval") {
-      scope.par(tierUniverse(s, d, scope),
-        scope.cut(annRetrieved(s, d)(scope)))
+    * union is cut so the memoized frame holds materialized blocks, not
+    * the path plans. */
+  private def annEvalShared(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    SessionMemo.memo(s, d, "annEval") {
+      par(tierUniverse(s, d),
+        GraftBridge.checkpoint(annRetrieved(s, d)))
     }
 
-  private[graft] def ndcgBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def ndcgBody(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, d)
-    val (tiers, ann) = annEvalShared(s, d, scope)
+    val (tiers, ann) = annEvalShared(s, d)
     val idcgT = idealDcg(tiers)
     val retr = ann
       .join(tiers, Seq("q_id", "n_id"))
@@ -633,17 +615,16 @@ object LlmSim extends OpModule {
   /** sim_rrf_fusion (r11 verdict #5): fuse the four ANN paths'
     * retrieved lists with reciprocal-rank fusion — score(n) =
     * Σ_paths 1/(60 + rank_path(n)) — and grade the FUSED top-5
-    * against the same persisted tier universe sim_ndcg_eval grades
+    * against the same cut tier universe sim_ndcg_eval grades
     * the individual paths on, so the ensemble's nDCG reads directly
     * beside the per-path numbers. Scores live on the exact integer
     * grid (see [[RrfDen]]); fused ranking ties → lower n_id. Scale
     * shape: the fusion itself is one partial-agged groupBy over
     * ≤ |paths|·k·|Q| rows and a q_id-partitioned ≤18-row window —
     * the cost is the four path plans it composes, not re-derives. */
-  private[graft] def rrfBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def rrfBody(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
-    val (tiers, ann) = annEvalShared(s, d, scope)
+    val (tiers, ann) = annEvalShared(s, d)
     val idcgT = idealDcg(tiers)
     // cut: `rrf` is referenced by BOTH `fused` and `cands` below —
     // unregistered, the un-cut portions of the four-path retrieval
@@ -651,7 +632,7 @@ object LlmSim extends OpModule {
     // instead lets the two consumer stages race on the cold cache and
     // materialize it twice concurrently (measured — task time doubled).
     // The frame is ≤ |paths|·k·|Q| ≈ 200 rows.
-    val rrf = scope.cut(ann
+    val rrf = GraftBridge.checkpoint(ann
       .withColumn("contrib", expr(s"$RrfDen div (60 + rk)"))
       .groupBy("q_id", "n_id")
       .agg(count(lit(1)).as("n_paths"), sum("contrib").as("rrf_int")))
@@ -683,9 +664,8 @@ object LlmSim extends OpModule {
       .orderBy("q_id")
   }
 
-  private[graft] def knnPqBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame =
-    knnPqFrom(pqDistsShared(s, d, scope))
+  private[graft] def knnPqBody(s: SparkSession, d: String): DataFrame =
+    knnPqFrom(pqDistsShared(s, d))
 
   /** Hamming-path quality gate (r9): per-query recall@5 of the
     * 1-bit sign-quantized search against the exact cosine truth —
@@ -693,9 +673,9 @@ object LlmSim extends OpModule {
     * IVF: sim_recall_ivf, PQ: sim_recall_pq; every ANN serving
     * path in the module now ships with its accuracy eval). The
     * eval that prices the 64×-compression trade before a binary
-    * index ships. Composes the two graded kNN operators; truth
-    * persists via the scope, one dimension-sized left join + agg.
-    * Body factored out (un-checkpointed) for PlansSpec plan locks.
+    * index ships. Composes the two graded kNN operators; truth is
+    * the memoized cut, one dimension-sized left join + agg. Body
+    * factored out for PlansSpec plan locks.
     */
   /** Session-memoized CUT of the brute-truth top-5 pair set
     * (sim_knn's (q_id, n_id) projection) — every recall gate
@@ -708,13 +688,11 @@ object LlmSim extends OpModule {
   /** Session-memoized CUT of the NSW-lite search answer — shared by
     * sim_knn_graph and its recall gate (the graph build is the
     * expensive half of both queries). */
-  private def knnGraphShared(s: SparkSession, d: String,
-      scope: PersistScope): DataFrame =
+  private def knnGraphShared(s: SparkSession, d: String): DataFrame =
     SessionMemo.memo(s, d, "knnGraph")(
-      scope.cut(knnGraphBody(s, d)(scope)))
+      GraftBridge.checkpoint(knnGraphBody(s, d)))
 
-  private[graft] def recallHammingBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def recallHammingBody(s: SparkSession, d: String): DataFrame = {
     val truth = knnTruthShared(s, d)
     val ham = queries("sim_knn_hamming")(s, d)
       .select(col("q_id").as("h_q"), col("n_id").as("h_n"), lit(1).as("hit"))
@@ -774,8 +752,7 @@ object LlmSim extends OpModule {
     w
   }
 
-  private[graft] def knnGraphBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def knnGraphBody(s: SparkSession, d: String): DataFrame = {
     // TWO independent w-bit hyperplane tables from one 2w-bit hash
     // (bits 0..w−1 / w..2w−1 — disjoint hyperplane sets, so the
     // tables are independent): a single-table bucket-gated kNN graph
@@ -842,7 +819,7 @@ object LlmSim extends OpModule {
     // Directed top-5 kNN edges over the multi-table candidates;
     // queries are nodes too, so their out-edges double as the walk's
     // deterministic seeds below.
-    val dir = scope.cut(cand
+    val dir = GraftBridge.checkpoint(cand
       .withColumn("rk", row_number().over(we))
       .filter(col("rk") <= 5)
       .select(col("a_id"), col("b_id"), col("ecos")))
@@ -889,7 +866,7 @@ object LlmSim extends OpModule {
           dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4))
         .select("a_id", "b_id", "ecos")
       val w = Window.partitionBy("a_id").orderBy(col("ecos").desc, col("b_id"))
-      scope.cut(base.unionAll(scored
+      GraftBridge.checkpoint(base.unionAll(scored
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 5)
         .select(col("a_id"), col("b_id"), col("ecos"))))
@@ -897,7 +874,7 @@ object LlmSim extends OpModule {
     val dir2 = nnRound(nnRound(dir))
     // SYMMETRIZED adjacency (kNN edges ∪ reverses) — NSW links are
     // undirected; the directed form dead-ends greedy walks.
-    val edges = scope.cut(dir2.select("a_id", "b_id")
+    val edges = GraftBridge.checkpoint(dir2.select("a_id", "b_id")
       .unionAll(dir2.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
       .distinct())
     val q = e.filter(col("vec_id") < 10)
@@ -936,7 +913,7 @@ object LlmSim extends OpModule {
     // |Q|-bounded (≤ 10·(42 + 40·hops) rows at ANY corpus scale —
     // |Q| is a fixed 10), so their cuts ride coalesce(1) (the r14
     // floor discipline: a 1-partition cut prices ~65 ms vs ~100–160).
-    var visited = scope.cut(
+    var visited = GraftBridge.checkpoint(
       seeds.unionAll(hubSeeds).repartition(col("q_id")).distinct().coalesce(1))
     val wB0 = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
     var beam = visited.withColumn("brk", row_number().over(wB0))
@@ -949,13 +926,13 @@ object LlmSim extends OpModule {
         Seq("q_id", "n_id"), "left_anti")
       val scored = scoreOf(fresh)
       val wB = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-      val next = scope.cut(
+      val next = GraftBridge.checkpoint(
         scored.withColumn("brk", row_number().over(wB)).coalesce(1))
       beam = next.filter(col("brk") <= 10).drop("brk")
       // visited is CUT per hop: a lazy union-of-cut-leaves was tried
       // (r16) and measured ~1 s SLOWER — the per-hop anti-join over
       // the growing union tree costs more than the saved eager jobs.
-      visited = scope.cut(visited.unionAll(next.drop("brk")).coalesce(1))
+      visited = GraftBridge.checkpoint(visited.unionAll(next.drop("brk")).coalesce(1))
     }
     // Hop 4 runs LAZILY inside the terminal job (r17): the last hop's
     // beam feeds nothing (the loop ends) and its scored frontier is
@@ -979,17 +956,16 @@ object LlmSim extends OpModule {
     * search against the exact cosine truth — completes the per-path
     * recall family (LSH / IVF / PQ / Hamming / graph: every ANN
     * serving path ships with its accuracy eval). The
-    * sim_recall_hamming shape: truth persists via the scope, one
+    * sim_recall_hamming shape: truth is the memoized cut, one
     * dimension-sized left join + agg. */
-  private[graft] def recallGraphBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def recallGraphBody(s: SparkSession, d: String): DataFrame = {
     // truth chain ‖ graph chain (r16): the brute sim_knn truth and the
-    // NN-descent graph build share nothing — PersistScope.par overlaps
+    // NN-descent graph build share nothing — `par` overlaps
     // their eager cut jobs instead of serializing the two chains (both
     // sides memo-hit instantly when another query already built them).
-    val (truth, g) = scope.par(
+    val (truth, g) = par(
       knnTruthShared(s, d),
-      knnGraphShared(s, d, scope)
+      knnGraphShared(s, d)
         .select(col("q_id").as("g_q"), col("n_id").as("g_n"),
           lit(1).as("hit")))
     truth
@@ -1012,8 +988,7 @@ object LlmSim extends OpModule {
   /** The trained COARSE centroids of the incremental-embedding index
     * (C=8, init = the 8 lowest old ids, 2 Lloyd rounds over OLD
     * vectors only). */
-  private[graft] def incEmbCents(s: SparkSession, d: String,
-      scope: PersistScope): DataFrame = {
+  private[graft] def incEmbCents(s: SparkSession, d: String): DataFrame = {
     val C = 8
     val old = Tables.embeddings(s, d)
       .filter(!(col("vec_id") % 7 === 3))
@@ -1025,19 +1000,17 @@ object LlmSim extends OpModule {
         transform(col("embedding"), _.cast("double")).as("c_emb"))
     // round 1 single-reference -> uncut (r14 cut-trim, see ivfTrain)
     cents = kmUpdate(old, kmAssign(old, cents))
-    scope.cut(kmUpdate(old, kmAssign(old, cents)))
+    GraftBridge.checkpoint(kmUpdate(old, kmAssign(old, cents)))
   }
 
-  private[graft] def incEmbAssign(s: SparkSession, d: String,
-      scope: PersistScope): DataFrame = {
+  private[graft] def incEmbAssign(s: SparkSession, d: String): DataFrame = {
     val full = Tables.embeddings(s, d).select(col("vec_id"),
       col("embedding"), norm(col("embedding")).as("nrm"))
-    scope.cut(kmAssign(full, incEmbCents(s, d, scope))
+    GraftBridge.checkpoint(kmAssign(full, incEmbCents(s, d))
       .join(full.select("vec_id", "embedding"), "vec_id"))
   }
 
-  private[graft] def incEmbBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def incEmbBody(s: SparkSession, d: String): DataFrame = {
       // Incremental SEMANTIC dedup (r10) — the embedding twin of
       // dedup_incremental, completing the nightly-ingest story across
       // both dedup families: new-batch vectors (the vec_id % 7 = 3
@@ -1051,15 +1024,15 @@ object LlmSim extends OpModule {
       // never batch×corpus), scored at rounded integer-grid cosine
       // ≥ 0.45 (the dedup_semdedup threshold). Output is the per-label
       // ingest ledger. Scale shape: the old side's assignment is the
-      // persisted index; nightly cost is the batch's cell footprint.
+      // checkpointed index; nightly cost is the batch's cell footprint.
       val isNew = col("vec_id") % 7 === 3
-      val assign = incEmbAssign(s, d, scope)
+      val assign = incEmbAssign(s, d)
       // Hierarchical sub-split (r11, sf10 probe): candidate pairs ride
       // (cell, sub) with sub-cells capped at 625 OLD members — the
       // sub-quantizer trains on the old side only, like the coarse
       // level (today's arrivals must not move the stored index).
       // Identity at every graded SF; linear pair work at 100×.
-      val sub = subSplit(assign, !(col("vec_id") % 7 === 3), scope)
+      val sub = subSplit(assign, !(col("vec_id") % 7 === 3))
       val ie = assign.join(sub.select("vec_id", "sub"), "vec_id")
         .select(col("vec_id"), col("cell"), col("sub"),
           transform(col("embedding"),
@@ -1092,8 +1065,7 @@ object LlmSim extends OpModule {
   private[graft] def kcenterNext(dmin: DataFrame): DataFrame =
     dmin.orderBy(col("nd").desc, col("vec_id").asc).limit(1)
 
-  private[graft] def kcenterBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def kcenterBody(s: SparkSession, d: String): DataFrame = {
       // Greedy k-center coreset selection (farthest-point traversal —
       // Gonzalez 1985, the classic 2-approximation; the geometric
       // data-selection staple the sampling family lacked: pick the K
@@ -1112,7 +1084,9 @@ object LlmSim extends OpModule {
       // TakeOrderedAndProject (never a global sort), rounds cut via
       // localCheckpoint like every unrolled chain in the module.
       val K = 8
-      val e = scope.persist(Tables.embeddings(s, d)
+      // Every round's checkpoint jobs read the integer grid: cut it
+      // once instead of re-running the interpreted transform per round.
+      val e = GraftBridge.checkpoint(Tables.embeddings(s, d)
         .select(col("vec_id"),
           transform(col("embedding"),
             x => floor(x.cast("double") * 1e6).cast("double")).as("iv"))
@@ -1125,11 +1099,11 @@ object LlmSim extends OpModule {
       val seed = e.filter(col("vec_id") === 0)
       var picks = seed.select(lit(1L).as("pick"), col("vec_id"),
         lit(0L).as("d2"))
-      var dmin = scope.cut(d2To(
+      var dmin = GraftBridge.checkpoint(d2To(
         seed.select(col("iv").as("c_iv"), col("selfdot").as("c_self"))))
       for (t <- 2 to K) {
         val nxt = kcenterNext(dmin)
-        val nxtC = scope.cut(nxt.join(e, "vec_id")
+        val nxtC = GraftBridge.checkpoint(nxt.join(e, "vec_id")
           .select(col("vec_id").as("c_id"), col("nd").as("c_d"),
             col("iv").as("c_iv"), col("selfdot").as("c_self")))
         picks = picks.unionByName(nxtC.select(lit(t.toLong).as("pick"),
@@ -1137,7 +1111,7 @@ object LlmSim extends OpModule {
         if (t < K) {
           val dn = d2To(nxtC.select("c_iv", "c_self"))
             .withColumnRenamed("nd", "nd2")
-          dmin = scope.cut(dmin.join(dn, "vec_id")
+          dmin = GraftBridge.checkpoint(dmin.join(dn, "vec_id")
             .select(col("vec_id"), least(col("nd"), col("nd2")).as("nd")))
         }
       }
@@ -1166,16 +1140,15 @@ object LlmSim extends OpModule {
     * vectors/group at this dim; a 100 TB run lifts them to DECIMAL
     * like sim_centroid_separation. Body factored out for PlansSpec.
     */
-  private[graft] def rqBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def rqBody(s: SparkSession, d: String): DataFrame = {
     val C = 8
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
     var cents = kmInit(s, d, C)
     // round 1 single-reference -> uncut (r14 cut-trim, see ivfTrain)
     cents = kmUpdate(e, kmAssign(e, cents))
-    cents = scope.cut(kmUpdate(e, kmAssign(e, cents)))
-    val assign = scope.cut(kmAssign(e, cents).select("vec_id", "cell"))
+    cents = GraftBridge.checkpoint(kmUpdate(e, kmAssign(e, cents)))
+    val assign = GraftBridge.checkpoint(kmAssign(e, cents).select("vec_id", "cell"))
     val ci = cents.select(col("cell").as("c_cell"),
         posexplode(col("c_emb")).as(Seq("pos0", "c")))
       .select(col("c_cell"), (col("pos0") + 1).cast("long").as("cpos0"),
@@ -1185,8 +1158,9 @@ object LlmSim extends OpModule {
       .select(col("vec_id"), (col("pos0") + 1).cast("long").as("pos"),
         floor(col("vf").cast("double") * 1e6).cast("long").as("vi0"))
     // residual element table in the pq helpers' (vec_id, pos, m, vi)
-    // shape — M = 1 subspace over the full dimension
-    val e2 = scope.persist(vi.join(assign, "vec_id")
+    // shape — M = 1 subspace over the full dimension; five plan
+    // branches read it, so it is cut once
+    val e2 = GraftBridge.checkpoint(vi.join(assign, "vec_id")
       .join(broadcast(ci),
         col("cell") === col("c_cell") && col("pos") === col("cpos0"))
       .select(col("vec_id"), col("cell"), col("pos"), lit(0L).as("m"),
@@ -1210,6 +1184,7 @@ object LlmSim extends OpModule {
         when(col("sum_d1") === 0L, lit(0.0)).otherwise(
           round(lit(1.0) - col("sum_d2").cast("double")
             / col("sum_d1").cast("double"), 4)).as("distortion_drop"))
+      .coalesce(1) // ≤ C·K rows: the terminal sort needs no range exchange
       .orderBy("cell", "rcode")
   }
 
@@ -1229,8 +1204,7 @@ object LlmSim extends OpModule {
     * no window over anything bigger than the |V|-row top-2 rank
     * (partitioned by vec_id). Body factored out for PlansSpec.
     */
-  private[graft] def silhouetteBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+  private[graft] def silhouetteBody(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
     // r16: the trained C=8 centroids are the session-memoized km8Shared
@@ -1266,23 +1240,16 @@ object LlmSim extends OpModule {
       .orderBy("cell")
   }
 
-  /** ADC top-3 search over a (possibly shared) element table `e` —
-    * the body of sim_knn_pq, factored out so sim_recall_pq's truth
-    * and ADC legs ride ONE persisted element table and ONE trained
-    * chain (r8 perf advice: the element scan/explode fed the Lloyd
-    * passes and the final code/dtab joins 6× per query; persisting it
-    * once collapses those to a single materialization — the same
-    * share-the-trained-index discipline ivfpqBody already applies to
-    * its IVF leg). */
   /** The trained PQ distance table (vec_id, m, k, dist) over the full
     * corpus — codebook training + distance evaluation, memoized
     * across queries (r16): every PQ consumer (sim_knn_pq, recall_pq,
     * ivfpq, the ndcg/rrf retrieval) derives from this one cut. */
-  private def pqDistsShared(s: SparkSession, d: String,
-      scope: PersistScope): DataFrame =
-    memoed(s, d, "pqDists") {
-      val e = scope.persist(pqElems(s, d))
-      scope.cut(pqDists(e, pqCodebook(e, scope)))
+  private def pqDistsShared(s: SparkSession, d: String): DataFrame =
+    SessionMemo.memo(s, d, "pqDists") {
+      // The element table is read lazily: each checkpoint job reuses
+      // pqElems' vec_id exchange across its references.
+      val e = pqElems(s, d)
+      GraftBridge.checkpoint(pqDists(e, pqCodebook(e)))
     }
 
   /** ADC top-3 search over a prebuilt PQ distance table. */
@@ -1294,6 +1261,7 @@ object LlmSim extends OpModule {
       .filter(col("rnk") <= 3)
       .select(col("q_id"), col("rnk"), col("vec_id").as("n_id"),
         col("adc_dist"))
+      .coalesce(1) // ≤ 3·Q rows: the terminal sort needs no range exchange
       .orderBy("q_id", "rnk")
   }
 
@@ -1390,18 +1358,17 @@ object LlmSim extends OpModule {
   /** Trained codebook: init → assign → update → assign → update.
     * K = 16 with training measured recall@3 0.233 vs 0.133 for the r3
     * first-4 codebook, at distortion 0.072 vs 0.150 (sf0.01 sweep of
-    * K ∈ {4, 8, 16} × {trained, untrained}). Every training pass
-    * persists via the scope (r5 verdict #4 / PLANS.md unrolled-loop
-    * rule): the assignment and codebook tables are |V|·M- and
-    * K·dim-sized, and persisting them pins each Lloyd round to one
+    * K ∈ {4, 8, 16} × {trained, untrained}). The trained codebook is
+    * cut (r5 verdict #4 / PLANS.md unrolled-loop rule): it is
+    * K·dim-sized, and cutting it pins the Lloyd chain to one
     * execution however many times the codebook is referenced
     * downstream (codes + distance table in sim_knn_pq, the argmin in
     * embed_pq). */
-  private def pqCodebook(e: DataFrame, scope: PersistScope): DataFrame = {
+  private def pqCodebook(e: DataFrame): DataFrame = {
     val c0 = e.filter(col("vec_id") < 16)
       .select(col("vec_id").as("k"), col("pos").as("cpos"), col("vi").as("ci"))
     // The assign→update→assign→update chain is SINGLE-REFERENCE
-    // (each step feeds only the next, e is persisted), so the plan
+    // (each step feeds only the next, e is cut), so the plan
     // grows linearly across the 4 steps — no intermediate cuts
     // needed; only the trained codebook, which every consumer
     // (codes, distance tables, argmins) references repeatedly, is
@@ -1411,14 +1378,12 @@ object LlmSim extends OpModule {
     val a1 = pqArgmin(pqDists(e, c0)).drop("dist_sq")
     val c1 = pqUpdate(e, a1)
     val a2 = pqArgmin(pqDists(e, c1)).drop("dist_sq")
-    scope.cut(pqUpdate(e, a2))
+    GraftBridge.checkpoint(pqUpdate(e, a2))
   }
 
   /** All-but-the-top spectral readout body - see the embed_abtt
-    * queries entry; factored so PlansSpec can lock the un-checkpointed
-    * plan (the scopedPersist terminal collapses to an RDD scan). */
-  private[graft] def abttBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+    * queries entry; factored so PlansSpec can lock its plan. */
+  private[graft] def abttBody(s: SparkSession, d: String): DataFrame = {
       // All-but-the-top spectral readout (r10; Mu & Viswanath 2018,
       // the public post-processing that subtracts the mean and top
       // principal components to restore isotropy): the DECISION INPUT
@@ -1458,19 +1423,19 @@ object LlmSim extends OpModule {
         .select(struct((col("i") * D + col("jj")).as("k"), col("g")).as("e"))
         .agg(sort_array(collect_list(col("e"))).as("es"))
         .select(transform(col("es"), x => x.getField("g").cast("double")).as("mf"))
-      val p1 = pcIterate(scope, grow, "mf", "x1")
+      val p1 = pcIterate(grow, "mf", "x1")
         .withColumn("lam1", pcRayleigh("mf", "x1"))
         .withColumn("tr",
           aggregate(sequence(lit(0), lit(D - 1)), lit(0.0),
             (acc, i) => acc + element_at(col("mf"), i * D + i + 1)))
       // Hotelling deflation in-row: mf2[k] = mf[k] − λ₁·u₁[k/D]·u₁[k%D].
-      val defl = scope.cut(p1.withColumn("mf2",
+      val defl = GraftBridge.checkpoint(p1.withColumn("mf2",
         transform(sequence(lit(0), lit(D * D - 1)), k =>
           element_at(col("mf"), k + 1)
             - col("lam1")
               * element_at(col("x1"), (k / lit(D)).cast("int") + 1)
               * element_at(col("x1"), pmod(k, lit(D)) + 1))))
-      val p2 = pcIterate(scope, defl, "mf2", "x2")
+      val p2 = pcIterate(defl, "mf2", "x2")
         .withColumn("lam2", pcRayleigh("mf2", "x2"))
       val one = p2.crossJoin(broadcast(ncnt.select(col("nv").as("n"))))
       one.select(
@@ -1489,9 +1454,8 @@ object LlmSim extends OpModule {
   }
 
   /** IVF routing-depth body - see the sim_ivf_routing_depth queries
-    * entry; factored so PlansSpec can lock the un-checkpointed plan. */
-  private[graft] def routingDepthBody(s: SparkSession, d: String)(
-      scope: PersistScope): DataFrame = {
+    * entry; factored so PlansSpec can lock its plan. */
+  private[graft] def routingDepthBody(s: SparkSession, d: String): DataFrame = {
       // IVF routing-depth census (r10): for each gated query, the
       // RANK of the cell holding its true nearest neighbor in the
       // query→centroid similarity order — i.e. the nprobe a probe
@@ -1500,12 +1464,12 @@ object LlmSim extends OpModule {
       // tells you what a depth buys, routing depth tells you WHY
       // (boundary queries whose NN lives in cell rank 3 explain the
       // nprobe=4 recall jump). Composes the trained quantizer
-      // (ivfTrain, persisted once) with the graded brute truth;
+      // (ivfTrain, cut once) with the graded brute truth;
       // ranks ride rounded cosines with ties → lower cell, the
       // kmAssign convention. Gated |Q|=10 — eval cost, not index
       // cost; the only data-sized passes are the train and the one
-      // assignment it already persists.
-      val (cents, assign) = ivfTrain(s, d, scope)
+      // assignment it already cuts.
+      val (cents, assign) = ivfTrain(s, d)
       val truth = queries("sim_knn")(s, d).filter(col("rk") === 1)
         .select(col("q_id"), col("n_id").as("true_nn"))
       val nnCell = assign
@@ -1655,7 +1619,7 @@ object LlmSim extends OpModule {
         .orderBy("q_id", "rk")
     }),
 
-    "embed_matryoshka_eval" -> ((s, d) => scopedPersist { scope =>
+    "embed_matryoshka_eval" -> ((s, d) => {
       // Matryoshka truncation eval (Kusupati et al. 2022, public
       // method): recall@5 of top-k search using only the FIRST m
       // dimensions (m ∈ {8,16,32}) against the full-64-dim truth set
@@ -1663,8 +1627,8 @@ object LlmSim extends OpModule {
       // whole point: m/64 of the storage and FLOPs at a measured
       // recall cost). Truth = the graded sim_knn top-5; truncated
       // legs score on the exact ⌊v·1e6⌋ integer-grid PREFIX, same
-      // rank tie-breaks. The truth set persists via the scope —
-      // three legs left-join it. Gated brute-force shape (|Q|=10),
+      // rank tie-breaks. The truth set is cut — three legs left-join
+      // it. Gated brute-force shape (|Q|=10),
       // like every truth set in the recall family.
       val ie = Tables.embeddings(s, d).select(col("vec_id"),
         transform(col("embedding"),
@@ -1793,7 +1757,7 @@ object LlmSim extends OpModule {
         .orderBy("label", "pick")
     }),
 
-    "dedup_semdedup" -> ((s, d) => scopedPersist { scope =>
+    "dedup_semdedup" -> ((s, d) => {
       // SemDeDup-shaped semantic dedup (Abbas et al. 2023, public
       // method): cluster the corpus with the TRAINED coarse quantizer
       // (ivfTrain's C=16, 2 Lloyd iterations — the same machinery the
@@ -1809,10 +1773,10 @@ object LlmSim extends OpModule {
       // 100×): pairs enumerate within (cell, sub) where subSplit caps
       // sub-cells at 625 members — identity at every graded SF, the
       // linear-pair production shape at 100×. The census stays keyed
-      // by the coarse cell (the reviewer's unit); training persists
-      // via the scope, the pair join is one equi-join on (cell, sub).
-      val (_, assign) = ivfTrain(s, d, scope)
-      val sub = subSplit(assign, lit(true), scope)
+      // by the coarse cell (the unit a dedup audit reads); training is the
+      // memoized cut, the pair join is one equi-join on (cell, sub).
+      val (_, assign) = ivfTrain(s, d)
+      val sub = subSplit(assign, lit(true))
       val ie = assign.select(col("vec_id"), col("cell"),
           transform(col("embedding"),
             x => floor(x.cast("double") * 1e6).cast("double")).as("iv"))
@@ -1838,10 +1802,10 @@ object LlmSim extends OpModule {
         .orderBy("cell")
     }),
 
-    // Persist-scoped; bodies factored out for PlansSpec plan locks.
-    "dedup_incremental_embedding" -> ((s, d) => scopedPersist(incEmbBody(s, d))),
+    // Bodies factored out for PlansSpec plan locks.
+    "dedup_incremental_embedding" -> ((s, d) => incEmbBody(s, d)),
 
-    "sample_kcenter" -> ((s, d) => scopedPersist(kcenterBody(s, d))),
+    "sample_kcenter" -> ((s, d) => kcenterBody(s, d)),
 
     "sim_knn" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
@@ -1902,16 +1866,16 @@ object LlmSim extends OpModule {
         .orderBy("q_id")
     }),
 
-    // Persist-scoped; body factored out for PlansSpec plan locks.
-    "sim_recall_hamming" -> ((s, d) => scopedPersist(recallHammingBody(s, d))),
+    // Body factored out for PlansSpec plan locks.
+    "sim_recall_hamming" -> ((s, d) => recallHammingBody(s, d)),
 
     // NSW-lite greedy beam search over the mutual-kNN graph (r15) +
     // its recall gate; bodies factored out for PlansSpec plan locks.
     "sim_knn_graph" -> ((s, d) =>
-      scopedPersist(scope => knnGraphShared(s, d, scope))),
-    "sim_recall_graph" -> ((s, d) => scopedPersist(recallGraphBody(s, d))),
+      knnGraphShared(s, d)),
+    "sim_recall_graph" -> ((s, d) => recallGraphBody(s, d)),
 
-    "sim_recall_ivf" -> ((s, d) => scopedPersist { scope =>
+    "sim_recall_ivf" -> ((s, d) => {
       // IVF quality gate: per-query recall@5 PER NPROBE (r5) — the
       // nprobe ∈ {1, 2, 4} sweep a deployment reads before choosing
       // its probe budget (measured mean recall at sf0.01: 0.82 /
@@ -1920,17 +1884,17 @@ object LlmSim extends OpModule {
       // per-path recall family (LSH:
       // sim_recall_eval, PQ: sim_recall_pq) so every ANN scale path
       // ships with its accuracy eval. The coarse quantizer trains
-      // ONCE (persisted via the scope); both probe depths search the
-      // same assignment, and the brute truth set is persisted because
-      // each sweep row left-joins it.
+      // ONCE (the memoized cut); both probe depths search the same
+      // assignment, and the brute truth set is cut because each sweep
+      // row left-joins it.
       // cut + par (r15, the tierUniverse race class): the truth set is
       // joined by THREE probe-depth legs inside ONE terminal union job
       // — lazily persisted, those stages race the cold cache and each
       // materializes the brute scoring; the eager cut runs concurrently
       // with the trained chain's own cuts.
-      val (brute, ta) = scope.par(
+      val (brute, ta) = par(
         knnTruthShared(s, d),
-        ivfTrain(s, d, scope))
+        ivfTrain(s, d))
       val (cents, assign) = ta
       def recallAt(np: Int): DataFrame = {
         val ivf = ivfProbe(cents, assign, np)
@@ -1948,10 +1912,10 @@ object LlmSim extends OpModule {
         .orderBy("nprobe", "q_id")
     }),
 
-    // Persist-scoped; body factored out for the PlansSpec plan lock.
-    "sim_ndcg_eval" -> ((s, d) => scopedPersist(ndcgBody(s, d))),
+    // Body factored out for the PlansSpec plan lock.
+    "sim_ndcg_eval" -> ((s, d) => ndcgBody(s, d)),
 
-    "sim_rrf_fusion" -> ((s, d) => scopedPersist(rrfBody(s, d))),
+    "sim_rrf_fusion" -> ((s, d) => rrfBody(s, d)),
 
     "multimodal_decode_hist" -> ((s, d) => {
       // REAL image decode, hash-graded (r7): synthesize a deterministic
@@ -2262,10 +2226,9 @@ object LlmSim extends OpModule {
     // the first depth clearing the 0.9 bar). Every assignment pass is
     // a broadcast cross-score + partial-aggregated argmin — map-side
     // combine collapses the |V|·C scores to |V| rows before the
-    // shuffle, no window sort over the score matrix; training rounds
-    // persist via the scope (ivfTrain) and release after the top-k
-    // materializes.
-    "sim_knn_ivf" -> ((s, d) => scopedPersist(ivfBody(s, d, 4))),
+    // shuffle, no window sort over the score matrix; the trained
+    // quantizer is the session memo's cut (ivfTrain).
+    "sim_knn_ivf" -> ((s, d) => ivfBody(s, d, 4)),
 
     "embed_bucket_stats" -> ((s, d) =>
       // ANN health diagnostic: LSH bucket-occupancy histogram. A
@@ -2335,7 +2298,7 @@ object LlmSim extends OpModule {
         .orderBy("vec_id")
     }),
 
-    "embed_ivf_stats" -> ((s, d) => scopedPersist { scope =>
+    "embed_ivf_stats" -> ((s, d) => {
       // IVF index health — the cell-occupancy twin of
       // embed_bucket_stats (LSH) and embed_pq_distortion (PQ): per
       // trained coarse cell, member count plus mean/worst L2
@@ -2351,12 +2314,12 @@ object LlmSim extends OpModule {
       // enters a sum here. Cell assignment reuses the rounded-cos
       // argmin, where ulp noise only matters if the top-2 margin is
       // also < 1e-4 — the compound coincidence the k-means family has
-      // always accepted. Training rounds persist via the scope
-      // (ivfTrain, r5); ei feeds both the centroid rollup and the
-      // distortion join, so it persists too.
-      val (_, assign) = ivfTrain(s, d, scope)
+      // always accepted. The trained quantizer is the session memo's
+      // (ivfTrain); ei feeds both the centroid rollup and the
+      // distortion join, so it is cut.
+      val (_, assign) = ivfTrain(s, d)
       val a3 = assign.select("vec_id", "cell")
-      val ei = scope.persist(
+      val ei = GraftBridge.checkpoint(
         pqElems(s, d).select("vec_id", "pos", "vi").join(a3, "vec_id"))
       val ic = ei.groupBy("cell", "pos")
         .agg(sum("vi").as("sv"), count(lit(1)).as("cnt"))
@@ -2401,7 +2364,7 @@ object LlmSim extends OpModule {
         .orderBy("pos")
     }),
 
-    "embed_top_pc" -> ((s, d) => scopedPersist { scope =>
+    "embed_top_pc" -> ((s, d) => {
       // Dominant principal direction of the embedding cloud (r7):
       // distributed Gram matrix + power iteration — the one-pass
       // linear-algebra kernel behind PCA whitening, spectral drift
@@ -2433,17 +2396,17 @@ object LlmSim extends OpModule {
         .select(transform(col("es"), x => x.getField("m").cast("double")).as("mf"))
       def matvec(mf: Column, x: Column): Column = pcMatvec(mf, x)
       def normalize(y: Column): Column = pcNormalize(y)
-      // Per-iteration lineage cuts (the PersistScope.cut discipline):
+      // Per-iteration lineage cuts (the OpModule cut discipline):
       // each power step's expression references its input vector 64²
       // times, so an uncut chain hands the optimizer a tree that
       // multiplies ~d² per iteration — the same compounding-plan
       // hazard the unrolled graph kernels hit, here at the expression
       // (not plan-node) grain. The cut frame is ONE row; materializing
       // it costs microseconds and keeps every step's tree flat.
-      val i1 = scope.cut(mrow
+      val i1 = GraftBridge.checkpoint(mrow
         .withColumn("x1", normalize(matvec(col("mf"), array_repeat(lit(1.0), D)))))
-      val i2 = scope.cut(i1.withColumn("x2", normalize(matvec(col("mf"), col("x1")))))
-      val i3 = scope.cut(i2.withColumn("x3", normalize(matvec(col("mf"), col("x2")))))
+      val i2 = GraftBridge.checkpoint(i1.withColumn("x2", normalize(matvec(col("mf"), col("x1")))))
+      val i3 = GraftBridge.checkpoint(i2.withColumn("x3", normalize(matvec(col("mf"), col("x2")))))
       val it = i3
         .withColumn("y3", matvec(col("mf"), col("x3")))
         .withColumn("lam",
@@ -2461,8 +2424,8 @@ object LlmSim extends OpModule {
         .orderBy("pos")
     }),
 
-    // Persist-scoped; body factored out for PlansSpec plan locks.
-    "embed_abtt" -> ((s, d) => scopedPersist(abttBody(s, d))),
+    // Body factored out for PlansSpec plan locks.
+    "embed_abtt" -> ((s, d) => abttBody(s, d)),
 
     "embed_quantize" -> ((s, d) => {
       // Int8 scalar quantization (the storage/ANN compression staple):
@@ -2495,40 +2458,37 @@ object LlmSim extends OpModule {
       // FLOOR(v·1e6) integer squares, so every argmin is
       // order-independent and engine-exact; no window ever touches the
       // distance matrix.
-      // Persist-scoped (r5): the Lloyd passes persist per round and
-      // release once the code table materializes. r16: the trained
+      // r16: the trained
       // per-(vector, subspace, code) distance table is the SAME frame
       // the ADC searches ride (pqDistsShared) — the argmin here is one
       // extra aggregation over the shared cut instead of a private
       // re-train of the identical codebook (bit-identical by
       // construction; embed_pq_distortion composes this entry).
-      scopedPersist { scope =>
-        pqArgmin(pqDistsShared(s, d, scope))
-          .select(col("vec_id"), col("m").as("subspace"),
-            col("k").as("code"), col("dist_sq"))
-          .orderBy("vec_id", "subspace")
-      }
+      pqArgmin(pqDistsShared(s, d))
+        .select(col("vec_id"), col("m").as("subspace"),
+          col("k").as("code"), col("dist_sq"))
+        .orderBy("vec_id", "subspace")
     }),
 
-    // Persist-scoped (r5); see knnPqBody.
-    "sim_knn_pq" -> ((s, d) => scopedPersist(knnPqBody(s, d))),
+    "sim_knn_pq" -> ((s, d) => knnPqBody(s, d)),
 
-    "sim_knn_ivfpq" -> ((s, d) => scopedPersist(ivfpqBody(s, d))),
+    "sim_knn_ivfpq" -> ((s, d) => ivfpqBody(s, d)),
 
 
-    "sim_recall_pq" -> ((s, d) => scopedPersist { scope =>
+    "sim_recall_pq" -> ((s, d) => {
       // PQ quality gate: per-query recall@3 of the ADC search against
       // the EXACT integer-L2 truth set — the compression-loss eval
       // that decides M/K before a codebook ships. Truth side is a
       // gated brute force (|Q|·|V| element join, broadcast query
       // sub-vectors, partial-agged); ADC side is the graded sim_knn_pq
-      // body. Both legs ride ONE persisted element table in ONE scope
-      // (r8 perf advice: the previous shape scanned/exploded the
-      // corpus independently for truth, Lloyd training, and the final
-      // code joins — this round's chronic slowest query). Same
-      // rank-tiebreak discipline on both sides.
+      // body. The truth leg reads the element table twice, sharing
+      // pqElems' vec_id exchange; the ADC leg reads the memoized
+      // distance table (r8 perf advice: the previous shape
+      // scanned/exploded the corpus independently for truth, Lloyd
+      // training, and the final code joins — this round's chronic
+      // slowest query). Same rank-tiebreak discipline on both sides.
       val Q = 10
-      val u = scope.persist(pqElems(s, d))
+      val u = pqElems(s, d)
       val qs = u.filter(col("vec_id") < Q)
         .select(col("vec_id").as("q_id"), col("pos").as("qpos"),
           col("vi").as("qvi"))
@@ -2540,7 +2500,7 @@ object LlmSim extends OpModule {
       val truth = exact.withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= 3)
         .select(col("q_id"), col("vec_id").as("n_id"))
-      val adc = knnPqFrom(pqDistsShared(s, d, scope))
+      val adc = knnPqFrom(pqDistsShared(s, d))
         .select(col("q_id").as("a_q"), col("n_id").as("a_n"), lit(1).as("hit"))
       truth
         .join(adc, col("q_id") === col("a_q") && col("n_id") === col("a_n"),
@@ -2549,6 +2509,7 @@ object LlmSim extends OpModule {
         .agg(count(lit(1)).as("n_truth"), count(col("hit")).as("n_hits"))
         .select(col("q_id"), col("n_truth"), col("n_hits"),
           round(col("n_hits").cast("double") / col("n_truth"), 4).as("recall"))
+        .coalesce(1) // Q rows: the terminal sort needs no range exchange
         .orderBy("q_id")
     }),
 
@@ -2637,10 +2598,10 @@ object LlmSim extends OpModule {
         .orderBy("cell", "pos")
     }),
 
-    // Persist-scoped; body factored out for PlansSpec plan locks.
-    "embed_rq" -> ((s, d) => scopedPersist(rqBody(s, d))),
+    // Body factored out for PlansSpec plan locks.
+    "embed_rq" -> ((s, d) => rqBody(s, d)),
 
-    "embed_silhouette" -> ((s, d) => scopedPersist(silhouetteBody(s, d))),
+    "embed_silhouette" -> ((s, d) => silhouetteBody(s, d)),
 
     // Binary-column plumbing for multimodal pipelines: text → bytes →
     // typed metadata. Real image/audio decode is stubbed (libs absent);
@@ -2967,10 +2928,10 @@ object LlmSim extends OpModule {
         .orderBy("label")
     }),
 
-    // Persist-scoped; body factored out for PlansSpec plan locks.
-    "sim_ivf_routing_depth" -> ((s, d) => scopedPersist(routingDepthBody(s, d))),
+    // Body factored out for PlansSpec plan locks.
+    "sim_ivf_routing_depth" -> ((s, d) => routingDepthBody(s, d)),
 
-    "multimodal_ahash_dedup" -> ((s, d) => scopedPersist { scope =>
+    "multimodal_ahash_dedup" -> ((s, d) => {
       // Perceptual-hash image dedup (r10; BANDED r15): the
       // average-hash (aHash) near-duplicate screen every multimodal
       // curation pipeline runs before training on crawled images —
@@ -2992,7 +2953,7 @@ object LlmSim extends OpModule {
       // DuckDB cannot decode PNGs but predicts every hash by pure
       // arithmetic (integer gray channel, integer mean — no float
       // ever crosses the compare).
-      val hashes = scope.persist(ahashHashes(s, d))
+      val hashes = GraftBridge.checkpoint(ahashHashes(s, d)) // decoded once
       val near = ahashBandedNear(hashes)
       val sym = near.select(col("a_id").as("doc_id"), col("hd"))
         .unionAll(near.select(col("b_id").as("doc_id"), col("hd")))
@@ -3007,7 +2968,7 @@ object LlmSim extends OpModule {
         .orderBy("doc_id")
     }),
 
-    "multimodal_ahash_recall" -> ((s, d) => scopedPersist { scope =>
+    "multimodal_ahash_recall" -> ((s, d) => {
       // Banding quality gate (r15): recall of the band-bucketed
       // near-pair census against the EXACT gate-bounded truth (the
       // ≤64² broadcast self-join the r14 census ran — affordable
@@ -3019,7 +2980,7 @@ object LlmSim extends OpModule {
       // expected and must be measured, not assumed — the
       // sim_recall_* discipline). Banded pairs are a SUBSET of exact
       // pairs, so recall = n_banded/n_truth on the exact ×10⁴ grid.
-      val hashes = scope.persist(ahashHashes(s, d))
+      val hashes = GraftBridge.checkpoint(ahashHashes(s, d)) // decoded once
       val oth = hashes.select(col("doc_id").as("b_id"),
         col("h0").as("b_h0"), col("h1").as("b_h1"))
       val bucket = when(col("hd") === 0, 0L)
@@ -3075,7 +3036,7 @@ object LlmSim extends OpModule {
         col("mean_lum"), col("h0"), col("h1"))
   }
 
-  /** Band-bucketed near-pair census over a persisted hash frame:
+  /** Band-bucketed near-pair census over a checkpointed hash frame:
     * 4 × 16-bit bands as LSH keys, MULTI-PROBED at intra-band
     * Hamming ≤ 1 (r16 verdict #3) → distinct candidate pairs → exact
     * popcount filter hd ≤ 8. Returns (a_id, b_id, hd), a_id < b_id.

@@ -111,50 +111,35 @@ object GraftBridge {
   /** `df` with its root global sort — under any Project or SQL `WITH`
     * above it — planned over ONE unshuffled partition
     * (`Repartition(1, shuffle = false)`, a CoalesceExec reporting
-    * SinglePartition). A coalesce adds no stage boundary, so the
-    * whole last stage runs in that one task: everything back to the
-    * previous shuffle (scans, broadcast joins, windows, expressions),
-    * not just the sort. A global sort otherwise plans a range
-    * exchange, whose RangePartitioner runs a sampling job that
-    * computes the sort's whole input stage before the shuffle-map job
-    * computes it again. A sort under a Limit is left as it is: it
-    * plans as TakeOrderedAndProject, which never samples. A plan
-    * without a root sort is returned as is. For results known to be
-    * dimension-sized (the `scopedPersist` contract);
-    * [[onePartitionSortIfSmall]] is the gated form every graded query
-    * goes through. */
-  def onePartitionSort(df: Dataset[Row]): DataFrame = {
-    def pin(p: logical.LogicalPlan): Option[logical.LogicalPlan] = p match {
-      case s: logical.Sort if s.global =>
-        Some(s.copy(child = logical.Repartition(1, shuffle = false, s.child)))
-      case p: logical.Project => pin(p.child).map(c => p.copy(child = c))
-      case w: logical.WithCTE => pin(w.plan).map(c => w.copy(plan = c))
-      case _ => None
-    }
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    pin(ds.logicalPlan).fold(df)(classic.Dataset.ofRows(ds.sparkSession, _))
-  }
-
-  /** [[onePartitionSort]] when `df`'s inputs are small: the
+    * SinglePartition) when `df`'s inputs are small: the
     * `stats.sizeInBytes` of the analyzed plan's leaves (subquery plans
     * included) sum to at most the session's
-    * `spark.sql.autoBroadcastJoinThreshold`. A file scan's leaf
-    * reports its compressed file bytes (before any filter), a
-    * checkpoint leaf its stored bytes; a reference to a SQL `WITH`
-    * relation is counted through the leaves of its definition. The sum
-    * bounds neither the last stage's CPU cost nor the rows the sort
-    * gets (a join can expand them), and the threshold bounds a relation
-    * sent to every executor, not a stage's work: the cut-off is
-    * measured, not derived. Timed per query at sf0.1 on 2 and 4 cores,
-    * the one-task plans of the admitted queries took 18–19% less time
-    * in total than their range sorts, and the one-task plan also won
-    * on the inputs above the default 10 MB; on more cores, and for a
-    * CPU-heavy last stage, the range sort's parallelism counts for
-    * more. Raising the threshold to force
-    * broadcasts also widens one-task sorting to inputs of that size.
-    * The optimizer's estimate of the sort input is not used: for a
-    * join it is the product of the children (34 GB for a 60k-row
-    * equi-join).
+    * `spark.sql.autoBroadcastJoinThreshold`. `SparkEntry.queries`
+    * applies it to every graded result. A global sort otherwise plans
+    * a range exchange, whose RangePartitioner runs a sampling job that
+    * computes the sort's whole input stage before the shuffle-map job
+    * computes it again. A coalesce adds no stage boundary, so the
+    * whole last stage runs in that one task: everything back to the
+    * previous shuffle (scans, broadcast joins, windows, expressions),
+    * not just the sort. A sort under a Limit is left as it is: it
+    * plans as TakeOrderedAndProject, which never samples. A plan
+    * without a root sort is returned as is.
+    *
+    * A file scan's leaf reports its compressed file bytes (before any
+    * filter), a checkpoint leaf its stored bytes; a reference to a SQL
+    * `WITH` relation is counted through the leaves of its definition.
+    * The sum bounds neither the last stage's CPU cost nor the rows the
+    * sort gets (a join can expand them), and the threshold bounds a
+    * relation sent to every executor, not a stage's work: the cut-off
+    * is measured, not derived. Timed per query at sf0.1 on 2 and 4
+    * cores, the one-task plans of the admitted queries took 18–19%
+    * less time in total than their range sorts, and the one-task plan
+    * also won on the inputs above the default 10 MB; on more cores,
+    * and for a CPU-heavy last stage, the range sort's parallelism
+    * counts for more. Raising the threshold to force broadcasts also
+    * widens one-task sorting to inputs of that size. The optimizer's
+    * estimate of the sort input is not used: for a join it is the
+    * product of the children (34 GB for a 60k-row equi-join).
     * A threshold <= 0 disables the rewrite; a streaming frame, or a
     * plan over larger inputs, keeps its parallel range sort. */
   def onePartitionSortIfSmall(df: Dataset[Row]): DataFrame = {
@@ -164,6 +149,14 @@ object GraftBridge {
       .collectWithSubqueries {
         case l: logical.LeafNode if !l.isInstanceOf[logical.CTERelationRef] => l.stats.sizeInBytes
       }.sum
-    if (bound <= 0 || df.isStreaming || inputBytes > bound) df else onePartitionSort(df)
+    def pin(p: logical.LogicalPlan): Option[logical.LogicalPlan] = p match {
+      case s: logical.Sort if s.global =>
+        Some(s.copy(child = logical.Repartition(1, shuffle = false, s.child)))
+      case p: logical.Project => pin(p.child).map(c => p.copy(child = c))
+      case w: logical.WithCTE => pin(w.plan).map(c => w.copy(plan = c))
+      case _ => None
+    }
+    if (bound <= 0 || df.isStreaming || inputBytes > bound) df
+    else pin(ds.logicalPlan).fold(df)(classic.Dataset.ofRows(ds.sparkSession, _))
   }
 }

@@ -5,13 +5,13 @@ import org.apache.spark.sql.execution.RDDScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
-import graft.operators.{OpModule, PersistScope, SessionMemo}
+import graft.operators.SessionMemo
 
 /** The library's one eager materialization (`GraftBridge.checkpoint`,
-  * behind `PersistScope.cut`, the session-memo leaves and
-  * `scopedPersist`) and the parquet schema memo of `Tables`: the Spark
-  * jobs they exist to remove must stay removed, and the shortcuts must
-  * stay correct. */
+  * which every in-query cut and every session-memo leaf goes through),
+  * the registry's terminal sort over it, and the parquet schema memo of
+  * `Tables`: the Spark jobs they exist to remove must stay removed, and
+  * the shortcuts must stay correct. */
 class CheckpointSpec extends SparkSpec {
   private val sf = Fixtures.testdata("0.001")
 
@@ -28,14 +28,14 @@ class CheckpointSpec extends SparkSpec {
   test("a cut leaf reports the stored size of its blocks, not the plan estimate") {
     assert(threeRows.queryExecution.optimizedPlan.stats.sizeInBytes > broadcastLimit,
       "fixture: the lazy plan must estimate above the broadcast threshold")
-    val cut = new PersistScope().cut(threeRows)
+    val cut = GraftBridge.checkpoint(threeRows)
     assert(cut.count() === 3L)
     val size = cut.queryExecution.optimizedPlan.stats.sizeInBytes
     assert(size > 0 && size < 64 * 1024, s"3 stored rows reported as $size bytes")
   }
 
   test("a join of a small cut to a parquet frame broadcasts the cut in AQE's initial plan") {
-    val cut = new PersistScope().cut(threeRows)
+    val cut = GraftBridge.checkpoint(threeRows)
     val joined = Tables.lineitem(spark, sf).join(cut, Seq("l_returnflag", "l_linenumber"))
     // Not executed: the adaptive root's current plan is its initial plan.
     val initial = joined.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan
@@ -50,27 +50,22 @@ class CheckpointSpec extends SparkSpec {
     assert(joined.count() > 0L)
   }
 
-  private object Terminal extends OpModule {
-    val queries: Map[String, Q] = Map.empty
-    val oracles: Map[String, String] = Map.empty
-    def run(body: PersistScope => DataFrame): DataFrame = scopedPersist(body)
-  }
-
-  test("a scopedPersist body ending in orderBy materializes in one job with no Exchange") {
+  test("the registry sorts a result over a checkpoint in one job with no Exchange") {
+    // A graded result is lazy: its terminal total-order sort runs in
+    // the caller's action, pinned to one partition by the registry's
+    // rule (`onePartitionSortIfSmall`) because the checkpoint leaf is
+    // small, so no range exchange and no sampling job runs. A sort
+    // under a Limit plans as TakeOrderedAndProject either way.
     val rows = (0L until 1000L).filter(_ % 7 == 0).reverse
-    def body(limit: Option[Int])(scope: PersistScope): DataFrame = {
-      val sorted = spark.range(0, 1000, 1, 4).toDF().filter(col("id") % 7 === 0)
-        .orderBy(col("id").desc)
-      limit.fold(sorted)(sorted.limit)
-    }
+    val cut = GraftBridge.checkpoint(spark.range(0, 1000, 1, 4).toDF())
     for (limit <- Seq(None, Some(5))) {
-      val (out, jobs) = JobProbe.count(spark)(Terminal.run(body(limit)))
-      assert(jobs === 1, s"limit=$limit: terminal checkpoint ran $jobs jobs")
-      assert(out.collect().map(_.getLong(0)).toSeq === limit.fold(rows)(rows.take))
-      OpModule.planOnly.set(true)
-      val plan = try Terminal.run(body(limit)).queryExecution.executedPlan.toString
-        finally OpModule.planOnly.set(false)
+      val sorted = cut.filter(col("id") % 7 === 0).orderBy(col("id").desc)
+      val out = GraftBridge.onePartitionSortIfSmall(limit.fold(sorted)(sorted.limit))
+      val plan = out.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"limit=$limit:\n$plan")
+      val (got, jobs) = JobProbe.count(spark)(out.collect())
+      assert(jobs === 1, s"limit=$limit: the terminal sort ran $jobs jobs")
+      assert(got.map(_.getLong(0)).toSeq === limit.fold(rows)(rows.take))
     }
   }
 

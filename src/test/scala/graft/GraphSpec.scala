@@ -97,29 +97,26 @@ class GraphSpec extends SparkSpec {
     val e = (0L to 6L).map(i => (i, i + 1)).toDF("a", "b")
     val adj = e.union(e.select($"b", $"a")).toDF("a", "b")
     val nodes = (0L to 7L).toDF("node")
-    val scope = new graft.operators.PersistScope
-    try {
-      val cc = graft.operators.Graph.componentLabels(adj, nodes, 3, scope)
-      assert(cc.changed.collect().head.getLong(0) === 5L)
-      // and labels are exactly the radius-3 minima
-      val labels = cc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert((0L to 7L).forall(v => labels(v) === math.max(0L, v - 3L)))
-      // A seeded run reads the round-1 frame (node, ml) instead of
-      // computing it; with one round it must still census against the
-      // identity labels, plain or doubling: 7 changes (nodes 1..7).
-      val seed = (0L to 7L).map(v => (v, math.max(0L, v - 1L))).toDF("node", "ml")
-      for (jump <- Seq(false, true)) {
-        def run(seeded: Option[org.apache.spark.sql.DataFrame]) = {
-          val c = graft.operators.Graph.componentLabels(adj, nodes, 1, scope,
-            jump = jump, seed = seeded)
-          (c.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
-            c.changed.collect().head.getLong(0))
-        }
-        val unseeded = run(None)
-        assert(unseeded._2 === 7L, s"jump=$jump")
-        assert(run(Some(seed)) === unseeded, s"seeded 1-round run, jump=$jump")
+    val cc = graft.operators.Graph.componentLabels(adj, nodes, 3)
+    assert(cc.changed.collect().head.getLong(0) === 5L)
+    // and labels are exactly the radius-3 minima
+    val labels = cc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert((0L to 7L).forall(v => labels(v) === math.max(0L, v - 3L)))
+    // A seeded run reads the round-1 frame (node, ml) instead of
+    // computing it; with one round it must still census against the
+    // identity labels, plain or doubling: 7 changes (nodes 1..7).
+    val seed = (0L to 7L).map(v => (v, math.max(0L, v - 1L))).toDF("node", "ml")
+    for (jump <- Seq(false, true)) {
+      def run(seeded: Option[org.apache.spark.sql.DataFrame]) = {
+        val c = graft.operators.Graph.componentLabels(adj, nodes, 1,
+          jump = jump, seed = seeded)
+        (c.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+          c.changed.collect().head.getLong(0))
       }
-    } finally scope.release()
+      val unseeded = run(None)
+      assert(unseeded._2 === 7L, s"jump=$jump")
+      assert(run(Some(seed)) === unseeded, s"seeded 1-round run, jump=$jump")
+    }
   }
 
   test("componentLabelsDoubling converges on the path the 3-round kernel under-merges") {
@@ -132,26 +129,23 @@ class GraphSpec extends SparkSpec {
     val e = (0L to 6L).map(i => (i, i + 1)).toDF("a", "b")
     val adj = e.union(e.select($"b", $"a")).toDF("a", "b")
     val nodes = (0L to 7L).toDF("node")
-    val scope = new graft.operators.PersistScope
-    try {
-      val lbl = graft.operators.Graph
-        .componentLabels(adj, nodes, 3, scope, jump = true).labels
-      val labels = lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert((0L to 7L).forall(v => labels(v) === 0L),
-        s"doubling kernel under-merged the diameter-7 path: $labels")
-      // and on a LONGER path (diameter 15) round-3 coverage ~2^4-2=14
-      // still reaches node 14 but not 15 -- the bound is real, not
-      // infinite: a 4th round would cover ~30.
-      val e2 = (0L to 14L).map(i => (i, i + 1)).toDF("a", "b")
-      val adj2 = e2.union(e2.select($"b", $"a")).toDF("a", "b")
-      val nodes2 = (0L to 15L).toDF("node")
-      val cc2 = graft.operators.Graph
-        .componentLabels(adj2, nodes2, 3, scope, jump = true)
-      val l2 = cc2.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(l2(14L) === 0L, s"radius-14 coverage lost: $l2")
-      assert(cc2.changed.collect().head.getLong(0) > 0L,
-        "diameter-15 path must report a nonzero last-round delta")
-    } finally scope.release()
+    val lbl = graft.operators.Graph
+      .componentLabels(adj, nodes, 3, jump = true).labels
+    val labels = lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert((0L to 7L).forall(v => labels(v) === 0L),
+      s"doubling kernel under-merged the diameter-7 path: $labels")
+    // and on a LONGER path (diameter 15) round-3 coverage ~2^4-2=14
+    // still reaches node 14 but not 15 -- the bound is real, not
+    // infinite: a 4th round would cover ~30.
+    val e2 = (0L to 14L).map(i => (i, i + 1)).toDF("a", "b")
+    val adj2 = e2.union(e2.select($"b", $"a")).toDF("a", "b")
+    val nodes2 = (0L to 15L).toDF("node")
+    val cc2 = graft.operators.Graph
+      .componentLabels(adj2, nodes2, 3, jump = true)
+    val l2 = cc2.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(l2(14L) === 0L, s"radius-14 coverage lost: $l2")
+    assert(cc2.changed.collect().head.getLong(0) > 0L,
+      "diameter-15 path must report a nonzero last-round delta")
   }
 
   test("componentLabelsConverged stops before the cap on the diameter-15 path") {
@@ -165,18 +159,15 @@ class GraphSpec extends SparkSpec {
     val e2 = (0L to 14L).map(i => (i, i + 1)).toDF("a", "b")
     val adj2 = e2.union(e2.select($"b", $"a")).toDF("a", "b")
     val nodes2 = (0L to 15L).toDF("node")
-    val scope = new graft.operators.PersistScope
-    try {
-      val cc = graft.operators.Graph
-        .componentLabels(adj2, nodes2, 10, scope, jump = true, converge = true)
-      val (rounds, residual) = (cc.rounds, cc.residual.get)
-      val labels = cc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert((0L to 15L).forall(v => labels(v) === 0L),
-        s"convergence loop under-merged the diameter-15 path: $labels")
-      assert(residual === 0L, s"loop stopped with nonzero residual $residual")
-      assert(rounds < 10L,
-        s"diameter-15 path should converge before the cap, used $rounds")
-    } finally scope.release()
+    val cc = graft.operators.Graph
+      .componentLabels(adj2, nodes2, 10, jump = true, converge = true)
+    val (rounds, residual) = (cc.rounds, cc.residual.get)
+    val labels = cc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert((0L to 15L).forall(v => labels(v) === 0L),
+      s"convergence loop under-merged the diameter-15 path: $labels")
+    assert(residual === 0L, s"loop stopped with nonzero residual $residual")
+    assert(rounds < 10L,
+      s"diameter-15 path should converge before the cap, used $rounds")
   }
 
   test("graph_components_doubling matches graph_components on the converged fixture") {

@@ -10,10 +10,10 @@ class InvariantsSpec extends SparkSpec {
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)
 
   test("persist-scoped queries leave the cache manager empty after their action") {
-    // r5 verdict #3: every iterative/multi-reference query registers
-    // its persisted intermediates in a PersistScope and releases them
-    // once the terminal result materializes — a long-lived session
-    // running the whole suite must not accumulate cached plans.
+    // r5 verdict #3: a long-lived session running the whole suite must
+    // not accumulate cached plans. The iterative/multi-reference
+    // queries below share their intermediates through checkpoints and
+    // the session memo only, never through the CacheManager.
     spark.catalog.clearCache()
     Seq("graph_kcore", "graph_components", "graph_jaccard_sim",
       "evt_stickiness", "sim_knn_ivf", "sim_knn_pq", "embed_pq",
@@ -179,19 +179,16 @@ class InvariantsSpec extends SparkSpec {
     // Lloyd round can guarantee only loosely — so the bound asserted
     // is the partition algebra, not balance.
     import org.apache.spark.sql.functions._
-    val scope = new graft.operators.PersistScope
-    try {
-      val (_, assign) = graft.operators.LlmSim.ivfTrain(spark, sf, scope)
-      val sub = graft.operators.LlmSim.subSplit(assign, lit(true), scope)
-      val n = assign.count()
-      assert(sub.count() === n, "sub-split must cover every assigned vector")
-      assert(sub.filter(col("sub") =!= 1).count() === 0L,
-        s"graded SF cells are all under the cap — sub must be 1 everywhere")
-      val moved = sub.withColumnRenamed("cell", "sc")
-        .join(assign.select("vec_id", "cell"), "vec_id")
-        .filter(col("sc") =!= col("cell")).count()
-      assert(moved === 0L, "sub-split must never move a vector across coarse cells")
-    } finally scope.release()
+    val (_, assign) = graft.operators.LlmSim.ivfTrain(spark, sf)
+    val sub = graft.operators.LlmSim.subSplit(assign, lit(true))
+    val n = assign.count()
+    assert(sub.count() === n, "sub-split must cover every assigned vector")
+    assert(sub.filter(col("sub") =!= 1).count() === 0L,
+      s"graded SF cells are all under the cap — sub must be 1 everywhere")
+    val moved = sub.withColumnRenamed("cell", "sc")
+      .join(assign.select("vec_id", "cell"), "vec_id")
+      .filter(col("sc") =!= col("cell")).count()
+    assert(moved === 0L, "sub-split must never move a vector across coarse cells")
     // r11 advice: the identity claim rests on EVERY coarse cell being
     // under the 625 cap at EVERY graded SF, not just the test SF —
     // k-means cells are unbalanced, and a hot cell reaching the cap
@@ -205,51 +202,45 @@ class InvariantsSpec extends SparkSpec {
     // vectors per cell.
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1").foreach { d =>
-      val sc = new graft.operators.PersistScope
-      try {
-        val (_, a) = graft.operators.LlmSim.ivfTrain(spark, d, sc)
-        val hot = a.groupBy("cell").count()
-          .agg(max("count")).collect().head.getLong(0)
-        assert(hot < graft.operators.LlmSim.SubCellTarget,
-          s"$d: hottest ivfTrain cell has $hot members — the graded-SF " +
-            "identity premise (every cell under the 625 cap) broke")
-        val ia = graft.operators.LlmSim.incEmbAssign(spark, d, sc)
-        val hotOld = ia.filter(!(col("vec_id") % 7 === 3))
-          .groupBy("cell").count()
-          .agg(max("count")).collect().head.getLong(0)
-        assert(hotOld < graft.operators.LlmSim.SubCellTarget,
-          s"$d: hottest incremental-index cell has $hotOld old members — " +
-            "the graded-SF identity premise broke")
-      } finally sc.release()
+      val (_, a) = graft.operators.LlmSim.ivfTrain(spark, d)
+      val hot = a.groupBy("cell").count()
+        .agg(max("count")).collect().head.getLong(0)
+      assert(hot < graft.operators.LlmSim.SubCellTarget,
+        s"$d: hottest ivfTrain cell has $hot members — the graded-SF " +
+          "identity premise (every cell under the 625 cap) broke")
+      val ia = graft.operators.LlmSim.incEmbAssign(spark, d)
+      val hotOld = ia.filter(!(col("vec_id") % 7 === 3))
+        .groupBy("cell").count()
+        .agg(max("count")).collect().head.getLong(0)
+      assert(hotOld < graft.operators.LlmSim.SubCellTarget,
+        s"$d: hottest incremental-index cell has $hotOld old members — " +
+          "the graded-SF identity premise broke")
     }
     val sf1Dir = "/root/repo/tmp-sf1"
     assume(new java.io.File(s"$sf1Dir/embeddings.parquet").exists(),
       "sf1 stress tables not generated on this host")
-    val scope1 = new graft.operators.PersistScope
-    try {
-      val (_, assign1) = graft.operators.LlmSim.ivfTrain(spark, sf1Dir, scope1)
-      val sub1 = graft.operators.LlmSim.subSplit(assign1, lit(true), scope1)
-      assert(sub1.count() === assign1.count())
-      // Plain ids stay within the cell's K_c; a recursively re-split
-      // group carries a composed id sub₁·2²⁰ + sub₂ whose level-1
-      // part must itself be a valid plain id (r13 recursion).
-      val idBase = graft.operators.LlmSim.SubIdBase
-      val kc = assign1.groupBy("cell").agg(
-        expr(s"(count(1) + 624) div 625").as("kc"))
-      val withKc = sub1.join(kc, "cell")
-      val overPlain = withKc
-        .filter(col("sub") < idBase && col("sub") > col("kc")).count()
-      assert(overPlain === 0L, "plain sub ids must stay within the cell's K_c")
-      val badComposed = withKc.filter(col("sub") >= idBase)
-        .filter(floor(col("sub") / idBase) > col("kc") || col("sub") % idBase < 1)
-        .count()
-      assert(badComposed === 0L,
-        "composed sub ids must decompose to (valid level-1 id, sub2 >= 1)")
-      val split = sub1.select("cell", "sub").distinct().count()
-      val cells = assign1.select("cell").distinct().count()
-      assert(split > cells,
-        s"sf1 cells exceed the cap — the split must be non-trivial ($split vs $cells)")
-    } finally scope1.release()
+    val (_, assign1) = graft.operators.LlmSim.ivfTrain(spark, sf1Dir)
+    val sub1 = graft.operators.LlmSim.subSplit(assign1, lit(true))
+    assert(sub1.count() === assign1.count())
+    // Plain ids stay within the cell's K_c; a recursively re-split
+    // group carries a composed id sub₁·2²⁰ + sub₂ whose level-1
+    // part must itself be a valid plain id (r13 recursion).
+    val idBase = graft.operators.LlmSim.SubIdBase
+    val kc = assign1.groupBy("cell").agg(
+      expr(s"(count(1) + 624) div 625").as("kc"))
+    val withKc = sub1.join(kc, "cell")
+    val overPlain = withKc
+      .filter(col("sub") < idBase && col("sub") > col("kc")).count()
+    assert(overPlain === 0L, "plain sub ids must stay within the cell's K_c")
+    val badComposed = withKc.filter(col("sub") >= idBase)
+      .filter(floor(col("sub") / idBase) > col("kc") || col("sub") % idBase < 1)
+      .count()
+    assert(badComposed === 0L,
+      "composed sub ids must decompose to (valid level-1 id, sub2 >= 1)")
+    val split = sub1.select("cell", "sub").distinct().count()
+    val cells = assign1.select("cell").distinct().count()
+    assert(split > cells,
+      s"sf1 cells exceed the cap — the split must be non-trivial ($split vs $cells)")
   }
 
   test("subSplit's recursive level re-splits a group one Lloyd round left over the cap") {
@@ -275,26 +266,23 @@ class InvariantsSpec extends SparkSpec {
     val assign = rows.toDF("vec_id", "embedding")
       .withColumn("cell", lit(0L))
       .select("vec_id", "cell", "embedding")
-    val scope = new graft.operators.PersistScope
-    try {
-      val sub = graft.operators.LlmSim.subSplit(assign, lit(true), scope)
-      val out = sub.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-      assert(out.size === 1250, "recursion must cover every vector exactly once")
-      val idBase = graft.operators.LlmSim.SubIdBase
-      val aSubs = (0 until 450).map(i => out(2L * i)).toSet
-      val bSubs = (0 until 450).map(i => out(2L * i + 1)).toSet
-      val cSubs = (900 until 1250).map(i => out(i.toLong)).toSet
-      assert(bSubs === Set(2L),
-        s"under-cap cluster B must keep its plain level-1 id, got $bSubs")
-      assert(aSubs.size === 1 && cSubs.size === 1 && aSubs != cSubs,
-        s"recursion must separate A from C (A=$aSubs, C=$cSubs)")
-      assert((aSubs ++ cSubs).forall(s => s >= idBase && s / idBase === 1L),
-        s"re-split ids must compose as 1*SubIdBase + sub2, got ${aSubs ++ cSubs}")
-      val occ = sub.groupBy("cell", "sub").count()
-        .agg(max("count")).collect().head.getLong(0)
-      assert(occ <= graft.operators.LlmSim.SubCellTarget,
-        s"post-recursion occupancy $occ must be back under the cap")
-    } finally scope.release()
+    val sub = graft.operators.LlmSim.subSplit(assign, lit(true))
+    val out = sub.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(out.size === 1250, "recursion must cover every vector exactly once")
+    val idBase = graft.operators.LlmSim.SubIdBase
+    val aSubs = (0 until 450).map(i => out(2L * i)).toSet
+    val bSubs = (0 until 450).map(i => out(2L * i + 1)).toSet
+    val cSubs = (900 until 1250).map(i => out(i.toLong)).toSet
+    assert(bSubs === Set(2L),
+      s"under-cap cluster B must keep its plain level-1 id, got $bSubs")
+    assert(aSubs.size === 1 && cSubs.size === 1 && aSubs != cSubs,
+      s"recursion must separate A from C (A=$aSubs, C=$cSubs)")
+    assert((aSubs ++ cSubs).forall(s => s >= idBase && s / idBase === 1L),
+      s"re-split ids must compose as 1*SubIdBase + sub2, got ${aSubs ++ cSubs}")
+    val occ = sub.groupBy("cell", "sub").count()
+      .agg(max("count")).collect().head.getLong(0)
+    assert(occ <= graft.operators.LlmSim.SubCellTarget,
+      s"post-recursion occupancy $occ must be back under the cap")
   }
 
   test("sub-cell occupancy stays bounded on the 100x stress corpus") {
@@ -310,16 +298,13 @@ class InvariantsSpec extends SparkSpec {
     assume(new java.io.File(s"$d/embeddings.parquet").exists(),
       "sf10 stress tables not generated on this host")
     import org.apache.spark.sql.functions._
-    val scope = new graft.operators.PersistScope
-    try {
-      val (_, a) = graft.operators.LlmSim.ivfTrain(spark, d, scope)
-      val sub = graft.operators.LlmSim.subSplit(a, lit(true), scope)
-      val occ = sub.groupBy("cell", "sub").count()
-        .agg(max("count")).collect().head.getLong(0)
-      assert(occ <= 2 * graft.operators.LlmSim.SubCellTarget,
-        s"hottest (cell, sub) bucket holds $occ members at 100x — " +
-          "the pair-enumeration quadratic is creeping back")
-    } finally scope.release()
+    val (_, a) = graft.operators.LlmSim.ivfTrain(spark, d)
+    val sub = graft.operators.LlmSim.subSplit(a, lit(true))
+    val occ = sub.groupBy("cell", "sub").count()
+      .agg(max("count")).collect().head.getLong(0)
+    assert(occ <= 2 * graft.operators.LlmSim.SubCellTarget,
+      s"hottest (cell, sub) bucket holds $occ members at 100x — " +
+        "the pair-enumeration quadratic is creeping back")
   }
 
   test("sim_ndcg_eval is bounded, complete, and DCG never exceeds the ideal") {
@@ -2007,22 +1992,19 @@ class InvariantsSpec extends SparkSpec {
     // Left side: the pre-top-k frame of graph_stress_centrality;
     // right side: the GRADED graph_path_counts profile — a drift in
     // either kernel fails here even if its oracle drifts identically.
-    val scope = new operators.PersistScope
-    try {
-      val lhs = operators.Graph.stressContrib(spark, sf, scope)
-        .groupBy("src").agg(org.apache.spark.sql.functions.sum("st").as("t"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val rhs = q("graph_path_counts").collect()
-        .filter(_.getLong(1) >= 1L)
-        .groupBy(_.getLong(0))
-        .map { case (src, rows) =>
-          src -> rows.map(r => r.getLong(3) * (r.getLong(1) - 1L)).sum }
-      assert(rhs.nonEmpty)
-      rhs.foreach { case (src, v) =>
-        assert(lhs.getOrElse(src, 0L) === v,
-          s"interior incidences for src $src: stress ${lhs.get(src)} vs σ·(d−1) $v")
-      }
-    } finally scope.release()
+    val lhs = operators.Graph.stressContrib(spark, sf)
+      .groupBy("src").agg(org.apache.spark.sql.functions.sum("st").as("t"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rhs = q("graph_path_counts").collect()
+      .filter(_.getLong(1) >= 1L)
+      .groupBy(_.getLong(0))
+      .map { case (src, rows) =>
+        src -> rows.map(r => r.getLong(3) * (r.getLong(1) - 1L)).sum }
+    assert(rhs.nonEmpty)
+    rhs.foreach { case (src, v) =>
+      assert(lhs.getOrElse(src, 0L) === v,
+        s"interior incidences for src $src: stress ${lhs.get(src)} vs σ·(d−1) $v")
+    }
   }
 
   test("quantile coreset rank error stays within the stride theorem bound") {
@@ -2033,27 +2015,24 @@ class InvariantsSpec extends SparkSpec {
     // sketch values against the raw data and assert the bound — this
     // pins the mergeable-summary machinery itself, not the (looser)
     // 5%-value band the graded query reports.
-    val scope = new operators.PersistScope
-    try {
-      val sk = operators.Aggregates.quantileSketch(spark, sf, scope)
-        .collect()
-      assert(sk.length === 3)
-      val arr = graft.Tables.lineitem(spark, sf)
-        .select(org.apache.spark.sql.functions
-          .col("l_extendedprice").cast("double"))
-        .collect().map(_.getDouble(0)).sorted
-      sk.foreach { r =>
-        val (qq, v, n) = (r.getDouble(0), r.getDouble(1), r.getLong(2))
-        assert(n === arr.length.toLong)
-        val target = math.ceil(qq * n).toLong
-        val lo = arr.count(_ < v).toLong + 1L
-        val hi = arr.count(_ <= v).toLong
-        val bound = n / 256 + 64
-        assert(target >= lo - bound && target <= hi + bound,
-          s"q=$qq sketch value $v has rank [$lo,$hi], target $target " +
-            s"outside ±$bound")
-      }
-    } finally scope.release()
+    val sk = operators.Aggregates.quantileSketch(spark, sf)
+      .collect()
+    assert(sk.length === 3)
+    val arr = graft.Tables.lineitem(spark, sf)
+      .select(org.apache.spark.sql.functions
+        .col("l_extendedprice").cast("double"))
+      .collect().map(_.getDouble(0)).sorted
+    sk.foreach { r =>
+      val (qq, v, n) = (r.getDouble(0), r.getDouble(1), r.getLong(2))
+      assert(n === arr.length.toLong)
+      val target = math.ceil(qq * n).toLong
+      val lo = arr.count(_ < v).toLong + 1L
+      val hi = arr.count(_ <= v).toLong
+      val bound = n / 256 + 64
+      assert(target >= lo - bound && target <= hi + bound,
+        s"q=$qq sketch value $v has rank [$lo,$hi], target $target " +
+          s"outside ±$bound")
+    }
   }
 
   test("quantile sketch value error sits well inside the graded 5% band") {
@@ -2064,23 +2043,20 @@ class InvariantsSpec extends SparkSpec {
     // margin at < 2.5% of the exact quantile so a data change that
     // narrows the margin fails HERE instead of flipping the oracle
     // hash (the t-digest side is tighter still; rehearsal covers it).
-    val scope = new operators.PersistScope
-    try {
-      val sk = operators.Aggregates.quantileSketch(spark, sf, scope)
-        .collect()
-      val arr = graft.Tables.lineitem(spark, sf)
-        .select(org.apache.spark.sql.functions
-          .col("l_extendedprice").cast("double"))
-        .collect().map(_.getDouble(0)).sorted
-      sk.foreach { r =>
-        val (qq, v, n) = (r.getDouble(0), r.getDouble(1), r.getLong(2))
-        val exact = arr(math.ceil(qq * n).toInt - 1)
-        assert(math.abs(v - exact) <= 0.025 * exact,
-          s"q=$qq sketch value $v is ${math.abs(v - exact) / exact * 100}%" +
-            s" from exact $exact — inside the graded 5% band but past " +
-            "the 2.5% stability margin")
-      }
-    } finally scope.release()
+    val sk = operators.Aggregates.quantileSketch(spark, sf)
+      .collect()
+    val arr = graft.Tables.lineitem(spark, sf)
+      .select(org.apache.spark.sql.functions
+        .col("l_extendedprice").cast("double"))
+      .collect().map(_.getDouble(0)).sorted
+    sk.foreach { r =>
+      val (qq, v, n) = (r.getDouble(0), r.getDouble(1), r.getLong(2))
+      val exact = arr(math.ceil(qq * n).toInt - 1)
+      assert(math.abs(v - exact) <= 0.025 * exact,
+        s"q=$qq sketch value $v is ${math.abs(v - exact) / exact * 100}%" +
+          s" from exact $exact — inside the graded 5% band but past " +
+          "the 2.5% stability margin")
+    }
   }
 
   test("betweenness obeys the Brandes dependency-accumulation identity") {
@@ -2093,24 +2069,21 @@ class InvariantsSpec extends SparkSpec {
     // cross-kernel tie the stress identity pins, so a drift in the σ
     // chain or either backward pass fails here. Tolerance 1e-5
     // absorbs the per-level round(δ, 9) quantization.
-    val scope = new operators.PersistScope
-    try {
-      val lhs = operators.Graph.betweennessContrib(spark, sf, scope)
-        .groupBy("src")
-        .agg(org.apache.spark.sql.functions.sum("delta").as("t"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val rhs = q("graph_path_counts").collect()
-        .filter(_.getLong(1) >= 1L)
-        .groupBy(_.getLong(0))
-        .map { case (src, rows) =>
-          src -> rows.map(r => r.getLong(2) * (r.getLong(1) - 1L)).sum }
-      assert(rhs.nonEmpty)
-      rhs.foreach { case (src, v) =>
-        val got = lhs.getOrElse(src, 0.0)
-        assert(math.abs(got - v) <= 1e-5,
-          s"dependency mass for src $src: δ-sum $got vs Σ(d−1) $v")
-      }
-    } finally scope.release()
+    val lhs = operators.Graph.betweennessContrib(spark, sf)
+      .groupBy("src")
+      .agg(org.apache.spark.sql.functions.sum("delta").as("t"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val rhs = q("graph_path_counts").collect()
+      .filter(_.getLong(1) >= 1L)
+      .groupBy(_.getLong(0))
+      .map { case (src, rows) =>
+        src -> rows.map(r => r.getLong(2) * (r.getLong(1) - 1L)).sum }
+    assert(rhs.nonEmpty)
+    rhs.foreach { case (src, v) =>
+      val got = lhs.getOrElse(src, 0.0)
+      assert(math.abs(got - v) <= 1e-5,
+        s"dependency mass for src $src: δ-sum $got vs Σ(d−1) $v")
+    }
   }
 
   test("burstiness ledger: dispersion bounds and wordcount consistency") {

@@ -30,11 +30,14 @@ class JobBudgetSpec extends SparkSpec {
   }
 
   test("the chains queries stay within their Spark job budgets") {
+    // Each result is lazy: its last stage runs in the caller's write,
+    // not in a terminal checkpoint job before it plus a second job to
+    // read that checkpoint back.
     withinBudget(Seq(
-      "graph_components" -> 22,
-      "sim_knn_ivf" -> 17,
-      "evt_absorb_prob" -> 7,
-      "evt_markov_steady" -> 5))
+      "graph_components" -> 21,
+      "sim_knn_ivf" -> 16,
+      "evt_absorb_prob" -> 6,
+      "evt_markov_steady" -> 4))
   }
 
   test("the relational queries run their terminal sort without a sampling job") {

@@ -25,11 +25,12 @@ package graft
   *
   * Plans are inspected WITHOUT executing (queryExecution.executedPlan
   * before any action): cartesians, window specs and exchanges of the
-  * initial plan are structural, not AQE-dependent. scopedPersist
-  * queries eagerly materialize at construction and return a
-  * checkpoint scan — their inner shapes are locked on factored bodies
-  * in PlansSpec; here they simply pass (their terminal plan has no
-  * window/cartesian), and their construction doubles as a smoke run.
+  * initial plan are structural, not AQE-dependent. Every graded result
+  * is lazy, so each plan is the one the query's action runs, from its
+  * sources or the checkpoints its body takes while it is built (the
+  * iterative kernels' rounds, the session memo's leaves) to the
+  * terminal sort. Building those checkpoints runs their jobs, so the
+  * sweep's construction doubles as a smoke run of the chains.
   */
 class PlanSweepSpec extends SparkSpec {
 
@@ -52,6 +53,8 @@ class PlanSweepSpec extends SparkSpec {
     "evt_abtest_hl" -> "gated <=2,500-pair HL median (user_id < 100)",
     "agg_gini" -> "two-phase bucket offsets — |buckets| frame, never |customers|",
     "agg_ks_test" -> "two-phase bucket offsets — |buckets| frame",
+    "agg_quantile_sketch" -> ("two-phase bucket offsets — |price buckets| frame; " +
+      "coreset cumulative weight over <= 256 rows per lineitem partition"),
     "sample_user_cap" -> "count-of-counts histogram — |distinct per-user count values| frame, never |users|")
 
   /** Window specs whose argument list starts with a sort column (no
@@ -83,7 +86,7 @@ class PlanSweepSpec extends SparkSpec {
       }
 
   /** Every graded query's physical plan (tree + string), computed
-    * ONCE — scopedPersist queries execute at construction, so
+    * ONCE — building a query runs its body's checkpoint jobs, so
     * per-test recomputation would triple the suite's wall-clock. */
   private lazy val physical: Seq[(String, SparkPlan)] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -179,17 +179,11 @@ class PlansSpec extends SparkSpec {
       "contamination join degenerated to a cartesian")
   }
 
-  /** Build a persist-scoped query's INNER (un-checkpointed) plan —
-    * the public entry eagerly materializes via localCheckpoint, which
-    * collapses the executed plan to an RDD scan; plan locks assert on
-    * the pipeline underneath. The scope is released (and the cache
-    * cleared) after the assertion runs. */
-  private def scopedPlan(body: graft.operators.PersistScope => DataFrame)(
-      check: String => Unit): Unit = {
-    val scope = new graft.operators.PersistScope
-    try check(treeString(body(scope)))
-    finally scope.release()
-  }
+  /** Checks the plan of a query body factored out of its module —
+    * the body as the module builds it, without the registry's terminal
+    * sort rewrite. */
+  private def bodyPlan(body: DataFrame)(check: String => Unit): Unit =
+    check(treeString(body))
 
   test("sim_knn_pq broadcasts the query distance maps onto pivoted codes") {
     // ADC scoring (r15 pivot) = pivoted code rows (one per vector)
@@ -197,7 +191,7 @@ class PlansSpec extends SparkSpec {
     // only join fanout left is |Q|; the non-equi (vec_id ≠ q_id)
     // condition makes it a broadcast nested-loop against 10 rows,
     // NEVER a shuffled join or an unbroadcast cartesian.
-    scopedPlan(graft.operators.LlmSim.knnPqBody(spark, sf)) { plan =>
+    bodyPlan(graft.operators.LlmSim.knnPqBody(spark, sf)) { plan =>
       assert(plan.contains("BroadcastNestedLoopJoin"),
         s"distance-map table not broadcast:\n$plan")
       assert(!plan.contains("CartesianProduct"),
@@ -320,7 +314,7 @@ class PlansSpec extends SparkSpec {
     // re-derives the incidence join ~3^r times AND regrows the logical
     // plan ~3^r — AQE re-renders that plan string per stage update,
     // which measured 17-22 s (vs ~2 s cut) and OOMed a 1 GiB driver.
-    scopedPlan(graft.operators.Graph.kcoreBody(spark, sf)) { plan =>
+    bodyPlan(graft.operators.Graph.kcoreBody(spark, sf)) { plan =>
       assert(plan.contains("ExistingRDD"),
         s"no truncated superstep leaves in the k-core plan:\n$plan")
       assert(!plan.toLowerCase.contains("parquet"),
@@ -332,23 +326,20 @@ class PlansSpec extends SparkSpec {
 
   test("trained-IVF probe reads the truncated assignment, not the Lloyd lineage") {
     // r5 verdict #4, upgraded r6: the 2-iteration training chain CUTS
-    // per round (localCheckpoint — see PersistScope.cut), so the probe
+    // per round (`GraftBridge.checkpoint`), so the probe
     // plan must read truncated RDD leaves and run a BOUNDED number of
     // LIVE parquet scans — an un-truncated chain re-derives the full
     // embedding scan once per training reference, the live-scan count
     // explodes with the iteration count, and the compounding plan
     // string melts AQE's per-stage render.
-    val scope = new graft.operators.PersistScope
-    try {
-      val p = executed(graft.operators.LlmSim.ivfBody(spark, sf, 4)(scope))
-      assert(p.toString.contains("ExistingRDD"),
-        s"no truncated training leaves in the IVF probe plan:\n$p")
-      val live = deepNodes(p).collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }
-      assert(live.length <= 2,
-        s"IVF probe plan runs ${live.length} live parquet scans — training lineage is back:\n$p")
-    } finally scope.release()
+    val p = executed(graft.operators.LlmSim.ivfBody(spark, sf, 4))
+    assert(p.toString.contains("ExistingRDD"),
+      s"no truncated training leaves in the IVF probe plan:\n$p")
+    val live = deepNodes(p).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(live.length <= 2,
+      s"IVF probe plan runs ${live.length} live parquet scans — training lineage is back:\n$p")
   }
 
   test("sim_ndcg_eval persists the tier universe once and broadcasts the ideal DCG") {
@@ -360,7 +351,7 @@ class PlansSpec extends SparkSpec {
     // and the |Q|-row ideal-DCG table must broadcast onto the
     // path×query spine; no path's candidate join may degenerate to a
     // cartesian over the universe.
-    scopedPlan(graft.operators.LlmSim.ndcgBody(spark, sf)) { plan =>
+    bodyPlan(graft.operators.LlmSim.ndcgBody(spark, sf)) { plan =>
       assert(plan.contains("ExistingRDD"),
         s"tier universe is not read from a truncated leaf:\n$plan")
       assert(plan.contains("BroadcastHashJoin"),
@@ -376,7 +367,7 @@ class PlansSpec extends SparkSpec {
     // the |Q|-row ideal-DCG table onto the query spine, keep the
     // fusion window partitioned by q_id (≤18 candidates per query),
     // and no path may degenerate to a cartesian.
-    scopedPlan(graft.operators.LlmSim.rrfBody(spark, sf)) { plan =>
+    bodyPlan(graft.operators.LlmSim.rrfBody(spark, sf)) { plan =>
       assert(plan.contains("ExistingRDD"),
         s"tier universe is not read from a truncated leaf:\n$plan")
       assert(plan.contains("BroadcastHashJoin"),
@@ -399,7 +390,7 @@ class PlansSpec extends SparkSpec {
     // superstep lineage compounds ~branching^rounds), every rank
     // window must partition on a per-query/per-node key, and no hop
     // may degenerate to a cartesian.
-    scopedPlan(graft.operators.LlmSim.knnGraphBody(spark, sf)) { plan =>
+    bodyPlan(graft.operators.LlmSim.knnGraphBody(spark, sf)) { plan =>
       assert(plan.contains("ExistingRDD"),
         s"no truncated superstep leaves in the graph walk plan:\n$plan")
       assert(!plan.contains("CartesianProduct"),
@@ -419,11 +410,11 @@ class PlansSpec extends SparkSpec {
   }
 
   test("evt_stickiness expands windows on day-grain pairs only") {
-    // the 28-way range join must read the persisted distinct
-    // (day, user) rollup, never raw events.
-    scopedPlan(graft.operators.Events.stickinessBody(spark, sf)) { plan =>
-      assert(plan.contains("InMemoryTableScan"),
-        s"stickiness range join is not reading the day-grain cache:\n$plan")
+    // the 28-way range join must read the distinct (day, user) rollup
+    // of the checkpointed user-clustered base, never raw events.
+    bodyPlan(graft.operators.Events.stickinessBody(spark, sf)) { plan =>
+      assert(plan.contains("ExistingRDD") && !plan.contains("FileScan"),
+        s"stickiness range join is not reading the checkpointed base:\n$plan")
     }
   }
 
@@ -479,7 +470,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("sim_knn_ivfpq broadcasts the query-side tables and stays cartesian-free") {
-    scopedPlan(graft.operators.LlmSim.ivfpqBody(spark, sf)) { plan =>
+    bodyPlan(graft.operators.LlmSim.ivfpqBody(spark, sf)) { plan =>
       assert(plan.contains("BroadcastHashJoin"),
         s"cell gate / distance table should broadcast:\n$plan")
       assert(!plan.contains("CartesianProduct"), s"cartesian in ivfpq plan:\n$plan")
@@ -535,7 +526,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("graph_clustering_coeff stays equi-joined with a partial-agged rollup") {
-    scopedPlan(graft.operators.Graph.clusteringBody(spark, sf)) { plan =>
+    bodyPlan(graft.operators.Graph.clusteringBody(spark, sf)) { plan =>
       assert(!plan.contains("CartesianProduct") &&
         !plan.contains("BroadcastNestedLoopJoin"),
         s"wedge enumeration degenerated to a cartesian:\n$plan")
@@ -651,7 +642,7 @@ class PlansSpec extends SparkSpec {
     // broadcast winner join — NEVER a window, partitioned or not:
     // the per-doc frame is data-sized and a global rank would
     // single-partition it at 100 TB.
-    scopedPlan(graft.operators.LlmText.dsirBody(spark, sf)) { dsir =>
+    bodyPlan(graft.operators.LlmText.dsirBody(spark, sf)) { dsir =>
       assert(dsir.contains("TakeOrderedAndProject"),
         s"sample_dsir lost its two-phase top-k:\n$dsir")
       assert(!dsir.contains("windowspecdefinition"),
@@ -663,7 +654,7 @@ class PlansSpec extends SparkSpec {
     }
     // embed_rq: codebook joins are broadcast (codebooks are
     // dimension-sized), residual math stays equi-join shaped.
-    scopedPlan(graft.operators.LlmSim.rqBody(spark, sf)) { rq =>
+    bodyPlan(graft.operators.LlmSim.rqBody(spark, sf)) { rq =>
       assert(rq.contains("BroadcastHashJoin"),
         s"embed_rq codebooks did not broadcast:\n$rq")
       assert(!rq.contains("CartesianProduct"),
@@ -671,7 +662,7 @@ class PlansSpec extends SparkSpec {
     }
     // embed_silhouette: every window is per-vector (vec_id) — the
     // |V|·C score matrix must never rank through a global frame.
-    scopedPlan(graft.operators.LlmSim.silhouetteBody(spark, sf)) { sil =>
+    bodyPlan(graft.operators.LlmSim.silhouetteBody(spark, sf)) { sil =>
       val wins = sil.linesIterator
         .filter(_.contains("windowspecdefinition")).toSeq
       assert(wins.nonEmpty, s"silhouette top-2 rank window missing:\n$sil")
@@ -680,7 +671,7 @@ class PlansSpec extends SparkSpec {
     }
     // sim_recall_hamming: recall joins are equi-joins on (q_id, n_id)
     // — no cartesian fallback.
-    scopedPlan(graft.operators.LlmSim.recallHammingBody(spark, sf)) { rh =>
+    bodyPlan(graft.operators.LlmSim.recallHammingBody(spark, sf)) { rh =>
       assert(!rh.contains("CartesianProduct"),
         s"sim_recall_hamming planned a data-sized cartesian:\n$rh")
     }
@@ -710,7 +701,7 @@ class PlansSpec extends SparkSpec {
       s"dedup_incremental_exact planned a cartesian:\n$ix")
     // dedup_incremental_embedding: candidates are within-cell pairs —
     // an equi-join on cell, never batch × corpus.
-    scopedPlan(graft.operators.LlmSim.incEmbBody(spark, sf)) { ie =>
+    bodyPlan(graft.operators.LlmSim.incEmbBody(spark, sf)) { ie =>
       assert(!ie.contains("CartesianProduct"),
         s"dedup_incremental_embedding paired batch × corpus:\n$ie")
       assert(ie.contains("BroadcastHashJoin") || ie.contains("SortMergeJoin"),
@@ -732,7 +723,7 @@ class PlansSpec extends SparkSpec {
         s"kcenter argmax regressed to a window rank:\n$kc")
     }
     // ...and the terminal trace must never rank through a window.
-    scopedPlan(graft.operators.LlmSim.kcenterBody(spark, sf)) { kc =>
+    bodyPlan(graft.operators.LlmSim.kcenterBody(spark, sf)) { kc =>
       assert(!kc.contains("windowspecdefinition"),
         s"sample_kcenter regressed to a window rank:\n$kc")
     }
@@ -842,10 +833,8 @@ class PlansSpec extends SparkSpec {
     assert(!hl.contains("CartesianProduct"),
       s"evt_abtest_hl planned a shuffled cartesian (gated sides must broadcast):\n$hl")
     // embed_abtt: the Gram self-join partial-aggs to d² rows; the
-    // per-dim sums and count broadcast; no window anywhere. Locked on
-    // the un-checkpointed body (the scopedPersist terminal collapses
-    // to an RDD scan).
-    scopedPlan(graft.operators.LlmSim.abttBody(spark, sf)) { abtt =>
+    // per-dim sums and count broadcast; no window anywhere.
+    bodyPlan(graft.operators.LlmSim.abttBody(spark, sf)) { abtt =>
       assert(abtt.contains("partial_"),
         s"embed_abtt lost its partial aggregation:\n$abtt")
       assert(abtt.toLowerCase.contains("broadcast"),
@@ -856,20 +845,16 @@ class PlansSpec extends SparkSpec {
     // multimodal_ahash_dedup (r15, banded): near-pair candidates
     // come from the (band, value) EQUI-join over the exploded 16-bit
     // bands — never a cartesian or a nested-loop pairing; no window.
-    // Locked on the un-checkpointed banded frame (the scopedPersist
-    // terminal collapses to an RDD scan).
-    val ahScope = new graft.operators.PersistScope
-    try {
-      val ah = treeString(graft.operators.LlmSim.ahashBandedNear(
-        graft.operators.LlmSim.ahashHashes(spark, sf)))
-      assert(ah.contains("SortMergeJoin") || ah.contains("BroadcastHashJoin"),
-        s"ahash banded census lost its equi-join:\n$ah")
-      assert(!ah.contains("CartesianProduct") &&
-        !ah.contains("BroadcastNestedLoopJoin"),
-        s"ahash banded census degenerated to a pairing join:\n$ah")
-      assert(!ah.contains("windowspecdefinition"),
-        s"ahash banded census grew a window:\n$ah")
-    } finally ahScope.release()
+    // Locked on the banded frame over the uncut hashes.
+    val ah = treeString(graft.operators.LlmSim.ahashBandedNear(
+      graft.operators.LlmSim.ahashHashes(spark, sf)))
+    assert(ah.contains("SortMergeJoin") || ah.contains("BroadcastHashJoin"),
+      s"ahash banded census lost its equi-join:\n$ah")
+    assert(!ah.contains("CartesianProduct") &&
+      !ah.contains("BroadcastNestedLoopJoin"),
+      s"ahash banded census degenerated to a pairing join:\n$ah")
+    assert(!ah.contains("windowspecdefinition"),
+      s"ahash banded census grew a window:\n$ah")
   }
 
   test("round-10 fourth-batch operators keep their scale shapes") {
@@ -903,7 +888,7 @@ class PlansSpec extends SparkSpec {
     // sim_ivf_routing_depth: the centroid rank window is per-query
     // (vec_id) and the truth set broadcasts; locked on the
     // un-checkpointed body.
-    scopedPlan(graft.operators.LlmSim.routingDepthBody(spark, sf)) { rd =>
+    bodyPlan(graft.operators.LlmSim.routingDepthBody(spark, sf)) { rd =>
       val rw = rd.linesIterator
         .filter(_.contains("windowspecdefinition")).toSeq
       assert(rw.nonEmpty, s"routing-depth rank window missing:\n$rd")
@@ -972,13 +957,12 @@ class PlansSpec extends SparkSpec {
     // the default threshold the checkpointed, accurately sized frame
     // broadcasts at graded scale, so the fast path is intact.
     import org.apache.spark.sql.functions._
-    val scope = new graft.operators.PersistScope
     try {
-      val (_, assign) = graft.operators.LlmSim.ivfTrain(spark, sf, scope)
+      val (_, assign) = graft.operators.LlmSim.ivfTrain(spark, sf)
       val members = assign.select(col("vec_id"), col("cell"), col("embedding"))
         .withColumn("snrm",
           graft.functions.GraftFunctions.vecNorm(col("embedding")))
-      val cents = scope.cut(members.groupBy("cell")
+      val cents = GraftBridge.checkpoint(members.groupBy("cell")
         .agg(min_by(col("embedding"), col("vec_id")).as("seed"))
         .select(col("cell"), lit(1L).as("sub"),
           transform(col("seed"), _.cast("double")).as("sc_emb")))
@@ -992,10 +976,7 @@ class PlansSpec extends SparkSpec {
       val auto = treeString(graft.operators.LlmSim.subAssign(members, cents))
       assert(auto.contains("BroadcastHashJoin"),
         s"sub-assign stopped broadcasting the tiny centroid frame:\n$auto")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      scope.release()
-    }
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("text_bpe_merges: round argmax is TakeOrderedAndProject over a partial-agged census") {
@@ -1062,29 +1043,24 @@ class PlansSpec extends SparkSpec {
   }
 
   test("graph_stress_centrality: node rollup partial-aggregates; top-20 never global-sorts") {
-    // The graded query's terminal result is checkpoint-truncated
-    // (scopedPersist), so rebuild the terminal stage on the
-    // package-private pre-top-k frame — the PersistScope discipline
-    // for plan tests. If TakeOrderedAndProject disappears the query
+    // Rebuild the terminal stage on the package-private pre-top-k
+    // frame. If TakeOrderedAndProject disappears the query
     // global-sorts every interior node; a window here would be a
     // whole-graph rank; the node rollup must map-side combine.
     import org.apache.spark.sql.functions.{col, countDistinct, sum}
-    val scope = new graft.operators.PersistScope
-    try {
-      val df = graft.operators.Graph.stressContrib(spark, sf, scope)
-        .filter(col("st") > 0)
-        .groupBy("node")
-        .agg(countDistinct("src").as("n_src"), sum("st").as("stress"))
-        .orderBy(col("stress").desc, col("node"))
-        .limit(20)
-      val plan = treeString(df)
-      assert(plan.contains("TakeOrderedAndProject"),
-        s"stress top-20 lost its two-phase top-k shape:\n$plan")
-      assert(!plan.contains("windowspecdefinition"),
-        s"stress rollup grew a window:\n$plan")
-      assert(plan.contains("partial_"),
-        s"stress node rollup lost its map-side combine:\n$plan")
-    } finally scope.release()
+    val df = graft.operators.Graph.stressContrib(spark, sf)
+      .filter(col("st") > 0)
+      .groupBy("node")
+      .agg(countDistinct("src").as("n_src"), sum("st").as("stress"))
+      .orderBy(col("stress").desc, col("node"))
+      .limit(20)
+    val plan = treeString(df)
+    assert(plan.contains("TakeOrderedAndProject"),
+      s"stress top-20 lost its two-phase top-k shape:\n$plan")
+    assert(!plan.contains("windowspecdefinition"),
+      s"stress rollup grew a window:\n$plan")
+    assert(plan.contains("partial_"),
+      s"stress node rollup lost its map-side combine:\n$plan")
   }
 
   test("text_burstiness: both censuses partial-aggregate; doc count broadcasts in") {

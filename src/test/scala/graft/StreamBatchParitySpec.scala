@@ -405,13 +405,10 @@ class StreamBatchParitySpec extends SparkSpec {
     // integer counters make the comparison bitwise, no tolerance.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val scope = new graft.operators.PersistScope
-    val vocabRows = try {
-      val (_, syms) = graft.operators.LlmText.bpeChain(spark, sf)(scope)
-      syms.select(col("word"), size(col("syms")).cast("long").as("n_p"),
-          length(col("word")).cast("long").as("n_c"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    } finally scope.release()
+    val (_, syms) = graft.operators.LlmText.bpeChain(spark, sf)
+    val vocabRows = syms.select(col("word"), size(col("syms")).cast("long").as("n_p"),
+        length(col("word")).cast("long").as("n_c"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val vocab = vocabRows.toDF("word", "n_p", "n_c")
     val docs = Tables.documents(spark, sf).select("doc_id", "lang", "text")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
@@ -648,52 +645,49 @@ class StreamBatchParitySpec extends SparkSpec {
     // exercise the per-bucket state across micro-batch boundaries.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val scope = new graft.operators.PersistScope
+    val notNew = !(col("vec_id") % 7 === 3)
+    val cents = graft.operators.LlmSim.incEmbCents(spark, sf)
+    val assign = graft.operators.LlmSim.incEmbAssign(spark, sf)
+    val subC = graft.operators.LlmSim.subCentroids(assign, notNew)
+    val sub = graft.operators.LlmSim.subSplit(assign, notNew)
+    // Production-form index handoff (r12 verdict #5): the centroid
+    // FRAMES go in as-is (semanticIngest torrent-broadcasts them);
+    // the member buckets go in as a static FRAME for the
+    // stream-static join, with o_iv put on the ⌊v·1e6⌋ grid by the
+    // same floor arithmetic the batch operator uses.
+    val oldMembers = assign.join(sub.select("vec_id", "sub"), "vec_id")
+      .filter(notNew)
+      .select(col("cell"), col("sub"),
+        transform(col("embedding"),
+          f => floor(f.cast("double") * lit(1e6)).cast("double")).as("o_iv"))
+    val arrivals = Tables.embeddings(spark, sf)
+      .filter(col("vec_id") % 7 === 3)
+      .select(col("vec_id"), col("label").cast("long").as("label"),
+        col("embedding"))
+      .collect().map(r => graft.streaming.VecArrival(
+        r.getLong(0), r.getLong(1), r.getSeq[Float](2).toArray)).toSeq
+    val in = MemoryStream[graft.streaming.VecArrival]
+    val q = Streams.semanticIngest(in.toDS(), cents, subC, oldMembers)
+      .writeStream.format("memory").queryName("par_semantic")
+      .outputMode("append").start()
     try {
-      val notNew = !(col("vec_id") % 7 === 3)
-      val cents = graft.operators.LlmSim.incEmbCents(spark, sf, scope)
-      val assign = graft.operators.LlmSim.incEmbAssign(spark, sf, scope)
-      val subC = graft.operators.LlmSim.subCentroids(assign, notNew, scope)
-      val sub = graft.operators.LlmSim.subSplit(assign, notNew, scope)
-      // Production-form index handoff (r12 verdict #5): the centroid
-      // FRAMES go in as-is (semanticIngest torrent-broadcasts them);
-      // the member buckets go in as a static FRAME for the
-      // stream-static join, with o_iv put on the ⌊v·1e6⌋ grid by the
-      // same floor arithmetic the batch operator uses.
-      val oldMembers = assign.join(sub.select("vec_id", "sub"), "vec_id")
-        .filter(notNew)
-        .select(col("cell"), col("sub"),
-          transform(col("embedding"),
-            f => floor(f.cast("double") * lit(1e6)).cast("double")).as("o_iv"))
-      val arrivals = Tables.embeddings(spark, sf)
-        .filter(col("vec_id") % 7 === 3)
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          col("embedding"))
-        .collect().map(r => graft.streaming.VecArrival(
-          r.getLong(0), r.getLong(1), r.getSeq[Float](2).toArray)).toSeq
-      val in = MemoryStream[graft.streaming.VecArrival]
-      val q = Streams.semanticIngest(in.toDS(), cents, subC, oldMembers)
-        .writeStream.format("memory").queryName("par_semantic")
-        .outputMode("append").start()
-      try {
-        val (first, second) = arrivals.splitAt(arrivals.length / 2)
-        in.addData(first); q.processAllAvailable()
-        in.addData(second); q.processAllAvailable()
-      } finally q.stop()
-      val dec = spark.table("par_semantic")
-      assert(dec.count() === arrivals.length,
-        "every arriving vector must receive exactly one decision")
-      val streamLedger = dec.groupBy("label").agg(
-          count(lit(1)).as("n_new"),
-          sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val batch = SparkEntry.queries("dedup_incremental_embedding")(spark, sf)
-        .select(col("label"), col("n_new"), col("n_dup_old")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(streamLedger === batch,
-        s"semantic ingest parity broke: stream-only=${streamLedger -- batch}, " +
-          s"batch-only=${batch -- streamLedger}")
-    } finally scope.release()
+      val (first, second) = arrivals.splitAt(arrivals.length / 2)
+      in.addData(first); q.processAllAvailable()
+      in.addData(second); q.processAllAvailable()
+    } finally q.stop()
+    val dec = spark.table("par_semantic")
+    assert(dec.count() === arrivals.length,
+      "every arriving vector must receive exactly one decision")
+    val streamLedger = dec.groupBy("label").agg(
+        count(lit(1)).as("n_new"),
+        sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val batch = SparkEntry.queries("dedup_incremental_embedding")(spark, sf)
+      .select(col("label"), col("n_new"), col("n_dup_old")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(streamLedger === batch,
+      s"semantic ingest parity broke: stream-only=${streamLedger -- batch}, " +
+        s"batch-only=${batch -- streamLedger}")
   }
 
   test("semantic ingest survives a zero-norm arrival (NaN cosine never kills the stream)") {
