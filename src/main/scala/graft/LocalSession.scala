@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local SparkSession of the command-line mains (Bench, Audit,
-  * Verify, PlanDump, StressGen): `local[n]` with n shuffle partitions,
+/** The local SparkSession of the command-line mains (Bench, Verify,
+  * PlanDump, StressGen): `local[n]` with n shuffle partitions,
   * UTC session time, no UI, WARN logging, and a generated-code cache
   * that holds a whole pass. n is SPARK_GRAFT_CPUS when set, else the
   * caller's `defaultCpus`.

@@ -121,6 +121,21 @@ object Tables {
     }
   }
 
+  /** Runs `body` over the catalog layout that SPARK_GRAFT_BUCKETED asks
+    * for, telling it which one. With `true`, the hash-clustered layout
+    * of `dir` is materialized and switched on first, and switched off
+    * and dropped afterwards, also when `body` throws. */
+  def withRequestedLayout[T](s: SparkSession, dir: String)(body: Boolean => T): T =
+    if (!sys.env.get("SPARK_GRAFT_BUCKETED").contains("true")) body(false)
+    else try {
+      materializeBucketed(s, dir)
+      s.conf.set(BucketedConf, "true")
+      body(true)
+    } finally {
+      s.conf.set(BucketedConf, "false")
+      dropBucketed(s, dir)
+    }
+
   /** Drop every bucketed layout materialized for `dir` — including
     * stale generations whose content fingerprint no longer matches the
     * current source files (a name-only drop would orphan those). */

@@ -12,25 +12,18 @@ object Verify {
       filters.isEmpty || filters.exists(name.contains)
     val spark = LocalSession(4)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_BUCKETED=true: materialize the hash-clustered catalog
-    // layout for sfDir and run the ENTIRE matrix over it — the DuckDB
-    // oracle still reads the loose parquet, so a green run proves every
-    // graded query is layout-independent end-to-end (tools/qa.sh has a
-    // leg for this).
-    val bucketed = sys.env.get("SPARK_GRAFT_BUCKETED").contains("true")
-    if (bucketed) {
-      Tables.materializeBucketed(spark, sfDir)
-      spark.conf.set(Tables.BucketedConf, "true")
-    }
-    try SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    // SPARK_GRAFT_BUCKETED=true runs the ENTIRE matrix over the
+    // hash-clustered catalog layout — the DuckDB oracle still reads the
+    // loose parquet, so a green run proves every graded query is
+    // layout-independent end-to-end (tools/qa.sh has a leg for this).
+    Tables.withRequestedLayout(spark, sfDir) { _ =>
+      SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
-    } finally if (bucketed) {
-      spark.conf.set(Tables.BucketedConf, "false")
-      Tables.dropBucketed(spark, sfDir)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -140,15 +140,6 @@ object LlmSim extends OpModule {
       .select(col("vec_id"), col("cell"), col("embedding"), col("nrm"))
   }
 
-  /** IVF training: C=16 coarse centroids (deterministic lowest-id
-    * init + 2 integer-exact Lloyd iterations via the shared
-    * kmAssign/kmUpdate machinery). The final centroid table AND the
-    * full-corpus assignment are cut (r5 verdict #4 / PLANS.md
-    * unrolled-loop rule): every downstream
-    * reference — the probe's query scoring, the cell join, a stats
-    * rollup — would otherwise re-derive the full embedding scan +
-    * assignment lineage per reference. Returns (trained centroids,
-    * assignment incl. embedding and norm). */
   // ---- session-level trained-index memo (r16 verdict #4/#6) ---------
 
   /** Cross-QUERY memo of trained-index frames (see [[SessionMemo]]
@@ -181,6 +172,15 @@ object LlmSim extends OpModule {
       (GraftBridge.checkpoint(kmUpdate(e, a2)), a2)
     }
 
+  /** IVF training: C=16 coarse centroids (deterministic lowest-id
+    * init + 2 integer-exact Lloyd iterations via the shared
+    * kmAssign/kmUpdate machinery). The final centroid table AND the
+    * full-corpus assignment are cut (r5 verdict #4 / PLANS.md
+    * unrolled-loop rule): every downstream
+    * reference — the probe's query scoring, the cell join, a stats
+    * rollup — would otherwise re-derive the full embedding scan +
+    * assignment lineage per reference. Returns (trained centroids,
+    * assignment incl. embedding and norm). */
   private def ivfTrainBuild(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val C = 16
     val e = Tables.embeddings(s, d).select(col("vec_id"),
@@ -414,17 +414,6 @@ object LlmSim extends OpModule {
       .select(col("vec_id"), col("cell"), col("m.sb").as("sub"))
   }
 
-  /** PQ asymmetric-distance kNN (ADC) — the third ANN scale path
-    * beside LSH buckets and IVF cells: the database lives as |V|·M
-    * CODE rows (8 small ints per vector — the compressed index), and
-    * each query precomputes a |Q|·M·K distance table that BROADCASTS.
-    * Scoring is a map-side join codes⋈dtab + a partial agg summing M
-    * per-subspace terms — the full float vectors are never touched at
-    * query time. All distances are exact integer sums of FLOOR(v·1e6)
-    * squares vs the TRAINED codebook (pqCodebook), so ranks are
-    * engine-identical. dists feeds BOTH the database codes and the
-    * query distance table — the session memo's checkpoint, so the
-    * trained-codebook lineage executes once, not twice (r5). */
   /** IVF×PQ composed (r7) — the production ANN index shape (FAISS's
     * IVFPQ): the trained IVF coarse quantizer GATES which database
     * vectors are scored, PQ ADC does the scoring on compressed codes.
@@ -473,28 +462,6 @@ object LlmSim extends OpModule {
   }
 
 
-  /** Rank-aware retrieval eval (r11): nDCG@5 of every ANN serving
-    * path — LSH buckets, IVF (nprobe=4), PQ ADC, 1-bit Hamming —
-    * against the brute cosine universe the recall gates already use.
-    * Recall@k says "found"; nDCG says "found in the right ORDER" —
-    * the readout a retrieval stack actually ships. Graded relevance =
-    * tiers of the round-4 cosine (>=0.3 -> 3, >=0.2 -> 2, >=0.1 -> 1
-    * — fitted to the synthetic embedding geometry, where brute top-1
-    * cosines run 0.32-0.49: measured pyramid at sf0.01 is 43 / 243 /
-    * 815 tiered pairs of 4,990, no query degenerates to an all-zero
-    * universe), gains 2^tier − 1 as exact integers, rank discounts
-    * 1/log₂(rk+1) as PINNED double literals rendered into both
-    * engines (libm log differs in the last ulp; a literal cannot —
-    * the evt_decay_score discipline). Each DCG pivots its <=5 ranks
-    * to columns so the discounted sum is ONE fixed-order double
-    * expression from exact integer gains — engine-identical; nDCG
-    * divides by the ideal ordering's DCG over the full gated
-    * universe. Scale shape: the tier universe is the sim_knn gated
-    * 10·|V| frame, cut ONCE and joined by all four paths (the
-    * truth-set discipline); each path contributes its own graded
-    * plan; everything after is |paths|·|Q| rows. A shorter retrieved
-    * list (PQ serves top-3) simply earns 0 at the missing ranks —
-    * the standard @k convention. */
   /** Tiered-relevance universe over the gated Q=10 query set (the
     * sim_knn gated 10·|V| frame), cut once and joined by every
     * consumer — shared by [[ndcgBody]] and [[rrfBody]]. */
@@ -580,6 +547,28 @@ object LlmSim extends OpModule {
         GraftBridge.checkpoint(annRetrieved(s, d)))
     }
 
+  /** Rank-aware retrieval eval (r11): nDCG@5 of every ANN serving
+    * path — LSH buckets, IVF (nprobe=4), PQ ADC, 1-bit Hamming —
+    * against the brute cosine universe the recall gates already use.
+    * Recall@k says "found"; nDCG says "found in the right ORDER" —
+    * the readout a retrieval stack actually ships. Graded relevance =
+    * tiers of the round-4 cosine (>=0.3 -> 3, >=0.2 -> 2, >=0.1 -> 1
+    * — fitted to the synthetic embedding geometry, where brute top-1
+    * cosines run 0.32-0.49: measured pyramid at sf0.01 is 43 / 243 /
+    * 815 tiered pairs of 4,990, no query degenerates to an all-zero
+    * universe), gains 2^tier − 1 as exact integers, rank discounts
+    * 1/log₂(rk+1) as PINNED double literals rendered into both
+    * engines (libm log differs in the last ulp; a literal cannot —
+    * the evt_decay_score discipline). Each DCG pivots its <=5 ranks
+    * to columns so the discounted sum is ONE fixed-order double
+    * expression from exact integer gains — engine-identical; nDCG
+    * divides by the ideal ordering's DCG over the full gated
+    * universe. Scale shape: the tier universe is the sim_knn gated
+    * 10·|V| frame, cut ONCE and joined by all four paths (the
+    * truth-set discipline); each path contributes its own graded
+    * plan; everything after is |paths|·|Q| rows. A shorter retrieved
+    * list (PQ serves top-3) simply earns 0 at the missing ranks —
+    * the standard @k convention. */
   private[graft] def ndcgBody(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, d)
@@ -664,19 +653,20 @@ object LlmSim extends OpModule {
       .orderBy("q_id")
   }
 
+  /** PQ asymmetric-distance kNN (ADC) — the third ANN scale path
+    * beside LSH buckets and IVF cells: the database lives as |V|·M
+    * CODE rows (8 small ints per vector — the compressed index), and
+    * each query precomputes a |Q|·M·K distance table that BROADCASTS.
+    * Scoring is a map-side join codes⋈dtab + a partial agg summing M
+    * per-subspace terms — the full float vectors are never touched at
+    * query time. All distances are exact integer sums of FLOOR(v·1e6)
+    * squares vs the TRAINED codebook (pqCodebook), so ranks are
+    * engine-identical. dists feeds BOTH the database codes and the
+    * query distance table — the session memo's checkpoint, so the
+    * trained-codebook lineage executes once, not twice (r5). */
   private[graft] def knnPqBody(s: SparkSession, d: String): DataFrame =
     knnPqFrom(pqDistsShared(s, d))
 
-  /** Hamming-path quality gate (r9): per-query recall@5 of the
-    * 1-bit sign-quantized search against the exact cosine truth —
-    * completes the per-path recall family (LSH: sim_recall_eval,
-    * IVF: sim_recall_ivf, PQ: sim_recall_pq; every ANN serving
-    * path in the module now ships with its accuracy eval). The
-    * eval that prices the 64×-compression trade before a binary
-    * index ships. Composes the two graded kNN operators; truth is
-    * the memoized cut, one dimension-sized left join + agg. Body
-    * factored out for PlansSpec plan locks.
-    */
   /** Session-memoized CUT of the brute-truth top-5 pair set
     * (sim_knn's (q_id, n_id) projection) — every recall gate
     * left-joins this same frame (r16, see [[SessionMemo]]). */
@@ -692,6 +682,16 @@ object LlmSim extends OpModule {
     SessionMemo.memo(s, d, "knnGraph")(
       GraftBridge.checkpoint(knnGraphBody(s, d)))
 
+  /** Hamming-path quality gate (r9): per-query recall@5 of the
+    * 1-bit sign-quantized search against the exact cosine truth —
+    * completes the per-path recall family (LSH: sim_recall_eval,
+    * IVF: sim_recall_ivf, PQ: sim_recall_pq; every ANN serving
+    * path in the module now ships with its accuracy eval). The
+    * eval that prices the 64×-compression trade before a binary
+    * index ships. Composes the two graded kNN operators; truth is
+    * the memoized cut, one dimension-sized left join + agg. Body
+    * factored out for PlansSpec plan locks.
+    */
   private[graft] def recallHammingBody(s: SparkSession, d: String): DataFrame = {
     val truth = knnTruthShared(s, d)
     val ham = queries("sim_knn_hamming")(s, d)
@@ -704,6 +704,19 @@ object LlmSim extends OpModule {
       .select(col("q_id"), col("n_truth"), col("n_hits"),
         round(col("n_hits").cast("double") / col("n_truth"), 4).as("recall"))
       .orderBy("q_id")
+  }
+
+  /** Per-table band width of the graph-ANN LSH build (r17): the
+    * smallest w in [8, 16] with 2^w·16 ≥ nV — mean bucket occupancy
+    * stays ≤ 16 so candidate volume Σ|bucket|² stays O(|V|). The
+    * INTEGER threshold chain (w = 8 + |{k ∈ 8..15 : nV > 16·2^k}|)
+    * is mirrored term-for-term by the oracle's [[GraphBucketsSql]]
+    * `wv` CTE — no float log₂, which could ceil differently across
+    * engines at exact powers of two. */
+  private[graft] def graphBandBits(nV: Long): Int = {
+    var w = 8
+    while (w < 16 && nV > (16L << w)) w += 1
+    w
   }
 
   /** Graph-ANN (NSW-lite) greedy beam search (r15 verdict #2) — the
@@ -739,19 +752,6 @@ object LlmSim extends OpModule {
     * rounds cut per superstep (the graph-kernel discipline). Recall
     * vs the brute truth is graded by [[recallGraphBody]];
     * session-memoized via [[knnGraphShared]]. */
-  /** Per-table band width of the graph-ANN LSH build (r17): the
-    * smallest w in [8, 16] with 2^w·16 ≥ nV — mean bucket occupancy
-    * stays ≤ 16 so candidate volume Σ|bucket|² stays O(|V|). The
-    * INTEGER threshold chain (w = 8 + |{k ∈ 8..15 : nV > 16·2^k}|)
-    * is mirrored term-for-term by the oracle's [[GraphBucketsSql]]
-    * `wv` CTE — no float log₂, which could ceil differently across
-    * engines at exact powers of two. */
-  private[graft] def graphBandBits(nV: Long): Int = {
-    var w = 8
-    while (w < 16 && nV > (16L << w)) w += 1
-    w
-  }
-
   private[graft] def knnGraphBody(s: SparkSession, d: String): DataFrame = {
     // TWO independent w-bit hyperplane tables from one 2w-bit hash
     // (bits 0..w−1 / w..2w−1 — disjoint hyperplane sets, so the
@@ -978,13 +978,6 @@ object LlmSim extends OpModule {
       .orderBy("q_id")
   }
 
-  /** Coarse train + assign of the incremental-embedding index (C=8,
-    * init = the 8 lowest old ids, 2 Lloyd rounds over OLD vectors
-    * only — the stored-index contract) — factored out of
-    * [[incEmbBody]] so the per-graded-SF cap tripwire
-    * (InvariantsSpec) audits the same cells the graded operator
-    * pairs on. Returns (vec_id, cell, embedding, nrm) over the FULL
-    * corpus. */
   /** The trained COARSE centroids of the incremental-embedding index
     * (C=8, init = the 8 lowest old ids, 2 Lloyd rounds over OLD
     * vectors only). */
@@ -1003,6 +996,13 @@ object LlmSim extends OpModule {
     GraftBridge.checkpoint(kmUpdate(old, kmAssign(old, cents)))
   }
 
+  /** Coarse train + assign of the incremental-embedding index (C=8,
+    * init = the 8 lowest old ids, 2 Lloyd rounds over OLD vectors
+    * only — the stored-index contract) — factored out of
+    * [[incEmbBody]] so the per-graded-SF cap tripwire
+    * (InvariantsSpec) audits the same cells the graded operator
+    * pairs on. Returns (vec_id, cell, embedding, nrm) over the FULL
+    * corpus. */
   private[graft] def incEmbAssign(s: SparkSession, d: String): DataFrame = {
     val full = Tables.embeddings(s, d).select(col("vec_id"),
       col("embedding"), norm(col("embedding")).as("nrm"))

@@ -291,25 +291,6 @@ object LlmText extends OpModule {
   private[graft] def bpeTop(pairs: DataFrame): DataFrame =
     pairs.orderBy(col("pair_count").desc, col("lhs"), col("rhs")).limit(1)
 
-  /** BPE pair-merge learning census (r13) — the tokenizer-TRAINING
-    * staple beside the token_bpe / fertility evals: learn the first
-    * [[BpeRounds]] byte-pair merges over the corpus and emit one row
-    * per round (the merged pair, its exact pair count at merge time,
-    * and the symbol-vocabulary size after the merge). Method:
-    * Sennrich, Haddow & Birch 2016 (arXiv:1508.07909) — symbol
-    * vocabularies start as characters; each round merges the most
-    * frequent adjacent pair, applied greedily left-to-right ("aaaa"
-    * under (a,a) becomes [aa, aa], the BPE convention).
-    *
-    * Scale shape: the ONE corpus-scale aggregation is the word census
-    * (map-side-combining groupBy straight to |word-vocab| rows);
-    * every merge round then works on the dimension-sized word table —
-    * pair census as a partial-agged explode, argmax via [[bpeTop]],
-    * merge application as a per-row array fold (interpreted HOF, fine
-    * at dimension size — the corpus never re-enters). All-integer
-    * counts; rounds are lineage-cut (the unrolled-kernel discipline).
-    * The DuckDB twin unrolls the same rounds with the fold as a
-    * WITH RECURSIVE position walk (the r8 fold-mutation discipline). */
   /** The shared merge-learning chain: word census → character
     * symbolization → [[BpeRounds]] unrolled merge rounds. Returns the
     * per-round ledger frames AND the final word → symbol-array table,
@@ -349,6 +330,25 @@ object LlmText extends OpModule {
     (rounds, syms)
   }
 
+  /** BPE pair-merge learning census (r13) — the tokenizer-TRAINING
+    * staple beside the token_bpe / fertility evals: learn the first
+    * [[BpeRounds]] byte-pair merges over the corpus and emit one row
+    * per round (the merged pair, its exact pair count at merge time,
+    * and the symbol-vocabulary size after the merge). Method:
+    * Sennrich, Haddow & Birch 2016 (arXiv:1508.07909) — symbol
+    * vocabularies start as characters; each round merges the most
+    * frequent adjacent pair, applied greedily left-to-right ("aaaa"
+    * under (a,a) becomes [aa, aa], the BPE convention).
+    *
+    * Scale shape: the ONE corpus-scale aggregation is the word census
+    * (map-side-combining groupBy straight to |word-vocab| rows);
+    * every merge round then works on the dimension-sized word table —
+    * pair census as a partial-agged explode, argmax via [[bpeTop]],
+    * merge application as a per-row array fold (interpreted HOF, fine
+    * at dimension size — the corpus never re-enters). All-integer
+    * counts; rounds are lineage-cut (the unrolled-kernel discipline).
+    * The DuckDB twin unrolls the same rounds with the fold as a
+    * WITH RECURSIVE position walk (the r8 fold-mutation discipline). */
   private[graft] def bpeMergesBody(s: SparkSession, d: String): DataFrame = {
     val (rounds, _) = bpeChain(s, d)
     rounds.reduce(_.unionByName(_)).orderBy("round")

@@ -395,12 +395,6 @@ object Streams {
         min("hd").as("min_hd"))
   }
 
-  /** Cross-event view→click→purchase funnel as a per-user state
-    * machine — twin of `evt_funnel`'s strict-ordering semantics. Emits
-    * one FunnelHit the first time a user completes the chain. State is
-    * two µs timestamps per active user; with an event-time timeout
-    * (production) or the stream's end (tests) it is reclaimed.
-    */
   /** Full-precision µs since epoch: Timestamp.getTime is ms-truncated,
     * so sub-ms ordering needs the nanos field folded back in (matches
     * the batch twin's unix_micros semantics). */
@@ -517,17 +511,6 @@ object Streams {
       }
   }
 
-  /** Per-user cadence tracking — streaming twin of the batch
-    * `evt_bot_detect` screen. State is O(1) per user (last event-time
-    * µs + integer-second gap moments n/Σg/Σg²), so the regularity
-    * signal ships with the stream instead of waiting for the batch
-    * audit. The batch twin judges spread by exact percentiles — a
-    * sort streaming can't afford — so this surrogate flags on the
-    * coefficient of variation (stddev/mean ≤ 0.5 with ≥ 5 gaps); both
-    * agree on the archetypes (fixed-interval bot → spread ≈ cv ≈ 0).
-    * Update-mode emission per micro-batch; in production add an
-    * event-time timeout to reap idle users.
-    */
   /** Per-user behavioral profile — streaming twin of the graded
     * `evt_behavior_cos_hist`'s user-side rollup. State is the
     * per-user type-count map (O(|types|)); each micro-batch folds its
@@ -619,6 +602,17 @@ object Streams {
       }
   }
 
+  /** Per-user cadence tracking — streaming twin of the batch
+    * `evt_bot_detect` screen. State is O(1) per user (last event-time
+    * µs + integer-second gap moments n/Σg/Σg²), so the regularity
+    * signal ships with the stream instead of waiting for the batch
+    * audit. The batch twin judges spread by exact percentiles — a
+    * sort streaming can't afford — so this surrogate flags on the
+    * coefficient of variation (stddev/mean ≤ 0.5 with ≥ 5 gaps); both
+    * agree on the archetypes (fixed-interval bot → spread ≈ cv ≈ 0).
+    * Update-mode emission per micro-batch; in production add an
+    * event-time timeout to reap idle users.
+    */
   def cadenceStats(events: Dataset[Event]): Dataset[CadenceRow] = {
     implicit val stateEnc: Encoder[CadenceState] = Encoders.product[CadenceState]
     implicit val outEnc: Encoder[CadenceRow] = Encoders.product[CadenceRow]
@@ -643,6 +637,12 @@ object Streams {
       }
   }
 
+  /** Cross-event view→click→purchase funnel as a per-user state
+    * machine — twin of `evt_funnel`'s strict-ordering semantics. Emits
+    * one FunnelHit the first time a user completes the chain. State is
+    * two µs timestamps per active user; with an event-time timeout
+    * (production) or the stream's end (tests) it is reclaimed.
+    */
   def funnelHits(events: Dataset[Event]): Dataset[FunnelHit] = {
     implicit val stateEnc: Encoder[FunnelState] = Encoders.product[FunnelState]
     implicit val outEnc: Encoder[FunnelHit] = Encoders.product[FunnelHit]

@@ -112,8 +112,8 @@ object GraftBridge {
     * above it — planned over ONE unshuffled partition
     * (`Repartition(1, shuffle = false)`, a CoalesceExec reporting
     * SinglePartition) when `df`'s inputs are small: the
-    * `stats.sizeInBytes` of the analyzed plan's leaves (subquery plans
-    * included) sum to at most the session's
+    * `stats.sizeInBytes` of the analyzed plan's distinct leaves
+    * (subquery plans included) sum to at most the session's
     * `spark.sql.autoBroadcastJoinThreshold`. `SparkEntry.queries`
     * applies it to every graded result. A global sort otherwise plans
     * a range exchange, whose RangePartitioner runs a sampling job that
@@ -128,6 +128,9 @@ object GraftBridge {
     * A file scan's leaf reports its compressed file bytes (before any
     * filter), a checkpoint leaf its stored bytes; a reference to a SQL
     * `WITH` relation is counted through the leaves of its definition.
+    * Leaves are told apart by their canonical form, so an input read
+    * more than once (a self-join, a checkpoint read in two branches)
+    * counts once.
     * The sum bounds neither the last stage's CPU cost nor the rows the
     * sort gets (a join can expand them), and the threshold bounds a
     * relation sent to every executor, not a stage's work: the cut-off
@@ -147,8 +150,8 @@ object GraftBridge {
     val bound = ds.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     def inputBytes = ds.logicalPlan
       .collectWithSubqueries {
-        case l: logical.LeafNode if !l.isInstanceOf[logical.CTERelationRef] => l.stats.sizeInBytes
-      }.sum
+        case l: logical.LeafNode if !l.isInstanceOf[logical.CTERelationRef] => l
+      }.distinctBy(_.canonicalized).map(_.stats.sizeInBytes).sum
     def pin(p: logical.LogicalPlan): Option[logical.LogicalPlan] = p match {
       case s: logical.Sort if s.global =>
         Some(s.copy(child = logical.Repartition(1, shuffle = false, s.child)))

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, JobProbe}
+import org.apache.spark.QueryProbe
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.execution.RDDScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -63,8 +64,8 @@ class CheckpointSpec extends SparkSpec {
       val out = GraftBridge.onePartitionSortIfSmall(limit.fold(sorted)(sorted.limit))
       val plan = out.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"limit=$limit:\n$plan")
-      val (got, jobs) = JobProbe.count(spark)(out.collect())
-      assert(jobs === 1, s"limit=$limit: the terminal sort ran $jobs jobs")
+      val (got, stats) = QueryProbe.measure(spark)(out.collect())
+      assert(stats.jobs === 1, s"limit=$limit: the terminal sort ran ${stats.jobs} jobs")
       assert(got.map(_.getLong(0)).toSeq === limit.fold(rows)(rows.take))
     }
   }
@@ -72,11 +73,11 @@ class CheckpointSpec extends SparkSpec {
   test("reading the same table twice launches one footer job") {
     val dir = Fixtures.tempDir()
     Fixtures.lineitem(spark, dir, Seq(1L -> 2L, 3L -> 4L))
-    val (_, jobs) = JobProbe.count(spark) {
+    val (_, stats) = QueryProbe.measure(spark) {
       Tables.lineitem(spark, dir)
       Tables.lineitem(spark, dir)
     }
-    assert(jobs === 1)
+    assert(stats.jobs === 1)
     assert(Tables.lineitem(spark, dir).count() === 2L)
   }
 

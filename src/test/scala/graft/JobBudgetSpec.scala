@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.JobProbe
-import graft.operators.SessionMemo
-
 /** Spark-job budgets of the benchmark's queries: each of them is bound
   * by the per-job scheduling floor, not by its data, so a job that
   * moves no data creeping back is a slowdown the suite's results
@@ -12,18 +9,13 @@ import graft.operators.SessionMemo
 class JobBudgetSpec extends SparkSpec {
   private val sf = Fixtures.testdata("0.001")
 
-  /** Runs the settled pass of `budget` and checks every count. */
+  /** Runs the settled pass of `budget` (`Bench.pass`, after one pass
+    * that warms the schema memo and codegen) and checks every count. */
   private def withinBudget(budget: Seq[(String, Int)]): Unit = {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
-    def pass(): Seq[(String, Int)] = {
-      SessionMemo.clear()
-      budget.map { case (name, _) =>
-        name -> JobProbe.count(spark)(SparkEntry.queries(name)(spark, sf)
-          .write.format("noop").mode("overwrite").save())._2
-      }
-    }
-    pass()
-    val got = pass().toMap
+    val names = budget.map(_._1)
+    Bench.pass(spark, sf, names)
+    val got = Bench.pass(spark, sf, names).map(r => r.name -> r.stats.jobs).toMap
     budget.foreach { case (name, max) =>
       assert(got(name) <= max, s"$name ran ${got(name)} jobs, budget $max (all: $got)")
     }

@@ -60,6 +60,29 @@ class TerminalSortSpec extends SparkSpec {
     }
   }
 
+  test("an input read twice counts once against the threshold") {
+    val dir = Fixtures.tempDir()
+    Fixtures.write(spark.range(0, 200).select((col("id") % 50).as("k"), col("id").as("v")),
+      dir, "t")
+    val parquet = spark.read.parquet(s"$dir/t.parquet")
+    val cut = GraftBridge.checkpoint(spark.range(0, 200, 1, 4)
+      .select((col("id") % 50).as("k"), col("id").as("v")))
+    for ((t, kind) <- Seq(parquet -> "parquet", cut -> "checkpoint")) {
+      // S <= threshold < 2S: the self-join's two leaves count as one.
+      val size = t.queryExecution.analyzed.stats.sizeInBytes.toLong
+      def selfJoin = GraftBridge.onePartitionSortIfSmall(
+        t.as("a").join(t.as("b"), col("a.k") === col("b.k"))
+          .select(col("a.v").as("av"), col("b.v").as("bv")).orderBy("av", "bv"))
+      val expected = withThreshold("-1")(selfJoin.collect().toSeq)
+      withThreshold((size * 3 / 2).toString) {
+        val df = selfJoin
+        assert(!ranged(df), s"$kind of $size bytes read twice lost its one-partition sort")
+        assert(df.collect().toSeq === expected)
+      }
+      assert(expected.size === 800)
+    }
+  }
+
   test("a threshold of -1 leaves every plan as it is") {
     withThreshold("-1") {
       val df = Tables.orders(spark, sf).orderBy(col("o_orderkey"))

@@ -9,9 +9,34 @@ tables in <sfDir>, sorts columns by name on both sides, and compares
 row-by-row. Mirrors what we know of the driver gate: row order matters
 (queries end in a total-order sort), column names must match, values
 must be (hash-)identical.
+
+DuckDB runs under a memory limit of two thirds of the host's MemTotal
+and at most four threads, spilling to the gitignored .tmp/ at the
+repository root. At its default limit (80% of RAM) one sf0.1 run grew
+past 11 GB and the kernel killed it. Two thirds is what the hungriest
+sf0.01 oracle needs: dedup_semdedup ran out of memory at 7.2 GiB and
+passed at 9.3 GiB. An oracle that still runs out of memory is reported
+as a FAIL like any other error.
 """
-import sys, json, glob, math
+import sys, json, glob, math, os
 import duckdb
+
+SPILL_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", ".tmp")
+THREADS = min(4, os.cpu_count() or 1)
+
+def mem_total_bytes():
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) * 1024
+    raise RuntimeError("no MemTotal in /proc/meminfo")
+
+def connect():
+    con = duckdb.connect()
+    con.sql(f"SET memory_limit = '{mem_total_bytes() * 2 // 3 // 2**20}MB'")
+    con.sql(f"SET threads = {THREADS}")
+    con.sql(f"SET temp_directory = '{os.path.normpath(SPILL_DIR)}'")
+    return con
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -19,7 +44,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     name_filter = sys.argv[3:]
-    con = duckdb.connect()
+    con = connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
