@@ -7,7 +7,8 @@ import graft.operators.SessionMemo
 object Bench {
   /** One query of a pass. `stats` cover its construction and its
     * `noop` write together; `buildS` is the construction alone (0 when
-    * the construction threw). `error` is the class of what it threw. */
+    * the construction threw). `error` is the class of what it threw,
+    * or `ListenerBusTimeout` when its counts may be incomplete. */
   final case class Row(name: String, buildS: Double, stats: QueryStats, error: Option[String])
 
   /** One pass over `names`, in order, each query run through the probe
@@ -35,8 +36,22 @@ object Bench {
           None
         } catch { case e: Throwable => Some(e.getClass.getSimpleName) }
       }
-      Row(name, buildS, stats, error)
+      Row(name, buildS, stats, error.orElse(Option.when(!stats.drained)("ListenerBusTimeout")))
     }
+  }
+
+  private def num(v: Double): Double = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
+  private def jmap(kvs: Iterable[(String, Any)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** A row's entry in the `layers` map: construction, then the Spark
+    * jobs, stages and tasks it launched, the tasks' summed time, the
+    * time some job was running and the rest of the wall time. */
+  private[graft] def layer(r: Row): String = {
+    val s = r.stats
+    jmap(Seq("build_s" -> num(r.buildS), "jobs" -> s.jobs, "stages" -> s.stages,
+      "tasks" -> s.tasks, "task_s" -> num(s.taskS), "in_job_s" -> num(s.inJobS),
+      "driver_gap_s" -> num(s.driverGapS)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -67,19 +82,9 @@ object Bench {
     val best = p1.zip(p2).map { case (a, b) => if (b.stats.wallS < a.stats.wallS) b else a }
     val errors = scala.collection.immutable.VectorMap.from(
       (p1 ++ p2).flatMap(r => r.error.map(r.name -> _)))
-    def num(v: Double): Double = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def jmap(kvs: Iterable[(String, Any)]): String =
-      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     def times(kvs: Seq[(String, Double)]): String = jmap(kvs.map { case (k, v) => k -> num(v) })
     val results = best.map(r => r.name -> r.stats.wallS)
-    // The layer split of each reported run: construction, then the
-    // Spark jobs, stages and tasks it launched, the tasks' summed time,
-    // the time some job was running and the rest of the wall time.
-    val layers = best.map { case Row(name, buildS, s, _) =>
-      name -> jmap(Seq("build_s" -> num(buildS), "jobs" -> s.jobs, "stages" -> s.stages,
-        "tasks" -> s.tasks, "task_s" -> num(s.taskS), "in_job_s" -> num(s.inJobS),
-        "driver_gap_s" -> num(s.driverGapS)))
-    }
+    val layers = best.map(r => r.name -> layer(r))
     val total = best.map(_.stats.wallS).sum
     val errJson = jmap(errors.map { case (k, v) => k -> ("\"" + v + "\"") })
     val layout = if (bucketed) "bucketed" else "loose"

@@ -10,12 +10,19 @@ class JobBudgetSpec extends SparkSpec {
   private val sf = Fixtures.testdata("0.001")
 
   /** Runs the settled pass of `budget` (`Bench.pass`, after one pass
-    * that warms the schema memo and codegen) and checks every count. */
+    * that warms the schema memo and codegen) and checks every count. A
+    * query that throws, or whose counts may be incomplete, fails: it
+    * could launch fewer jobs than it runs when it works. */
   private def withinBudget(budget: Seq[(String, Int)]): Unit = {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
     val names = budget.map(_._1)
-    Bench.pass(spark, sf, names)
-    val got = Bench.pass(spark, sf, names).map(r => r.name -> r.stats.jobs).toMap
+    def pass(): Seq[Bench.Row] = {
+      val rows = Bench.pass(spark, sf, names)
+      rows.foreach(r => assert(r.error.isEmpty, s"${r.name} failed: ${r.error}"))
+      rows
+    }
+    pass()
+    val got = pass().map(r => r.name -> r.stats.jobs).toMap
     budget.foreach { case (name, max) =>
       assert(got(name) <= max, s"$name ran ${got(name)} jobs, budget $max (all: $got)")
     }

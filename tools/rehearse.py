@@ -10,12 +10,15 @@ row-by-row. Mirrors what we know of the driver gate: row order matters
 (queries end in a total-order sort), column names must match, values
 must be (hash-)identical.
 
-DuckDB runs under a memory limit of two thirds of the host's MemTotal
-and at most four threads, spilling to the gitignored .tmp/ at the
-repository root. At its default limit (80% of RAM) one sf0.1 run grew
-past 11 GB and the kernel killed it. Two thirds is what the hungriest
-sf0.01 oracle needs: dedup_semdedup ran out of memory at 7.2 GiB and
-passed at 9.3 GiB. An oracle that still runs out of memory is reported
+DuckDB runs under a memory limit of two thirds of the memory this
+process may use: the host's MemTotal, or the memory limit of its cgroup
+(or of an ancestor cgroup) when that is smaller. Memory that other
+processes use at the same time is not subtracted. DuckDB runs at most
+four threads and spills to the gitignored .tmp/ at the repository root.
+At its default limit (80% of RAM) one sf0.1 run grew past 11 GB on a
+16 GB host and the kernel killed it. Two thirds of 16 GB is what the
+hungriest sf0.01 oracle, dedup_semdedup, needs: it ran out of memory at
+7.2 GiB and passed at 9.3 GiB. An oracle that still runs out of memory is reported
 as a FAIL like any other error.
 """
 import sys, json, glob, math, os
@@ -31,9 +34,42 @@ def mem_total_bytes():
                 return int(line.split()[1]) * 1024
     raise RuntimeError("no MemTotal in /proc/meminfo")
 
+def cgroup_limit_bytes():
+    """The smallest memory limit set on this process's cgroup or its
+    ancestors (cgroup v2 memory.max, v1 memory.limit_in_bytes), or None
+    where none is set or readable."""
+    try:
+        with open("/proc/self/cgroup") as f:
+            entries = [line.rstrip("\n").split(":", 2) for line in f]
+    except OSError:
+        return None
+    limits = []
+    for _, controllers, path in entries:
+        if controllers == "":
+            root, name = "/sys/fs/cgroup", "memory.max"
+        elif "memory" in controllers.split(","):
+            root, name = "/sys/fs/cgroup/memory", "memory.limit_in_bytes"
+        else:
+            continue
+        parts = [p for p in path.split("/") if p]
+        for i in range(len(parts), -1, -1):
+            try:
+                with open(os.path.join(root, *parts[:i], name)) as f:
+                    value = f.read().strip()
+            except OSError:
+                continue
+            if value.isdigit():  # "max" is no limit
+                limits.append(int(value))
+    return min(limits, default=None)
+
+def memory_limit_bytes():
+    cgroup = cgroup_limit_bytes()
+    total = mem_total_bytes()
+    return (total if cgroup is None else min(total, cgroup)) * 2 // 3
+
 def connect():
     con = duckdb.connect()
-    con.sql(f"SET memory_limit = '{mem_total_bytes() * 2 // 3 // 2**20}MB'")
+    con.sql(f"SET memory_limit = '{memory_limit_bytes() // 2**20}MB'")
     con.sql(f"SET threads = {THREADS}")
     con.sql(f"SET temp_directory = '{os.path.normpath(SPILL_DIR)}'")
     return con
