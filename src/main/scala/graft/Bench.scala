@@ -21,7 +21,8 @@ object Bench {
     * reads a frame built by an earlier one: the first consumer of a
     * shared frame pays its build in its own row. Failures are recorded,
     * not swallowed, so a query that starts throwing cannot time as a
-    * plausible number. */
+    * plausible number. Every Spark job a query launches carries its
+    * name as the job group. */
   def pass(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[Row] = {
     val registry = SparkEntry.queries
     SessionMemo.clear()
@@ -29,12 +30,14 @@ object Bench {
       var buildS = 0.0
       val (error, stats) = QueryProbe.measure(spark) {
         val t0 = System.nanoTime()
+        spark.sparkContext.setJobGroup(name, name)
         try {
           val df = registry(name)(spark, sfDir)
           buildS = (System.nanoTime() - t0) / 1e9
           df.write.format("noop").mode("overwrite").save()
           None
         } catch { case e: Throwable => Some(e.getClass.getSimpleName) }
+        finally spark.sparkContext.clearJobGroup()
       }
       Row(name, buildS, stats, error.orElse(Option.when(!stats.drained)("ListenerBusTimeout")))
     }

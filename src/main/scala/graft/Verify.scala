@@ -18,11 +18,14 @@ object Verify {
     // layout-independent end-to-end (tools/qa.sh has a leg for this).
     Tables.withRequestedLayout(spark, sfDir) { _ =>
       SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+        // every Spark job of the query carries its name
+        spark.sparkContext.setJobGroup(name, name)
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
+        finally spark.sparkContext.clearJobGroup()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

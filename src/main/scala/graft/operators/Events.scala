@@ -61,6 +61,69 @@ object Events extends OpModule {
         Some(GraftBridge.Layout(n, Seq("user_id"), Seq("user_id", "ts", "event_id")))))
   }
 
+  // ---- Event-type Markov chain (evt_path and its three readouts) -----
+
+  /** The transition census: each user's next event via lead() over
+    * (ts, event_id), then one partial-aggregated count per (from, to)
+    * pair — (event_type, next_type, n); shuffle volume is |types|²,
+    * not |events|. */
+  private def transitions(s: SparkSession, d: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+    evtByUser(s, d)
+      .withColumn("next_type", lead("event_type", 1).over(w))
+      .filter(col("next_type").isNotNull)
+      .groupBy("event_type", "next_type")
+      .agg(count(lit(1)).as("n"))
+  }
+
+  /** The census gathered onto ONE row: `cl` = the (f, t, n) structs in
+    * sorted order, `tp` = the sorted source types. Every in-row
+    * iteration over the chain folds these arrays in index order, so
+    * its doubles are bit-identical across engines (a groupBy mat-vec
+    * would sum in partition order and hash-diverge). */
+  private def transitionRow(s: SparkSession, d: String): DataFrame =
+    transitions(s, d).agg(
+      sort_array(collect_list(struct(col("event_type").as("f"),
+        col("next_type").as("t"), col("n")))).as("cl"),
+      sort_array(collect_set(col("event_type"))).as("tp"))
+
+  private val tSz: Column = size(col("tp"))
+  private def tpAt(i: Column): Column = element_at(col("tp"), i + 1)
+  private val typeIdx: Column = sequence(lit(0), tSz - 1)
+
+  /** Per source type of the gathered row, ALL its outgoing mass — the
+    * row sums of the absorbing chain (stepping into the absorber is a
+    * real transition). */
+  private val outMass: Column = transform(typeIdx, i =>
+    aggregate(filter(col("cl"), s2 => s2.getField("f") === tpAt(i)),
+      lit(0L), (acc, s2) => acc + s2.getField("n")))
+
+  /** One absorption step p_k(i) = Σ_j P(i,j)·[j = purchase ? 1 :
+    * p_{k-1}(j)] over a row carrying (cl, tp, rs = [[outMass]]). Walks
+    * entering `removed` die (contribute 0 mass); a null `removed` is
+    * the factual chain. */
+  private def absorbStep(p: Column, removed: Column): Column =
+    transform(typeIdx, i =>
+      aggregate(filter(col("cl"), s2 => s2.getField("f") === tpAt(i)),
+        lit(0.0), (acc, s2) => acc +
+          (s2.getField("n").cast("double") /
+            element_at(col("rs"), i + 1).cast("double")) *
+          when(removed.isNotNull && s2.getField("t") === removed, lit(0.0))
+            .when(s2.getField("t") === "purchase", lit(1.0))
+            .otherwise({
+              val pos = array_position(col("tp"), s2.getField("t"))
+              when(pos > 0, element_at(p, pos.cast("int")))
+                .otherwise(lit(0.0))
+            })))
+
+  /** `steps` absorption steps from `from` as ONE in-row fold: the same
+    * arithmetic as the single steps, with one copy of the step
+    * expression, so no per-step cut is needed. */
+  private def absorbFold(from: Column, steps: Int, removed: Column): Column =
+    aggregate(sequence(lit(1), lit(steps)), from, (p, _) => absorbStep(p, removed))
+
+  private val noRemoval: Column = lit(null).cast("string")
+
   /** The p99 event-count cap of `sample_user_cap`, factored so the
     * streaming twin's parity replay derives the SAME broadcast cap
     * the graded ledger applies (r13 verdict #6). Input = the per-user
@@ -383,20 +446,9 @@ object Events extends OpModule {
       // the only doubles are the x updates. |types|² is tiny at any
       // event volume: the heavy work is evt_path's partial-agged
       // count, everything after is one-row arithmetic.
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val trans = evtByUser(s, d)
-        .withColumn("next_type", lead("event_type", 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy(col("event_type").as("f"), col("next_type").as("t"))
-        .agg(count(lit(1)).as("n"))
-      val row = trans.agg(
-        sort_array(collect_list(struct(col("f"), col("t"), col("n")))).as("cl"),
-        sort_array(collect_set(col("f"))).as("tp"))
-      val tSz = size(col("tp"))
-      def tpAt(i: Column) = element_at(col("tp"), i + 1)
       // kept row sums: outgoing mass into recurring targets only
-      val withRs = GraftBridge.checkpoint(row.withColumn("rs",
-        transform(sequence(lit(0), tSz - 1), i =>
+      val withRs = GraftBridge.checkpoint(transitionRow(s, d).withColumn("rs",
+        transform(typeIdx, i =>
           aggregate(
             filter(col("cl"), s2 => s2.getField("f") === tpAt(i) &&
               array_contains(col("tp"), s2.getField("t"))),
@@ -406,12 +458,11 @@ object Events extends OpModule {
           filter(col("cl"), s2 => s2.getField("f") === tpAt(i) &&
             s2.getField("t") === tpAt(j)), lit(1)).getField("n"),
         lit(0L))
-      def stepX(x: Column) = transform(sequence(lit(0), tSz - 1), j =>
-        aggregate(sequence(lit(0), tSz - 1), lit(0.0), (acc, i) =>
+      def stepX(x: Column) = transform(typeIdx, j =>
+        aggregate(typeIdx, lit(0.0), (acc, i) =>
           acc + element_at(x, i + 1) *
             (nij(i, j).cast("double") / element_at(col("rs"), i + 1).cast("double"))))
-      val x0 = transform(sequence(lit(0), tSz - 1),
-        _ => lit(1.0) / tSz.cast("double"))
+      val x0 = transform(typeIdx, _ => lit(1.0) / tSz.cast("double"))
       // x3 = stepX(stepX(stepX(x0))) as ONE in-row fold: the same
       // arithmetic in the same order (bit-identical doubles), with one
       // copy of the step expression — so no per-step cut is needed to
@@ -424,18 +475,9 @@ object Events extends OpModule {
         .orderBy("event_type")
     }),
 
-    "evt_path" -> ((s, d) => {
-      // Event-transition matrix (Markov counts): per-user next-event
-      // via lead(), then one partial-aggregated count per (from, to)
-      // pair — shuffle volume is |types|², not |events|.
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      evtByUser(s, d)
-        .withColumn("next_type", lead("event_type", 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy("event_type", "next_type")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("event_type", "next_type")
-    }),
+    // Event-transition matrix (Markov counts): the census itself.
+    "evt_path" -> ((s, d) =>
+      transitions(s, d).orderBy("event_type", "next_type")),
 
     "evt_click_attrib" -> ((s, d) => {
       // Interval join: each click attributed to its purchases within
@@ -911,37 +953,12 @@ object Events extends OpModule {
       // absorbing state is a real transition — and the heavy work is
       // the partial-agged evt_path census; everything after is
       // one-row arithmetic at any event volume.
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val trans = evtByUser(s, d)
-        .withColumn("next_type", lead("event_type", 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy(col("event_type").as("f"), col("next_type").as("t"))
-        .agg(count(lit(1)).as("n"))
-      val row = trans.agg(
-        sort_array(collect_list(struct(col("f"), col("t"), col("n")))).as("cl"),
-        sort_array(collect_set(col("f"))).as("tp"))
-      val tSz = size(col("tp"))
-      def tpAt(i: Column) = element_at(col("tp"), i + 1)
-      val withRs = GraftBridge.checkpoint(row.withColumn("rs",
-        transform(sequence(lit(0), tSz - 1), i =>
-          aggregate(filter(col("cl"), s2 => s2.getField("f") === tpAt(i)),
-            lit(0L), (acc, s2) => acc + s2.getField("n")))))
-      def stepP(p: Column) = transform(sequence(lit(0), tSz - 1), i =>
-        aggregate(filter(col("cl"), s2 => s2.getField("f") === tpAt(i)),
-          lit(0.0), (acc, s2) => acc +
-            (s2.getField("n").cast("double") /
-              element_at(col("rs"), i + 1).cast("double")) *
-            when(s2.getField("t") === "purchase", lit(1.0))
-              .otherwise({
-                val pos = array_position(col("tp"), s2.getField("t"))
-                when(pos > 0, element_at(p, pos.cast("int")))
-                  .otherwise(lit(0.0))
-              })))
-      val p0 = transform(sequence(lit(0), tSz - 1), _ => lit(0.0))
-      // p3 = stepP(stepP(p1)) as one in-row fold over p1 (the
-      // evt_markov_steady fold: same arithmetic, one step expression).
-      val s3 = withRs.withColumn("p1", stepP(p0)).withColumn("p3",
-        aggregate(sequence(lit(1), lit(2)), col("p1"), (p, _) => stepP(p)))
+      val withRs = GraftBridge.checkpoint(transitionRow(s, d).withColumn("rs", outMass))
+      val p0 = transform(typeIdx, _ => lit(0.0))
+      // p3 = two more steps folded over p1: the same arithmetic as
+      // three single steps.
+      val s3 = withRs.withColumn("p1", absorbStep(p0, noRemoval))
+        .withColumn("p3", absorbFold(col("p1"), 2, noRemoval))
       s3.select(col("tp"), col("p1"), posexplode(col("p3")).as(Seq("i", "pr3")))
         .select(element_at(col("tp"), col("i") + 1).as("event_type"),
           round(element_at(col("p1"), col("i") + 1), 4).as("p_1step"),
@@ -1034,57 +1051,21 @@ object Events extends OpModule {
       // so no per-channel replan, and the whole counterfactual sweep
       // is |types| rows of in-row arithmetic regardless of event
       // volume (the census stays the only data-sized pass).
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val trans = evtByUser(s, d)
-        .withColumn("next_type", lead("event_type", 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy(col("event_type").as("f"), col("next_type").as("t"))
-        .agg(count(lit(1)).as("n"))
-      val row = trans.agg(
-        sort_array(collect_list(struct(col("f"), col("t"), col("n")))).as("cl"),
-        sort_array(collect_set(col("f"))).as("tp"))
-      val tSz = size(col("tp"))
-      def tpAt(i: Column) = element_at(col("tp"), i + 1)
-      val withRs = row.withColumn("rs",
-        transform(sequence(lit(0), tSz - 1), i =>
-          aggregate(filter(col("cl"), s2 => s2.getField("f") === tpAt(i)),
-            lit(0L), (acc, s2) => acc + s2.getField("n"))))
       // one row per candidate channel; 'purchase' (the absorber) is
-      // not a removable channel
-      val chans = GraftBridge.checkpoint(withRs
+      // not a removable channel. Each row folds the factual (b3) and
+      // the removal (r3) chain three steps in-row; every frame here is
+      // read once, so nothing is cut.
+      val p0 = transform(typeIdx, _ => lit(0.0))
+      val s3 = transitionRow(s, d).withColumn("rs", outMass)
         .select(col("cl"), col("tp"), col("rs"),
           posexplode(col("tp")).as(Seq("ci", "chan")))
-        .filter(col("chan") =!= "purchase"))
-      // removed === null → the factual chain; otherwise walks entering
-      // `removed` die (contribute 0 absorption mass)
-      def stepP(p: Column, removed: Column) =
-        transform(sequence(lit(0), tSz - 1), i =>
-          aggregate(filter(col("cl"), s2 => s2.getField("f") === tpAt(i)),
-            lit(0.0), (acc, s2) => acc +
-              (s2.getField("n").cast("double") /
-                element_at(col("rs"), i + 1).cast("double")) *
-              when(removed.isNotNull && s2.getField("t") === removed, lit(0.0))
-                .when(s2.getField("t") === "purchase", lit(1.0))
-                .otherwise({
-                  val pos = array_position(col("tp"), s2.getField("t"))
-                  when(pos > 0, element_at(p, pos.cast("int")))
-                    .otherwise(lit(0.0))
-                })))
-      val p0 = transform(sequence(lit(0), tSz - 1), _ => lit(0.0))
-      val noRemoval = lit(null).cast("string")
-      val s1 = GraftBridge.checkpoint(chans
-        .withColumn("b1", stepP(p0, noRemoval))
-        .withColumn("r1", stepP(p0, col("chan"))))
-      val s2 = GraftBridge.checkpoint(s1
-        .withColumn("b2", stepP(col("b1"), noRemoval))
-        .withColumn("r2", stepP(col("r1"), col("chan"))))
-      val s3 = s2
-        .withColumn("b3", stepP(col("b2"), noRemoval))
-        .withColumn("r3", stepP(col("r2"), col("chan")))
+        .filter(col("chan") =!= "purchase")
+        .withColumn("b3", absorbFold(p0, 3, noRemoval))
+        .withColumn("r3", absorbFold(p0, 3, col("chan")))
       // absorption mass summed over every start state except the
       // removed channel itself — fixed index order on both engines
       def massExcept(p: Column) =
-        aggregate(sequence(lit(0), tSz - 1), lit(0.0), (acc, i) =>
+        aggregate(typeIdx, lit(0.0), (acc, i) =>
           acc + when(i === col("ci"), lit(0.0))
             .otherwise(element_at(p, i + 1)))
       s3.select(col("chan").as("channel"),

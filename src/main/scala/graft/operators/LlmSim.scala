@@ -45,6 +45,78 @@ object LlmSim extends OpModule {
   private def lshBucket(v: Column): Column =
     graft.functions.GraftFunctions.lshBucket(v, 8)
 
+  // ---- Shared similarity kernels: one definition each ---------------
+
+  /** The tie-safe rounded cosine of two (vector, norm) pairs: 4 digits,
+    * the engine-exactness rule every similarity score shares with its
+    * oracle twin (`round(sum(a·b) / (na·nb), 4)` in the SQL). */
+  private def cos4(a: Column, na: Column, b: Column, nb: Column): Column =
+    round(dot(a, b) / (na * nb), 4)
+
+  /** Each `key`'s first `k` rows by `order`, ranked in a long `rk` (the
+    * oracles' row_number). Callers end `order` with the lower id, so
+    * the ranks are total and engine-identical. */
+  private def topK(df: DataFrame, key: String, k: Int, order: Column*): DataFrame =
+    df.withColumn("rk",
+        row_number().over(Window.partitionBy(key).orderBy(order: _*)).cast("long"))
+      .filter(col("rk") <= k)
+
+  /** The embeddings as (vec_id, embedding, nrm). */
+  private def normed(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
+
+  /** One side of a kNN scorer: (vec_id, embedding, nrm, keys…) as
+    * (p_id, p_emb, p_nrm, keys…) for the prefix `p` ("q" or "n"). */
+  private def knnSide(df: DataFrame, p: String, keys: String*): DataFrame =
+    df.select(Seq(col("vec_id").as(s"${p}_id"), col("embedding").as(s"${p}_emb"),
+      col("nrm").as(s"${p}_nrm")) ++ keys.map(col): _*)
+
+  /** Scores (q, n) candidate pairs of two [[knnSide]]s by rounded cosine. */
+  private def knnScored(pairs: DataFrame): DataFrame =
+    pairs.withColumn("cos",
+      cos4(col("q_emb"), col("q_nrm"), col("n_emb"), col("n_nrm")))
+
+  /** The exact top-5 scorer: each query's five best candidates by
+    * rounded cosine, ties to the lower n_id. Its callers differ only in
+    * the candidate pairs they join. */
+  private def knnTop5(pairs: DataFrame): DataFrame =
+    topK(knnScored(pairs), "q_id", 5, col("cos").desc, col("n_id"))
+
+  /** sim_knn's candidates: every (query, other vector) pair over the
+    * gated query set (vec_id < 10). */
+  private def knnAllPairs(s: SparkSession, d: String): DataFrame = {
+    val e = normed(s, d)
+    knnSide(e.filter(col("vec_id") < 10), "q")
+      .join(knnSide(e, "n"), col("q_id") =!= col("n_id"))
+  }
+
+  /** Every same-LSH-bucket pair of the corpus scored by rounded cosine,
+    * (a_id, a_label, b_id, b_label, cos); self pairs are still in, so
+    * each caller applies its own pair filter before ranking. */
+  private def bucketPairs(s: SparkSession, d: String): DataFrame = {
+    val e = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("label"), col("embedding"),
+        norm(col("embedding")).as("nrm"), lshBucket(col("embedding")).as("bucket"))
+    def side(p: String) = e.select(col("bucket"), col("vec_id").as(s"${p}_id"),
+      col("label").as(s"${p}_label"), col("embedding").as(s"${p}_emb"),
+      col("nrm").as(s"${p}_nrm"))
+    side("a").join(side("b"), Seq("bucket"))
+      .withColumn("cos", cos4(col("a_emb"), col("a_nrm"), col("b_emb"), col("b_nrm")))
+  }
+
+  /** The recall gate: per query of `truth` (q_id, n_id), how many of
+    * its pairs the retrieved `found` (q_id, n_id) holds, as (q_id,
+    * n_truth, n_hits, recall). */
+  private def recallOf(truth: DataFrame, found: DataFrame): DataFrame =
+    truth.join(found.select(col("q_id").as("f_q"), col("n_id").as("f_n"),
+          lit(1).as("hit")),
+        col("q_id") === col("f_q") && col("n_id") === col("f_n"), "left")
+      .groupBy("q_id")
+      .agg(count(lit(1)).as("n_truth"), count(col("hit")).as("n_hits"))
+      .withColumn("recall",
+        round(col("n_hits").cast("double") / col("n_truth"), 4))
+
   // ---- Shared power-iteration machinery (embed_top_pc, embed_abtt) --
   // In-row mat-vec and normalization over a D²-array Gram row with
   // fixed-order HOF folds — every add happens in index order on BOTH
@@ -80,7 +152,12 @@ object LlmSim extends OpModule {
     aggregate(zip_with(col(xcol), pcMatvec(col(mcol), col(xcol)),
       (a, b) => a * b), lit(0.0), (a, v) => a + v)
 
-  // ---- Shared k-means machinery (embed_kmeans, sim_knn_ivf) ----------
+  // ---- Shared k-means machinery ---------------------------------------
+  // Two trained chains, each built once per session and memoized: the
+  // C=8 chain (km8Shared — embed_kmeans grades it, embed_silhouette and
+  // embed_rq read it) and the C=16 IVF coarse quantizer (ivfTrain).
+  // The incremental-embedding index trains its own C=8 chain on the
+  // old vectors only (incEmbCents), a different training set.
   // One Lloyd assignment/update pair over cosine similarity. Centroids
   // live as (cell, array<double>) rows — C rows at ANY corpus size,
   // always broadcast; scoring is a map-only broadcast-cross-score +
@@ -97,23 +174,28 @@ object LlmSim extends OpModule {
   private def kmAssign(e: DataFrame, cents: DataFrame): DataFrame = {
     val cwn = cents.withColumn("cnrm", norm(col("c_emb")))
     e.crossJoin(broadcast(cwn))
-      .withColumn("kcos", round(
-        dot(col("embedding"), col("c_emb")) / (col("nrm") * col("cnrm")), 4))
+      .withColumn("kcos",
+        cos4(col("embedding"), col("nrm"), col("c_emb"), col("cnrm")))
       .groupBy("vec_id")
       .agg(min(struct((-col("kcos")).as("nc"), col("cell").as("cl"))).as("m"))
       .select(col("vec_id"), col("m.cl").as("cell"), (-col("m.nc")).as("acos"))
   }
 
-  /** Lloyd update: integer-sum mean of FLOOR(v·1e6) per (cell, pos).
+  /** Grid mean per group of `keys`: the integer-sum mean of
+    * FLOOR(v·1e6) per position of `members`' embeddings, as `c_emb`.
     * ONE aggregation via the grid-exact O(dim)-buffer UDAF (r14 — the
-    * old join + posexplode + two-groupBy shape paid 3 extra exchange
-    * stages per round across every consumer; values bit-identical,
-    * see GridCentroidAggregator). */
-  private def kmUpdate(e: DataFrame, assign: DataFrame): DataFrame =
-    assign.join(e.select("vec_id", "embedding"), "vec_id")
-      .groupBy("cell")
+    * join + posexplode + two-groupBy shape paid 3 extra exchange
+    * stages per use; values bit-identical, see GridCentroidAggregator).
+    * The Lloyd update, the sub-centroid update and the label centroids
+    * of embed_outlier_vecs all compute it. */
+  private def gridMean(members: DataFrame, keys: String*): DataFrame =
+    members.groupBy(keys.map(col): _*)
       .agg(graft.functions.GridCentroidAggregator.asColumn(col("embedding"))
         .as("c_emb"))
+
+  /** Lloyd update: the grid mean of each cell's assigned vectors. */
+  private def kmUpdate(e: DataFrame, assign: DataFrame): DataFrame =
+    gridMean(assign.join(e.select("vec_id", "embedding"), "vec_id"), "cell")
 
   /** Deterministic init: the C lowest-id vectors as double arrays. */
   private def kmInit(s: SparkSession, d: String, c: Int): DataFrame =
@@ -131,12 +213,10 @@ object LlmSim extends OpModule {
   private def kmAssignTopN(e: DataFrame, cents: DataFrame,
       nprobe: Int): DataFrame = {
     val cwn = cents.withColumn("cnrm", norm(col("c_emb")))
-    val w = Window.partitionBy("vec_id").orderBy(col("kcos").desc, col("cell"))
-    e.crossJoin(broadcast(cwn))
-      .withColumn("kcos", round(
-        dot(col("embedding"), col("c_emb")) / (col("nrm") * col("cnrm")), 4))
-      .withColumn("prk", row_number().over(w))
-      .filter(col("prk") <= nprobe)
+    topK(e.crossJoin(broadcast(cwn))
+        .withColumn("kcos",
+          cos4(col("embedding"), col("nrm"), col("c_emb"), col("cnrm"))),
+        "vec_id", nprobe, col("kcos").desc, col("cell"))
       .select(col("vec_id"), col("cell"), col("embedding"), col("nrm"))
   }
 
@@ -152,15 +232,13 @@ object LlmSim extends OpModule {
   private[graft] def ivfTrain(s: SparkSession, d: String): (DataFrame, DataFrame) =
     SessionMemo.memo(s, d, "ivfTrain")(ivfTrainBuild(s, d))
 
-  /** Trained C=8 k-means chain — (centroids after 2 Lloyd rounds,
-    * round-2 assignment), both eager cuts. Session-memoized (r16):
-    * embed_kmeans and embed_silhouette trained bit-identical chains;
-    * one build serves both (the ivfTrain discipline at C=8). */
+  /** THE trained C=8 k-means chain — (centroids after 2 Lloyd rounds,
+    * round-2 assignment), both eager cuts, session-memoized: the one
+    * C=8 training that embed_kmeans, embed_silhouette and embed_rq all
+    * read (the ivfTrain discipline at C=8). */
   private def km8Shared(s: SparkSession, d: String): (DataFrame, DataFrame) =
     SessionMemo.memo(s, d, "km8") {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          norm(col("embedding")).as("nrm"))
+      val e = normed(s, d)
       var cents = kmInit(s, d, 8)
       // round 1 single-reference -> uncut (r14 cut-trim, see ivfTrain)
       cents = kmUpdate(e, kmAssign(e, cents))
@@ -183,8 +261,7 @@ object LlmSim extends OpModule {
     * assignment incl. embedding and norm). */
   private def ivfTrainBuild(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val C = 16
-    val e = Tables.embeddings(s, d).select(col("vec_id"),
-      col("embedding"), norm(col("embedding")).as("nrm"))
+    val e = normed(s, d)
     var cents = kmInit(s, d, C)
     // Round 1 feeds ONLY round 2 (cents enters kmAssign exactly once,
     // via the broadcast) — a single-reference chain grows linearly,
@@ -211,17 +288,9 @@ object LlmSim extends OpModule {
       nprobe: Int): DataFrame = {
     val qv = assign.filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"), col("nrm"))
-    val q = kmAssignTopN(qv, cents, nprobe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cell"))
-    val n = assign.select(col("vec_id").as("n_id"),
-      col("embedding").as("n_emb"), col("nrm").as("n_nrm"), col("cell"))
-    val scored = q.join(n, Seq("cell")).filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos", round(
-        dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 4))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 5)
+    val q = knnSide(kmAssignTopN(qv, cents, nprobe), "q", "cell")
+    knnTop5(q.join(knnSide(assign, "n", "cell"), Seq("cell"))
+        .filter(col("q_id") =!= col("n_id")))
       .select("q_id", "cell", "n_id", "cos", "rk")
       .orderBy("q_id", "rk")
   }
@@ -382,16 +451,9 @@ object LlmSim extends OpModule {
       .select(col("cell"), col("sub"),
         transform(col("seed"), _.cast("double")).as("sc_emb"))
     val a1 = subAssign(tr, GraftBridge.checkpoint(init))
-    val upd = a1.join(e.select("vec_id", "embedding"), "vec_id")
-      .select(col("cell"), col("sub"),
-        posexplode(col("embedding")).as(Seq("pos0", "vf")))
-      .groupBy(col("cell"), col("sub"), col("pos0"))
-      .agg((sum(floor(col("vf").cast("double") * 1000000.0).cast("long"))
-        .cast("double") / (lit(1000000.0) * count(lit(1)))).as("c"))
-      .groupBy("cell", "sub")
-      .agg(transform(sort_array(collect_list(struct(col("pos0"), col("c")))),
-        _.getField("c")).as("sc_emb"))
-    GraftBridge.checkpoint(upd)
+    GraftBridge.checkpoint(
+      gridMean(a1.join(e.select("vec_id", "embedding"), "vec_id"), "cell", "sub")
+        .withColumnRenamed("c_emb", "sc_emb"))
   }
 
   /** Nearest-sub-centroid assignment within each coarse cell — the
@@ -407,8 +469,8 @@ object LlmSim extends OpModule {
       cents: DataFrame): DataFrame = {
     val cwn = cents.withColumn("scnrm", norm(col("sc_emb")))
     members.join(cwn, Seq("cell"))
-      .withColumn("scos", round(
-        dot(col("embedding"), col("sc_emb")) / (col("snrm") * col("scnrm")), 4))
+      .withColumn("scos",
+        cos4(col("embedding"), col("snrm"), col("sc_emb"), col("scnrm")))
       .groupBy(col("vec_id"), col("cell"))
       .agg(min(struct((-col("scos")).as("ns"), col("sub").as("sb"))).as("m"))
       .select(col("vec_id"), col("cell"), col("m.sb").as("sub"))
@@ -453,10 +515,8 @@ object LlmSim extends OpModule {
         element_at(col("dmap"), (lit(m * 16) + col(s"c$m")).cast("int")))
         .reduce(_ + _))
       .select("q_id", "n_id", "adc_dist")
-    val w = Window.partitionBy("q_id").orderBy(col("adc_dist"), col("n_id"))
-    adc.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("rnk"), col("n_id"), col("adc_dist"))
+    topK(adc, "q_id", 3, col("adc_dist"), col("n_id"))
+      .select(col("q_id"), col("rk").as("rnk"), col("n_id"), col("adc_dist"))
       .coalesce(1) // ≤ 3·Q rows: the terminal sort needs no range exchange
       .orderBy("q_id", "rnk")
   }
@@ -465,25 +525,16 @@ object LlmSim extends OpModule {
   /** Tiered-relevance universe over the gated Q=10 query set (the
     * sim_knn gated 10·|V| frame), cut once and joined by every
     * consumer — shared by [[ndcgBody]] and [[rrfBody]]. */
-  private def tierUniverse(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_nrm"))
-    val n = e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-      norm(col("embedding")).as("n_nrm"))
+  private def tierUniverse(s: SparkSession, d: String): DataFrame =
     // cut, not persist (r15): the tier frame is joined by BOTH the
     // ideal-DCG side and the retrieved side of the terminal job —
     // lazily persisted, those two stages raced the cold cache and
     // each materialized the 10·|V| brute scoring. The cut runs
     // concurrently with the path-training cuts (`par` below).
-    GraftBridge.checkpoint(q.join(n, col("q_id") =!= col("n_id"))
-      .withColumn("cos", round(
-        dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 4))
+    GraftBridge.checkpoint(knnScored(knnAllPairs(s, d))
       .select(col("q_id"), col("n_id"),
         when(col("cos") >= 0.3, 3L).when(col("cos") >= 0.2, 2L)
           .when(col("cos") >= 0.1, 1L).otherwise(0L).as("tier")))
-  }
 
   private def ndcgGain(t: org.apache.spark.sql.Column) =
     when(t === 3, 7L).when(t === 2, 3L).when(t === 1, 1L).otherwise(0L)
@@ -508,9 +559,8 @@ object LlmSim extends OpModule {
 
   /** The ideal ordering's DCG per query over the full gated universe. */
   private def idealDcg(tiers: DataFrame): DataFrame = {
-    val wI = Window.partitionBy("q_id").orderBy(col("tier").desc, col("n_id"))
-    val ideal = tiers.withColumn("rk", row_number().over(wI).cast("long"))
-      .filter(col("rk") <= 5).withColumn("gain", ndcgGain(col("tier")))
+    val ideal = topK(tiers, "q_id", 5, col("tier").desc, col("n_id"))
+      .withColumn("gain", ndcgGain(col("tier")))
     dcgPivot(ideal, Seq("q_id"), "idcg_raw").drop("n_ret")
   }
 
@@ -625,14 +675,11 @@ object LlmSim extends OpModule {
       .withColumn("contrib", expr(s"$RrfDen div (60 + rk)"))
       .groupBy("q_id", "n_id")
       .agg(count(lit(1)).as("n_paths"), sum("contrib").as("rrf_int")))
-    val wf = Window.partitionBy("q_id")
-      .orderBy(col("rrf_int").desc, col("n_id"))
-    val fused = rrf.withColumn("rk", row_number().over(wf).cast("long"))
     val cands = rrf.groupBy("q_id").agg(
       count(lit(1)).as("n_candidates"),
       sum(when(col("n_paths") >= 2, 1L).otherwise(0L)).as("n_multi"),
       max(col("rrf_int")).as("top_rrf_scaled"))
-    val fg = fused.filter(col("rk") <= 5)
+    val fg = topK(rrf, "q_id", 5, col("rrf_int").desc, col("n_id"))
       .join(tiers, Seq("q_id", "n_id"))
       .withColumn("gain", ndcgGain(col("tier")))
     val fdcg = dcgPivot(fg, Seq("q_id"), "dcg_raw")
@@ -693,16 +740,7 @@ object LlmSim extends OpModule {
     * factored out for PlansSpec plan locks.
     */
   private[graft] def recallHammingBody(s: SparkSession, d: String): DataFrame = {
-    val truth = knnTruthShared(s, d)
-    val ham = queries("sim_knn_hamming")(s, d)
-      .select(col("q_id").as("h_q"), col("n_id").as("h_n"), lit(1).as("hit"))
-    truth
-      .join(ham, col("q_id") === col("h_q") && col("n_id") === col("h_n"),
-        "left")
-      .groupBy("q_id")
-      .agg(count(lit(1)).as("n_truth"), count(col("hit")).as("n_hits"))
-      .select(col("q_id"), col("n_truth"), col("n_hits"),
-        round(col("n_hits").cast("double") / col("n_truth"), 4).as("recall"))
+    recallOf(knnTruthShared(s, d), queries("sim_knn_hamming")(s, d))
       .orderBy("q_id")
   }
 
@@ -803,9 +841,8 @@ object LlmSim extends OpModule {
       val b = e.select(col(s"bucket$t").as("bucket"), col("vec_id").as("b_id"),
         col("embedding").as("b_emb"), col("nrm").as("b_nrm"))
       a.join(b, Seq("bucket")).filter(col("a_id") =!= col("b_id"))
-        .select(col("a_id"), col("b_id"), round(
-          dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4)
-          .as("ecos"))
+        .select(col("a_id"), col("b_id"),
+          cos4(col("a_emb"), col("a_nrm"), col("b_emb"), col("b_nrm")).as("ecos"))
     }
     // NEGATIVE RESULT (r17, recorded): repartition(a_id) before this
     // dedup — so the groupBy and the rank window share one exchange —
@@ -815,14 +852,13 @@ object LlmSim extends OpModule {
     // saved exchange. The two-exchange shape stays.
     val cand = scoredSide(1).unionAll(scoredSide(2))
       .groupBy("a_id", "b_id").agg(max("ecos").as("ecos"))
-    val we = Window.partitionBy("a_id").orderBy(col("ecos").desc, col("b_id"))
     // Directed top-5 kNN edges over the multi-table candidates;
     // queries are nodes too, so their out-edges double as the walk's
     // deterministic seeds below.
-    val dir = GraftBridge.checkpoint(cand
-      .withColumn("rk", row_number().over(we))
-      .filter(col("rk") <= 5)
-      .select(col("a_id"), col("b_id"), col("ecos")))
+    def top5Edges(scored: DataFrame): DataFrame =
+      topK(scored, "a_id", 5, col("ecos").desc, col("b_id"))
+        .select(col("a_id"), col("b_id"), col("ecos"))
+    val dir = GraftBridge.checkpoint(top5Edges(cand))
     // NN-DESCENT refinement rounds (r16): co-neighbor candidates
     // ((b, c) when a→b and a→c) ∪ two-hop candidates ((a, c) when
     // a→b→c), anti-joined against existing edges, scored once, and
@@ -862,14 +898,10 @@ object LlmSim extends OpModule {
           col("nrm").as("b_nrm")).hint("shuffle_hash"), "b_id")
         .join(e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
           col("nrm").as("a_nrm")).hint("shuffle_hash"), "a_id")
-        .withColumn("ecos", round(
-          dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4))
+        .withColumn("ecos",
+          cos4(col("a_emb"), col("a_nrm"), col("b_emb"), col("b_nrm")))
         .select("a_id", "b_id", "ecos")
-      val w = Window.partitionBy("a_id").orderBy(col("ecos").desc, col("b_id"))
-      GraftBridge.checkpoint(base.unionAll(scored
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
-        .select(col("a_id"), col("b_id"), col("ecos"))))
+      GraftBridge.checkpoint(base.unionAll(top5Edges(scored)))
     }
     val dir2 = nnRound(nnRound(dir))
     // SYMMETRIZED adjacency (kNN edges ∪ reverses) — NSW links are
@@ -877,17 +909,13 @@ object LlmSim extends OpModule {
     val edges = GraftBridge.checkpoint(dir2.select("a_id", "b_id")
       .unionAll(dir2.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
       .distinct())
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val nside = e.select(col("vec_id").as("n_id"),
-      col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
+    val q = knnSide(e.filter(col("vec_id") < 10), "q")
+    val nside = knnSide(e, "n")
     // pairs (q_id, n_id) -> scored (q_id, n_id, cos); the query side
     // is |Q| rows, always broadcast.
     def scoreOf(pairs: DataFrame): DataFrame =
-      pairs.join(nside.hint("shuffle_hash"), "n_id").join(broadcast(q), "q_id")
-        .withColumn("cos", round(
-          dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 4))
+      knnScored(pairs.join(nside.hint("shuffle_hash"), "n_id")
+          .join(broadcast(q), "q_id"))
         .select("q_id", "n_id", "cos")
     // DETERMINISTIC MULTI-ENTRY seeds (r16): the query's own refined
     // shortlist (the index's candidates for that query, ties → lower
@@ -915,9 +943,7 @@ object LlmSim extends OpModule {
     // floor discipline: a 1-partition cut prices ~65 ms vs ~100–160).
     var visited = GraftBridge.checkpoint(
       seeds.unionAll(hubSeeds).repartition(col("q_id")).distinct().coalesce(1))
-    val wB0 = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    var beam = visited.withColumn("brk", row_number().over(wB0))
-      .filter(col("brk") <= 10).drop("brk")
+    var beam = topK(visited, "q_id", 10, col("cos").desc, col("n_id")).drop("rk")
     for (_ <- 1 to 3) {
       val cand = broadcast(beam.select(col("q_id"), col("n_id")))
         .join(edges, col("n_id") === col("a_id"))
@@ -943,11 +969,8 @@ object LlmSim extends OpModule {
       .select(col("q_id"), col("b_id").as("n_id")).distinct()
     val fresh4 = cand4.join(visited.select("q_id", "n_id"),
       Seq("q_id", "n_id"), "left_anti")
-    val finalVisited = visited.unionAll(scoreOf(fresh4))
-    val wF = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    finalVisited.filter(col("n_id") =!= col("q_id"))
-      .withColumn("rk", row_number().over(wF).cast("long"))
-      .filter(col("rk") <= 5)
+    topK(visited.unionAll(scoreOf(fresh4)).filter(col("n_id") =!= col("q_id")),
+        "q_id", 5, col("cos").desc, col("n_id"))
       .select("q_id", "n_id", "cos", "rk")
       .orderBy("q_id", "rk")
   }
@@ -963,19 +986,8 @@ object LlmSim extends OpModule {
     // NN-descent graph build share nothing — `par` overlaps
     // their eager cut jobs instead of serializing the two chains (both
     // sides memo-hit instantly when another query already built them).
-    val (truth, g) = par(
-      knnTruthShared(s, d),
-      knnGraphShared(s, d)
-        .select(col("q_id").as("g_q"), col("n_id").as("g_n"),
-          lit(1).as("hit")))
-    truth
-      .join(g, col("q_id") === col("g_q") && col("n_id") === col("g_n"),
-        "left")
-      .groupBy("q_id")
-      .agg(count(lit(1)).as("n_truth"), count(col("hit")).as("n_hits"))
-      .select(col("q_id"), col("n_truth"), col("n_hits"),
-        round(col("n_hits").cast("double") / col("n_truth"), 4).as("recall"))
-      .orderBy("q_id")
+    val (truth, g) = par(knnTruthShared(s, d), knnGraphShared(s, d))
+    recallOf(truth, g).orderBy("q_id")
   }
 
   /** The trained COARSE centroids of the incremental-embedding index
@@ -1004,8 +1016,7 @@ object LlmSim extends OpModule {
     * pairs on. Returns (vec_id, cell, embedding, nrm) over the FULL
     * corpus. */
   private[graft] def incEmbAssign(s: SparkSession, d: String): DataFrame = {
-    val full = Tables.embeddings(s, d).select(col("vec_id"),
-      col("embedding"), norm(col("embedding")).as("nrm"))
+    val full = normed(s, d)
     GraftBridge.checkpoint(kmAssign(full, incEmbCents(s, d))
       .join(full.select("vec_id", "embedding"), "vec_id"))
   }
@@ -1043,8 +1054,7 @@ object LlmSim extends OpModule {
       val od = ie.filter(!isNew).select(col("cell"), col("sub"),
         col("vec_id").as("o_id"), col("iv").as("o_iv"), col("inrm").as("o_nrm"))
       val dup = nw.join(od, Seq("cell", "sub"))
-        .withColumn("cos", round(
-          dot(col("n_iv"), col("o_iv")) / (col("n_nrm") * col("o_nrm")), 4))
+        .withColumn("cos", cos4(col("n_iv"), col("n_nrm"), col("o_iv"), col("o_nrm")))
         .filter(col("cos") >= 0.45)
         .select(col("n_id").as("vec_id")).distinct()
       Tables.embeddings(s, d).filter(isNew)
@@ -1120,7 +1130,8 @@ object LlmSim extends OpModule {
 
   /** Residual quantization eval (r9) — the second-stage encoding
     * FAISS-style IVF indexes apply after coarse assignment: stage 1
-    * is the trained C=8 k-means (the embed_kmeans chain), stage 2
+    * is the trained C=8 k-means (km8Shared, the chain embed_kmeans
+    * grades — read from the session memo, never re-trained), stage 2
     * quantizes the RESIDUAL v − c(assigned) with its own K=8
     * codebook (deterministic lowest-id init + one integer-exact
     * Lloyd round via the shared pq machinery, M=1 subspace spanning
@@ -1141,14 +1152,10 @@ object LlmSim extends OpModule {
     * like sim_centroid_separation. Body factored out for PlansSpec.
     */
   private[graft] def rqBody(s: SparkSession, d: String): DataFrame = {
-    val C = 8
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    var cents = kmInit(s, d, C)
-    // round 1 single-reference -> uncut (r14 cut-trim, see ivfTrain)
-    cents = kmUpdate(e, kmAssign(e, cents))
-    cents = GraftBridge.checkpoint(kmUpdate(e, kmAssign(e, cents)))
-    val assign = GraftBridge.checkpoint(kmAssign(e, cents).select("vec_id", "cell"))
+    val e = normed(s, d)
+    val cents = km8Shared(s, d)._1
+    // read once, by the residual cut below: not cut itself
+    val assign = kmAssign(e, cents).select("vec_id", "cell")
     val ci = cents.select(col("cell").as("c_cell"),
         posexplode(col("c_emb")).as(Seq("pos0", "c")))
       .select(col("c_cell"), (col("pos0") + 1).cast("long").as("cpos0"),
@@ -1205,24 +1212,18 @@ object LlmSim extends OpModule {
     * (partitioned by vec_id). Body factored out for PlansSpec.
     */
   private[graft] def silhouetteBody(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    // r16: the trained C=8 centroids are the session-memoized km8Shared
-    // chain (bit-identical to the private 2-round train this replaced;
-    // embed_kmeans emits the same centroids as its graded surface).
+    val e = normed(s, d)
+    // the trained C=8 centroids embed_kmeans grades (km8Shared)
     val cents = km8Shared(s, d)._1
     val cwn = cents.withColumn("cnrm", norm(col("c_emb")))
     val scores = e.crossJoin(broadcast(cwn))
-      .withColumn("kcos", round(
-        dot(col("embedding"), col("c_emb")) / (col("nrm") * col("cnrm")), 4))
-      .select(col("vec_id"), col("cell"),
-        round(col("kcos") * 10000).cast("long").as("k4"))
-    val w = Window.partitionBy("vec_id").orderBy(col("k4").desc, col("cell"))
-    val top2 = scores.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 2)
-    val own = top2.filter(col("rn") === 1)
+      .select(col("vec_id"), col("cell"), round(
+        cos4(col("embedding"), col("nrm"), col("c_emb"), col("cnrm")) * 10000)
+        .cast("long").as("k4"))
+    val top2 = topK(scores, "vec_id", 2, col("k4").desc, col("cell"))
+    val own = top2.filter(col("rk") === 1)
       .select(col("vec_id"), col("cell"), col("k4").as("a4"))
-    val nxt = top2.filter(col("rn") === 2)
+    val nxt = top2.filter(col("rk") === 2)
       .select(col("vec_id").as("v2"), col("k4").as("b4"))
     val sil = own.join(nxt, col("vec_id") === col("v2"))
       .withColumn("s8",
@@ -1256,10 +1257,8 @@ object LlmSim extends OpModule {
   private def knnPqFrom(dists: DataFrame): DataFrame = {
     val Q = 10
     val adc = adcScores(pqCodesPivot(pqArgmin(dists)), qDistMap(dists, Q))
-    val w = Window.partitionBy("q_id").orderBy(col("adc_dist"), col("vec_id"))
-    adc.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("n_id"),
+    topK(adc, "q_id", 3, col("adc_dist"), col("vec_id"))
+      .select(col("q_id"), col("rk").as("rnk"), col("vec_id").as("n_id"),
         col("adc_dist"))
       .coalesce(1) // ≤ 3·Q rows: the terminal sort needs no range exchange
       .orderBy("q_id", "rnk")
@@ -1481,8 +1480,8 @@ object LlmSim extends OpModule {
       val w = Window.partitionBy("vec_id")
         .orderBy(col("kcos").desc, col("cell"))
       val ranks = qv.crossJoin(broadcast(cwn))
-        .withColumn("kcos", round(
-          dot(col("embedding"), col("c_emb")) / (col("nrm") * col("cnrm")), 4))
+        .withColumn("kcos",
+          cos4(col("embedding"), col("nrm"), col("c_emb"), col("cnrm")))
         .withColumn("prk", row_number().over(w).cast("long"))
         .select(col("vec_id").as("q_id"), col("cell"), col("prk"))
       nnCell.join(ranks, nnCell("q_id") === ranks("q_id")
@@ -1503,8 +1502,7 @@ object LlmSim extends OpModule {
       val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
         norm(col("embedding")).as("b_nrm"))
       a.join(b, col("a_id") < col("b_id"))
-        .withColumn("cos", round(
-          dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4))
+        .withColumn("cos", cos4(col("a_emb"), col("a_nrm"), col("b_emb"), col("b_nrm")))
         .filter(col("cos") > 0.25)
         .select("a_id", "b_id", "cos")
         .orderBy("a_id", "b_id")
@@ -1525,9 +1523,7 @@ object LlmSim extends OpModule {
       val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
         norm(col("embedding")).as("b_nrm"))
       val cos = a.join(b, col("a_id") < col("b_id"))
-        .select(round(
-          dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4)
-          .as("c"))
+        .select(cos4(col("a_emb"), col("a_nrm"), col("b_emb"), col("b_nrm")).as("c"))
       val ths = Seq(0.2, 0.25, 0.3, 0.35, 0.4).toDF("th")
       cos.crossJoin(broadcast(ths))
         .groupBy("th")
@@ -1567,8 +1563,7 @@ object LlmSim extends OpModule {
       val b = ie.select(col("bucket"), col("vec_id").as("b_id"),
         col("iv").as("b_iv"), col("nrm").as("b_nrm"))
       val pairs = a.join(b, Seq("bucket")).filter(col("a_id") < col("b_id"))
-        .withColumn("cos", round(
-          dot(col("a_iv"), col("b_iv")) / (col("a_nrm") * col("b_nrm")), 4))
+        .withColumn("cos", cos4(col("a_iv"), col("a_nrm"), col("b_iv"), col("b_nrm")))
         .filter(col("cos") >= 0.3)
       // the mean is emitted as an exact scaled integer (Σ cos·1e4 div
       // n): a double mean of round-4 cosines lands on .00005 ties
@@ -1609,12 +1604,10 @@ object LlmSim extends OpModule {
         col("lo").as("q_lo"), col("hi").as("q_hi"))
       val n = packed.select(col("vec_id").as("n_id"),
         col("lo").as("n_lo"), col("hi").as("n_hi"))
-      val w = Window.partitionBy("q_id").orderBy(col("hdist"), col("n_id"))
-      q.join(n, col("q_id") =!= col("n_id"))
-        .withColumn("hdist", expr(
-          "CAST(bit_count(q_lo ^ n_lo) + bit_count(q_hi ^ n_hi) AS BIGINT)"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 5)
+      topK(q.join(n, col("q_id") =!= col("n_id"))
+          .withColumn("hdist", expr(
+            "CAST(bit_count(q_lo ^ n_lo) + bit_count(q_hi ^ n_hi) AS BIGINT)")),
+          "q_id", 5, col("hdist"), col("n_id"))
         .select("q_id", "n_id", "hdist", "rk")
         .orderBy("q_id", "rk")
     }),
@@ -1638,29 +1631,15 @@ object LlmSim extends OpModule {
       // them race the cold cache (the tierUniverse race class).
       val truth = knnTruthShared(s, d)
       def knnAt(m: Int): DataFrame = {
-        val t = ie.select(col("vec_id"), slice(col("iv"), 1, m).as("tv"))
-          .withColumn("tnrm", sqrt(dot(col("tv"), col("tv"))))
-        val q = t.filter(col("vec_id") < 10).select(col("vec_id").as("t_q"),
-          col("tv").as("q_tv"), col("tnrm").as("q_nrm"))
-        val n = t.select(col("vec_id").as("t_n"), col("tv").as("n_tv"),
-          col("tnrm").as("n_nrm"))
-        val w = Window.partitionBy("t_q").orderBy(col("cos").desc, col("t_n"))
-        q.join(n, col("t_q") =!= col("t_n"))
-          .withColumn("cos", round(
-            dot(col("q_tv"), col("n_tv")) / (col("q_nrm") * col("n_nrm")), 4))
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= 5)
-          .select(col("t_q"), col("t_n"))
+        val t = ie.select(col("vec_id"), slice(col("iv"), 1, m).as("embedding"))
+          .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
+        knnTop5(knnSide(t.filter(col("vec_id") < 10), "q")
+            .join(knnSide(t, "n"), col("q_id") =!= col("n_id")))
       }
       Seq(8, 16, 32).map { m =>
-        truth
-          .join(knnAt(m),
-            col("q_id") === col("t_q") && col("n_id") === col("t_n"), "left")
-          .groupBy("q_id")
-          .agg(count(lit(1)).as("n_truth"), count(col("t_q")).as("n_hits"))
+        recallOf(truth, knnAt(m))
           .select(lit(m.toLong).as("m_dims"), col("q_id"), col("n_truth"),
-            col("n_hits"),
-            round(col("n_hits").cast("double") / col("n_truth"), 4).as("recall"))
+            col("n_hits"), col("recall"))
       }.reduce(_ unionAll _).orderBy("m_dims", "q_id")
     }),
 
@@ -1693,20 +1672,16 @@ object LlmSim extends OpModule {
           _.getField("c")).as("c_iv"))
         .withColumn("cnrm", sqrt(dot(col("c_iv"), col("c_iv"))))
       val rel = iu.join(broadcast(cent), "label")
-        .withColumn("rel", round(
-          dot(col("iv"), col("c_iv")) / (col("inrm") * col("cnrm")), 4))
-      val wTop = Window.partitionBy("label").orderBy(col("rel").desc, col("vec_id"))
-      val cand = rel.withColumn("rk", row_number().over(wTop))
-        .filter(col("rk") <= 6)
+        .withColumn("rel", cos4(col("iv"), col("inrm"), col("c_iv"), col("cnrm")))
+      val cand = topK(rel, "label", 6, col("rel").desc, col("vec_id"))
         .select(col("label"), col("vec_id"), col("iv"), col("inrm"), col("rel"))
       val sims = cand.select(col("label"), col("vec_id").as("i_id"),
           col("iv").as("i_iv"), col("inrm").as("i_nrm"))
         .join(cand.select(col("label"), col("vec_id").as("j_id"),
           col("iv").as("j_iv"), col("inrm").as("j_nrm")), Seq("label"))
         .filter(col("i_id") =!= col("j_id"))
-        .select(col("label"), col("i_id"), col("j_id"), round(
-          dot(col("i_iv"), col("j_iv")) / (col("i_nrm") * col("j_nrm")), 4)
-          .as("sim"))
+        .select(col("label"), col("i_id"), col("j_id"),
+          cos4(col("i_iv"), col("i_nrm"), col("j_iv"), col("j_nrm")).as("sim"))
       // MMR scores live on an EXACT integer 1e5 grid: rel/sim are
       // already round-4 values, so rel_e4 = round(rel·1e4) is an exact
       // integer and score_e5 = 7·rel_e4 − 3·max_sim_e4 is pure integer
@@ -1787,8 +1762,7 @@ object LlmSim extends OpModule {
       val b = ies.select(col("cell"), col("sub"), col("vec_id").as("b_id"),
         col("iv").as("b_iv"), col("inrm").as("b_nrm"))
       val dups = a.join(b, Seq("cell", "sub")).filter(col("a_id") < col("b_id"))
-        .withColumn("cos", round(
-          dot(col("a_iv"), col("b_iv")) / (col("a_nrm") * col("b_nrm")), 4))
+        .withColumn("cos", cos4(col("a_iv"), col("a_nrm"), col("b_iv"), col("b_nrm")))
         .filter(col("cos") >= 0.45)
       val dropped = dups.select(col("cell"), col("b_id")).distinct()
       val members = ie.groupBy("cell").agg(count(lit(1)).as("n_members"))
@@ -1807,38 +1781,16 @@ object LlmSim extends OpModule {
 
     "sample_kcenter" -> ((s, d) => kcenterBody(s, d)),
 
-    "sim_knn" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          norm(col("embedding")).as("q_nrm"))
-      val n = e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-        norm(col("embedding")).as("n_nrm"))
-      val scored = q.join(n, col("q_id") =!= col("n_id"))
-        .withColumn("cos", round(
-          dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 4))
-      val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-      scored.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 5)
+    "sim_knn" -> ((s, d) =>
+      knnTop5(knnAllPairs(s, d))
         .select("q_id", "n_id", "cos", "rk")
-        .orderBy("q_id", "rk")
-    }),
+        .orderBy("q_id", "rk")),
 
     "sim_knn_lsh" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
-          lshBucket(col("embedding")).as("bucket"))
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("q_nrm"), col("bucket"))
-      val n = e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-        col("nrm").as("n_nrm"), col("bucket"))
-      val scored = q.join(n, Seq("bucket")).filter(col("q_id") =!= col("n_id"))
-        .withColumn("cos", round(
-          dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 4))
-      val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-      scored.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 5)
+      val e = normed(s, d).withColumn("bucket", lshBucket(col("embedding")))
+      knnTop5(knnSide(e.filter(col("vec_id") < 10), "q", "bucket")
+          .join(knnSide(e, "n", "bucket"), Seq("bucket"))
+          .filter(col("q_id") =!= col("n_id")))
         .select("q_id", "bucket", "n_id", "cos", "rk")
         .orderBy("q_id", "rk")
     }),
@@ -1851,18 +1803,13 @@ object LlmSim extends OpModule {
       // left-joins LSH hits onto the brute truth set, and aggregates
       // hit counts per query. Cost is the two kNN plans + dimension-
       // sized joins; no new scan of the embedding table.
-      val brute = knnTruthShared(s, d)
       val lsh = queries("sim_knn_lsh")(s, d)
-        .select(col("q_id").as("l_q"), col("n_id").as("l_n"), lit(1).as("hit"))
-      val lshCnt = lsh.groupBy("l_q").agg(count(lit(1)).as("n_lsh0"))
-      brute
-        .join(lsh, col("q_id") === col("l_q") && col("n_id") === col("l_n"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_brute"), count(col("hit")).as("n_hits"))
+      val lshCnt = lsh.groupBy(col("q_id").as("l_q")).agg(count(lit(1)).as("n_lsh0"))
+      recallOf(knnTruthShared(s, d), lsh)
         .join(lshCnt, col("q_id") === col("l_q"), "left")
-        .select(col("q_id"), col("n_brute"),
+        .select(col("q_id"), col("n_truth").as("n_brute"),
           coalesce(col("n_lsh0"), lit(0L)).as("n_lsh"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("n_brute"), 4).as("recall"))
+          col("recall"))
         .orderBy("q_id")
     }),
 
@@ -1896,18 +1843,10 @@ object LlmSim extends OpModule {
         knnTruthShared(s, d),
         ivfTrain(s, d))
       val (cents, assign) = ta
-      def recallAt(np: Int): DataFrame = {
-        val ivf = ivfProbe(cents, assign, np)
-          .select(col("q_id").as("i_q"), col("n_id").as("i_n"), lit(1).as("hit"))
-        brute
-          .join(ivf, col("q_id") === col("i_q") && col("n_id") === col("i_n"),
-            "left")
-          .groupBy("q_id")
-          .agg(count(lit(1)).as("n_brute"), count(col("hit")).as("n_hits"))
-          .select(lit(np.toLong).as("nprobe"), col("q_id"), col("n_brute"),
-            col("n_hits"),
-            round(col("n_hits").cast("double") / col("n_brute"), 4).as("recall"))
-      }
+      def recallAt(np: Int): DataFrame =
+        recallOf(brute, ivfProbe(cents, assign, np))
+          .select(lit(np.toLong).as("nprobe"), col("q_id"),
+            col("n_truth").as("n_brute"), col("n_hits"), col("recall"))
       recallAt(1).union(recallAt(2)).union(recallAt(4))
         .orderBy("nprobe", "q_id")
     }),
@@ -2207,8 +2146,7 @@ object LlmSim extends OpModule {
       val b = e.select(col("vec_id").as("b_id"), col("label"),
         col("embedding").as("b_emb"), col("nrm").as("b_nrm"))
       a.join(b, Seq("label")).filter(col("a_id") < col("b_id"))
-        .withColumn("cos", round(
-          dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4))
+        .withColumn("cos", cos4(col("a_emb"), col("a_nrm"), col("b_emb"), col("b_nrm")))
         .filter(col("cos") >= 0.4)
         .select(col("label").cast("long").as("label"),
           col("a_id"), col("b_id"), col("cos"))
@@ -2261,9 +2199,7 @@ object LlmSim extends OpModule {
         .filter(col("vec_id") =!= col("q_id"))
         .groupBy("q_id", "vec_id")
         .agg(sum(col("vi") * col("qi")).as("ip"))
-      val w = Window.partitionBy("q_id").orderBy(col("ip").desc, col("vec_id"))
-      scored.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
+      topK(scored, "q_id", 3, col("ip").desc, col("vec_id"))
         .select(col("q_id"), col("rk"), col("vec_id").as("n_id"), col("ip"))
         .orderBy("q_id", "rk")
     }),
@@ -2281,18 +2217,10 @@ object LlmSim extends OpModule {
       val e = Tables.embeddings(s, d).select(col("vec_id"),
         col("label").cast("long").as("label"),
         col("embedding"), norm(col("embedding")).as("nrm"))
-      val cents = e
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "vf")))
-        .groupBy(col("label"), col("pos0"))
-        .agg((sum(floor(col("vf").cast("double") * 1000000.0).cast("long")).cast("double")
-          / (lit(1000000.0) * count(lit(1)))).as("c"))
-        .groupBy("label")
-        .agg(transform(sort_array(collect_list(struct(col("pos0"), col("c")))),
-          _.getField("c")).as("c_emb"))
-      val cwn = cents.withColumn("cnrm", norm(col("c_emb")))
+      val cwn = gridMean(e, "label").withColumn("cnrm", norm(col("c_emb")))
       e.join(broadcast(cwn), "label")
-        .withColumn("cos", round(
-          dot(col("embedding"), col("c_emb")) / (col("nrm") * col("cnrm")), 4))
+        .withColumn("cos",
+          cos4(col("embedding"), col("nrm"), col("c_emb"), col("cnrm")))
         .filter(col("cos") < 0.75)
         .select(col("vec_id"), col("label"), col("cos"))
         .orderBy("vec_id")
@@ -2496,19 +2424,9 @@ object LlmSim extends OpModule {
         .filter(col("vec_id") =!= col("q_id"))
         .groupBy("q_id", "vec_id")
         .agg(sum((col("vi") - col("qvi")) * (col("vi") - col("qvi"))).as("dist"))
-      val w = Window.partitionBy("q_id").orderBy(col("dist"), col("vec_id"))
-      val truth = exact.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
+      val truth = topK(exact, "q_id", 3, col("dist"), col("vec_id"))
         .select(col("q_id"), col("vec_id").as("n_id"))
-      val adc = knnPqFrom(pqDistsShared(s, d))
-        .select(col("q_id").as("a_q"), col("n_id").as("a_n"), lit(1).as("hit"))
-      truth
-        .join(adc, col("q_id") === col("a_q") && col("n_id") === col("a_n"),
-          "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_truth"), count(col("hit")).as("n_hits"))
-        .select(col("q_id"), col("n_truth"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("n_truth"), 4).as("recall"))
+      recallOf(truth, knnPqFrom(pqDistsShared(s, d)))
         .coalesce(1) // Q rows: the terminal sort needs no range exchange
         .orderBy("q_id")
     }),
@@ -2572,19 +2490,10 @@ object LlmSim extends OpModule {
       // the recomputed centroids are bit-identical across engines and
       // partition layouts (a raw double mean is summation-order
       // dependent and would diverge between iterations).
-      //
-      // The two iterations unroll into one logical plan; at 100 TB each
-      // iteration would persist/checkpoint its assignment (and the
-      // centroid side — C·dim rows — always broadcasts). Scoring joins
-      // the posexploded vectors to the centroid table on pos and
-      // partial-aggregates the per-(vec, cell) dot products: shuffle
-      // volume is |V|·C rows, never a window over the score matrix.
-      // Centroids, assignment, and update are the shared
-      // kmInit/kmAssign/kmUpdate machinery (see the k-means section at
-      // the top of this object) — sim_knn_ivf trains its coarse
-      // quantizer with the same passes. r16: the trained C=8 chain is
-      // session-memoized (km8Shared) — embed_silhouette scores the
-      // same centroids, so the 2-round training runs once per session.
+      // The graded surface of THE trained C=8 chain (km8Shared, see the
+      // k-means section at the top of this object): its centroids and
+      // round-2 assignment, which embed_silhouette and embed_rq read
+      // from the same session memo.
       val (cents, assign) = km8Shared(s, d)
       val members = assign.groupBy("cell").agg(count(lit(1)).as("n"))
       // c is emitted UNROUNDED: s/(1e6·n) over integer s,n is one IEEE
@@ -2743,9 +2652,7 @@ object LlmSim extends OpModule {
         col("label").as("b_label"), col("iv").as("b_iv"),
         col("nrm").as("b_nrm"))
       val pairs = a.join(b, Seq("bucket")).filter(col("a_id") < col("b_id"))
-        .filter(round(
-          dot(col("a_iv"), col("b_iv")) / (col("a_nrm") * col("b_nrm")), 4)
-          >= 0.3)
+        .filter(cos4(col("a_iv"), col("a_nrm"), col("b_iv"), col("b_nrm")) >= 0.3)
         .select(col("a_label"), col("b_label"))
       pairs
         .select(col("a_label").as("label"), col("b_label").as("other"))
@@ -2777,21 +2684,8 @@ object LlmSim extends OpModule {
       // a_id, so top-3 selection parallelizes per vector; at 100 TB
       // the bucket join and the self-join on directed edges (≤ 3|V|
       // rows) are the only shuffles.
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"), col("embedding"),
-          norm(col("embedding")).as("nrm"),
-          lshBucket(col("embedding")).as("bucket"))
-      val a = e.select(col("bucket"), col("vec_id").as("a_id"),
-        col("label").as("a_label"), col("embedding").as("a_emb"),
-        col("nrm").as("a_nrm"))
-      val b = e.select(col("bucket"), col("vec_id").as("b_id"),
-        col("embedding").as("b_emb"), col("nrm").as("b_nrm"))
-      val w = Window.partitionBy("a_id").orderBy(col("cos").desc, col("b_id"))
-      val edges = a.join(b, Seq("bucket")).filter(col("a_id") =!= col("b_id"))
-        .withColumn("cos", round(
-          dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
+      val edges = topK(bucketPairs(s, d).filter(col("a_id") =!= col("b_id")),
+          "a_id", 3, col("cos").desc, col("b_id"))
         .select(col("a_id"), col("a_label"), col("b_id"))
       val rev = edges.select(col("a_id").as("r_b"), col("b_id").as("r_a"))
       edges.join(rev,
@@ -2816,23 +2710,10 @@ object LlmSim extends OpModule {
       // Rounded cosines with ties to the lower neighbor id keep both
       // engines ranking identically. At 100 TB: one bucket equi-join
       // + a per-vector top-k — the mutual-kNN census's exact cost.
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"), col("embedding"),
-          norm(col("embedding")).as("nrm"),
-          lshBucket(col("embedding")).as("bucket"))
-      val a = e.select(col("bucket"), col("vec_id").as("a_id"),
-        col("label").as("a_label"), col("embedding").as("a_emb"),
-        col("nrm").as("a_nrm"))
-      val b = e.select(col("bucket"), col("vec_id").as("n_id"),
-        col("label").as("n_label"), col("embedding").as("n_emb"),
-        col("nrm").as("n_nrm"))
-      val w = Window.partitionBy("a_id").orderBy(col("cos").desc, col("n_id"))
-      a.join(b, Seq("bucket")).filter(col("a_label") =!= col("n_label"))
-        .withColumn("cos", round(
-          dot(col("a_emb"), col("n_emb")) / (col("a_nrm") * col("n_nrm")), 4))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
-        .select("a_id", "a_label", "n_id", "n_label", "cos", "rk")
+      topK(bucketPairs(s, d).filter(col("a_label") =!= col("b_label")),
+          "a_id", 3, col("cos").desc, col("b_id"))
+        .select(col("a_id"), col("a_label"), col("b_id").as("n_id"),
+          col("b_label").as("n_label"), col("cos"), col("rk"))
         .orderBy("a_id", "rk")
     }),
 
@@ -2850,22 +2731,8 @@ object LlmSim extends OpModule {
       // correctness decision is pure integers (2·same > count). At
       // 100 TB: one bucket equi-join + per-vector top-k + a |labels|
       // rollup.
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"), col("embedding"),
-          norm(col("embedding")).as("nrm"),
-          lshBucket(col("embedding")).as("bucket"))
-      val a = e.select(col("bucket"), col("vec_id").as("a_id"),
-        col("label").as("a_label"), col("embedding").as("a_emb"),
-        col("nrm").as("a_nrm"))
-      val b = e.select(col("bucket"), col("vec_id").as("b_id"),
-        col("label").as("b_label"), col("embedding").as("b_emb"),
-        col("nrm").as("b_nrm"))
-      val w = Window.partitionBy("a_id").orderBy(col("cos").desc, col("b_id"))
-      val edges = a.join(b, Seq("bucket")).filter(col("a_id") =!= col("b_id"))
-        .withColumn("cos", round(
-          dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
+      val edges = topK(bucketPairs(s, d).filter(col("a_id") =!= col("b_id")),
+          "a_id", 3, col("cos").desc, col("b_id"))
         .select(col("a_id"), col("a_label"), col("b_label"))
       edges.groupBy("a_id", "a_label")
         .agg(count(lit(1)).as("cnt"),
@@ -3527,7 +3394,7 @@ object LlmSim extends OpModule {
   private def subSplitSql(assign: String, trainPred: String,
       pfx: String, u: String = "u"): String = {
     def asg(members: String, cents: String, out: String) =
-      s"""$out AS (SELECT vec_id, cell, sub FROM (
+      s"""$out AS MATERIALIZED (SELECT vec_id, cell, sub FROM (
          |  SELECT sc.vec_id, sc.cell, sc.sub,
          |    row_number() OVER (PARTITION BY sc.vec_id
          |      ORDER BY sc.cos DESC, sc.sub) AS rn
@@ -3542,18 +3409,18 @@ object LlmSim extends OpModule {
          |      ON cn.cell = c.cell AND cn.sub = c.sub
          |    GROUP BY a.vec_id, a.cell, c.sub, n.nrm, cn.scnrm
          |  ) sc) WHERE rn = 1)""".stripMargin
-    s"""${pfx}tr AS (SELECT vec_id, cell FROM $assign WHERE $trainPred),
-       |${pfx}kc AS (SELECT cell,
+    s"""${pfx}tr AS MATERIALIZED (SELECT vec_id, cell FROM $assign WHERE $trainPred),
+       |${pfx}kc AS MATERIALIZED (SELECT cell,
        |  (count(*) + ${SubCellTarget - 1}) // $SubCellTarget AS kc
        |  FROM ${pfx}tr GROUP BY cell),
-       |${pfx}seed AS (SELECT m.cell, m.vec_id % k.kc + 1 AS sub,
+       |${pfx}seed AS MATERIALIZED (SELECT m.cell, m.vec_id % k.kc + 1 AS sub,
        |  min(m.vec_id) AS vid
        |  FROM ${pfx}tr m JOIN ${pfx}kc k ON k.cell = m.cell
        |  GROUP BY m.cell, m.vec_id % k.kc + 1),
-       |${pfx}s0 AS (SELECT sd.cell, sd.sub, $u.pos, $u.v AS c
+       |${pfx}s0 AS MATERIALIZED (SELECT sd.cell, sd.sub, $u.pos, $u.v AS c
        |  FROM ${pfx}seed sd JOIN $u ON $u.vec_id = sd.vid),
        |${asg(s"${pfx}tr", s"${pfx}s0", s"${pfx}a1")},
-       |${pfx}s1 AS (SELECT a.cell, a.sub, $u.pos,
+       |${pfx}s1 AS MATERIALIZED (SELECT a.cell, a.sub, $u.pos,
        |  CAST(sum(CAST(floor($u.v * 1000000.0) AS BIGINT)) AS DOUBLE)
        |    / (1000000.0 * count(*)) AS c
        |  FROM ${pfx}a1 a JOIN $u ON $u.vec_id = a.vec_id
@@ -4875,20 +4742,23 @@ object LlmSim extends OpModule {
          |ORDER BY label, pick""".stripMargin,
 
     // Same trained C=16 Lloyd chain as sim_knn_ivf; within-cell pairs
-    // on the exact ⌊v·1e6⌋ integer grid; keep-first drop rule.
+    // on the exact ⌊v·1e6⌋ integer grid; keep-first drop rule. The
+    // chained CTEs are MATERIALIZED (here, in the incremental twin and
+    // in subSplitSql): DuckDB otherwise re-expands a CTE once per
+    // reference, and the unnested `u` alone is read 11 times.
     "dedup_semdedup" ->
-      s"""WITH u AS (
+      s"""WITH u AS MATERIALIZED (
          |  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS pos,
          |    CAST(unnest(embedding) AS DOUBLE) AS v
          |  FROM embeddings
          |),
-         |norms AS ($NormsSql),
-         |c0 AS (SELECT vec_id AS cell, pos, v AS c FROM u WHERE vec_id < 16),
-         |a1 AS (${kmAssignSql("c0")}),
-         |c1 AS (${kmUpdateSql("a1")}),
-         |a2 AS (${kmAssignSql("c1")}),
-         |c2 AS (${kmUpdateSql("a2")}),
-         |assign AS (${kmAssignSql("c2")}),
+         |norms AS MATERIALIZED ($NormsSql),
+         |c0 AS MATERIALIZED (SELECT vec_id AS cell, pos, v AS c FROM u WHERE vec_id < 16),
+         |a1 AS MATERIALIZED (${kmAssignSql("c0")}),
+         |c1 AS MATERIALIZED (${kmUpdateSql("a1")}),
+         |a2 AS MATERIALIZED (${kmAssignSql("c1")}),
+         |c2 AS MATERIALIZED (${kmUpdateSql("a2")}),
+         |assign AS MATERIALIZED (${kmAssignSql("c2")}),
          |${subSplitSql("assign", "true", "s")},
          |iu AS (SELECT vec_id, pos,
          |  CAST(floor(v * 1000000.0) AS DOUBLE) AS w FROM u),
@@ -4950,20 +4820,20 @@ object LlmSim extends OpModule {
     // over old vectors only), both sides assigned, new×old within-cell
     // pairs on the integer grid, per-label ingest ledger.
     "dedup_incremental_embedding" ->
-      s"""WITH u AS (
+      s"""WITH u AS MATERIALIZED (
          |  SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS pos,
          |    CAST(unnest(embedding) AS DOUBLE) AS v
          |  FROM embeddings
          |),
-         |norms AS ($NormsSql),
-         |uo AS (SELECT * FROM u WHERE vec_id % 7 <> 3),
-         |c0 AS (SELECT vec_id AS cell, pos, v AS c FROM u
+         |norms AS MATERIALIZED ($NormsSql),
+         |uo AS MATERIALIZED (SELECT * FROM u WHERE vec_id % 7 <> 3),
+         |c0 AS MATERIALIZED (SELECT vec_id AS cell, pos, v AS c FROM u
          |       WHERE vec_id < 9 AND vec_id % 7 <> 3),
-         |a1 AS (${kmAssignSql("c0", u = "uo")}),
-         |c1 AS (${kmUpdateSql("a1", u = "uo")}),
-         |a2 AS (${kmAssignSql("c1", u = "uo")}),
-         |c2 AS (${kmUpdateSql("a2", u = "uo")}),
-         |assign AS (${kmAssignSql("c2")}),
+         |a1 AS MATERIALIZED (${kmAssignSql("c0", u = "uo")}),
+         |c1 AS MATERIALIZED (${kmUpdateSql("a1", u = "uo")}),
+         |a2 AS MATERIALIZED (${kmAssignSql("c1", u = "uo")}),
+         |c2 AS MATERIALIZED (${kmUpdateSql("a2", u = "uo")}),
+         |assign AS MATERIALIZED (${kmAssignSql("c2")}),
          |${subSplitSql("assign", "vec_id % 7 <> 3", "s")},
          |iu AS (SELECT vec_id, pos,
          |  CAST(floor(v * 1000000.0) AS DOUBLE) AS w FROM u),

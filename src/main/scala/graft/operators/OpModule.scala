@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** Session-level cross-QUERY memo of derived index/graph frames
   * (r16 verdict #4/#6): the one lifetime longer than a query. Heavy
@@ -104,13 +104,16 @@ trait OpModule {
     * built, settling BOTH before rethrowing either failure, so no
     * thunk outlives the call. Share only already-checkpointed
     * inputs across the two thunks: racing stages recompute a lazy
-    * shared frame once per racer. */
+    * shared frame once per racer. Both thunks run with the caller's
+    * Spark local properties, so their jobs carry the caller's job
+    * group (the query's name under Bench and Verify). */
   protected def par[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val fa = Future(a)
-    val fb = Future(b)
+    val (ta, tb) = (GraftBridge.withCallerProperties(a), GraftBridge.withCallerProperties(b))
+    val fa = Future(ta())
+    val fb = Future(tb())
     val ra = Await.ready(fa, Duration.Inf).value.get
     val rb = Await.ready(fb, Duration.Inf).value.get
     (ra.get, rb.get)

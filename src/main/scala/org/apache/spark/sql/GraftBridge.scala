@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.SparkEnv
+import org.apache.spark.{SparkContext, SparkEnv}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.storage.RDDBlockId
@@ -24,6 +24,22 @@ object GraftBridge {
   def catalogTableNames(spark: SparkSession): Seq[String] =
     spark.asInstanceOf[classic.SparkSession].sessionState.catalog
       .listTables(spark.catalog.currentDatabase).map(_.table)
+
+  /** `body` as a thunk to run on another thread with the calling
+    * thread's Spark local properties (job group, job description,
+    * scheduler pool), copied now: a pool thread otherwise keeps the
+    * properties of whichever thread created it. The running thread's
+    * own properties come back when the thunk returns. */
+  def withCallerProperties[T](body: => T): () => T = SparkContext.getActive match {
+    case Some(sc) =>
+      val props = org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+      () => {
+        val own = sc.getLocalProperties
+        sc.setLocalProperties(props)
+        try body finally sc.setLocalProperties(own)
+      }
+    case None => () => body
+  }
 
   /** A physical layout a checkpoint may declare: `n` hash partitions on
     * `partCols`, each sorted ascending (nulls first) by `orderCols`. */

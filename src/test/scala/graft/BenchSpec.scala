@@ -13,6 +13,29 @@ class BenchSpec extends SparkSpec {
   // sim_knn_ivf reads the memoized IVF index; agg_gini uses neither.
   private val names = Seq("sim_knn_ivfpq", "sim_knn_ivf", "agg_gini")
 
+  test("every job of a pass carries its query's name, also from `par`'s pool threads") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // Builds sim_knn_ivfpq once under another job group, so the pool
+    // threads `par` starts here inherit that group. This test runs
+    // first: the suite's later passes would start them under the
+    // query's own name and hide a missing hand-over.
+    sc.setJobGroup("stale", "stale")
+    try SparkEntry.queries("sim_knn_ivfpq")(spark, sf) finally sc.clearJobGroup()
+    org.apache.spark.QueryProbe.measure(spark)(()) // drains those jobs' events
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    // the pass drains the listener bus before it returns
+    val rows = try Bench.pass(spark, sf, Seq("sim_knn_ivfpq")) finally sc.removeSparkListener(listener)
+    val got = groups.toArray.toSeq
+    assert(rows.head.error.isEmpty && got.size === rows.head.stats.jobs, s"$rows, $got")
+    assert(got.forall(_ == "sim_knn_ivfpq"), s"job groups: ${got.groupBy(identity).view.mapValues(_.size).toMap}")
+  }
+
   test("a pass's rows split each query's wall time into in-job time and driver gap") {
     Tables.embeddings(spark, sf) // the schema memo's footer job, outside both passes
     val passes = Seq.fill(2)(Bench.pass(spark, sf, names))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.col
   * sf0.001 layout never answers another dir's read.
   */
 class BucketedLayoutSpec extends SparkSpec {
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Fixtures.testdata("0.001")
 
   private def withBucketed[A](f: => A): A = {
     spark.conf.set(Tables.BucketedConf, "true")
@@ -125,7 +125,7 @@ class BucketedLayoutSpec extends SparkSpec {
       // sf0.01 has no layout → loose path; row count proves which
       // files were read (6,000 vs 60,000 lineitem rows).
       assert(Tables.lineitem(spark, sf).count() === 6000L)
-      assert(Tables.lineitem(spark, "/root/testdata/sf0.01").count() === 60000L)
+      assert(Tables.lineitem(spark, Fixtures.testdata("0.01")).count() === 60000L)
     } finally Tables.dropBucketed(spark, sf)
   }
 

@@ -10,7 +10,7 @@ import graft.sources.Sources
 class BucketingSpec extends SparkSpec {
 
   test("join on the bucket key runs with no exchange on either side") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = Fixtures.testdata("0.001")
     Sources.writeBucketed(Tables.orders(spark, sf), "b_orders", "o_orderkey", 4)
     Sources.writeBucketed(
       Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity"),
@@ -44,7 +44,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("group-by on the bucket key needs no exchange before the aggregate") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = Fixtures.testdata("0.001")
     Sources.writeBucketed(
       Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity"),
       "b_li_agg", "l_orderkey", 4)

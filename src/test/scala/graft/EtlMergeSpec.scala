@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   */
 class EtlMergeSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Fixtures.testdata("0.001")
 
   private lazy val keys = Tables.customer(spark, sf)
     .select("c_custkey").collect().map(_.getLong(0)).toSet

@@ -9,7 +9,7 @@ import graft.functions.{GraftFunctions, ShingleIds}
   */
 class FunctionsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Fixtures.testdata("0.001")
 
   test("vec_dot / vec_norm match the HOF formulation on real embeddings") {
     val hofDot = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>

@@ -28,7 +28,7 @@ import scala.util.Random
   */
 class FuzzSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Fixtures.testdata("0.001")
 
   // The cached views MUST be released when this suite ends: the shared
   // session's CacheManager matches plan fragments, so a still-cached

@@ -246,7 +246,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("graph_pagerank conserves rank mass over the sf0.001 trade graph") {
-    val rows = SparkEntry.queries("graph_pagerank")(spark, "/root/testdata/sf0.001")
+    val rows = SparkEntry.queries("graph_pagerank")(spark, Fixtures.testdata("0.001"))
       .collect()
     assert(rows.length === 25)
     val total = rows.map(_.getDouble(1)).sum
@@ -272,7 +272,7 @@ class GraphSpec extends SparkSpec {
     // non-negative by construction (sums of products of non-negative
     // terms). A broken normalization or a sign slip in the
     // coalesce(0) path breaks this before anything else.
-    val rows = SparkEntry.queries("graph_hits")(spark, "/root/testdata/sf0.001")
+    val rows = SparkEntry.queries("graph_hits")(spark, Fixtures.testdata("0.001"))
       .collect()
     assert(rows.length === 25)
     // Bound = the 25 rounding quanta the comment above derives: each
@@ -292,7 +292,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("basket_rules emits ordered pairs with consistent support and lift") {
-    val rows = SparkEntry.queries("basket_rules")(spark, "/root/testdata/sf0.001")
+    val rows = SparkEntry.queries("basket_rules")(spark, Fixtures.testdata("0.001"))
       .collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r => r.getString(0) < r.getString(1)))

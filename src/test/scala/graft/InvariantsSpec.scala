@@ -6,7 +6,7 @@ package graft
   */
 class InvariantsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Fixtures.testdata("0.001")
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)
 
   test("persist-scoped queries leave the cache manager empty after their action") {
@@ -71,7 +71,7 @@ class InvariantsSpec extends SparkSpec {
     // GRADED sf0.01 too, uniform with the curriculum/crossval
     // tripwires below.
     import org.apache.spark.sql.functions._
-    Seq(sf, "/root/testdata/sf0.01").foreach { d =>
+    Seq(sf, Fixtures.testdata("0.01")).foreach { d =>
       val docs = Tables.documents(spark, d).select(col("doc_id"), col("lang"))
       val toks = Tables.documents(spark, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
@@ -112,7 +112,7 @@ class InvariantsSpec extends SparkSpec {
     // demand ≥5 orders of magnitude more headroom than a last-ulp
     // disagreement (|x|≈1e7 → ulp ≈ 2e-9).
     import org.apache.spark.sql.functions._
-    Seq(sf, "/root/testdata/sf0.01").foreach { d =>
+    Seq(sf, Fixtures.testdata("0.01")).foreach { d =>
       val docs = Tables.documents(spark, d)
       val freq = docs.select(explode(split(col("text"), " ")).as("token"))
         .groupBy("token").agg(count(lit(1)).as("cnt"))
@@ -138,7 +138,7 @@ class InvariantsSpec extends SparkSpec {
     // scored doc at both the test and the GRADED SF (the sample_dsir
     // tripwire pattern).
     import org.apache.spark.sql.functions._
-    Seq(sf, "/root/testdata/sf0.01").foreach { d =>
+    Seq(sf, Fixtures.testdata("0.01")).foreach { d =>
       val docs = Tables.documents(spark, d)
       val train = docs.filter(col("doc_id") % 2 === 0)
       val evToks = docs.filter(col("doc_id") % 2 === 1)
@@ -200,8 +200,8 @@ class InvariantsSpec extends SparkSpec {
     // multi-SF pattern the headroom tripwires use. K_c is computed
     // from TRAINING members, so the incremental audit counts old
     // vectors per cell.
-    Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-        "/root/testdata/sf0.1").foreach { d =>
+    Seq(Fixtures.testdata("0.001"), Fixtures.testdata("0.01"),
+        Fixtures.testdata("0.1")).foreach { d =>
       val (_, a) = graft.operators.LlmSim.ivfTrain(spark, d)
       val hot = a.groupBy("cell").count()
         .agg(max("count")).collect().head.getLong(0)
@@ -1901,7 +1901,7 @@ class InvariantsSpec extends SparkSpec {
     // negative overcount means the sketch and the probe disagree on a
     // hash (the silent way the readout goes wrong in exactly one
     // engine). Checked at both the smoke and the graded SF.
-    Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach { d =>
+    Seq(Fixtures.testdata("0.001"), Fixtures.testdata("0.01")).foreach { d =>
       val rows = SparkEntry.queries("text_countmin")(spark, d).collect()
       assert(rows.length === 20, s"top-20 readout at $d")
       rows.foreach { r =>

@@ -39,6 +39,20 @@ class JobBudgetSpec extends SparkSpec {
       "evt_markov_steady" -> 4))
   }
 
+  test("embed_rq reads the C=8 chain embed_kmeans trained") {
+    // One pass, embed_kmeans first: embed_rq reads the memoized
+    // centroids instead of training the same chain again.
+    withinBudget(Seq(
+      "embed_kmeans" -> 13,
+      "embed_rq" -> 17))
+  }
+
+  test("evt_markov_attrib folds its three absorption steps in-row") {
+    // No per-step cut: each frame of the counterfactual sweep is read
+    // once, so only the census and the events base run jobs.
+    withinBudget(Seq("evt_markov_attrib" -> 5))
+  }
+
   test("the relational queries run their terminal sort without a sampling job") {
     // One job per stage left: the sort's input stage runs once, in the
     // sort's own task, instead of once for the range sampler and once

@@ -278,7 +278,7 @@ class MultimodalSpec extends SparkSpec {
     // counts sum to the frame's full raster (the decode saw ALL
     // pixels, not a truncated or padding-polluted raster).
     val rows = graft.SparkEntry.queries("multimodal_video_decode")(
-      spark, "/root/testdata/sf0.001").collect()
+      spark, Fixtures.testdata("0.001")).collect()
     val byFrame = rows.groupBy(r => (r.getLong(0), r.getLong(1)))
     (0L until 32L).foreach { id =>
       val k = 4 + (id % 3).toInt

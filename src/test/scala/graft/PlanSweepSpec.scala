@@ -39,7 +39,7 @@ class PlanSweepSpec extends SparkSpec {
   import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Fixtures.testdata("0.001")
 
   /** Queries whose global (unpartitioned) windows ride bounded frames
     * — the bound is the invariant; anything NOT listed here must

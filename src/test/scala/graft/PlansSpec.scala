@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
   */
 class PlansSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Fixtures.testdata("0.001")
 
   private def executed(df: DataFrame): SparkPlan = {
     df.collect() // force AQE to finalize the adaptive plan

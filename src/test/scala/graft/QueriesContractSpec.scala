@@ -8,7 +8,7 @@ package graft
   */
 class QueriesContractSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Fixtures.testdata("0.001")
 
   /** Pair-producing dedup/similarity queries may legitimately find no
     * pairs in the 500-doc smoke corpus. */

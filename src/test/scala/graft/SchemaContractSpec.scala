@@ -4,7 +4,7 @@ import org.apache.spark.sql.types._
 
 /** Fast-fail guard against silent testdata schema drift.
   *
-  * Round-5 lesson: the driver regenerated /root/testdata and changed
+  * Round-5 lesson: the testdata was regenerated and changed
   * events.ts from parquet TIMESTAMP(NANOS) to TIMESTAMP(MICROS); the
   * engine discovered the drift 59 times over as an opaque analyzer
   * error deep inside each events query. This spec asserts the expected
@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * the dtype-adaptive branch in Tables.events.
   */
 class SchemaContractSpec extends SparkSpec {
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = Fixtures.testdata("0.001")
 
   private val tsLike: Set[DataType] = Set(LongType, TimestampNTZType, TimestampType)
 

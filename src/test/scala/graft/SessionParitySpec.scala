@@ -14,7 +14,7 @@ import graft.operators.Events
   * semantics the real-data leg must agree unconditionally.
   */
 class SessionParitySpec extends SparkSpec {
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Fixtures.testdata("0.001")
   private val GapUs = 1800000000L
 
   test("session_window MERGES an exact-gap-late event (strict-> boundary)") {

@@ -56,7 +56,7 @@ class SourcesSpec extends SparkSpec {
 
   test("orc round-trip preserves values and pushes filters into the scan") {
     val dir = tmp()
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, Fixtures.testdata("0.001"))
       .select("doc_id", "lang", "n_chars")
     Sources.writeOrc(docs, s"$dir/docs_orc")
     val back = Sources.readOrc(spark, s"$dir/docs_orc")
@@ -76,7 +76,7 @@ class SourcesSpec extends SparkSpec {
 
   test("partitioned parquet write prunes on the partition column") {
     val dir = tmp()
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, Fixtures.testdata("0.001"))
     Sources.writeParquet(docs, s"$dir/docs", partitionCols = Seq("lang"))
     // one subdirectory per lang value
     val subdirs = new java.io.File(s"$dir/docs").listFiles()

@@ -14,7 +14,7 @@ import graft.streaming.{Event, Streams}
   * synthetic fixture.
   */
 class StreamBatchParitySpec extends SparkSpec {
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Fixtures.testdata("0.001")
 
   private def realEvents: Seq[Event] = {
     import spark.implicits._
@@ -589,7 +589,7 @@ class StreamBatchParitySpec extends SparkSpec {
     // batch output.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val sf01 = "/root/testdata/sf0.01"
+    val sf01 = Fixtures.testdata("0.01")
     val ev = Tables.events(spark, sf01)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))

@@ -16,10 +16,11 @@ process may use: the host's MemTotal, or the memory limit of its cgroup
 processes use at the same time is not subtracted. DuckDB runs at most
 four threads and spills to the gitignored .tmp/ at the repository root.
 At its default limit (80% of RAM) one sf0.1 run grew past 11 GB on a
-16 GB host and the kernel killed it. Two thirds of 16 GB is what the
-hungriest sf0.01 oracle, dedup_semdedup, needs: it ran out of memory at
-7.2 GiB and passed at 9.3 GiB. An oracle that still runs out of memory is reported
-as a FAIL like any other error.
+16 GB host and the kernel killed it. The two-thirds figure was sized on
+dedup_semdedup at sf0.01 before its oracle materialized its CTEs: it ran
+out of memory at 7.2 GiB and passed at 9.3 GiB. Materialized, it peaks
+near 0.4 GB at sf0.01 and 2 GB at sf0.1. An oracle that still runs out
+of memory is reported as a FAIL like any other error.
 """
 import sys, json, glob, math, os
 import duckdb
