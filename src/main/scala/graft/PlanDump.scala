@@ -5,8 +5,10 @@ package graft
   * `<outDir>/<query>_<suffix>.txt`, so before/after plan claims in
   * OPTIMIZATION_r16.md are checkable without running Spark.
   *
-  * Usage: runMain graft.PlanDump <outDir> <suffix> <q1,q2,...>
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
+  * Usage: runMain graft.PlanDump <outDir> <suffix> <q1,q2,...|all>
+  * (`all` dumps every registry query, in name order). Env:
+  * SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
+  * `tools/plandiff.py` compares two such dump directories.
   *
   * Notes: SessionMemo is cleared before EACH dump so every plan is
   * the cold-session shape (memoized sub-chains appear as checkpoint
@@ -20,7 +22,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
+    val names =
+      if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
+      else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = LocalSession(8)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

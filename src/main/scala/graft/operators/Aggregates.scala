@@ -203,8 +203,8 @@ object Aggregates extends OpModule {
           Dec2(col("o_totalprice")).as("price"))
       val rep = o.select(col("segment"), col("o_orderkey"), col("price"),
           explode(sequence(lit(0), lit(B - 1))).as("b"))
-        .withColumn("h", ((col("o_orderkey") % lit(2147483648L))
-          * lit(2654435761L) + col("b") * lit(97003L)) % lit(1000003L))
+        .withColumn("h",
+          (knuth31(col("o_orderkey")) + col("b") * lit(97003L)) % lit(1000003L))
         .withColumn("w", when(col("h") < 367879, lit(0L))
           .when(col("h") < 735758, lit(1L))
           .when(col("h") < 919698, lit(2L)).otherwise(lit(3L)))

@@ -447,28 +447,34 @@ object Events extends OpModule {
       // event volume: the heavy work is evt_path's partial-agged
       // count, everything after is one-row arithmetic.
       // kept row sums: outgoing mass into recurring targets only
-      val withRs = GraftBridge.checkpoint(transitionRow(s, d).withColumn("rs",
-        transform(typeIdx, i =>
-          aggregate(
-            filter(col("cl"), s2 => s2.getField("f") === tpAt(i) &&
-              array_contains(col("tp"), s2.getField("t"))),
-            lit(0L), (acc, s2) => acc + s2.getField("n")))))
+      val rowSums = transform(typeIdx, i =>
+        aggregate(
+          filter(col("cl"), s2 => s2.getField("f") === tpAt(i) &&
+            array_contains(col("tp"), s2.getField("t"))),
+          lit(0L), (acc, s2) => acc + s2.getField("n")))
       def nij(i: Column, j: Column) = coalesce(
         try_element_at(
           filter(col("cl"), s2 => s2.getField("f") === tpAt(i) &&
             s2.getField("t") === tpAt(j)), lit(1)).getField("n"),
         lit(0L))
-      def stepX(x: Column) = transform(typeIdx, j =>
+      def stepX(x: Column, rs: Column) = transform(typeIdx, j =>
         aggregate(typeIdx, lit(0.0), (acc, i) =>
           acc + element_at(x, i + 1) *
-            (nij(i, j).cast("double") / element_at(col("rs"), i + 1).cast("double"))))
+            (nij(i, j).cast("double") / element_at(rs, i + 1).cast("double"))))
       val x0 = transform(typeIdx, _ => lit(1.0) / tSz.cast("double"))
       // x3 = stepX(stepX(stepX(x0))) as ONE in-row fold: the same
       // arithmetic in the same order (bit-identical doubles), with one
       // copy of the step expression — so no per-step cut is needed to
       // keep the projection from inlining the step three times deep.
-      val i3 = withRs.withColumn("x3",
-        aggregate(sequence(lit(1), lit(3)), x0, (x, _) => stepX(x)))
+      // The row sums ride in the fold's accumulator, so they are
+      // evaluated once per row with no cut: a column read once inside
+      // the step lambda would be inlined there by the optimizer and
+      // re-evaluated at every step.
+      val i3 = transitionRow(s, d).withColumn("x3",
+        aggregate(sequence(lit(1), lit(3)), struct(x0.as("x"), rowSums.as("rs")),
+          (a, _) => struct(stepX(a.getField("x"), a.getField("rs")).as("x"),
+            a.getField("rs").as("rs")),
+          a => a.getField("x")))
       i3.select(col("tp"), posexplode(col("x3")).as(Seq("i", "p")))
         .select(element_at(col("tp"), col("i") + 1).as("event_type"),
           round(col("p"), 4).as("stationary"))
@@ -953,7 +959,7 @@ object Events extends OpModule {
       // absorbing state is a real transition — and the heavy work is
       // the partial-agged evt_path census; everything after is
       // one-row arithmetic at any event volume.
-      val withRs = GraftBridge.checkpoint(transitionRow(s, d).withColumn("rs", outMass))
+      val withRs = transitionRow(s, d).withColumn("rs", outMass)
       val p0 = transform(typeIdx, _ => lit(0.0))
       // p3 = two more steps folded over p1: the same arithmetic as
       // three single steps.

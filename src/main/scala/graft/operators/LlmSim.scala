@@ -53,14 +53,6 @@ object LlmSim extends OpModule {
   private def cos4(a: Column, na: Column, b: Column, nb: Column): Column =
     round(dot(a, b) / (na * nb), 4)
 
-  /** Each `key`'s first `k` rows by `order`, ranked in a long `rk` (the
-    * oracles' row_number). Callers end `order` with the lower id, so
-    * the ranks are total and engine-identical. */
-  private def topK(df: DataFrame, key: String, k: Int, order: Column*): DataFrame =
-    df.withColumn("rk",
-        row_number().over(Window.partitionBy(key).orderBy(order: _*)).cast("long"))
-      .filter(col("rk") <= k)
-
   /** The embeddings as (vec_id, embedding, nrm). */
   private def normed(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
@@ -2563,8 +2555,7 @@ object LlmSim extends OpModule {
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
       val m = e.groupBy("label").agg(count(lit(1)).as("n"))
         .agg(min("n").as("m"))
-      val key = ((col("vec_id") % lit(2147483648L)) * lit(2654435761L)) %
-        lit(1000003L)
+      val key = knuth31(col("vec_id")) % lit(1000003L)
       val w = Window.partitionBy("label").orderBy(key.asc, col("vec_id").asc)
       e.withColumn("rnk", row_number().over(w).cast("long"))
         .crossJoin(broadcast(m))
@@ -3110,6 +3101,29 @@ object LlmSim extends OpModule {
       |  ) CROSS JOIN range(8) t(j)
       |  GROUP BY vec_id, j
       |) GROUP BY vec_id""".stripMargin
+
+  /** The oracle mirror of [[bucketPairs]]: CTEs ending in `pairs`
+    * (a_id, a_label, b_id, b_label, cos) over every same-bucket vector
+    * pair, self pairs included. Each pair's dot is one
+    * `list_inner_product` over the DOUBLE[] vectors, an index-order sum
+    * like Spark's `dot`; joining each pair to both vectors' unnested
+    * elements instead holds one row per element per pair. */
+  private val BucketPairsSql =
+    s"""buckets AS ($BucketsSql),
+       |norms AS ($NormsSql),
+       |vecs AS MATERIALIZED (
+       |  SELECT e.vec_id, e.label, b.bucket, n.nrm,
+       |    CAST(e.embedding AS DOUBLE[]) AS emb
+       |  FROM embeddings e
+       |  JOIN buckets b ON b.vec_id = e.vec_id
+       |  JOIN norms n ON n.vec_id = e.vec_id
+       |),
+       |pairs AS (
+       |  SELECT a.vec_id AS a_id, a.label AS a_label,
+       |    b.vec_id AS b_id, b.label AS b_label,
+       |    round(list_inner_product(a.emb, b.emb) / (a.nrm * b.nrm), 4) AS cos
+       |  FROM vecs a JOIN vecs b ON b.bucket = a.bucket
+       |)""".stripMargin
 
   /** Arithmetic aHash chain (no decode — the synthesized pixels are
     * pure integer arithmetic): CTEs `ids/px/m/bits/hs`, with `hs` =
@@ -3839,25 +3853,12 @@ object LlmSim extends OpModule {
          |) WHERE rk <= 5 ORDER BY q_id, rk""".stripMargin,
 
     "sim_knn_graph_stats" ->
-      s"""WITH buckets AS ($BucketsSql),
-         |ua AS (${unnested("a", "true")}),
-         |ub AS (${unnested("b", "true")}),
-         |norms AS ($NormsSql),
-         |scored AS (
-         |  SELECT a_id, b_id,
-         |    round(sum(ua.v * ub.v) / (na.nrm * nb.nrm), 4) AS cos
-         |  FROM ua JOIN ub ON ua.pos = ub.pos AND ua.a_id <> ub.b_id
-         |  JOIN buckets ba ON ba.vec_id = ua.a_id
-         |  JOIN buckets bb ON bb.vec_id = ub.b_id AND bb.bucket = ba.bucket
-         |  JOIN norms na ON na.vec_id = ua.a_id
-         |  JOIN norms nb ON nb.vec_id = ub.b_id
-         |  GROUP BY a_id, b_id, na.nrm, nb.nrm
-         |),
+      s"""WITH $BucketPairsSql,
          |edges AS (
          |  SELECT a_id, b_id FROM (
          |    SELECT a_id, b_id,
          |      row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id) AS rk
-         |    FROM scored
+         |    FROM pairs WHERE a_id <> b_id
          |  ) WHERE rk <= 3
          |)
          |SELECT l.label, count(*) AS n_edges,
@@ -3897,41 +3898,15 @@ object LlmSim extends OpModule {
          |LEFT JOIN gres g ON g.q_id = t.q_id AND g.n_id = t.n_id
          |GROUP BY t.q_id ORDER BY t.q_id""".stripMargin,
 
-    // Same edges as the mutual-kNN census (bucket-gated candidates,
-    // pair-first join order); the majority decision is pure integers.
+    // Same edges as the mutual-kNN census; the majority decision is
+    // pure integers.
     "embed_knn_label_acc" ->
-      s"""WITH buckets AS ($BucketsSql),
-         |ua AS (${unnested("a", "true")}),
-         |ub AS (${unnested("b", "true")}),
-         |norms AS ($NormsSql),
-         |cand AS (
-         |  SELECT ba.vec_id AS a_id, la.label AS a_label,
-         |    bb.vec_id AS b_id, lb.label AS b_label
-         |  FROM buckets ba
-         |  JOIN buckets bb ON bb.bucket = ba.bucket AND bb.vec_id <> ba.vec_id
-         |  JOIN embeddings la ON la.vec_id = ba.vec_id
-         |  JOIN embeddings lb ON lb.vec_id = bb.vec_id
-         |),
-         |dots AS (
-         |  SELECT c.a_id, c.a_label, c.b_id, c.b_label,
-         |    sum(ua.v * ub.v) AS dp
-         |  FROM cand c
-         |  JOIN ua ON ua.a_id = c.a_id
-         |  JOIN ub ON ub.b_id = c.b_id AND ub.pos = ua.pos
-         |  GROUP BY 1, 2, 3, 4
-         |),
-         |scored AS (
-         |  SELECT a_id, a_label, b_id, b_label,
-         |    round(dp / (na.nrm * nb.nrm), 4) AS cos
-         |  FROM dots
-         |  JOIN norms na ON na.vec_id = a_id
-         |  JOIN norms nb ON nb.vec_id = b_id
-         |),
+      s"""WITH $BucketPairsSql,
          |edges AS (
          |  SELECT a_id, a_label, b_label FROM (
          |    SELECT a_id, a_label, b_label,
          |      row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id) AS rk
-         |    FROM scored
+         |    FROM pairs WHERE a_id <> b_id
          |  ) WHERE rk <= 3
          |),
          |per AS (
@@ -3946,46 +3921,13 @@ object LlmSim extends OpModule {
          |    * 10000 // CAST(count(*) AS BIGINT) AS acc_e4
          |FROM per GROUP BY a_label ORDER BY label""".stripMargin,
 
-    // Candidate pairs materialize FIRST (bucket equi-join + label
-    // filter), then the per-pair dot joins the unnested vectors — the
-    // sim_recall_ivf idots shape. The single-CTE form let DuckDB pick
-    // a pos-first join order at sf0.1 (|V|²·64 intermediate rows,
-    // ~80 GB of spill → ENOSPC); pair-first bounds the dot join at
-    // Σ|bucket|²·64 rows.
     "sim_hard_negatives" ->
-      s"""WITH buckets AS ($BucketsSql),
-         |ua AS (${unnested("a", "true")}),
-         |ub AS (${unnested("b", "true")}),
-         |norms AS ($NormsSql),
-         |cand AS (
-         |  SELECT ba.vec_id AS a_id, la.label AS a_label,
-         |    bb.vec_id AS b_id, lb.label AS n_label
-         |  FROM buckets ba
-         |  JOIN buckets bb ON bb.bucket = ba.bucket AND bb.vec_id <> ba.vec_id
-         |  JOIN embeddings la ON la.vec_id = ba.vec_id
-         |  JOIN embeddings lb ON lb.vec_id = bb.vec_id
-         |  WHERE la.label <> lb.label
-         |),
-         |dots AS (
-         |  SELECT c.a_id, c.a_label, c.b_id, c.n_label,
-         |    sum(ua.v * ub.v) AS dp
-         |  FROM cand c
-         |  JOIN ua ON ua.a_id = c.a_id
-         |  JOIN ub ON ub.b_id = c.b_id AND ub.pos = ua.pos
-         |  GROUP BY 1, 2, 3, 4
-         |),
-         |scored AS (
-         |  SELECT a_id, a_label, b_id, n_label,
-         |    round(dp / (na.nrm * nb.nrm), 4) AS cos
-         |  FROM dots
-         |  JOIN norms na ON na.vec_id = a_id
-         |  JOIN norms nb ON nb.vec_id = b_id
-         |)
-         |SELECT a_id, a_label, b_id AS n_id, n_label, cos, rk FROM (
-         |  SELECT a_id, a_label, b_id, n_label, cos,
+      s"""WITH $BucketPairsSql
+         |SELECT a_id, a_label, b_id AS n_id, b_label AS n_label, cos, rk FROM (
+         |  SELECT a_id, a_label, b_id, b_label, cos,
          |    CAST(row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id)
          |      AS BIGINT) AS rk
-         |  FROM scored
+         |  FROM pairs WHERE a_label <> b_label
          |) WHERE rk <= 3 ORDER BY a_id, rk""".stripMargin,
 
     // HUGEINT carries the member·sum cross products (the Spark side

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lit, row_number}
 
 /** Session-level cross-QUERY memo of derived index/graph frames
   * (r16 verdict #4/#6): the one lifetime longer than a query. Heavy
@@ -92,8 +94,25 @@ trait OpModule {
     * (double summation order differs between engines and flips
     * round-at-4 ties; decimal sums cannot).
     */
-  protected def Dec2(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  protected def Dec2(c: Column): Column =
     c.cast("decimal(12,2)")
+
+  /** Each `key`'s first `k` rows by `order`, ranked in a long `rk` (the
+    * oracles' row_number). Callers end `order` with the lower id, so
+    * the ranks are total and engine-identical. */
+  protected def topK(df: DataFrame, key: String, k: Int, order: Column*): DataFrame =
+    df.withColumn("rk",
+        row_number().over(Window.partitionBy(key).orderBy(order: _*)).cast("long"))
+      .filter(col("rk") <= k)
+
+  /** The multiplicative (Knuth) scramble of a non-negative id, folded to
+    * 31 bits first: (2^31−1)·2654435761 < 2^63, so the product never
+    * wraps a BIGINT at any id scale (un-folded, ids ≳ 3.5e9 overflow,
+    * which Spark wraps silently while DuckDB promotes). The caller
+    * reduces it by its own modulus; the oracles spell the same
+    * `((x % 2147483648) * 2654435761)`. */
+  protected def knuth31(x: Column): Column =
+    (x % lit(2147483648L)) * lit(2654435761L)
 
   /** Builds two INDEPENDENT sub-chains concurrently (r15): a body
     * whose paths each end in checkpoint jobs would otherwise build

@@ -225,25 +225,17 @@ object Streams {
     * The vocab is a stream-static broadcast join (screenIngest's
     * discipline — dimension-sized trained frame, no index data in
     * task closures); the ledger is a plain streaming aggregation
-    * whose state is |langs| rows. All counters are exact integers,
-    * so complete-mode totals after replaying a corpus slice are
-    * bit-comparable with the graded batch ledger's integer columns
+    * whose state is |langs| rows, built by the SHARED
+    * `LlmText.bpeLedger` (batch and streamed ledgers cannot drift).
+    * All counters are exact integers, so complete-mode totals after
+    * replaying a corpus slice are bit-comparable with the graded batch ledger's integer columns
     * (StreamBatchParitySpec, 15th twin). Out-of-vocab words drop out
     * of the inner join exactly as in the batch operator — production
     * retrains / extends the vocab offline and restarts the sink, the
     * standard applied-tokenizer deployment.
     */
-  def bpeEncodeIngest(docs: DataFrame, vocab: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    docs
-      .select(col("lang"), explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .join(broadcast(vocab), "word")
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("n_c")).as("n_chars"),
-        sum(col("n_p")).as("n_pieces"))
-  }
+  def bpeEncodeIngest(docs: DataFrame, vocab: DataFrame): DataFrame =
+    graft.operators.LlmText.bpeLedger(docs, broadcast(vocab))
 
   /** Continuous Count-Min maintenance — the streaming twin of
     * `text_countmin`'s sketch census and the reason a CMS exists at

@@ -3,6 +3,9 @@
 # rehearsal at all three scale factors (and two thread counts at the
 # graded sf) → bench JSON.
 # Usage: tools/qa.sh [--fast]   (--fast: sf0.01 only, skip bench)
+# Plan evidence is a separate step: dump every plan in two trees with
+# `runMain graft.PlanDump <dir> <suffix> all` and list the queries whose
+# plans differ with `python3 tools/plandiff.py <dirA> <dirB>`.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
