@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 /** Opaque media blob: `content` carries image/audio/video bytes;
@@ -46,7 +46,9 @@ case class AudioWindowStats(media_id: Long, sample_rate: Long,
   * entry point offers `repartition(n)` before the map stage — binary
   * blobs don't split, making partition-count the only parallelism
   * knob; feature vectors are small, so the expensive stage should run
-  * BEFORE any wide transform and write its output columnar.
+  * BEFORE any wide transform and write its output columnar. The three
+  * batched decode stages share that preamble and batch loop
+  * (`batched`).
   */
 object Multimodal {
 
@@ -215,29 +217,36 @@ object Multimodal {
                        batchSize: Int = 64, parallelism: Int = 0,
                        codec: AudioCodec = WavCodec): Dataset[AudioWindowStats] = {
     import ds.sparkSession.implicits._
-    val in = if (parallelism > 0) ds.repartition(parallelism) else ds
-    in.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // Per-batch init point (codec/model context), never per row.
-        batch.iterator.flatMap { r =>
-          val sr = codec.sampleRate(r.content).toLong
-          val ch = codec.channels(r.content).toLong
-          codec.samples(r.content).grouped(windowSamples).zipWithIndex
-            .map { case (w, i) =>
-              var ss = 0L; var pk = 0L; var j = 0
-              while (j < w.length) {
-                val v = w(j).toLong
-                ss += v * v
-                val a = math.abs(v)
-                if (a > pk) pk = a
-                j += 1
-              }
-              AudioWindowStats(r.media_id, sr, ch, i.toLong, w.length.toLong,
-                ss, pk)
-            }
+    batched(ds, batchSize, parallelism)(_.flatMap { r =>
+      val sr = codec.sampleRate(r.content).toLong
+      val ch = codec.channels(r.content).toLong
+      codec.samples(r.content).grouped(windowSamples).zipWithIndex
+        .map { case (w, i) =>
+          var ss = 0L; var pk = 0L; var j = 0
+          while (j < w.length) {
+            val v = w(j).toLong
+            ss += v * v
+            val a = math.abs(v)
+            if (a > pk) pk = a
+            j += 1
+          }
+          AudioWindowStats(r.media_id, sr, ch, i.toLong, w.length.toLong,
+            ss, pk)
         }
-      }
-    }
+    })
+  }
+
+  /** The batch loop of the decode stages: `parallelism` > 0
+    * repartitions before the CPU-bound map stage (binary blobs don't
+    * split, so partition count is the only parallelism knob), and
+    * each partition runs `f` over `batchSize`-row batches — the
+    * per-batch init point where a real pipeline loads its
+    * codec/model context, once per batch, never per row (the Arrow
+    * record-batch shape). */
+  private def batched[T: Encoder](ds: Dataset[MediaRow], batchSize: Int,
+      parallelism: Int)(f: Iterator[MediaRow] => Iterator[T]): Dataset[T] = {
+    val in = if (parallelism > 0) ds.repartition(parallelism) else ds
+    in.mapPartitions(_.grouped(batchSize).flatMap(batch => f(batch.iterator)))
   }
 
   /** Typed metadata extraction. byte_len is computed with the native
@@ -262,15 +271,8 @@ object Multimodal {
                     batchSize: Int = 64, parallelism: Int = 0,
                     codec: Codec = FakeCodec): Dataset[MediaFeatures] = {
     import ds.sparkSession.implicits._
-    val in = if (parallelism > 0) ds.repartition(parallelism) else ds
-    in.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // Per-batch init point: a real pipeline loads the codec/model
-        // context here, once per batch, never per row.
-        batch.iterator.map(r =>
-          MediaFeatures(r.media_id, dim, codec.features(r.content, dim)))
-      }
-    }
+    batched(ds, batchSize, parallelism)(_.map(r =>
+      MediaFeatures(r.media_id, dim, codec.features(r.content, dim))))
   }
 
   /** Batched perceptual average-hash: ImageIO-decode each blob ONCE in
@@ -286,45 +288,39 @@ object Multimodal {
   def imageAHash(ds: Dataset[MediaRow], batchSize: Int = 64,
                  parallelism: Int = 0): Dataset[ImageAHash] = {
     import ds.sparkSession.implicits._
-    val in = if (parallelism > 0) ds.repartition(parallelism) else ds
-    in.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // Per-batch init point (codec context), never per row.
-        batch.iterator.map { r =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.content))
-          if (img == null) ImageAHash(r.media_id, 0, 0, 0L, 0L, 0L)
-          else {
-            val (w, h) = (img.getWidth, img.getHeight)
-            val n = w * h
-            val px = new Array[Int](n)
-            var sum = 0L
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val g = img.getRGB(x, y) & 0xff
-                px(y * w + x) = g
-                sum += g
-                x += 1
-              }
-              y += 1
-            }
-            val mean = sum / n
-            var h0 = 0L
-            var h1 = 0L
-            var k = 0
-            while (k < math.min(64, n)) {
-              if (px(k) > mean) {
-                if (k < 32) h0 |= 1L << k else h1 |= 1L << (k - 32)
-              }
-              k += 1
-            }
-            ImageAHash(r.media_id, w, h, mean, h0, h1)
+    batched(ds, batchSize, parallelism)(_.map { r =>
+      val img = javax.imageio.ImageIO.read(
+        new java.io.ByteArrayInputStream(r.content))
+      if (img == null) ImageAHash(r.media_id, 0, 0, 0L, 0L, 0L)
+      else {
+        val (w, h) = (img.getWidth, img.getHeight)
+        val n = w * h
+        val px = new Array[Int](n)
+        var sum = 0L
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            val g = img.getRGB(x, y) & 0xff
+            px(y * w + x) = g
+            sum += g
+            x += 1
           }
+          y += 1
         }
+        val mean = sum / n
+        var h0 = 0L
+        var h1 = 0L
+        var k = 0
+        while (k < math.min(64, n)) {
+          if (px(k) > mean) {
+            if (k < 32) h0 |= 1L << k else h1 |= 1L << (k - 32)
+          }
+          k += 1
+        }
+        ImageAHash(r.media_id, w, h, mean, h0, h1)
       }
-    }
+    })
   }
 
   /** "Resize": fold adjacent feature pairs — the stub twin of

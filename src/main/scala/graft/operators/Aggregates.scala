@@ -50,6 +50,7 @@ object Aggregates extends OpModule {
             if (rem > 0) full ++ Iterator((arr(n - 1), rem.toLong)) else full
           }
         }.toDF("v", "w"))
+    // Unpartitioned: the coreset holds <= 256 rows per lineitem partition.
     val wOrd = Window.orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = coreset.withColumn("cw", sum("w").over(wOrd))
@@ -86,6 +87,7 @@ object Aggregates extends OpModule {
       val vals = Tables.lineitem(s, d)
         .select(col("l_extendedprice").cast("double").as("v"))
         .withColumn("bk", floor(col("v") / 1000).cast("long"))
+      // Unpartitioned offsets: one row per price bucket.
       val wPrev = Window.orderBy("bk")
         .rowsBetween(Window.unboundedPreceding, -1)
       val offs = vals.groupBy("bk").agg(count(lit(1)).as("c"))
@@ -456,6 +458,7 @@ object Aggregates extends OpModule {
         .groupBy("o_custkey")
         .agg(sum(Dec2(col("o_totalprice"))).as("x"))
         .withColumn("bk", floor(col("x") / 10000).cast("long"))
+      // Unpartitioned offsets: one row per spend bucket, never per customer.
       val wPrev = Window.orderBy("bk")
         .rowsBetween(Window.unboundedPreceding, -1)
       val offs = spend.groupBy("bk").agg(count(lit(1)).as("c"))
@@ -484,6 +487,7 @@ object Aggregates extends OpModule {
       // both from engine-exact inputs.
       val cents = Dec2(col("o_totalprice")) * 100
       val digit = substring(cents.cast("long").cast("string"), 1, 1)
+      // Unpartitioned grand total over the <= 10-row digit rollup.
       val n = sum("n_orders").over(Window.partitionBy())
       Tables.orders(s, d)
         .groupBy(digit.as("digit"))
@@ -497,8 +501,8 @@ object Aggregates extends OpModule {
 
     "win_mom_growth" -> ((s, d) => {
       // Month-over-month revenue growth — the reporting staple. One
-      // shuffle for the monthly rollup, then lag over the ~80-row
-      // month series; growth pct divides exact-decimal-derived
+      // shuffle for the monthly rollup, then an unpartitioned lag over
+      // the ~80-row month series; growth pct divides exact-decimal-derived
       // doubles. First month's growth is NULL by definition.
       val monthly = Tables.orders(s, d)
         .groupBy(to_date(date_trunc("month", col("o_orderdate"))).as("month"))
@@ -631,6 +635,7 @@ object Aggregates extends OpModule {
         sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("n_b"))
       val tots = g.agg(sum("n_a").as("tot_a"), sum("n_b").as("tot_b"))
       val gb = g.withColumn("bk", floor(col("v") / 50).cast("long"))
+      // Unpartitioned offsets: one row per value bucket.
       val wPrev = Window.orderBy("bk")
         .rowsBetween(Window.unboundedPreceding, -1)
       val offs = gb.groupBy("bk")

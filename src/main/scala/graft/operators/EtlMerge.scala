@@ -23,11 +23,30 @@ import graft.Tables
   * base with a daily delta, broadcast turns the merge into a map-only
   * scan of base). AQE handles a skewed business key. No window, no
   * collect, output is |base ∪ delta| (+1 row per changed SCD2 key).
+  *
+  * Shared kernels: the two upsert queries read one simulated batch
+  * (`upsertSlices`); the shard census of etl_compaction_plan is
+  * [[Events.typeDays]].
   */
 object EtlMerge extends OpModule {
 
   /** SCD2 effective date of the simulated delta batch. */
   private val ScdDate = "1997-06-01"
+
+  /** The simulated upsert batch over customer, shared by
+    * etl_merge_upsert and etl_merge_idempotent: base = every key but
+    * each 3rd, so the delta has true inserts (c_custkey, c_name,
+    * c_acctbal); delta = every 2nd key with an updated name and
+    * balance (c_custkey, d_name, d_acctbal). */
+  private def upsertSlices(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val cust = Tables.customer(s, d)
+    (cust.filter(col("c_custkey") % 3 =!= 0)
+      .select("c_custkey", "c_name", "c_acctbal"),
+     cust.filter(col("c_custkey") % 2 === 0)
+      .select(col("c_custkey"),
+        concat(col("c_name"), lit("#u")).as("d_name"),
+        (col("c_acctbal") + 100).as("d_acctbal")))
+  }
 
   val queries: Map[String, Q] = Map(
     "etl_value_drift" -> ((s, d) => {
@@ -66,17 +85,9 @@ object EtlMerge extends OpModule {
     }),
 
     "etl_merge_upsert" -> ((s, d) => {
-      // base: customers except every 3rd key (so delta has true
-      // inserts); delta: every 2nd key with updated name/balance.
-      val base = Tables.customer(s, d).filter(col("c_custkey") % 3 =!= 0)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-          lit(1).as("in_base"))
-      val delta = Tables.customer(s, d).filter(col("c_custkey") % 2 === 0)
-        .select(col("c_custkey"),
-          concat(col("c_name"), lit("#u")).as("d_name"),
-          (col("c_acctbal") + 100).as("d_acctbal"),
-          lit(1).as("in_delta"))
-      base.join(delta, Seq("c_custkey"), "full_outer")
+      val (base, delta) = upsertSlices(s, d)
+      base.withColumn("in_base", lit(1))
+        .join(delta.withColumn("in_delta", lit(1)), Seq("c_custkey"), "full_outer")
         .select(col("c_custkey"),
           coalesce(col("d_name"), col("c_name")).as("name"),
           coalesce(col("d_acctbal"), col("c_acctbal")).as("acctbal"),
@@ -95,20 +106,15 @@ object EtlMerge extends OpModule {
       // n_row_diff = 0 is graded). Both applications are full-outer
       // key joins; the diff is a symmetric EXCEPT ALL, all
       // partial-agged to three broadcast scalars.
-      val cust = Tables.customer(s, d)
-      val delta = cust.filter(col("c_custkey") % 2 === 0)
-        .select(col("c_custkey").as("k"),
-          concat(col("c_name"), lit("#u")).as("d_name"),
-          (col("c_acctbal") + 100).as("d_acctbal"))
+      val (base0, upd) = upsertSlices(s, d)
+      val delta = upd.withColumnRenamed("c_custkey", "k")
       def applyMerge(base: DataFrame): DataFrame =
         base.join(delta, col("c_custkey") === col("k"), "full_outer")
           .select(coalesce(col("c_custkey"), col("k")).as("c_custkey"),
             coalesce(col("d_name"), col("name")).as("name"),
             coalesce(col("d_acctbal"), col("acctbal")).as("acctbal"))
-      val base0 = cust.filter(col("c_custkey") % 3 =!= 0)
-        .select(col("c_custkey"), col("c_name").as("name"),
-          col("c_acctbal").as("acctbal"))
-      val m1 = applyMerge(base0)
+      val m1 = applyMerge(base0.withColumnRenamed("c_name", "name")
+        .withColumnRenamed("c_acctbal", "acctbal"))
       val m2 = applyMerge(m1)
       val c1 = m1.agg(count(lit(1)).as("n_after_once"))
       val c2 = m2.agg(count(lit(1)).as("n_after_twice"))
@@ -430,9 +436,7 @@ object EtlMerge extends OpModule {
       // integer arithmetic. TARGET=2000 is the test-scale stand-in
       // for a ~128 MB real target; the packing math is scale-free.
       val T = 2000L
-      val shards = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
+      val shards = Events.typeDays(s, d, count(lit(1)).as("n"))
       val w = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       shards

@@ -22,6 +22,15 @@ import graft.Tables
   * (BIGINT) and instants as epoch *microseconds* — integer arithmetic
   * is timezone-free and identical in both engines, unlike formatted
   * local timestamps.
+  *
+  * Shared kernels, one definition each: the user-clustered base
+  * ([[evtByUser]]); the per-(event_type, day) rollup ([[typeDays]],
+  * also read by Windows and EtlMerge) and the day-sorted volume
+  * arrays of the forecast folds (`volumeSeries`); the Pearson sums
+  * (`pearsonSums`, read by `OpModule.pearson`); the A/B family's
+  * per-user cents (`purchaseCents`), two-arm moments (`armMoments`)
+  * and their doubles and zero-variance guard (`Arms`); the Markov
+  * census, its one-row gather and the absorption step.
   */
 object Events extends OpModule {
 
@@ -47,18 +56,100 @@ object Events extends OpModule {
     // skew-splits a user-numbered repartition, so the checkpointed
     // RDD's layout is EXACTLY HashPartitioning(user_id, n) and the
     // bridge may declare it (plain localCheckpoint re-enters the
-    // planner as UnknownPartitioning under AQE — measured r17). n is
-    // in the memo key: a session whose shuffle partitions change must
-    // not read a base laid out for the old count.
-    val n = s.conf.getOption("spark.sql.shuffle.partitions")
-      .flatMap(_.trim.toIntOption).filter(_ > 0)
-      .getOrElse(s.sparkContext.defaultParallelism)
-    SessionMemo.memo(s, d, s"evtByUser/$n")(
+    // planner as UnknownPartitioning under AQE — measured r17). The
+    // memo key carries n, so a session whose shuffle partitions
+    // change never reads a base laid out for the old count.
+    val n = SessionMemo.shufflePartitions(s)
+    SessionMemo.memo(s, d, "evtByUser")(
       GraftBridge.checkpoint(
         Tables.events(s, d)
           .repartition(n, col("user_id"))
           .sortWithinPartitions("user_id", "ts", "event_id"),
         Some(GraftBridge.Layout(n, Seq("user_id"), Seq("user_id", "ts", "event_id")))))
+  }
+
+  /** The per-(event_type, day) rollup of the event stream with the
+    * caller's aggregates: the day-grain frame (|types|·|days| rows at
+    * any event volume) under every day-series query in Windows,
+    * Events and EtlMerge. */
+  private[operators] def typeDays(s: SparkSession, d: String,
+      agg: Column, more: Column*): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+      .agg(agg, more: _*)
+
+  /** Each type's daily volume as a day-sorted double array `xs`, for
+    * types with at least `minDays` days: the input of the forecast
+    * folds, which recurse over it in index order. */
+  private def volumeSeries(s: SparkSession, d: String, minDays: Int): DataFrame =
+    typeDays(s, d, count(lit(1)).as("n"))
+      .groupBy("event_type")
+      .agg(transform(
+        sort_array(collect_list(struct(col("day"), col("n")))),
+        e => e.getField("n").cast("double")).as("xs"))
+      .filter(size(col("xs")) >= minDays)
+
+  /** The five exact integer sums a [[pearson]] correlation of `x` and
+    * `y` reads, as aggregates. */
+  private def pearsonSums(x: Column, y: Column): Seq[Column] =
+    Seq(sum(x).as("sx"), sum(y).as("sy"), sum(x * x).as("sxx"),
+      sum(y * y).as("syy"), sum(x * y).as("sxy"))
+
+  // ---- A/B experiments (users split into two arms by user_id parity) --
+
+  /** Each purchasing user's spend in exact integer cents, with its arm
+    * (user_id, xc, grp): Dec2 → ×100 → BIGINT, the moment discipline
+    * of the A/B family. */
+  private def purchaseCents(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .filter(col("event_type") === "purchase")
+      .groupBy(col("user_id"))
+      .agg((sum(Dec2(col("value"))) * 100).cast("long").as("xc"))
+      .withColumn("grp", pmod(col("user_id"), lit(2)))
+
+  /** Two-arm moments of the exact-cent column `x` of `df` (arm a = `grp`
+    * 0, arm b = `grp` 1), one row per `keys`: per arm the size `n`, Σx,
+    * Σx², min and max, pivoted to na/sxa/sxxa/mna/mxa and the b twins.
+    * Σx² routes through DECIMAL: per-user cent totals squared would
+    * silently wrap a Java long at ~3e9 cents/user (DuckDB errors
+    * instead of wrapping — the engines would even disagree on HOW
+    * they fail). DECIMAL(18,0)² → DECIMAL(38,0) keeps both exact. */
+  private def armMoments(df: DataFrame, x: Column, keys: String*): DataFrame = {
+    val m = df.groupBy((keys :+ "grp").map(col): _*)
+      .agg(count(lit(1)).as("n"), sum(x).as("sx"),
+        sum(x.cast("decimal(18,0)") * x.cast("decimal(18,0)")).as("sxx"),
+        min(x).as("mn"), max(x).as("mx"))
+    def side(g: Int, c: String) = max(when(col("grp") === g, col(c)))
+    m.groupBy(keys.map(col): _*).agg(
+      side(0, "n").as("na"), side(0, "sx").as("sxa"), side(0, "sxx").as("sxxa"),
+      side(1, "n").as("nb"), side(1, "sx").as("sxb"), side(1, "sxx").as("sxxb"),
+      side(0, "mn").as("mna"), side(0, "mx").as("mxa"),
+      side(1, "mn").as("mnb"), side(1, "mx").as("mxb"))
+  }
+
+  /** Doubles over an [[armMoments]] row: arm sizes and sums, and the
+    * sample variances va/vb, each one fixed-order expression from
+    * exact integers, so engine-identical. */
+  private object Arms {
+    val (na, nb) = (col("na").cast("double"), col("nb").cast("double"))
+    val (sxa, sxb) = (col("sxa").cast("double"), col("sxb").cast("double"))
+    private val (sxxa, sxxb) = (col("sxxa").cast("double"), col("sxxb").cast("double"))
+    val va = (sxxa - sxa * sxa / na) / (na - 1)
+    val vb = (sxxb - sxb * sxb / nb) / (nb - 1)
+    /** The Welch statistic is defined: both arms hold more than one
+      * user (r10 advice: an arm with ≤1 user makes its variance 0/0 →
+      * NaN, whose comparison and serialization conventions diverge
+      * per engine; a missing arm makes na/nb NULL, and NULL > 1
+      * short-circuits the same way) and the POOLED variance is not
+      * zero (r11 advice: two >1-user arms whose members all spent
+      * identical cents make √(va/na + vb/nb) = 0 — Spark (non-ANSI)
+      * NULLs the division, DuckDB's IEEE doubles emit ±Inf).
+      * Variance is zero iff min == max of the exact integer cents
+      * (overflow-free, unlike comparing n·Σx² to (Σx)², whose
+      * decimal(38)·bigint product can exceed decimal range). Both
+      * engines decide it on the same exact integers. */
+    val zOk = col("na") > 1 && col("nb") > 1 &&
+      (col("mna") =!= col("mxa") || col("mnb") =!= col("mxb"))
   }
 
   // ---- Event-type Markov chain (evt_path and its three readouts) -----
@@ -89,6 +180,13 @@ object Events extends OpModule {
 
   private val tSz: Column = size(col("tp"))
   private def tpAt(i: Column): Column = element_at(col("tp"), i + 1)
+  /** The type positions 0 … |tp|−1. Never empty (on an empty census,
+    * sequence(0, −1) is [0, −1]), so neither is any array transformed
+    * over it: the readouts explode those with `posexplode_outer`, which
+    * yields the same rows as `posexplode` here but infers no
+    * `size(x) > 0` Filter — Spark would push that Filter below the
+    * Project by substituting the whole in-row fold for x, running the
+    * fold three times per row. */
   private val typeIdx: Column = sequence(lit(0), tSz - 1)
 
   /** Per source type of the gathered row, ALL its outgoing mass — the
@@ -282,39 +380,12 @@ object Events extends OpModule {
           coalesce(lead("look", 1).over(w), lit(5L)))
         .withColumn("grp", pmod(col("user_id"), lit(2)))
       val spine = s.range(1, 5).select(col("id").as("k"))
-      val m = cum.join(broadcast(spine),
-          col("k") >= col("look") && col("k") < col("next_look"))
-        .groupBy("k", "grp")
-        .agg(count(lit(1)).as("n"), sum("cum_xc").as("sx"),
-          sum(col("cum_xc").cast("decimal(18,0)")
-            * col("cum_xc").cast("decimal(18,0)")).as("sxx"),
-          min("cum_xc").as("mn"), max("cum_xc").as("mx"))
-      def side(g: Int, c: String) = max(when(col("grp") === g, col(c)))
-      val wide = m.groupBy("k").agg(
-        side(0, "n").as("na"), side(0, "sx").as("sxa"), side(0, "sxx").as("sxxa"),
-        side(1, "n").as("nb"), side(1, "sx").as("sxb"), side(1, "sxx").as("sxxb"),
-        side(0, "mn").as("mna"), side(0, "mx").as("mxa"),
-        side(1, "mn").as("mnb"), side(1, "mx").as("mxb"))
-      val (na, nb) = (col("na").cast("double"), col("nb").cast("double"))
-      val (sxa, sxb) = (col("sxa").cast("double"), col("sxb").cast("double"))
-      val (sxxa, sxxb) = (col("sxxa").cast("double"), col("sxxb").cast("double"))
-      val va = (sxxa - sxa * sxa / na) / (na - 1)
-      val vb = (sxxb - sxb * sxb / nb) / (nb - 1)
-      // Degenerate-arm guard (r10 advice): an interim look where one
-      // parity arm has ≤1 purchasing user makes va/vb 0/0 → NaN, and
-      // NaN comparison/serialization conventions diverge per engine.
-      // The statistic is UNDEFINED there — emit NULL (both engines
-      // CASE on the same exact integer counts, so they agree by
-      // construction; a missing arm makes na/nb NULL, and NULL > 1
-      // short-circuits the same way). r11 advice widened the guard
-      // to zero POOLED variance: two >1-user arms whose members all
-      // spent identical cents still make √(va/na+vb/nb)=0 — Spark
-      // (non-ANSI) NULLs the division, DuckDB's IEEE doubles emit
-      // ±Inf. Variance is zero iff min==max of the exact integer
-      // cents (overflow-free, unlike comparing n·Σx² to (Σx)² whose
-      // decimal(38)·bigint product can exceed decimal range).
-      val zOk = col("na") > 1 && col("nb") > 1 &&
-        (col("mna") =!= col("mxa") || col("mnb") =!= col("mxb"))
+      val wide = armMoments(cum.join(broadcast(spine),
+          col("k") >= col("look") && col("k") < col("next_look")),
+        col("cum_xc"), "k")
+      // An interim look where the statistic is undefined emits NULL
+      // (`Arms.zOk`).
+      import Arms._
       val z = (sxa / na - sxb / nb) / sqrt(va / na + vb / nb)
       val bound = lit(ObfC4) * sqrt(lit(4.0) / col("k").cast("double"))
       wide.select(col("k").as("look"),
@@ -475,7 +546,7 @@ object Events extends OpModule {
           (a, _) => struct(stepX(a.getField("x"), a.getField("rs")).as("x"),
             a.getField("rs").as("rs")),
           a => a.getField("x")))
-      i3.select(col("tp"), posexplode(col("x3")).as(Seq("i", "p")))
+      i3.select(col("tp"), posexplode_outer(col("x3")).as(Seq("i", "p")))
         .select(element_at(col("tp"), col("i") + 1).as("event_type"),
           round(col("p"), 4).as("stationary"))
         .orderBy("event_type")
@@ -921,10 +992,7 @@ object Events extends OpModule {
       // equality is convention-independent (any fixed dow labeling
       // joins the same pairs); error terms go through DECIMAL so the
       // final means are exact on both engines.
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          to_date(date_trunc("day", col("ts"))).as("day"))
-        .agg(count(lit(1)).as("n"))
+      val daily = typeDays(s, d, count(lit(1)).as("n"))
       val prior = daily.select(col("event_type").as("et2"),
         col("day").as("pday"), col("n").as("pn"))
       val fc = daily.filter(col("day") >= lit("2024-01-24").cast("date"))
@@ -965,7 +1033,7 @@ object Events extends OpModule {
       // three single steps.
       val s3 = withRs.withColumn("p1", absorbStep(p0, noRemoval))
         .withColumn("p3", absorbFold(col("p1"), 2, noRemoval))
-      s3.select(col("tp"), col("p1"), posexplode(col("p3")).as(Seq("i", "pr3")))
+      s3.select(col("tp"), col("p1"), posexplode_outer(col("p3")).as(Seq("i", "pr3")))
         .select(element_at(col("tp"), col("i") + 1).as("event_type"),
           round(element_at(col("p1"), col("i") + 1), 4).as("p_1step"),
           round(col("pr3"), 4).as("p_3step"))
@@ -1096,14 +1164,7 @@ object Events extends OpModule {
       // partition-ordered sum would hash-diverge). Series are
       // dimension-sized at any event volume; the fold is O(|days|)
       // per type.
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val ser = daily.groupBy("event_type")
-        .agg(transform(
-          sort_array(collect_list(struct(col("day"), col("n")))),
-          e => e.getField("n").cast("double")).as("xs"))
-        .filter(size(col("xs")) >= 3)
+      val ser = volumeSeries(s, d, 3)
       val xs = col("xs")
       def lvl(acc: Column, x: Column) =
         lit(0.5) * x + lit(0.5) * (acc.getField("l") + acc.getField("b"))
@@ -1185,43 +1246,12 @@ object Events extends OpModule {
       // 2-row variant rollup); the statistic is computed on the
       // 2-row frame. At 100 TB: same two map-side-combining
       // aggregations, nothing else grows.
-      val per = Tables.events(s, d)
-        .filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"))
-        .agg((sum(Dec2(col("value"))) * 100).cast("long").as("xc"))
-        .withColumn("grp", pmod(col("user_id"), lit(2)))
-      // Σx² routes through DECIMAL: per-user cent totals squared would
-      // silently wrap a Java long at ~3e9 cents/user (DuckDB errors
-      // instead of wrapping — the engines would even disagree on HOW
-      // they fail). DECIMAL(18,0)² → DECIMAL(38,0) keeps both exact.
-      val m = per.groupBy("grp")
-        .agg(count(lit(1)).as("n"), sum("xc").as("sx"),
-          sum(col("xc").cast("decimal(18,0)") * col("xc").cast("decimal(18,0)"))
-            .as("sxx"),
-          min("xc").as("mn"), max("xc").as("mx"))
-      def side(g: Int, c: String) = max(when(col("grp") === g, col(c)))
-      val wide = m.agg(
-        side(0, "n").as("na"), side(0, "sx").as("sxa"), side(0, "sxx").as("sxxa"),
-        side(1, "n").as("nb"), side(1, "sx").as("sxb"), side(1, "sxx").as("sxxb"),
-        side(0, "mn").as("mna"), side(0, "mx").as("mxa"),
-        side(1, "mn").as("mnb"), side(1, "mx").as("mxb"))
-      val (na, nb) = (col("na").cast("double"), col("nb").cast("double"))
-      val (sxa, sxb) = (col("sxa").cast("double"), col("sxb").cast("double"))
-      val (sxxa, sxxb) = (col("sxxa").cast("double"), col("sxxb").cast("double"))
-      val va = (sxxa - sxa * sxa / na) / (na - 1)
-      val vb = (sxxb - sxb * sxb / nb) / (nb - 1)
+      val wide = armMoments(purchaseCents(s, d), col("xc"))
+      import Arms._
       val sea = va / na
       val seb = vb / nb
-      // Degenerate-arm guard (r10 advice): an arm with ≤1 user makes
-      // its variance 0/0 → NaN, and NaN conventions diverge per
-      // engine; the statistic is undefined there — emit NULL, decided
-      // on the same exact integer counts in both engines. r11 advice
-      // widened the guard to zero POOLED variance: two >1-user arms
-      // of identical cent totals make √(sea+seb)=0 and the t/df 0/0 —
-      // Spark (non-ANSI) NULLs them, DuckDB emits Inf/NaN. Variance
-      // is zero iff min==max of the exact cents (overflow-free).
-      val zOk = col("na") > 1 && col("nb") > 1 &&
-        (col("mna") =!= col("mxa") || col("mnb") =!= col("mxb"))
+      // An arm of ≤1 user or a zero pooled variance leaves t and df
+      // undefined: NULL (`Arms.zOk`).
       wide.select(
         col("na").as("n_a"), col("nb").as("n_b"),
         round(sxa / na / 100, 4).as("mean_a"),
@@ -1290,24 +1320,8 @@ object Events extends OpModule {
       // erfinv differs per engine; a literal cannot). Everything
       // downstream of the two partial-agged rollups is a 1-row frame
       // of fixed-order double arithmetic on exact integers.
-      val per = Tables.events(s, d)
-        .filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"))
-        .agg((sum(Dec2(col("value"))) * 100).cast("long").as("xc"))
-        .withColumn("grp", pmod(col("user_id"), lit(2)))
-      val m = per.groupBy("grp")
-        .agg(count(lit(1)).as("n"), sum("xc").as("sx"),
-          sum(col("xc").cast("decimal(18,0)") * col("xc").cast("decimal(18,0)"))
-            .as("sxx"))
-      def side(g: Int, c: String) = max(when(col("grp") === g, col(c)))
-      val wide = m.agg(
-        side(0, "n").as("na"), side(0, "sx").as("sxa"), side(0, "sxx").as("sxxa"),
-        side(1, "n").as("nb"), side(1, "sx").as("sxb"), side(1, "sxx").as("sxxb"))
-      val (na, nb) = (col("na").cast("double"), col("nb").cast("double"))
-      val (sxa, sxb) = (col("sxa").cast("double"), col("sxb").cast("double"))
-      val (sxxa, sxxb) = (col("sxxa").cast("double"), col("sxxb").cast("double"))
-      val va = (sxxa - sxa * sxa / na) / (na - 1)
-      val vb = (sxxb - sxb * sxb / nb) / (nb - 1)
+      val wide = armMoments(purchaseCents(s, d), col("xc"))
+      import Arms.{na, nb, sxa, sxb, va, vb}
       val z = lit(ZSum)
       val mdeC = z * sqrt(va / na + vb / nb)
       val deltaC = sxb / nb * 0.05
@@ -1316,13 +1330,13 @@ object Events extends OpModule {
       // required-n divide by zero → ±Inf. Both are undefined readouts
       // — emit NULL, decided on exact integer counts/sums so both
       // engines agree by construction.
-      val zOk = col("na") > 1 && col("nb") > 1
-      val relOk = zOk && col("sxb") =!= 0
+      val nOk = col("na") > 1 && col("nb") > 1
+      val relOk = nOk && col("sxb") =!= 0
       wide.select(
         col("na").as("n_a"), col("nb").as("n_b"),
         round(sxa / na / 100, 4).as("mean_a"),
         round(sxb / nb / 100, 4).as("mean_b"),
-        round(when(zOk, mdeC / 100), 4).as("mde_abs"),
+        round(when(nOk, mdeC / 100), 4).as("mde_abs"),
         round(when(relOk, mdeC / (sxb / nb)), 4).as("mde_rel"),
         ceil(when(relOk, z * z * (va + vb) / (deltaC * deltaC)))
           .cast("long").as("n_per_arm_5pct"))
@@ -1342,13 +1356,10 @@ object Events extends OpModule {
       // sorted diff frame picks ranks ⌈N/2⌉ and ⌊N/2⌋+1 explicitly
       // (median() semantics drift between engines on even counts),
       // and the final shift is ONE division from exact integers.
-      val per = Tables.events(s, d)
-        .filter(col("event_type") === "purchase" && col("user_id") < 100)
-        .groupBy(col("user_id"))
-        .agg((sum(Dec2(col("value"))) * 100).cast("long").as("xc"))
-      val a = per.filter(pmod(col("user_id"), lit(2)) === 0)
+      val per = purchaseCents(s, d).filter(col("user_id") < 100)
+      val a = per.filter(col("grp") === 0)
         .select(col("user_id").as("a_id"), col("xc").as("xa"))
-      val b = per.filter(pmod(col("user_id"), lit(2)) === 1)
+      val b = per.filter(col("grp") === 1)
         .select(col("user_id").as("b_id"), col("xc").as("xb"))
       val diffs = a.crossJoin(broadcast(b))
         .select(col("a_id"), col("b_id"), (col("xa") - col("xb")).as("dc"))
@@ -1497,14 +1508,7 @@ object Events extends OpModule {
       // caught while prototyping this oracle). Init: l₀ = mean of the
       // first season, b₀ = 0, s₀ = first-season residuals. Series are
       // dimension-sized (|types|·|days|) at any event volume.
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val ser = daily.groupBy("event_type")
-        .agg(transform(
-          sort_array(collect_list(struct(col("day"), col("n")))),
-          e => e.getField("n").cast("double")).as("xs"))
-        .filter(size(col("xs")) >= 15)
+      val ser = volumeSeries(s, d, 15)
       val xs = col("xs")
       val l0 = aggregate(slice(xs, 1, 7), lit(0.0), (a, x) => a + x) / lit(7.0)
       val acc0 = struct(
@@ -1548,8 +1552,7 @@ object Events extends OpModule {
       // engine-identical; zero-variance series (n·sxx = sx²) guard to
       // NULL via exact integer equality on both sides.
       val ev = Tables.events(s, d)
-      val daily = ev.groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
+      val daily = typeDays(s, d, count(lit(1)).as("n"))
       val spine = ev.select(to_date(col("ts")).as("day")).distinct()
         .crossJoin(ev.select("event_type").distinct())
       val dense = spine.join(daily, Seq("day", "event_type"), "left")
@@ -1561,23 +1564,9 @@ object Events extends OpModule {
         col("event_type").as("type_b"), col("n").as("y"))
       a.join(b, col("day") === col("day2") && col("type_a") < col("type_b"))
         .groupBy("type_a", "type_b")
-        .agg(count(lit(1)).as("n_days"),
-          sum("x").as("sx"), sum("y").as("sy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y") * col("y")).as("syy"),
-          sum(col("x") * col("y")).as("sxy"))
+        .agg(count(lit(1)).as("n_days"), pearsonSums(col("x"), col("y")): _*)
         .select(col("type_a"), col("type_b"), col("n_days"),
-          when(col("n_days") * col("sxx") === col("sx") * col("sx") ||
-            col("n_days") * col("syy") === col("sy") * col("sy"),
-            lit(null).cast("double"))
-            .otherwise(round(
-              (col("n_days") * col("sxy") - col("sx") * col("sy"))
-                .cast("double")
-                / (sqrt((col("n_days") * col("sxx")
-                  - col("sx") * col("sx")).cast("double"))
-                  * sqrt((col("n_days") * col("syy")
-                    - col("sy") * col("sy")).cast("double"))), 4))
-            .as("corr"))
+          pearson(col("n_days")).as("corr"))
         .orderBy("type_a", "type_b")
     }),
 
@@ -1599,8 +1588,7 @@ object Events extends OpModule {
       val spine = bounds.select(explode(
         sequence(col("lo"), col("hi"), expr("interval 1 day"))).as("day"))
         .crossJoin(ev.select("event_type").distinct())
-      val daily = ev.groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
+      val daily = typeDays(s, d, count(lit(1)).as("n"))
       val dense = spine.join(daily, Seq("day", "event_type"), "left")
         .select(col("day"), col("event_type"),
           coalesce(col("n"), lit(0L)).as("n"))
@@ -1609,24 +1597,9 @@ object Events extends OpModule {
         dense.withColumn("x", lag("n", k).over(w))
           .filter(col("x").isNotNull)
           .groupBy("event_type")
-          .agg(count(lit(1)).as("n_pairs"),
-            sum("x").as("sx"), sum("n").as("sy"),
-            sum(col("x") * col("x")).as("sxx"),
-            sum(col("n") * col("n")).as("syy"),
-            sum(col("x") * col("n")).as("sxy"))
+          .agg(count(lit(1)).as("n_pairs"), pearsonSums(col("x"), col("n")): _*)
           .select(col("event_type"), lit(k.toLong).as("lag_d"),
-            col("n_pairs"),
-            when(col("n_pairs") * col("sxx") === col("sx") * col("sx") ||
-              col("n_pairs") * col("syy") === col("sy") * col("sy"),
-              lit(null).cast("double"))
-              .otherwise(round(
-                (col("n_pairs") * col("sxy") - col("sx") * col("sy"))
-                  .cast("double")
-                  / (sqrt((col("n_pairs") * col("sxx")
-                    - col("sx") * col("sx")).cast("double"))
-                    * sqrt((col("n_pairs") * col("syy")
-                      - col("sy") * col("sy")).cast("double"))), 4))
-              .as("autocorr"))
+            col("n_pairs"), pearson(col("n_pairs")).as("autocorr"))
       ac(1).unionByName(ac(7)).orderBy("event_type", "lag_d")
     }),
 

@@ -27,6 +27,13 @@ import graft.Tables
   *     rank vector per iteration and pre-partitions edges by src; the
   *     per-iteration round(…, 9) keeps the two engines' float noise
   *     from compounding across iterations.
+  *
+  * Shared kernels: one incidence self-join (`coPurchases`) under the
+  * plain and weighted edge sets; one both-directions adjacency
+  * (`adjacency`) for every kernel that walks neighbors; one
+  * degree table (`degrees`) and top-hub argmax (`topHub`); one
+  * backward-level skeleton (`backwardPass`) under the stress and
+  * betweenness passes.
   */
 object Graph extends OpModule {
 
@@ -42,32 +49,43 @@ object Graph extends OpModule {
       .select(col("l_orderkey").as("ok"), (col("l_partkey") % 5000).as("node"))
       .distinct()
 
+  /** One (u, v) row, u < v, per order holding both nodes: the
+    * incidence self-join under [[edges]] and [[edgesW]]. */
+  private def coPurchases(s: SparkSession, d: String): DataFrame = {
+    val ob = incidence(s, d)
+    val a = ob.select(col("ok"), col("node").as("u"))
+    val b = ob.select(col("ok").as("ok2"), col("node").as("v"))
+    a.join(b, col("ok") === col("ok2") && col("u") < col("v"))
+  }
+
   /** Distinct undirected co-purchase edges, stored with u < v.
     * private[graft]: PlansSpec locks the build plan's pushdown here
     * (consumers read the memoized cut, so their plans no longer show
     * the parquet scan — r16). */
-  private[graft] def edges(s: SparkSession, d: String): DataFrame = {
-    val ob = incidence(s, d)
-    val a = ob.select(col("ok"), col("node").as("u"))
-    val b = ob.select(col("ok").as("ok2"), col("node").as("v"))
-    a.join(b, col("ok") === col("ok2") && col("u") < col("v"))
-      .select("u", "v").distinct()
-  }
+  private[graft] def edges(s: SparkSession, d: String): DataFrame =
+    coPurchases(s, d).select("u", "v").distinct()
 
   /** Undirected co-purchase edges WITH the co-occurrence count — the
     * weighted variant of [[edges]] (graph_sssp's metric source). */
-  private[graft] def edgesW(s: SparkSession, d: String): DataFrame = {
-    val ob = incidence(s, d)
-    val a = ob.select(col("ok"), col("node").as("u"))
-    val b = ob.select(col("ok").as("ok2"), col("node").as("v"))
-    a.join(b, col("ok") === col("ok2") && col("u") < col("v"))
-      .groupBy("u", "v").agg(count(lit(1)).as("w"))
-  }
+  private[graft] def edgesW(s: SparkSession, d: String): DataFrame =
+    coPurchases(s, d).groupBy("u", "v").agg(count(lit(1)).as("w"))
 
   /** Per-node degree of the undirected co-purchase graph. */
   private def degrees(e: DataFrame): DataFrame =
     e.select(col("u").as("node")).union(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
+
+  /** Both directions of every (u, v) edge of `e`, as columns `a` →
+    * `b`, each row carrying the `extra` columns of its edge. */
+  private def adjacency(e: DataFrame, a: String, b: String, extra: Column*): DataFrame =
+    e.select(col("u").as(a) +: col("v").as(b) +: extra: _*)
+      .union(e.select(col("v").as(a) +: col("u").as(b) +: extra: _*))
+
+  /** The top hub of a degree table: the node of the greatest (d, node),
+    * as a one-row frame (node). */
+  private def topHub(deg: DataFrame): DataFrame =
+    deg.agg(max(struct(col("d"), col("node"))).as("m"))
+      .select(col("m.node").as("node"))
 
   /** Session-memoized CUT of the bounded co-purchase edge frame (r16
     * verdict #6): ~12 graded consumers each persisted-and-derived
@@ -98,9 +116,7 @@ object Graph extends OpModule {
     * and the node set. */
   private def ccGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val e = sharedEdges(s, d) // session-memoized bounded universe
-    (e.select(col("u").as("a"), col("v").as("b"))
-      .union(e.select(col("v").as("a"), col("u").as("b"))),
-      degrees(e).select("node"))
+    (adjacency(e, "a", "b"), degrees(e).select("node"))
   }
 
   /** lbl₀(v) = v: the starting label state (node, lbl). */
@@ -175,8 +191,7 @@ object Graph extends OpModule {
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val e = sharedEdges(s, d)
     val deg = degrees(e)
-    val adj = e.select(col("u").as("a"), col("v").as("b"))
-      .union(e.select(col("v").as("a"), col("u").as("b")))
+    val adj = adjacency(e, "a", "b")
     // Cut discipline, priced by the r14 stage audit (~100–160 ms of
     // scheduling floor per eager action; the σ frames are ≤5·|nodes|
     // rows of microsecond work): cut ONLY the multi-referenced layers
@@ -221,35 +236,15 @@ object Graph extends OpModule {
     * leaving v toward deeper targets, so σ(v)·τ(v) is the exact
     * NUMBER of shortest s-t paths with v interior — all integers (no
     * σ-ratio rationals as in betweenness), so sums are order-free and
-    * the oracle compares bit-exact. Each backward level is one
-    * adjacency equi-join + a partial-agged rollup, the mirror image
-    * of the forward chain's cost shape; successor-less nodes keep
-    * τ = 0 via the left join (their paths END there — the 1-term is
-    * owed to their predecessors, not to them).
+    * the oracle compares bit-exact. The levels run on
+    * [[backwardPass]]; successor-less nodes keep τ = 0 via its left
+    * join (their paths END there — the 1-term is owed to their
+    * predecessors, not to them).
     */
-  private[graft] def stressContrib(s: SparkSession, d: String): DataFrame = {
-    val (_, adj, _, l1, l2, l3) = sigmaChain(s, d)
-    def back(layer: DataFrame, deeper: DataFrame): DataFrame = {
-      val cand = adj
-        .join(deeper.select(col("src").as("ws"), col("node").as("wn"),
-            col("tau").as("wtau")),
-          col("b") === col("wn"))
-        .groupBy(col("ws"), col("a"))
-        .agg(sum(col("wtau") + lit(1L)).as("t"))
-      layer.join(cand,
-          col("src") === col("ws") && col("node") === col("a"), "left")
-        .select(col("src"), col("node"), col("sigma"),
-          coalesce(col("t"), lit(0L)).as("tau"))
-    }
-    val t3 = l3.withColumn("tau", lit(0L))
-    // t2 feeds BOTH the next backward level and the final union — cut
-    // it (coalesce(1): ≤5·|nodes| rows); t1 is union-only, so it
-    // stays lineage (the r14 cut-trim discipline, see sigmaChain).
-    val t2 = GraftBridge.checkpoint(back(l2, t3).coalesce(1))
-    val t1 = back(l1, t2)
-    t1.union(t2)
+  private[graft] def stressContrib(s: SparkSession, d: String): DataFrame =
+    backwardPass(s, d, "tau", lit(0L), sum(col("wv") + lit(1L)),
+      coalesce(col("acc"), lit(0L)))
       .select(col("src"), col("node"), (col("sigma") * col("tau")).as("st"))
-  }
 
   /** Per-(src, node) betweenness dependencies δ over the σ-BFS DAG —
     * Brandes 2001's ACTUAL backward recurrence δ(v) =
@@ -264,30 +259,42 @@ object Graph extends OpModule {
     * fixture. Float discipline: each level's δ rounds at 9 (the
     * pagerank quantization — summation-order noise dies before it
     * compounds); every other term is an exact small integer ratio.
-    * Plan shape mirrors the τ pass level for level. */
-  private[graft] def betweennessContrib(s: SparkSession, d: String): DataFrame = {
+    * The levels run on the τ pass's [[backwardPass]]. */
+  private[graft] def betweennessContrib(s: SparkSession, d: String): DataFrame =
+    backwardPass(s, d, "delta", lit(0.0),
+      sum((lit(1.0) + col("wv")) / col("wsig").cast("double")),
+      round(col("sigma").cast("double") * coalesce(col("acc"), lit(0.0)), 9))
+      .select(col("src"), col("node"), col("delta"))
+
+  /** The backward levels of Brandes' pass over the σ-BFS DAG, shared by
+    * the τ (stress) and δ (betweenness) passes: the nodes of levels 1
+    * and 2 (src, node, sigma, `v`), each node's `v` computed from its
+    * successors w one level deeper (the deepest level's `v` is
+    * `zero`). Per level, `acc` aggregates over the (node, successor)
+    * pairs, reading each successor's σ as `wsig` and its `v` as `wv`,
+    * and `finish` turns the node's `sigma` and that sum `acc` (NULL for
+    * a node without successors) into its `v`. Each level is one
+    * adjacency equi-join + a partial-agged rollup, the mirror image of
+    * the forward chain's cost shape. Level 2 feeds BOTH level 1 and the
+    * union, so it is cut (coalesce(1): ≤5·|nodes| rows); level 1 is
+    * union-only and stays lineage (the r14 cut-trim discipline, see
+    * sigmaChain). */
+  private def backwardPass(s: SparkSession, d: String, v: String, zero: Column,
+      acc: Column, finish: Column): DataFrame = {
     val (_, adj, _, l1, l2, l3) = sigmaChain(s, d)
     def back(layer: DataFrame, deeper: DataFrame): DataFrame = {
       val cand = adj
         .join(deeper.select(col("src").as("ws"), col("node").as("wn"),
-            col("sigma").as("wsig"), col("delta").as("wdel")),
+            col("sigma").as("wsig"), col(v).as("wv")),
           col("b") === col("wn"))
         .groupBy(col("ws"), col("a"))
-        .agg(sum((lit(1.0) + col("wdel")) / col("wsig").cast("double"))
-          .as("dsum"))
+        .agg(acc.as("acc"))
       layer.join(cand,
           col("src") === col("ws") && col("node") === col("a"), "left")
-        .select(col("src"), col("node"), col("sigma"),
-          round(col("sigma").cast("double") *
-            coalesce(col("dsum"), lit(0.0)), 9).as("delta"))
+        .select(col("src"), col("node"), col("sigma"), finish.as(v))
     }
-    val d3 = l3.withColumn("delta", lit(0.0))
-    // d2 feeds BOTH the next backward level and the final union — cut
-    // (coalesce(1): ≤5·|nodes| rows); d1 is union-only (the τ-pass
-    // cut-trim discipline).
-    val d2 = GraftBridge.checkpoint(back(l2, d3).coalesce(1))
-    val d1 = back(l1, d2)
-    d1.union(d2).select(col("src"), col("node"), col("delta"))
+    val b2 = GraftBridge.checkpoint(back(l2, l3.withColumn(v, zero)).coalesce(1))
+    back(l1, b2).union(b2)
   }
 
   val queries: Map[String, Q] = Map(
@@ -545,8 +552,7 @@ object Graph extends OpModule {
       // (deg(w) ≥ 2 for any common neighbor, so ln never hits 0;
       // a capped-out hub simply stops generating wedges.)
       val e = sharedEdges(s, d) // r16: session-memoized edge rollup
-      val adj = e.select(col("u").as("node"), col("v").as("nbr"))
-        .union(e.select(col("v").as("node"), col("u").as("nbr")))
+      val adj = adjacency(e, "node", "nbr")
       // Wedges expand IN-ROW from each hub's sorted neighbor list with
       // the hub's 1/ln(deg) weight attached map-side — one shuffle to
       // the adjacency lists, one to the pair scores; a wedge self-join
@@ -615,15 +621,9 @@ object Graph extends OpModule {
       // The weighted edge rollup (a self-join + aggregate) feeds the
       // degree seed and every round's checkpoint job: cut it once.
       val e = GraftBridge.checkpoint(edgesW(s, d).coalesce(4))
-      val deg = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("d"))
-      val cost = expr("1000000 div w")
-      val adjw = e.select(col("u").as("a"), col("v").as("b"), cost.as("c"))
-        .union(e.select(col("v").as("a"), col("u").as("b"), cost.as("c")))
+      val adjw = adjacency(e, "a", "b", expr("1000000 div w").as("c"))
       val lmax = lit(2305843009213693951L)
-      var dist = GraftBridge.checkpoint(
-        deg.agg(max(struct(col("d"), col("node"))).as("m"))
-          .select(col("m.node").as("node"), lit(0L).as("dist")))
+      var dist = GraftBridge.checkpoint(topHub(degrees(e)).withColumn("dist", lit(0L)))
       var prev = dist
       for (_ <- 1 to 4) {
         prev = dist
@@ -701,8 +701,7 @@ object Graph extends OpModule {
       // bit-identical because the frontier sets are the same sets.
       val (e, _, l0, l1, l2, l3) = sigmaChain(s, d)
       val deg = degrees(e)
-      val seed = deg.agg(max(struct(col("d"), col("node"))).as("m"))
-        .select(col("m.node").as("seed"))
+      val seed = topHub(deg).select(col("node").as("seed"))
       def at(l: DataFrame): DataFrame =
         l.join(broadcast(seed), col("src") === col("seed")).select("node")
       val (s0, s1, s2, s3) = (at(l0), at(l1), at(l2), at(l3))
@@ -936,8 +935,7 @@ object Graph extends OpModule {
       // integer decile (10·t) div pairs ∈ 0..10 — no double ever
       // crosses engines; per-bucket sums stay exact longs.
       val e = sharedEdges(s, d) // session-memoized bounded universe
-      val adj = e.select(col("u").as("ctr"), col("v").as("nb"))
-        .union(e.select(col("v").as("ctr"), col("u").as("nb")))
+      val adj = adjacency(e, "ctr", "nb")
       val w1 = adj.select(col("ctr"), col("nb").as("a"))
       val w2 = adj.select(col("ctr").as("ctr2"), col("nb").as("b"))
       val wedges = w1
@@ -970,8 +968,7 @@ object Graph extends OpModule {
 
   private def lpaLabelsBuild(e: DataFrame)
       : (DataFrame, DataFrame) = {
-    val adj = e.select(col("u").as("a"), col("v").as("b"))
-      .union(e.select(col("v").as("a"), col("u").as("b")))
+    val adj = adjacency(e, "a", "b")
     val l0 = degrees(e).select(col("node"), col("node").as("lbl"))
     def step(prev: DataFrame): DataFrame = GraftBridge.checkpoint(
       adj.join(prev.select(col("node").as("bn"), col("lbl")), col("b") === col("bn"))

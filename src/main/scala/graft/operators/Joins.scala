@@ -27,6 +27,9 @@ import graft.Tables
   *    window per user over events ∪ orders) rather than a range join,
   *    whose |events| × avg-prior-orders intermediate grows
   *    quadratically with scale.
+  *  - `join_bloom_prefilter` screens the fact side with the portable
+  *    bloom filter `OpModule.bloomScreen` (shared with LlmText's
+  *    incremental dedup screen).
   */
 object Joins extends OpModule {
 
@@ -291,38 +294,19 @@ object Joins extends OpModule {
 
     "join_bloom_prefilter" -> ((s, d) => {
       // Bloom-filter runtime prefilter — the pattern behind Spark's
-      // own runtime row-group filtering, built portably: the dimension
-      // keys fold into a 64 Kbit bloom (2048 × 32-bit words, two
-      // multiplicative hashes — plain integer arithmetic so the oracle
-      // computes the IDENTICAL filter), the fact side probes the
-      // broadcast word table, and only candidates reach the exact
-      // join. At 100 TB the bloom cuts the shuffled fact volume to
-      // members + the FP band; the output row audits exactly that
-      // (candidates, true members, false positives). Bits stay in the
-      // low 31 of each word so shift semantics can't diverge.
-      val M = 65536L
+      // own runtime row-group filtering, built portably
+      // (`bloomScreen`): the dimension keys fold into the 64 Kbit
+      // bloom, the fact side probes the broadcast word table, and only
+      // candidates reach the exact join. At 100 TB the bloom cuts the
+      // shuffled fact volume to members + the FP band; the output row
+      // audits exactly that (candidates, true members, false
+      // positives).
       val keys = Tables.customer(s, d)
         .filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey").as("k")).distinct()
-      def h1(k: org.apache.spark.sql.Column) =
-        ((k * 2654435761L) % 4294967296L) % M
-      def h2(k: org.apache.spark.sql.Column) = (k * 40503L + 17L) % M
-      val pos = keys.select(h1(col("k")).as("p"))
-        .union(keys.select(h2(col("k")).as("p")))
-      val bloom = pos.groupBy(expr("p div 32").as("w"))
-        .agg(expr("bit_or(shiftleft(1L, cast(p % 32 as int)))").as("word"))
       val probe = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey").as("k"),
-        h1(col("o_custkey")).as("p1"), h2(col("o_custkey")).as("p2"))
-      val cand = probe
-        .join(broadcast(bloom.select(col("w").as("w1"), col("word").as("word1"))),
-          expr("p1 div 32") === col("w1"))
-        .join(broadcast(bloom.select(col("w").as("w2"), col("word").as("word2"))),
-          expr("p2 div 32") === col("w2"))
-        .filter(
-          expr("(word1 & shiftleft(1L, cast(p1 % 32 as int))) != 0") &&
-          expr("(word2 & shiftleft(1L, cast(p2 % 32 as int))) != 0"))
-        .select(col("o_orderkey"), col("k"))
+        col("o_custkey").as("k"))
+      val cand = bloomScreen(probe, keys).select(col("o_orderkey"), col("k"))
       val flagged = cand
         .join(broadcast(keys.select(col("k").as("tk"))),
           col("k") === col("tk"), "left")

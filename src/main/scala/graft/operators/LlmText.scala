@@ -25,7 +25,8 @@ import graft.Tables
   *  - [[minhashBands]]: the LSH band posexplode of the signatures;
   *  - [[sourceMass]]: the per-source (n_docs, n_tokens) rollup;
   *  - [[bpeLedger]]: the applied-BPE ledger, batch and streaming.
-  * Per-key ranks use `OpModule.topK`, doc_id scrambles `knuth31`.
+  * Per-key ranks use `OpModule.topK`, doc_id scrambles `knuth31`, and
+  * dedup_incremental_exact's screen is `OpModule.bloomScreen`.
   *
   * Cross-engine parity rule: every hash used in signatures is plain
   * integer arithmetic (`(a·x + b) mod p`) over a polynomial string
@@ -1802,11 +1803,10 @@ object LlmText extends OpModule {
       // LSH: dedup_incremental, semantic: dedup_incremental_embedding)
       // — the FIRST screen a nightly ingest runs: a Bloom filter of
       // the EXISTING corpus's content hashes prescreens today's batch
-      // before any join touches the corpus. The filter is the same
-      // portable 64 Kbit arithmetic bloom join_bloom_prefilter builds
-      // (2048×32-bit words, two multiplicative hashes over the tid
-      // content fold — both engines compute the IDENTICAL filter);
-      // bloom-hit candidates verify against the old side by exact
+      // before any join touches the corpus. The filter is the
+      // portable 64 Kbit bloom of `bloomScreen` (join_bloom_prefilter's
+      // screen) over the tid content fold, so both engines compute
+      // the IDENTICAL filter; bloom-hit candidates verify against the old side by exact
       // equality of the content key, and the per-lang ledger audits
       // the screen. The content identity is the 64-char prefix (the
       // text_dedup_prefix boilerplate screen - whole-body identity is
@@ -1822,29 +1822,14 @@ object LlmText extends OpModule {
       // exact-verify join. At 100 TB the hash is sha256 and the
       // filter a few GB in blocks; the audit columns are the
       // go/no-go a deployment reads before trusting the screen.
-      val M = 65536L
       val isNew = col("doc_id") % 7 === 3
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("text"))
       val oldK = docs.filter(!isNew)
         .select(tid(substring(col("text"), 1, 64)).as("k")).distinct()
-      def h1(k: Column) = ((k * 2654435761L) % 4294967296L) % M
-      def h2(k: Column) = (k * 40503L + 17L) % M
-      val pos = oldK.select(h1(col("k")).as("p"))
-        .union(oldK.select(h2(col("k")).as("p")))
-      val bloom = pos.groupBy(expr("p div 32").as("w"))
-        .agg(expr("bit_or(shiftleft(1L, cast(p % 32 as int)))").as("word"))
       val probe = docs.filter(isNew)
         .withColumn("k", tid(substring(col("text"), 1, 64)))
-        .withColumn("p1", h1(col("k"))).withColumn("p2", h2(col("k")))
-      val cand = probe
-        .join(broadcast(bloom.select(col("w").as("w1"), col("word").as("word1"))),
-          expr("p1 div 32") === col("w1"))
-        .join(broadcast(bloom.select(col("w").as("w2"), col("word").as("word2"))),
-          expr("p2 div 32") === col("w2"))
-        .filter(
-          expr("(word1 & shiftleft(1L, cast(p1 % 32 as int))) != 0") &&
-          expr("(word2 & shiftleft(1L, cast(p2 % 32 as int))) != 0"))
+      val cand = bloomScreen(probe, oldK)
         .select(col("doc_id"), col("lang"),
           substring(col("text"), 1, 64).as("pfx"))
       val oldTexts = docs.filter(!isNew)

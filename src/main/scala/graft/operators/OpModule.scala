@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, lit, row_number}
+import org.apache.spark.sql.functions.{broadcast, col, expr, lit, round, row_number, sqrt,
+  when}
 
 /** Session-level cross-QUERY memo of derived index/graph frames
   * (r16 verdict #4/#6): the one lifetime longer than a query. Heavy
@@ -13,10 +14,13 @@ import org.apache.spark.sql.functions.{col, lit, row_number}
   * `GraftBridge.checkpoint` leaves, so consumers read materialized
   * blocks (each leaf carries its measured size, so a memoized frame
   * plans as a broadcast wherever it is small enough) and never
-  * re-derive the chain behind it. Keyed by (session, data dir, chain
-  * name); a session touches a handful of dirs, so the memo is
-  * bounded, and blocks die with the session. `clear()` starts a
-  * cold pass.
+  * re-derive the chain behind it. Keyed by (session, data dir, shuffle
+  * partitions, chain name): a frame built under one
+  * `spark.sql.shuffle.partitions` is laid out for that count (the
+  * evt base declares it), so a session whose count changes rebuilds
+  * instead of reading it. A session touches a handful of dirs and
+  * counts, so the memo is bounded, and blocks die with the session.
+  * `clear()` starts a cold pass.
   * Lookup is get/putIfAbsent, NOT computeIfAbsent: builders recurse
   * into the memo for other keys, and holding a CHM bin lock across a
   * nested compute can deadlock. A rare concurrent first-build races
@@ -24,10 +28,19 @@ import org.apache.spark.sql.functions.{col, lit, row_number}
   * only. */
 private[graft] object SessionMemo {
   private val m = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), AnyRef]
+    (SparkSession, String, Int, String), AnyRef]
+
+  /** The session's `spark.sql.shuffle.partitions`, parsed defensively:
+    * a blank, non-numeric or non-positive value reads as the default
+    * parallelism. */
+  def shufflePartitions(s: SparkSession): Int =
+    s.conf.getOption("spark.sql.shuffle.partitions")
+      .flatMap(_.trim.toIntOption).filter(_ > 0)
+      .getOrElse(s.sparkContext.defaultParallelism)
+
   def memo[T <: AnyRef](s: SparkSession, d: String, key: String)(
       build: => T): T = {
-    val k = (s, d, key)
+    val k = (s, d, shufflePartitions(s), key)
     val hit = m.get(k)
     if (hit != null) hit.asInstanceOf[T]
     else {
@@ -113,6 +126,47 @@ trait OpModule {
     * `((x % 2147483648) * 2654435761)`. */
   protected def knuth31(x: Column): Column =
     (x % lit(2147483648L)) * lit(2654435761L)
+
+  /** Pearson correlation over `n` rows from the exact integer sums
+    * in columns sx, sy, sxx, syy and sxy, rounded at 4: the one
+    * division runs in doubles on integers both engines hold
+    * identically. NULL when either series is constant (n·sxx = sx²,
+    * an exact integer equality), where engines disagree on 0/0 (NaN
+    * vs NULL). */
+  protected def pearson(n: Column): Column = {
+    val (sx, sy) = (col("sx"), col("sy"))
+    when(n * col("sxx") === sx * sx || n * col("syy") === sy * sy,
+      lit(null).cast("double"))
+      .otherwise(round((n * col("sxy") - sx * sy).cast("double")
+        / (sqrt((n * col("sxx") - sx * sx).cast("double"))
+          * sqrt((n * col("syy") - sy * sy).cast("double"))), 4))
+  }
+
+  /** The rows of `probe` whose long key `k` may be in `keys` (a frame
+    * of distinct `k`), by a portable 64 Kbit bloom filter: 2048
+    * 32-bit words, two multiplicative hashes, plain integer
+    * arithmetic, so the oracles compute the identical filter. `keys`
+    * fold into the word table, which is broadcast; each probe row
+    * keeps `p1`/`p2` (its two bit positions) and passes when both
+    * bits are set. Bits stay in the low 31 of each word, so shift
+    * semantics cannot diverge between engines. */
+  protected def bloomScreen(probe: DataFrame, keys: DataFrame): DataFrame = {
+    val M = 65536L
+    def h1(k: Column) = ((k * 2654435761L) % 4294967296L) % M
+    def h2(k: Column) = (k * 40503L + 17L) % M
+    val bloom = keys.select(h1(col("k")).as("p"))
+      .union(keys.select(h2(col("k")).as("p")))
+      .groupBy(expr("p div 32").as("w"))
+      .agg(expr("bit_or(shiftleft(1L, cast(p % 32 as int)))").as("word"))
+    probe.withColumn("p1", h1(col("k"))).withColumn("p2", h2(col("k")))
+      .join(broadcast(bloom.select(col("w").as("w1"), col("word").as("word1"))),
+        expr("p1 div 32") === col("w1"))
+      .join(broadcast(bloom.select(col("w").as("w2"), col("word").as("word2"))),
+        expr("p2 div 32") === col("w2"))
+      .filter(
+        expr("(word1 & shiftleft(1L, cast(p1 % 32 as int))) != 0") &&
+        expr("(word2 & shiftleft(1L, cast(p2 % 32 as int))) != 0"))
+  }
 
   /** Builds two INDEPENDENT sub-chains concurrently (r15): a body
     * whose paths each end in checkpoint jobs would otherwise build

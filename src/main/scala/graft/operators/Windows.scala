@@ -1,20 +1,65 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Window-function operators (SURVEY.md §2.5).
   *
-  * Scale notes: every window here is partitioned (by customer / user /
-  * order-status), so execution is one shuffle on the partition key then
-  * a per-partition sort — no single-partition global window appears in
-  * any query, which is the pattern that would serialize at 100 TB.
+  * Scale notes: every window over data is partitioned (by customer /
+  * user / order-status / event type), so execution is one shuffle on
+  * the partition key then a per-partition sort; the one
+  * single-partition window, the pattern that would serialize at
+  * 100 TB, is win_pct_of_total's grand total over the 25-row nation
+  * rollup.
   * Window ORDER BYs always carry a unique tiebreaker key so rank /
   * running frames are deterministic across engines.
+  *
+  * Shared kernels: every per-type day series reads
+  * [[Events.typeDays]]; win_cusum and win_drawdown read one n-scaled
+  * CUSUM frame (`cusumDays`); win_rolling_zscore, win_bollinger and
+  * win_rolling_corr read one trailing-7 integer-moment frame
+  * (`trailing7`), and win_rolling_corr's correlation is
+  * [[OpModule.pearson]].
   */
 object Windows extends OpModule {
+
+  /** A type's day series in day order (over [[Events.typeDays]]). */
+  private val byDay = Window.partitionBy("event_type").orderBy("day")
+  private val running = byDay.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** Each type's daily value sums `v` (exact DECIMAL) with the CUSUM
+    * terms: `run` = Σ_{j≤t} v_j, the day's rank `t`, `tot` = Σv, `n` =
+    * |days| and `cs` = n·run − t·tot, the CUSUM Σ_{j≤t} v_j − t·μ
+    * SCALED BY n — every term an exact DECIMAL product of exact day
+    * sums, so the one divide-by-n happens in doubles at the end (an
+    * identical IEEE op on both engines). */
+  private def cusumDays(s: SparkSession, d: String): DataFrame = {
+    val all = Window.partitionBy("event_type")
+    Events.typeDays(s, d, sum(Dec2(col("value"))).as("v"))
+      .withColumn("run", sum("v").over(running))
+      .withColumn("t", row_number().over(byDay).cast("long"))
+      .withColumn("tot", sum("v").over(all))
+      .withColumn("n", count(lit(1)).over(all))
+      .withColumn("cs", col("run") * col("n") - col("t") * col("tot"))
+  }
+
+  /** The days of `daily` that close a full trailing-7 frame (the first
+    * 6 of each type drop, the standard full-window band rule), with
+    * the frame's exact integer sums of the series `x`: `k` = 7 rows,
+    * `sx` = Σx, `sxx` = Σx², and one more sum per `(name, term)` of
+    * `more`. Window sums of exact integers are identical on both
+    * engines. */
+  private def trailing7(daily: DataFrame, x: Column,
+      more: (String, Column)*): DataFrame = {
+    val w7 = byDay.rowsBetween(-6, Window.currentRow)
+    (Seq("sx" -> x, "sxx" -> x * x) ++ more)
+      .foldLeft(daily.withColumn("k", count(lit(1)).over(w7))) {
+        case (df, (name, term)) => df.withColumn(name, sum(term).over(w7))
+      }
+      .filter(col("k") === 7)
+  }
 
   val queries: Map[String, Q] = Map(
     "win_ewma" -> ((s, d) =>
@@ -26,9 +71,7 @@ object Windows extends OpModule {
       // doubles. Daily sums are exact DECIMAL first. Series length is
       // |days| per group (bounded, ~30 here) — the fold is O(n²) in-row
       // arithmetic on an already day-grain rollup, never on raw events.
-      Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sum(Dec2(col("value"))).as("v"))
+      Events.typeDays(s, d, sum(Dec2(col("value"))).as("v"))
         .groupBy("event_type")
         .agg(sort_array(collect_list(struct(col("day"), col("v")))).as("series"))
         .select(col("event_type"), explode(expr(
@@ -42,53 +85,27 @@ object Windows extends OpModule {
           date_format(col("r.day"), "yyyy-MM-dd").as("day"), col("r.ewma"))
         .orderBy("event_type", "day")),
 
-    "win_cusum" -> ((s, d) => {
+    "win_cusum" -> ((s, d) =>
       // CUSUM change-point signal over each type's daily value series:
       // cusum_t = Σ_{j≤t} x_j − t·μ drifts from 0 when the level
-      // shifts. Exactness trick: the formula is computed SCALED BY n —
-      // n·Σ_{j≤t}x_j − t·Σx — so every term is an exact DECIMAL
-      // product of exact day sums; the single divide-by-n happens in
-      // doubles at the end (identical IEEE op on both engines). All
-      // windows run on the day-grain rollup, never raw events.
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sum(Dec2(col("value"))).as("v"))
-      val wOrd = Window.partitionBy("event_type").orderBy("day")
-      val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy("event_type")
-      daily
-        .withColumn("run", sum("v").over(wRun))
-        .withColumn("t", row_number().over(wOrd).cast("long"))
-        .withColumn("tot", sum("v").over(wAll))
-        .withColumn("n", count(lit(1)).over(wAll))
+      // shifts, computed n-scaled and exact (`cusumDays`). All windows
+      // run on the day-grain rollup, never raw events.
+      cusumDays(s, d)
         .select(col("event_type"),
           date_format(col("day"), "yyyy-MM-dd").as("day"),
-          round((col("run") * col("n") - col("t") * col("tot")).cast("double")
-            / col("n").cast("double"), 4).as("cusum"))
-        .orderBy("event_type", "day")
-    }),
+          round(col("cs").cast("double") / col("n").cast("double"), 4).as("cusum"))
+        .orderBy("event_type", "day")),
 
     "win_drawdown" -> ((s, d) => {
       // Worst slump of each type's demeaned daily-value series: max
       // drawdown of the CUSUM (Σx − t·μ) — "how far and how long did
       // flow run below its best trend point". Raw cumulative value
-      // only grows, so drawdown is measured on the demeaned series;
-      // the same n-scaled DECIMAL trick as win_cusum keeps every
-      // window term exact, with one divide-by-n in doubles at the
-      // end. All windows on the day-grain rollup.
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sum(Dec2(col("value"))).as("v"))
-      val wOrd = Window.partitionBy("event_type").orderBy("day")
-      val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy("event_type")
-      val c = daily
-        .withColumn("run", sum("v").over(wRun))
-        .withColumn("t", row_number().over(wOrd).cast("long"))
-        .withColumn("tot", sum("v").over(wAll))
-        .withColumn("n", count(lit(1)).over(wAll))
-        .withColumn("cs", col("run") * col("n") - col("t") * col("tot"))
-      c.withColumn("peak", max("cs").over(wRun))
+      // only grows, so drawdown is measured on the demeaned series,
+      // win_cusum's n-scaled exact frame (`cusumDays`), with one
+      // divide-by-n in doubles at the end. All windows on the
+      // day-grain rollup.
+      cusumDays(s, d)
+        .withColumn("peak", max("cs").over(running))
         .groupBy("event_type")
         .agg(round(max(col("peak") - col("cs")).cast("double")
             / min("n").cast("double"), 4).as("max_slump"),
@@ -100,29 +117,20 @@ object Windows extends OpModule {
       // Rolling anomaly score: each day's event count against the
       // trailing 7-day window's own mean/std — adapts to level shifts
       // that a global z-score (evt_anomaly) misnormalizes. Exactness:
-      // the window moments are INTEGER sums (S = Σx, Q = Σx²) over the
+      // the window moments are `trailing7`'s INTEGER sums over the
       // day-grain rollup, so both engines hold identical values; the
       // single sqrt/divide happens in doubles at the end. Frames with
       // fewer than 7 days are dropped (the warm-up edge). A CONSTANT
       // 7-day window makes the variance term 0 — engines disagree on
       // 0/0 (NaN vs NULL), so the zero case is guarded to NULL on both
-      // sides via the exact integer comparison q·7 = s².
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"))
-      val w7 = Window.partitionBy("event_type").orderBy("day")
-        .rowsBetween(-6, Window.currentRow)
-      daily
-        .withColumn("s", sum("x").over(w7))
-        .withColumn("q", sum(col("x") * col("x")).over(w7))
-        .withColumn("m", count(lit(1)).over(w7))
-        .filter(col("m") === 7)
+      // sides via the exact integer comparison sxx·7 = sx².
+      trailing7(Events.typeDays(s, d, count(lit(1)).as("x")), col("x"))
         .select(col("event_type"),
           date_format(col("day"), "yyyy-MM-dd").as("day"), col("x"),
-          when(col("q") * 7 === col("s") * col("s"),
+          when(col("sxx") * 7 === col("sx") * col("sx"),
             lit(null).cast("double"))
-            .otherwise(round((col("x") * 7 - col("s")).cast("double") / 7.0
-              / sqrt((col("q") * 7 - col("s") * col("s")).cast("double") / 42.0),
+            .otherwise(round((col("x") * 7 - col("sx")).cast("double") / 7.0
+              / sqrt((col("sxx") * 7 - col("sx") * col("sx")).cast("double") / 42.0),
               4)).as("z"))
         .orderBy("event_type", "day")
     }),
@@ -327,11 +335,8 @@ object Windows extends OpModule {
       // construction, complementing win_mom_growth's month grain and
       // win_seasonal_split's decomposition. Type-partitioned lag over
       // the day-grain rollup; growth is one exact-integer ratio.
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("event_type").orderBy("day")
-      daily.withColumn("n7", lag("n", 7).over(w))
+      Events.typeDays(s, d, count(lit(1)).as("n"))
+        .withColumn("n7", lag("n", 7).over(byDay))
         .filter(col("n7").isNotNull)
         .select(col("event_type"),
           date_format(col("day"), "yyyy-MM-dd").as("day"),
@@ -353,12 +358,8 @@ object Windows extends OpModule {
       // type-partitioned over the day-grain rollup; edge days without
       // a full 7-day window drop (the standard centered-MA boundary
       // rule).
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("event_type").orderBy("day")
-        .rowsBetween(-3, 3)
-      daily
+      val w = byDay.rowsBetween(-3, 3)
+      Events.typeDays(s, d, count(lit(1)).as("n"))
         .withColumn("sum7", sum("n").over(w))
         .withColumn("cnt7", count(lit(1)).over(w))
         .filter(col("cnt7") === 7)
@@ -382,15 +383,10 @@ object Windows extends OpModule {
       // are exact-integer divisions and the argmax is a partial-agged
       // struct-max on the ROUNDED delta (ties → earliest day) — no
       // second pass, no self-join, engine-identical doubles.
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("event_type").orderBy("day")
-      val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val pre = daily
-        .withColumn("i", row_number().over(w).cast("long"))
-        .withColumn("si", sum("n").over(run))
+      val all = byDay.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val pre = Events.typeDays(s, d, count(lit(1)).as("n"))
+        .withColumn("i", row_number().over(byDay).cast("long"))
+        .withColumn("si", sum("n").over(running))
         .withColumn("tt", count(lit(1)).over(all))
         .withColumn("ss", sum("n").over(all))
         .filter(col("i") < col("tt"))
@@ -424,9 +420,7 @@ object Windows extends OpModule {
       // integer subtraction + one IEEE-exact double division; the
       // intercept uses the ROUNDED slope so both engines feed
       // identical doubles into the second median.
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
+      val daily = Events.typeDays(s, d, count(lit(1)).as("n"))
         .withColumn("t",
           datediff(col("day"), lit("2024-01-01").cast("date")).cast("long"))
       val a = daily.select(col("event_type"), col("t").as("t1"), col("n").as("n1"))
@@ -489,12 +483,8 @@ object Windows extends OpModule {
       // the compare (an all-flat window nulls via nullif on both
       // engines). Type-partitioned windows over the day-grain rollup;
       // partial frames drop per the full-window band rule.
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val byDay = Window.partitionBy("event_type").orderBy("day")
       val w14 = byDay.rowsBetween(-13, 0)
-      daily
+      Events.typeDays(s, d, count(lit(1)).as("n"))
         .withColumn("diff", col("n") - lag("n", 1).over(byDay))
         .filter(col("diff").isNotNull)
         .withColumn("gain", greatest(col("diff"), lit(0L)))
@@ -522,24 +512,15 @@ object Windows extends OpModule {
       // Frames are type-partitioned windows over the day-grain
       // rollup; partial frames (first 6 days) drop per the standard
       // full-window band rule.
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("event_type").orderBy("day")
-        .rowsBetween(-6, 0)
-      daily
-        .withColumn("k", count(lit(1)).over(w))
-        .withColumn("sx", sum("n").over(w))
-        .withColumn("sq", sum(col("n") * col("n")).over(w))
-        .filter(col("k") === 7)
+      trailing7(Events.typeDays(s, d, count(lit(1)).as("n")), col("n"))
         .select(col("event_type"),
           date_format(col("day"), "yyyy-MM-dd").as("day"), col("n"),
           round(col("sx").cast("double") / 7.0, 4).as("mean7"),
-          round(sqrt((lit(7) * col("sq") - col("sx") * col("sx"))
+          round(sqrt((lit(7) * col("sxx") - col("sx") * col("sx"))
             .cast("double")) / 7.0, 4).as("sd7"),
           when((lit(7) * col("n") - col("sx"))
             * (lit(7) * col("n") - col("sx"))
-            > lit(4) * (lit(7) * col("sq") - col("sx") * col("sx")), 1L)
+            > lit(4) * (lit(7) * col("sxx") - col("sx") * col("sx")), 1L)
             .otherwise(0L).as("breakout"))
         .orderBy("event_type", "day")
     }),
@@ -557,32 +538,13 @@ object Windows extends OpModule {
       // k·Σv² ≤ ~1e17 < 2⁶³; at true 100 TB volumes the moments lift
       // through DECIMAL(38) exactly as agg_moments does. Frames are
       // type-partitioned windows over the day-grain rollup.
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"),
-          (sum(Dec2(col("value"))) * 100).cast("long").as("y"))
-      val w = Window.partitionBy("event_type").orderBy("day")
-        .rowsBetween(-6, 0)
-      daily
-        .withColumn("k", count(lit(1)).over(w))
-        .withColumn("sx", sum("x").over(w))
-        .withColumn("sy", sum("y").over(w))
-        .withColumn("sxx", sum(col("x") * col("x")).over(w))
-        .withColumn("syy", sum(col("y") * col("y")).over(w))
-        .withColumn("sxy", sum(col("x") * col("y")).over(w))
-        .filter(col("k") === 7)
+      val (x, y) = (col("x"), col("y"))
+      trailing7(Events.typeDays(s, d, count(lit(1)).as("x"),
+          (sum(Dec2(col("value"))) * 100).cast("long").as("y")),
+        x, "sy" -> y, "syy" -> y * y, "sxy" -> x * y)
         .select(col("event_type"),
           date_format(col("day"), "yyyy-MM-dd").as("day"),
-          when(col("k") * col("sxx") === col("sx") * col("sx") ||
-            col("k") * col("syy") === col("sy") * col("sy"),
-            lit(null).cast("double"))
-            .otherwise(round(
-              (col("k") * col("sxy") - col("sx") * col("sy")).cast("double")
-                / (sqrt((col("k") * col("sxx")
-                  - col("sx") * col("sx")).cast("double"))
-                  * sqrt((col("k") * col("syy")
-                    - col("sy") * col("sy")).cast("double"))), 4))
-            .as("corr7"))
+          pearson(col("k")).as("corr7"))
         .orderBy("event_type", "day")
     }),
   )

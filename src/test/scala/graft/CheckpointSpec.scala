@@ -134,4 +134,20 @@ class CheckpointSpec extends SparkSpec {
       SessionMemo.clear()
     }
   }
+
+  test("a memoized chain is rebuilt after the shuffle partition count changes") {
+    SessionMemo.clear()
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    try {
+      val a = operators.Graph.lpaLabels(spark, sf)
+      assert(operators.Graph.lpaLabels(spark, sf) eq a, "the memo missed under one conf")
+      spark.conf.set(key, "3")
+      assert(!(operators.Graph.lpaLabels(spark, sf) eq a),
+        "a chain memoized under another partition count was served")
+    } finally {
+      spark.conf.set(key, before)
+      SessionMemo.clear()
+    }
+  }
 }

@@ -12,10 +12,15 @@ package graft
   *     exactly the shape that scales; a CartesianProduct means BOTH
   *     sides shuffle everywhere.)
   *  2. Every window function must be partitioned, except the
-  *     explicitly whitelisted queries whose global windows ride
-  *     provably bounded frames (dimension-sized or gate-bounded —
-  *     each listed with its bound below). A new unpartitioned window
-  *     anywhere else is the classic single-partition scale killer.
+  *     explicitly listed queries whose global windows ride provably
+  *     bounded frames (dimension-sized or gate-bounded — each listed
+  *     with its bound below, and each such window's site in the code
+  *     names the same bound). A new unpartitioned window anywhere
+  *     else — ordered or not; either runs as Spark's "WindowExec: No
+  *     Partition Defined" single-partition frame — is the classic
+  *     scale killer, and a listed query that no longer plans one
+  *     fails too, so the list names exactly the queries behind that
+  *     warning.
   *  3. No shuffled join builds against a raw dimension table.
   *  4. At sf0.001, where every query's inputs are far below the
   *     broadcast threshold, no query plans a range exchange: the
@@ -55,11 +60,13 @@ class PlanSweepSpec extends SparkSpec {
     "agg_ks_test" -> "two-phase bucket offsets — |buckets| frame",
     "agg_quantile_sketch" -> ("two-phase bucket offsets — |price buckets| frame; " +
       "coreset cumulative weight over <= 256 rows per lineitem partition"),
-    "sample_user_cap" -> "count-of-counts histogram — |distinct per-user count values| frame, never |users|")
+    "sample_user_cap" -> "count-of-counts histogram — |distinct per-user count values| frame, never |users|",
+    "win_pct_of_total" -> "grand total over the 25-row nation rollup",
+    "agg_benford" -> "grand total over the <= 10-row leading-digit rollup")
 
-  /** Window specs whose argument list starts with a sort column (no
-    * partition columns before the ordering) — the single-partition
-    * shape. The first TOP-LEVEL argument is extracted paren-depth-
+  /** Window specs with no partition columns: the argument list starts
+    * with a sort column or, for an unordered frame, with the frame
+    * itself — the single-partition shape. The first TOP-LEVEL argument is extracted paren-depth-
     * aware (r11 advice: a naive split on ',' truncates an ordering
     * expression that itself contains commas — e.g. pmod(x, 2) ASC →
     * head "pmod(x" with no " ASC" — and the single-partition shape
@@ -82,7 +89,7 @@ class PlanSweepSpec extends SparkSpec {
           }
         }
         val h = head.toString
-        h.contains(" ASC") || h.contains(" DESC")
+        h.contains(" ASC") || h.contains(" DESC") || h.startsWith("specifiedwindowframe")
       }
 
   /** Every graded query's physical plan (tree + string), computed
@@ -159,6 +166,11 @@ class PlanSweepSpec extends SparkSpec {
       "currentrow$()))]"
     assert(unpartitionedSpecs(ok).isEmpty,
       "partitioned window falsely flagged")
+    // A grand total: no partition and no ordering, the frame first.
+    val total = "Window [sum(v#3) windowspecdefinition(specifiedwindowframe(" +
+      "RowFrame, unboundedpreceding$(), unboundedfollowing$()))]"
+    assert(unpartitionedSpecs(total).nonEmpty,
+      "unordered unpartitioned window escaped detection")
   }
 
   test("no graded query plans a shuffled CartesianProduct") {

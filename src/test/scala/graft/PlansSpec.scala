@@ -1106,6 +1106,23 @@ class PlansSpec extends SparkSpec {
       s"kn bigram census lost its map-side combine:\n$plan")
   }
 
+  test("the Markov readouts run their in-row fold once: no size Filter under the Generate") {
+    // For an inner (pos)explode Spark infers size(x) > 0 AND
+    // isnotnull(x) and pushes it below the Project by substituting the
+    // fold for x, so every row would run the fold three times.
+    import org.apache.spark.sql.catalyst.expressions.Size
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
+    Seq("evt_markov_steady", "evt_absorb_prob").foreach { name =>
+      val plan = q(name).queryExecution.optimizedPlan
+      val gens = plan.collect { case g: Generate => g }
+      assert(gens.nonEmpty, s"$name lost its Generate:\n$plan")
+      val sizeFilters = gens.flatMap(_.child.collect {
+        case f: Filter if f.condition.exists(_.isInstanceOf[Size]) => f
+      })
+      assert(sizeFilters.isEmpty, s"$name re-runs its fold in a Filter:\n$plan")
+    }
+  }
+
   test("flagship entry broadcasts the filtered customer dimension") {
     val df = SparkEntry.entry(spark)
     df.collect()

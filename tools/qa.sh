@@ -6,6 +6,9 @@
 # Plan evidence is a separate step: dump every plan in two trees with
 # `runMain graft.PlanDump <dir> <suffix> all` and list the queries whose
 # plans differ with `python3 tools/plandiff.py <dirA> <dirB>`.
+# Line counts are a separate step too: `python3 tools/loc.py <treeA>
+# <treeB>` prints the `src/main` code and comment lines per file of two
+# trees (e.g. a clone of the parent commit and this one).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
